@@ -46,24 +46,13 @@ rounds (r7 idle box 0.142 s, r8 contended box 0.139 s). So now:
   contention moved mid-bench, so treat RAW values as operative and both
   normalized fields as suspect — flagged, not silently scaled.
 
-SCOPED PROTOCOL (r16 — the persist-lifecycle measurement fix, VERDICT r15
-item 1): the legacy warm+median protocol keeps ``tracked_persist`` caches
-alive ACROSS the timed runs (outside a ``materialized_scope`` a persist is
-never released, and Spark's CacheManager matches re-built plans
-canonically), so queries whose optimization is a persist — and especially
-the ``presentation_sort`` queries, which persist their entire result —
-were measured reading their own warm cache instead of recomputing. From
-r16 the PRIMARY ``queries``/``value`` (and ``full_*``) medians wrap every
-timed invocation in ``materialized_scope()``: each run builds the plan,
-computes, and releases every persist it created, so the median measures
-RECOMPUTATION. Process-level parquet memos (the streaming static indexes,
-the mart-committed graph/codebook artifacts) survive scopes by design —
-they are the documented precompute-offline production form, built in the
-warm pass. The pre-r16 protocol is still run and dual-reported as
-``queries_legacy``/``value_legacy``/``full_*_legacy`` for round-over-round
-comparability (compare r15 ``queries`` against r16 ``queries_legacy``;
-scoped runs execute FIRST so the legacy runs' unreleased caches cannot
-leak into them).
+SCOPED PROTOCOL: every timed invocation (and the warm pass) runs inside
+``materialized_scope()``, so each run builds the plan, computes, and
+releases every persist it created — the medians measure RECOMPUTATION,
+not reads of a warm cache. Build-once artifacts (``artifacts``: the
+streaming static indexes, the committed graph/codebook tables) survive
+scopes by design — they are the precompute-offline production form,
+built in the warm pass.
 """
 
 from __future__ import annotations
@@ -135,8 +124,7 @@ HEADLINE = [
 # split (1.5 s at the same measurement) leaves. Displaced (still timed by
 # the sweeps): curation_funnel_report, semdedup_cluster_pairs_top2,
 # stream_stream_attribution_join, multimodal_audio_features,
-# leakage_safe_split. The tier runs WITHOUT a separate warm pass — the
-# median of 3 absorbs the cold run. NOTE r11: knn_graph_topk_auto_k and
+# leakage_safe_split. NOTE r11: knn_graph_topk_auto_k and
 # graph_ann_search_topk now time the INTEGER quantized-cosine contract
 # over the 3-round NN-Descent graph (deeper build; see BASELINE.md r11).
 # r13 membership refresh (VERDICT r12 item 5): edit_distance_near_dups —
@@ -186,26 +174,9 @@ def main() -> None:
     spark = get_spark("bench")
     qs = entrymod.queries()
 
-    def time_query(name: str, n: int, warm: bool) -> list[float]:
-        fn = qs[name]
-        if warm:
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()  # JVM/JIT + listing
-        samples = []
-        for _ in range(n):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(round(time.perf_counter() - t0, 3))
-        return samples
-
     def time_query_scoped(name: str, n: int, warm: bool) -> list[float]:
-        """The r16 primary protocol: every run (and the warm pass) builds,
-        computes, and RELEASES its persists inside a materialized_scope, so
-        the sample measures recomputation, not warm-cache reads. Must run
-        BEFORE any unscoped execution of the same query in this process —
-        an unreleased legacy persist would be canonically matched by the
-        scoped run's rebuilt plan and silently serve it from cache."""
+        """Every run (and the warm pass) builds, computes, and RELEASES its
+        persists inside a materialized_scope (see SCOPED PROTOCOL)."""
         fn = qs[name]
         if warm:
             with materialized_scope():
@@ -248,17 +219,10 @@ def main() -> None:
         probe()
     calibration = round(statistics.median(probe_samples), 3)
     per_run = {}
-    per_run_legacy = {}
     for name in HEADLINE:
         probe()
-        # scoped FIRST (see time_query_scoped), legacy second: the legacy
-        # warm pass re-establishes the unscoped persists its runs then reuse
         per_run[name] = time_query_scoped(name, runs, warm=True)
-        per_run_legacy[name] = time_query(name, runs, warm=True)
     medians = {name: round(statistics.median(s), 3) for name, s in per_run.items()}
-    medians_legacy = {
-        name: round(statistics.median(s), 3) for name, s in per_run_legacy.items()
-    }
     per_run_totals = [
         round(sum(per_run[name][i] for name in HEADLINE), 3) for i in range(runs)
     ]
@@ -292,29 +256,17 @@ def main() -> None:
         "box_factor_cold": round((calibration / 0.25) if calibration > 0 else 1.0, 3),
         "box_factor": round(head_factor, 3),
         "value_normalized": round(sum(medians.values()) / head_factor, 3),
-        # pre-r16 protocol, dual-reported for round-over-round comparability
-        # (compare r15 "queries" against THESE; see the SCOPED PROTOCOL note)
-        "value_legacy": round(sum(medians_legacy.values()), 3),
-        "queries_legacy": medians_legacy,
     }
     if full_on:
-        # scoped tier keeps a warm pass (the per-process parquet memos —
-        # streaming static indexes, mart-committed artifacts — build there);
-        # the legacy tier keeps its no-warm-pass protocol (its first run
-        # doubles as the warm, exactly as pre-r16)
+        # the warm pass builds the process's artifacts (streaming static
+        # indexes, committed graph/codebook tables)
         n_before_full = len(probe_samples)
         full_samples = {}
-        full_samples_legacy = {}
         for name in FULL:
             probe()
             full_samples[name] = time_query_scoped(name, full_runs, warm=True)
-            full_samples_legacy[name] = time_query(name, full_runs, warm=False)
         full_medians = {
             name: round(statistics.median(s), 3) for name, s in full_samples.items()
-        }
-        full_medians_legacy = {
-            name: round(statistics.median(s), 3)
-            for name, s in full_samples_legacy.items()
         }
         # the full tier runs minutes after the headline — normalize it by
         # ITS OWN window's interleaved probes
@@ -326,8 +278,6 @@ def main() -> None:
         out["full_value_normalized"] = round(
             sum(full_medians.values()) / full_factor, 3
         )
-        out["full_value_legacy"] = round(sum(full_medians_legacy.values()), 3)
-        out["full_queries_legacy"] = full_medians_legacy
         out["probe_median_warm"] = round(statistics.median(probe_samples[3:]), 3)
         out["calibration_max"] = max(probe_samples)
     # Flag, don't silently scale: a >3× spike WITHIN the warm window means

@@ -1,0 +1,112 @@
+"""Build-once-per-process artifacts — the engine's one memo.
+
+Trained indexes, committed graphs and learned weights are built once per
+(corpus, shuffle partitioning) in a process and served thereafter: tables
+as :class:`~.sources.mart.VersionedMart` reads (write-new-version, then
+atomic manifest swap), small values straight from memory. This module owns
+the four decisions every such site shares:
+
+- **Key** — ``(kind, abspath(sf_dir), spark.sql.shuffle.partitions,
+  *extra)``. Always partition-keyed, so the partitioning-determinism
+  harness, which re-runs every query under a different partitioning in one
+  process, rebuilds and re-checks each artifact instead of reading the
+  first build back. Builds are deterministic, so values agree either way.
+- **Root** — one ``tempfile.mkdtemp`` directory per process, removed at
+  exit. Concurrent processes never write under each other's paths.
+- **Lock** — one re-entrant lock held across check-build-publish. Two
+  concurrent builds on one root while a reader holds it open would serve
+  mixed tables; re-entrancy lets one build call another (the durable
+  graph is built from the refined graph). A hit is answered without the
+  lock, so it never waits on another key's build.
+- **Storage** — every table goes through ``VersionedMart.commit``/``read``.
+"""
+
+from __future__ import annotations
+
+import atexit
+import hashlib
+import os
+import shutil
+import tempfile
+import threading
+from typing import Callable, TypeVar
+
+from pyspark.sql import DataFrame, SparkSession
+
+from .session import shuffle_partitions_tag
+from .sources.mart import VersionedMart
+
+T = TypeVar("T")
+
+_LOCK = threading.RLock()
+_MEMO: dict[tuple, object] = {}
+_ROOT: list[str] = []
+
+
+def root() -> str:
+    """The per-process artifact directory, created on first use and
+    removed when the process exits."""
+    with _LOCK:
+        if not _ROOT:
+            path = tempfile.mkdtemp(prefix="mfe_artifacts_")
+            atexit.register(shutil.rmtree, path, ignore_errors=True)
+            _ROOT.append(path)
+        return _ROOT[0]
+
+
+def _key(spark: SparkSession, kind: str, sf_dir: str, extra: tuple) -> tuple:
+    return (kind, os.path.abspath(sf_dir), shuffle_partitions_tag(spark), *extra)
+
+
+def directory(spark: SparkSession, kind: str, sf_dir: str, *extra) -> str:
+    """This key's directory under :func:`root`, for artifacts committed by
+    code that takes a path rather than a ``commit`` callback."""
+    digest = hashlib.sha256(repr(_key(spark, kind, sf_dir, extra)).encode()).hexdigest()
+    return os.path.join(root(), kind, digest[:16])
+
+
+def memoized(
+    spark: SparkSession, kind: str, sf_dir: str, *extra, build: Callable[[], T]
+) -> T:
+    """``build()`` once per key in this process; every later call returns
+    the same value without calling ``build``."""
+    key = _key(spark, kind, sf_dir, extra)
+    hit = _MEMO.get(key)
+    if hit is not None:
+        return hit
+    with _LOCK:
+        if key not in _MEMO:
+            _MEMO[key] = build()
+        return _MEMO[key]
+
+
+def memoized_commit(
+    spark: SparkSession,
+    kind: str,
+    sf_dir: str,
+    *extra,
+    build: Callable[[Callable[[str, DataFrame], DataFrame]], object],
+) -> dict[str, VersionedMart]:
+    """Tables committed once per key.
+
+    ``build(commit)`` calls ``commit(name, df)``, which commits ``df`` as
+    table ``name`` and returns the committed table read back, so later
+    tables can be built from earlier ones. Returns ``{name: mart}``;
+    callers ``read`` only the tables they use (each read is a Spark job).
+    """
+
+    def build_marts() -> dict[str, VersionedMart]:
+        base = directory(spark, kind, sf_dir, *extra)
+        built: dict[str, VersionedMart] = {}
+
+        def commit(name: str, df: DataFrame) -> DataFrame:
+            mart = VersionedMart(os.path.join(base, name))
+            mart.commit(df, "v1")
+            built[name] = mart
+            return mart.read(spark)
+
+        build(commit)
+        return built
+
+    return memoized(spark, kind, sf_dir, *extra, build=build_marts)
+

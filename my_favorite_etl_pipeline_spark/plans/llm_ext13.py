@@ -21,9 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import artifacts
 from ..functions import text as TX
 from ..registry import register
-from ..session import shuffle_partitions_tag
 from ..sources.tables import load
 
 _COV_ROUNDS = 5  # documents selected (greedy rounds)
@@ -935,10 +935,6 @@ def lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lp
 
 
-_LPA_MART_MEMO: dict[tuple[str, str], str] = {}  # key -> mart root dir
-_LPA_MART_LOCK = __import__("threading").Lock()
-
-
 def lpa_labels_durable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(node, lab)`` read back from a :class:`VersionedMart` COMMIT —
     the durable promotion (VERDICT r14 plan audit: "at production scale
@@ -947,37 +943,14 @@ def lpa_labels_durable(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs ONCE per (corpus, partitioning), commits through the M4 atomic
     manifest swap, and every consumer — the registered community
     readout, the community-capped selection, and the funnel's
-    community-cap stage — serves the committed snapshot.
-
-    Keyed on (sf_dir, spark.sql.shuffle.partitions) so the determinism
-    harness, which re-runs every query under a different partitioning in
-    one process, rebuilds and re-checks the propagation per partitioning
-    instead of reading the first build back; repeated same-config runs
-    (bench medians, oracle sweeps, multi-consumer compositions) hit the
-    memo. Values are identical either way: the propagation is
-    deterministic (integer label votes, smallest-label ties) and parquet
-    round-trips the two BIGINT columns exactly. The lock is held across
-    check-build-publish (the graph memo's race lesson — two builders on
-    one root while a reader holds it open is the unreproducible-
-    divergence shape of CORRECTNESS_r09)."""
-    import hashlib
-    import os
-
-    from ..sources.mart import VersionedMart
-    from .llm_ext7 import _knn_graph_root
-
-    parts = shuffle_partitions_tag(spark)
-    key = (os.path.abspath(sf_dir), parts)
-    with _LPA_MART_LOCK:
-        base = _LPA_MART_MEMO.get(key)
-        if base is None:
-            digest = hashlib.sha256(f"lpa\x00{key[0]}\x00{parts}".encode()).hexdigest()[:16]
-            base = os.path.join(_knn_graph_root(), f"lpa-{digest}")
-            m = VersionedMart(base)
-            if m.current_version() is None:
-                m.commit(lpa_labels(spark, sf_dir), "v1")
-            _LPA_MART_MEMO[key] = base
-    return VersionedMart(base).read(spark)
+    community-cap stage — serves the committed snapshot. Memo, key and
+    lock rules: :mod:`..artifacts`; the propagation is deterministic
+    (integer label votes, smallest-label ties) and parquet round-trips
+    the two BIGINT columns exactly."""
+    return artifacts.memoized_commit(
+        spark, "lpa_labels", sf_dir,
+        build=lambda commit: commit("labels", lpa_labels(spark, sf_dir)),
+    )["labels"].read(spark)
 
 
 # ---------------------------------------------------------------------------

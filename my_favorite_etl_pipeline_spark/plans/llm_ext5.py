@@ -35,10 +35,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import artifacts
 from ..caching import tracked_persist
 from ..functions import text as TX
 from ..registry import REGISTRY, register
-from ..session import shuffle_partitions_tag
 from ..sources.tables import load
 
 # ---------------------------------------------------------------------------
@@ -457,26 +457,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # shared PQ/IVF serving index — trained once per (corpus, partitioning),
-# committed through VersionedMart, served as table reads (r16-opt,
-# VERDICT r15 item 4; the _knn_refined_tables durable-graph precedent)
-
-_PQ_SERVE_MEMO: dict[tuple[str, str], str] = {}  # key -> mart root dir
-_PQ_SERVE_ROOT: list[str] = []
-_PQ_SERVE_LOCK = __import__("threading").Lock()
-
-
-def _pq_serve_root() -> str:
-    # per-PROCESS private temp root, atexit-reaped — the _knn_graph_root
-    # pattern (concurrent processes never overwrite each other's parquet)
-    if not _PQ_SERVE_ROOT:
-        import atexit
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="mfe_pq_index_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _PQ_SERVE_ROOT.append(root)
-    return _PQ_SERVE_ROOT[0]
+# committed through VersionedMart, served as table reads
 
 
 def _pq_serving_tables(spark: SparkSession, sf_dir: str):
@@ -485,64 +466,38 @@ def _pq_serving_tables(spark: SparkSession, sf_dir: str):
     entries: the 16-row Lloyd-refined coarse centroid table, the narrow
     ``(vec_id, __cid)`` cell assignment (the "assignment is a stored
     partition column at 100 TB" posture of ivf_topk_kmeans's docstring,
-    made literal), and the 8×64-row PQ codebook. Built ONCE per
-    (sf_dir, shuffle partitioning) per process by the exact training
-    functions the inline path runs (kmeans_iterate / pq_codebook through
-    kmeans_assign_and_probe — no forked arithmetic, so commits are
-    bit-identical to inline training), committed via the mart's
-    write-new-version-then-atomic-manifest-swap, and served as parquet
-    scans thereafter. r15 measured the in-bench gap this closes:
+    made literal), and the 8×64-row PQ codebook. Built by the exact
+    training functions the inline path runs (kmeans_iterate / pq_codebook
+    through kmeans_assign_and_probe — no forked arithmetic, so commits are
+    bit-identical to inline training) and served as parquet scans
+    thereafter. r15 measured the in-bench gap this closes:
     embedding_topk_ivf_pq 4.0 s in-tier vs 2.8 s solo — FULL-tier cache
     pressure kept re-materializing the training chain; committed tables
-    cannot be evicted. The memo keys on (sf_dir, shuffle.partitions) so
-    the partitioning-determinism harness rebuilds per partitioning
-    (values identical either way — fixed-point training arithmetic).
+    cannot be evicted. Memo, key and lock rules: :mod:`..artifacts`.
     """
-    import hashlib
-    import os
-
     from ..caching import materialized_scope
     from ..operators.similarity import (
         kmeans_assign_and_probe,
         kmeans_iterate,
         pq_codebook,
     )
-    from ..sources.mart import VersionedMart
 
-    parts = shuffle_partitions_tag(spark)
-    key = (os.path.abspath(sf_dir), parts)
-    with _PQ_SERVE_LOCK:
-        base = _PQ_SERVE_MEMO.get(key)
-        if base is None:
-            digest = hashlib.sha256(f"{key[0]}\x00{parts}".encode()).hexdigest()[:16]
-            base = os.path.join(_pq_serve_root(), digest)
-            cm = VersionedMart(os.path.join(base, "centroids"))
-            am = VersionedMart(os.path.join(base, "assign"))
-            bm = VersionedMart(os.path.join(base, "codebook"))
-            if (
-                cm.current_version() is None
-                or am.current_version() is None
-                or bm.current_version() is None
-            ):
-                emb = load(spark, sf_dir, "embeddings")
-                # scope the training persists: the commits materialize the
-                # parquet, the scope releases the block-store entries
-                with materialized_scope():
-                    cent = kmeans_iterate(emb, k=16, n_iter=2)
-                    assign_full, _ = kmeans_assign_and_probe(
-                        emb, emb.limit(1), n_clusters=16, n_probe=1,
-                        n_iter=2, cent=cent,
-                    )
-                    cb = pq_codebook(emb, m=8, kc=64, n_iter=1)
-                    cm.commit(cent.select("cid", "centroid"), "v1")
-                    am.commit(assign_full.select("vec_id", "__cid"), "v1")
-                    bm.commit(cb.select("s", "c", "cv"), "v1")
-            _PQ_SERVE_MEMO[key] = base
-    return (
-        VersionedMart(os.path.join(base, "centroids")).read(spark),
-        VersionedMart(os.path.join(base, "assign")).read(spark),
-        VersionedMart(os.path.join(base, "codebook")).read(spark),
-    )
+    def build(commit) -> None:
+        emb = load(spark, sf_dir, "embeddings")
+        # scope the training persists: the commits materialize the
+        # parquet, the scope releases the block-store entries
+        with materialized_scope():
+            cent = kmeans_iterate(emb, k=16, n_iter=2)
+            assign_full, _ = kmeans_assign_and_probe(
+                emb, emb.limit(1), n_clusters=16, n_probe=1, n_iter=2, cent=cent,
+            )
+            cb = pq_codebook(emb, m=8, kc=64, n_iter=1)
+            commit("centroids", cent.select("cid", "centroid"))
+            commit("assign", assign_full.select("vec_id", "__cid"))
+            commit("codebook", cb.select("s", "c", "cv"))
+
+    marts = artifacts.memoized_commit(spark, "pq_index", sf_dir, build=build)
+    return tuple(marts[n].read(spark) for n in ("centroids", "assign", "codebook"))
 
 
 # ---------------------------------------------------------------------------

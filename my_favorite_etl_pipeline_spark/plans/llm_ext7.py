@@ -29,10 +29,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import artifacts
 from ..caching import tracked_persist
 from ..functions import text as TX
 from ..registry import register
-from ..session import shuffle_partitions_tag
 from ..sources.tables import load
 from .llm_ext3 import _BENCH_PRED_SQL, _DUCK_NGRAMS, _bench_pred
 from .llm_ext4 import AUTO_K_SQL as _AUTO_K_SQL_REF
@@ -363,8 +363,8 @@ _KNN_ROUNDS = 4  # refinement rounds (r13: 3→4 per the measured payoff curve i
 # BASELINE.md — sf0.1 edge recall 0.690→0.796 for ~+20% build; flip armed on
 # the family's r12 all-green driver row, VERDICT r12 item 2)
 _KNN_CAP = 24  # per-node fan-out cap in the two-hop join. (W, CAP) flipped
-# 16→24 JOINTLY in r14 per the measured payoff surface
-# (tools/experiments/nn_descent_width_probe.py, curve in BASELINE.md r13):
+# 16→24 JOINTLY in r14 per the measured payoff surface (BASELINE.md r13,
+# "NN-Descent width/cap payoff curve"):
 # W alone bought +0.003 (fan-out-bound at CAP=16), CAP alone +0.066
 # (list-bound at W=16), but (24, 24) jointly reads 0.958 sf0.1 edge recall
 # (+0.162 over the (16, 16) 0.796) for ~+43% build — a better trade than a
@@ -711,8 +711,8 @@ def q_knn_graph_nn_descent_hq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same seeded 4-round refinement as knn_graph_nn_descent but with
     (W, CAP) = ({_KNN_HQ_W}, {_KNN_HQ_CAP}), the top row of the r13
     width/cap payoff surface (0.994 sf0.1 edge recall vs the serving
-    tier's 0.958, ~2× build — tools/experiments/nn_descent_width_probe.py,
-    table in BASELINE.md). A platform picks this tier when the graph IS
+    tier's 0.958, 85.4 s vs 61.3 s build — the r13 payoff-curve table in
+    BASELINE.md). A platform picks this tier when the graph IS
     the product (offline semantic-dedup audits, eval-set neighborhood
     maps) and the serving tier when the graph feeds a beam search that
     re-ranks anyway.
@@ -735,28 +735,6 @@ def q_knn_graph_nn_descent_hq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KNN_GRAPH_MEMO: dict[tuple[str, str], str] = {}  # key -> mart root dir
-_KNN_GRAPH_ROOT: list[str] = []
-_KNN_GRAPH_LOCK = __import__("threading").Lock()
-
-
-def _knn_graph_root() -> str:
-    # Per-PROCESS private root (tempfile.mkdtemp is collision-free), so
-    # concurrent processes never overwrite each other's parquet mid-read —
-    # the _static_dedup_index pattern. atexit-reaped: long-lived harness
-    # processes would otherwise leak one (assign, work) parquet copy per
-    # (sf_dir, partitions) key (ADVICE r9).
-    if not _KNN_GRAPH_ROOT:
-        import atexit
-        import shutil
-        import tempfile
-
-        root = tempfile.mkdtemp(prefix="mfe_knn_graph_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _KNN_GRAPH_ROOT.append(root)
-    return _KNN_GRAPH_ROOT[0]
-
-
 def _knn_refined_tables(spark: SparkSession, sf_dir: str):
     """``(assign, work)`` read back from :class:`VersionedMart` COMMITS —
     the durable production posture, PROMOTED to the default r12 (VERDICT
@@ -764,90 +742,50 @@ def _knn_refined_tables(spark: SparkSession, sf_dir: str):
     partitioning), committed through the M4 atomic manifest swap, and
     EVERY consumer — the top-K readout (`knn_graph_nn_descent`), the flat
     and durable searches, the HNSW router — serves from the committed
-    snapshot. The pre-r12 raw-parquet session memo is gone; what
-    `graph_ann_search_durable` adds on top is the cross-process restart
-    semantics (fresh mart handles over a `materialize_knn_graph` root,
-    pinned in tests/test_graph_durable.py).
-
-    The memo keys on (sf_dir, spark.sql.shuffle.partitions) so the
-    partitioning-determinism harness — which re-runs every query under a
-    DIFFERENT shuffle partitioning in one process — still rebuilds and
-    re-checks the graph per partitioning instead of reading the first
-    build back; repeated same-config runs (bench medians, oracle sweeps)
-    hit the memo. Values are identical either way: the build is
+    snapshot. What `graph_ann_search_durable` adds on top is the
+    cross-process restart semantics (fresh mart handles over a
+    `materialize_knn_graph` root, pinned in tests/test_graph_durable.py).
+    Memo, key and lock rules: :mod:`..artifacts`; the build is
     deterministic (integer scores, id tie-breaks) and parquet round-trips
     the integer contract columns exactly.
     """
-    import hashlib
-    import os
-
-    from ..sources.mart import VersionedMart
-
-    parts = shuffle_partitions_tag(spark)
-    key = (os.path.abspath(sf_dir), parts)
-    # Lock held across check-build-publish: if a harness ever runs two
-    # graph consumers concurrently (or re-enters after a timeout/retry),
-    # an unlocked memo lets two builders race one root while a reader
-    # holds it open — mixed/partial tables with plausible row counts, the
-    # exact unreproducible-divergence shape of CORRECTNESS_r09's red rows.
-    # The mart's own commit protocol (write-new-version, then atomic
-    # manifest rename) makes even a lost race an overwrite of identical
-    # data, never a torn table.
-    with _KNN_GRAPH_LOCK:
-        base = _KNN_GRAPH_MEMO.get(key)
-        if base is None:
-            digest = hashlib.sha256(f"{key[0]}\x00{parts}".encode()).hexdigest()[:16]
-            base = os.path.join(_knn_graph_root(), digest)
-            am = VersionedMart(os.path.join(base, "assign"))
-            em = VersionedMart(os.path.join(base, "edges"))
-            gm = VersionedMart(os.path.join(base, "gund"))
-            if (
-                am.current_version() is None
-                or em.current_version() is None
-                or gm.current_version() is None
-            ):
-                assign, work = _knn_refined_work(spark, sf_dir)
-                # the search side needs only the integer contract columns
-                # (quantized vector + exact integer norm); __v/__n stay out
-                # of the durable table — no float ever rides to serving
-                am.commit(assign.select("vec_id", "cluster", "__q", "__s"), "v1")
-                em.commit(work.select("src_id", "nbr_id", "cos_sim"), "v1")
-                # the UNDIRECTED adjacency the beam search expands — the
-                # symmetrize + distinct is deterministic from the edge
-                # table, so it belongs in the build, not in every search
-                # call (r16-opt: rebuilding + persisting it per search
-                # measured ~0.9 s/call of the serving floor)
-                edges_tbl = em.read(spark)
-                gm.commit(
-                    edges_tbl.select(
-                        F.col("src_id").alias("node"), F.col("nbr_id").alias("nbr")
-                    )
-                    .unionAll(
-                        edges_tbl.select(
-                            F.col("nbr_id").alias("node"),
-                            F.col("src_id").alias("nbr"),
-                        )
-                    )
-                    .distinct(),
-                    "v1",
-                )
-            _KNN_GRAPH_MEMO[key] = base
-    return (
-        VersionedMart(os.path.join(base, "assign")).read(spark),
-        VersionedMart(os.path.join(base, "edges")).read(spark),
-    )
+    marts = _knn_graph_marts(spark, sf_dir)
+    return marts["assign"].read(spark), marts["edges"].read(spark)
 
 
 def _knn_gund_table(spark: SparkSession, sf_dir: str):
     """The committed undirected adjacency (node, nbr) of the refined
-    graph — built and committed alongside assign/edges in
-    :func:`_knn_refined_tables`; a parquet scan at search time."""
-    from ..sources.mart import VersionedMart
+    graph — built and committed alongside assign/edges; a parquet scan at
+    search time."""
+    return _knn_graph_marts(spark, sf_dir)["gund"].read(spark)
 
-    _knn_refined_tables(spark, sf_dir)  # ensure built + committed
-    parts = shuffle_partitions_tag(spark)
-    base = _KNN_GRAPH_MEMO[(os.path.abspath(sf_dir), parts)]
-    return VersionedMart(os.path.join(base, "gund")).read(spark)
+
+def _knn_graph_marts(spark: SparkSession, sf_dir: str):
+    """The refined graph's ``assign``, ``edges`` and ``gund`` marts,
+    committed once."""
+
+    def build(commit) -> None:
+        assign, work = _knn_refined_work(spark, sf_dir)
+        # the search side needs only the integer contract columns
+        # (quantized vector + exact integer norm); __v/__n stay out
+        # of the durable table — no float ever rides to serving
+        commit("assign", assign.select("vec_id", "cluster", "__q", "__s"))
+        edges = commit("edges", work.select("src_id", "nbr_id", "cos_sim"))
+        # the UNDIRECTED adjacency the beam search expands — the
+        # symmetrize + distinct is deterministic from the edge table, so
+        # it belongs in the build, not in every search call (r16-opt:
+        # rebuilding + persisting it per search measured ~0.9 s/call of
+        # the serving floor)
+        commit(
+            "gund",
+            edges.select(F.col("src_id").alias("node"), F.col("nbr_id").alias("nbr"))
+            .unionAll(
+                edges.select(F.col("nbr_id").alias("node"), F.col("src_id").alias("nbr"))
+            )
+            .distinct(),
+        )
+
+    return artifacts.memoized_commit(spark, "knn_graph", sf_dir, build=build)
 
 
 def _knn_seed_scores(spark: SparkSession, sf_dir: str):
@@ -1068,6 +1006,18 @@ def graph_beam_search(
     from ..caching import tracked_persist
     from ..operators.similarity import int_cos_x1e4
 
+    # ONE parameter-sized collect: the query's quantized vector + exact
+    # integer norm become literals in every score plan (driver state, the
+    # same class as the beam itself; integer arithmetic is bit-identical
+    # to the column form — A/B-verified SAME top-k)
+    qrows = (
+        assign.filter(F.col("vec_id") == 0)
+        .select(F.col("__q").alias("qq"), F.col("__s").alias("qs"))
+        .collect()
+    )
+    if not qrows:
+        raise ValueError("query vector 0 missing from assign")
+    qrow = qrows[0]
     if gund is None:
         # derive the undirected adjacency per call; callers holding it as
         # a COMMITTED table (_knn_gund_table) pass it in and skip this
@@ -1079,15 +1029,6 @@ def graph_beam_search(
             )
             .distinct()
         )
-    # ONE parameter-sized collect: the query's quantized vector + exact
-    # integer norm become literals in every score plan (driver state, the
-    # same class as the beam itself; integer arithmetic is bit-identical
-    # to the column form — A/B-verified SAME top-k)
-    qrow = (
-        assign.filter(F.col("vec_id") == 0)
-        .select(F.col("__q").alias("qq"), F.col("__s").alias("qs"))
-        .collect()[0]
-    )
     qq_lit = F.array(*[F.lit(int(x)) for x in qrow.qq])
     qs_lit = F.lit(int(qrow.qs))
 
@@ -1252,9 +1193,6 @@ def pagerank_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # graph_ann_search_durable — the graph family's production posture made real
 
-_DURABLE_GRAPH_MEMO: dict[tuple[str, str], str] = {}
-
-
 def materialize_knn_graph(spark: SparkSession, sf_dir: str, root: str, version: str = "v1"):
     """Commit the refined NN-Descent graph as two DURABLE
     manifest-committed tables under ``root`` — ``assign/`` (vectors +
@@ -1265,16 +1203,16 @@ def materialize_knn_graph(spark: SparkSession, sf_dir: str, root: str, version: 
     documented: a deployment runs this per corpus version (graph build =
     the expensive O(n) job), then serves arbitrarily many
     :func:`graph_beam_search` queries against the committed snapshot —
-    including from OTHER sessions/processes, which is what the
-    session-scoped parquet memo cannot offer. Returns the two marts.
+    including from OTHER sessions/processes, which the per-process
+    :mod:`..artifacts` root cannot offer. Returns the two marts.
     """
     from ..sources.mart import VersionedMart
 
-    assign, work = _knn_refined_tables(spark, sf_dir)
+    assign, edges = _knn_refined_tables(spark, sf_dir)
     am = VersionedMart(os.path.join(root, "assign"))
     em = VersionedMart(os.path.join(root, "edges"))
     am.commit(assign, version)
-    em.commit(work.select("src_id", "nbr_id", "cos_sim"), version)
+    em.commit(edges, version)
     return am, em
 
 
@@ -1295,31 +1233,19 @@ def q_graph_ann_search_durable(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked path. Restart/versioning semantics (fresh mart handle,
     no rebuild, history) are pinned in tests/test_graph_durable.py.
 
-    The mart root lives under the per-process temp root here (fixture
-    stand-in, atexit-reaped); production points ``materialize_knn_graph``
-    at a real warehouse path — the commit protocol is identical.
+    The marts live under the per-process :mod:`..artifacts` root here
+    (fixture stand-in); production points ``materialize_knn_graph`` at a
+    real warehouse path — the commit protocol is identical.
     """
-    import hashlib
 
-    from ..sources.mart import VersionedMart
-
-    parts = shuffle_partitions_tag(spark)
-    key = (os.path.abspath(sf_dir), parts)
-    with _KNN_GRAPH_LOCK:
-        root = _DURABLE_GRAPH_MEMO.get(key)
-    if root is None:
-        digest = hashlib.sha256(f"durable\x00{key[0]}\x00{parts}".encode()).hexdigest()[:16]
-        root = os.path.join(_knn_graph_root(), f"durable-{digest}")
-        # build outside the lock (the underlying _knn_refined_tables build
-        # is itself lock-guarded + memoized); VersionedMart.commit is
-        # atomic, so a concurrent double-commit of identical data is safe
-        materialize_knn_graph(spark, sf_dir, root)
-        with _KNN_GRAPH_LOCK:
-            _DURABLE_GRAPH_MEMO[key] = root
-    assign = VersionedMart(os.path.join(root, "assign")).read(spark)
-    edges = VersionedMart(os.path.join(root, "edges")).read(spark)
+    am, em = artifacts.memoized(
+        spark, "knn_graph_durable", sf_dir,
+        build=lambda: materialize_knn_graph(
+            spark, sf_dir, artifacts.directory(spark, "knn_graph_durable", sf_dir)
+        ),
+    )
     n = load(spark, sf_dir, "embeddings").count()
-    return graph_beam_search(spark, assign, edges, n)
+    return graph_beam_search(spark, am.read(spark), em.read(spark), n)
 
 
 # ---------------------------------------------------------------------------

@@ -12,8 +12,8 @@ rounds (Viterbi-segment the vocab under the current model, re-estimate piece
 probabilities from the segmentation counts), and serve by Viterbi-encoding
 with the final model.
 
-Feasibility was measured BEFORE implementation
-(``tools/experiments/unigram_lm_probe.py``, end of r9): EM is deterministic
+Feasibility was measured BEFORE implementation (a standalone probe, end
+of r9): EM is deterministic
 across runs under the (score, fewer-pieces, lexicographically-larger-piece)
 tie-break, fixed-point 1e-6 quantized log-probs converge, and the Viterbi DP
 depth equals the word length (≤ 8 on the fixture) — so the whole DP unrolls

@@ -15,13 +15,13 @@ continuously-running idempotent merge.
 
 from __future__ import annotations
 
-import os
 import time
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import artifacts
 from ..sources.tables import _nanos_timestamp_cols, normalize_event_time
 
 
@@ -305,13 +305,12 @@ def stream_fuzzy_decon_pairs(
         .select(F.col("doc_id").alias("bench_id"), sh.alias("s_b"))
         .select("bench_id", "s_b", F.size("s_b").alias("nb"))
     )
-    # Materialize the static side ONCE per (process, sf_dir) — a stream-
-    # static join re-evaluates the static plan EVERY micro-batch, so the
-    # lazy form re-ran the bench slice's corpus scan + shingle regex per
-    # trigger (measured 5.0× sf0.01→sf0.1 growth vs the batch twin's
-    # 1.0×; mid-r15). Same parquet-memo posture as _static_dedup_index
-    # (VERDICT r7 item 6): production precomputes the eval-suite index
-    # offline and serves many streams from it.
+    # Commit the static side ONCE (artifacts) — a stream-static join
+    # re-evaluates the static plan EVERY micro-batch, so the lazy form
+    # re-ran the bench slice's corpus scan + shingle regex per trigger
+    # (measured 5.0× sf0.01→sf0.1 growth vs the batch twin's 1.0×;
+    # mid-r15). Production precomputes the eval-suite index offline and
+    # serves many streams from it.
     bench_idx = _fuzzy_bench_index(spark, sf_dir, bench)
     stream = read_documents_stream(spark, sf_dir).filter(~bench_pred)
     # Shingles are DISTINCT sets (functions.text.shingles wraps
@@ -363,60 +362,21 @@ def stream_fuzzy_decon_pairs(
     return spark.table(sink_name).orderBy("doc_id", "bench_id")
 
 
-# Session-scoped memo for the fuzzy-decontamination bench index: the
-# exploded (sh, bench_id, nb) posting list, parquet-materialized once per
-# (process, sf_dir). The fuzzy gate joins the FULL posting list (no
-# prefix cut — the static side is eval-suite-sized), so the index is
-# threshold-independent; nb rides each posting row so the collision
-# count folds straight into the Jaccard without a second static join.
-_FUZZY_BENCH_MEMO: dict[str, str] = {}
-
-
 def _fuzzy_bench_index(
     spark: SparkSession, sf_dir: str, bench: DataFrame
 ) -> DataFrame:
-    """Return the parquet-backed (sh, bench_id, nb) posting list — built
-    from ``bench`` on first call per (process, sf_dir), scanned
-    thereafter."""
-    key = os.path.abspath(sf_dir)
-    idx_path = _FUZZY_BENCH_MEMO.get(key)
-    if idx_path is None:
-        import hashlib
-
-        digest = hashlib.sha256(key.encode()).hexdigest()[:16]
-        idx_path = os.path.join(
-            _prefix_idx_root(), "fuzzy_bench", digest, "postings"
-        )
-        (
-            bench.select("bench_id", "nb", F.explode("s_b").alias("sh"))
-            .write.mode("overwrite")
-            .parquet(idx_path)
-        )
-        _FUZZY_BENCH_MEMO[key] = idx_path
-    return spark.read.parquet(idx_path)
-
-
-# Session-scoped memo for the materialized static-side dedup index
-# (VERDICT r7 item 6): both frames derive ONLY from the static reference
-# corpus, so rebuilding the explode → df-count → rarest-first window chain
-# (prefix index) and re-running the regex shingle pipeline (full shingle
-# sets for the verify join) on every streaming run is pure waste —
-# production precomputes both offline as tables. First call per
-# (sf_dir, threshold) in this process builds and writes them (overwrite,
-# so a fresh process never reads stale data); later calls scan the
-# parquet directly.
-_PREFIX_IDX_MEMO: dict[tuple[str, float], tuple[str, str]] = {}
-_PREFIX_IDX_ROOT: list[str] = []  # lazily-created per-process temp root
-
-
-def _prefix_idx_root() -> str:
-    # Per-PROCESS private root (tempfile.mkdtemp is collision-free), so
-    # concurrent processes never overwrite each other's parquet mid-read.
-    if not _PREFIX_IDX_ROOT:
-        import tempfile
-
-        _PREFIX_IDX_ROOT.append(tempfile.mkdtemp(prefix="mfe_prefix_index_"))
-    return _PREFIX_IDX_ROOT[0]
+    """The committed (sh, bench_id, nb) posting list of the fuzzy
+    decontamination bench, built from ``bench`` once (rules:
+    :mod:`..artifacts`). The fuzzy gate joins the FULL posting list (no
+    prefix cut — the static side is eval-suite-sized), so the index is
+    threshold-independent; nb rides each posting row so the collision
+    count folds straight into the Jaccard without a second static join."""
+    return artifacts.memoized_commit(
+        spark, "fuzzy_bench_index", sf_dir,
+        build=lambda commit: commit(
+            "postings", bench.select("bench_id", "nb", F.explode("s_b").alias("sh"))
+        ),
+    )["postings"].read(spark)
 
 
 def _static_dedup_index(
@@ -424,24 +384,17 @@ def _static_dedup_index(
 ) -> tuple[DataFrame, DataFrame]:
     """Return ``(prefix_idx, static_tbl)`` — the narrow (sh, ref_id)
     prefix-posting table and the (ref_id, s_b, nb) full-shingle table —
-    materialized once per session from ``static``."""
+    committed once per threshold (rules: :mod:`..artifacts`). Both derive
+    ONLY from the static reference corpus (VERDICT r7 item 6), so
+    rebuilding the explode → df-count → rarest-first window chain and the
+    regex shingle pipeline on every streaming run is pure waste —
+    production precomputes both offline as tables."""
     from pyspark.sql import Window
 
-    key = (os.path.abspath(sf_dir), threshold)
-    paths = _PREFIX_IDX_MEMO.get(key)
-    if paths is None:
-        # On-disk path derives from the SAME full key as the memo (hash of
-        # abspath + exact threshold) under a per-process temp root — two
-        # sf_dirs sharing a basename, or thresholds differing below 1%,
-        # get distinct directories.
-        import hashlib
+    from ..operators.dedup import ceil_frac
 
-        digest = hashlib.sha256(f"{key[0]}\x00{threshold!r}".encode()).hexdigest()[:16]
-        base = os.path.join(_prefix_idx_root(), digest)
-        idx_path = os.path.join(base, "prefix")
-        st_path = os.path.join(base, "static")
-        static.write.mode("overwrite").parquet(st_path)
-        static_tbl = spark.read.parquet(st_path)
+    def build(commit) -> None:
+        static_tbl = commit("static", static)
         ex_b = static_tbl.select("ref_id", "nb", F.explode("s_b").alias("sh"))
         freq = ex_b.groupBy("sh").agg(F.count(F.lit(1)).alias("f"))
         # rarest-first global order comes from the STATIC reference (fully
@@ -455,20 +408,19 @@ def _static_dedup_index(
         # bound deserves arithmetic exact by construction, not a float
         # product whose integral cases round correctly only by a
         # half-ULP margin (see ceil_frac)
-        from ..operators.dedup import ceil_frac
-
         prefix_len = F.col("nb") - ceil_frac(F.col("nb"), threshold) + 1
-        (
+        commit(
+            "prefix",
             ex_b.join(freq, "sh")
             .withColumn("__rn", rn)
             .filter(F.col("__rn") <= prefix_len)
-            .select("sh", "ref_id")
-            .write.mode("overwrite")
-            .parquet(idx_path)
+            .select("sh", "ref_id"),
         )
-        paths = (idx_path, st_path)
-        _PREFIX_IDX_MEMO[key] = paths
-    return spark.read.parquet(paths[0]), spark.read.parquet(paths[1])
+
+    marts = artifacts.memoized_commit(
+        spark, "static_dedup_index", sf_dir, threshold, build=build
+    )
+    return marts["prefix"].read(spark), marts["static"].read(spark)
 
 
 def stream_ingest_dedup_pairs(
@@ -658,27 +610,17 @@ def stream_current_window_histogram(
     return spark.table(sink_name)
 
 
-# Session-scoped memo for the containment screen's reference posting list
-# (sh, ref_id) — the lake-half shingle postings, parquet-materialized once
-# per (process, sf_dir); nb is NOT carried (containment divides by the
-# ARRIVING doc's size only).
-_CONT_REF_MEMO: dict[str, str] = {}
-
-
 def _containment_ref_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The committed (sh, ref_id) posting list of the lake half (rules:
+    :mod:`..artifacts`); nb is NOT carried (containment divides by the
+    ARRIVING doc's size only)."""
     from ..functions.text import shingles
     from ..sources.tables import load
 
-    key = os.path.abspath(sf_dir)
-    idx_path = _CONT_REF_MEMO.get(key)
-    if idx_path is None:
-        import hashlib
-
-        digest = hashlib.sha256(key.encode()).hexdigest()[:16]
-        idx_path = os.path.join(
-            _prefix_idx_root(), "containment_ref", digest, "postings"
-        )
-        (
+    return artifacts.memoized_commit(
+        spark, "containment_ref_index", sf_dir,
+        build=lambda commit: commit(
+            "postings",
             load(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 2 == 0)
             .select(
@@ -688,12 +630,9 @@ def _containment_ref_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.explode(
                     F.transform(shingles(F.col("text")), lambda x: F.xxhash64(x))
                 ).alias("sh"),
-            )
-            .write.mode("overwrite")
-            .parquet(idx_path)
-        )
-        _CONT_REF_MEMO[key] = idx_path
-    return spark.read.parquet(idx_path)
+            ),
+        ),
+    )["postings"].read(spark)
 
 
 def stream_containment_screen(

@@ -74,3 +74,9 @@ def test_recommit_preserves_time_travel_to_prior_graph(spark, tmp_path):
     assert em.current_version() == "v2"
     assert em.read(spark).count() == 10
     assert {(r.src_id, r.nbr_id) for r in em.read(spark, version="v1").collect()} == v1
+
+
+def test_search_without_query_vector_fails_loudly(spark):
+    assign, edges = _knn_refined_tables(spark, SF_DIR)
+    with pytest.raises(ValueError, match="query vector 0 missing from assign"):
+        graph_beam_search(spark, assign.filter("vec_id != 0"), edges, _n(spark))

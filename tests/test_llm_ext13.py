@@ -310,6 +310,7 @@ def test_lpa_labels_durable_commits_once_and_matches_fresh(spark):
     fresh propagation exactly, and a second consumer must READ the
     snapshot (same version, no rebuild) — the `_knn_refined_tables`
     contract applied to the LPA frame."""
+    from my_favorite_etl_pipeline_spark import artifacts
     from my_favorite_etl_pipeline_spark.plans import llm_ext13 as m
     from my_favorite_etl_pipeline_spark.sources.mart import VersionedMart
 
@@ -319,8 +320,9 @@ def test_lpa_labels_durable_commits_once_and_matches_fresh(spark):
     )
     assert d1 == fresh and fresh
 
-    parts = spark.conf.get("spark.sql.shuffle.partitions", "")
-    base = m._LPA_MART_MEMO[(os.path.abspath(SF_DIR), parts)]
+    base = artifacts.memoized_commit(
+        spark, "lpa_labels", SF_DIR, build=lambda commit: pytest.fail("rebuilt")
+    )["labels"].root
     v = VersionedMart(base).current_version()
     d2 = sorted(
         (r.node, r.lab) for r in m.lpa_labels_durable(spark, SF_DIR).collect()
