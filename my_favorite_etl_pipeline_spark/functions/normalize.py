@@ -2,7 +2,8 @@
 
 Each function is one operator from the reference's transform task, re-expressed
 as a pure DataFrame→DataFrame combinator. None of them uses a Python row UDF —
-everything stays inside Catalyst/codegen.
+everything stays inside Catalyst/codegen. Each adds ONE projection (a single
+``withColumns``), so a chain is re-analyzed once per step, not once per column.
 
 Reference citations are into /root/reference/dag_mgo_pg_schedule_etl_qc.py
 (abbreviated ``dag:NNN``).
@@ -50,11 +51,8 @@ def structs_to_json(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
         for f in df.schema.fields
         if isinstance(f.dataType, (T.StructType, T.ArrayType, T.MapType))
     ]
-    out = df
-    for c in targets:
-        if c in df.columns:  # F3 presence guard (dag:171-172)
-            out = out.withColumn(c, F.to_json(F.col(c)))
-    return out
+    present = [c for c in targets if c in df.columns]  # F3 presence guard (dag:171-172)
+    return df.withColumns({c: F.to_json(F.col(c)) for c in present})
 
 
 def flatten_struct(df: DataFrame, col: str, keys: list[str], prefix: str | None = None) -> DataFrame:
@@ -68,19 +66,16 @@ def flatten_struct(df: DataFrame, col: str, keys: list[str], prefix: str | None 
     prefix = prefix if prefix is not None else col
     if col not in df.columns:
         # absent at source: emit typed NULLs, preserving the sink contract (F3)
-        out = df
-        for k in keys:
-            out = out.withColumn(f"{prefix}_{k}", F.lit(None).cast("string"))
-        return out
+        return df.withColumns({f"{prefix}_{k}": F.lit(None).cast("string") for k in keys})
     dtype = df.schema[col].dataType
-    out = df
+    exprs: dict[str, Column] = {}
     for k in keys:
         if isinstance(dtype, T.StructType):
-            src: Column = F.col(f"{col}.{k}") if k in dtype.names else F.lit(None)
-            out = out.withColumn(f"{prefix}_{k}", src.cast("string"))
+            src = F.col(f"{col}.{k}") if k in dtype.names else F.lit(None)
+            exprs[f"{prefix}_{k}"] = src.cast("string")
         else:
-            out = out.withColumn(f"{prefix}_{k}", F.get_json_object(F.col(col), f"$.{k}"))
-    return out
+            exprs[f"{prefix}_{k}"] = F.get_json_object(F.col(col), f"$.{k}")
+    return df.withColumns(exprs)
 
 
 def coerce_timestamps(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -90,14 +85,13 @@ def coerce_timestamps(df: DataFrame, cols: list[str]) -> DataFrame:
     error. ``try_to_timestamp`` keeps this true even under ANSI mode; already
     -typed timestamp columns pass through untouched.
     """
-    out = df
-    for c in cols:
-        if c not in df.columns:  # F3 presence guard (dag:178-179)
-            continue
-        if isinstance(df.schema[c].dataType, (T.TimestampType, T.TimestampNTZType)):
-            continue
-        out = out.withColumn(c, F.try_to_timestamp(F.col(c).cast("string")))
-    return out
+    dtypes = {f.name: f.dataType for f in df.schema.fields}
+    return df.withColumns({
+        c: F.try_to_timestamp(F.col(c).cast("string"))
+        for c in cols
+        if c in dtypes  # F3 presence guard (dag:178-179)
+        and not isinstance(dtypes[c], (T.TimestampType, T.TimestampNTZType))
+    })
 
 
 def align_to_schema(df: DataFrame, target: T.StructType) -> DataFrame:

@@ -72,16 +72,20 @@ class DQSuite:
     def violation_columns(self) -> list[Column]:
         return [c for _, c in self.checks]
 
-    def violations(self, df: DataFrame) -> dict[str, int]:
-        """One aggregation job over all checks."""
-        if not self.checks:
-            return {}
-        row = df.agg(*self.violation_columns()).collect()[0]
-        return {name: int(row[name]) for name, _ in self.checks}
+    def violations(self, df: DataFrame, *extra: Column) -> dict[str, int]:
+        """One aggregation job over all checks.
 
-    def enforce(self, df: DataFrame) -> dict[str, int]:
-        counts = self.violations(df)
-        failed = {k: v for k, v in counts.items() if v}
+        ``extra`` aliased aggregates (row counts, say) ride the same pass
+        and come back under their aliases; they never gate."""
+        cols = [*self.violation_columns(), *extra]
+        if not cols:
+            return {}
+        row = df.agg(*cols).collect()[0]
+        return {name: int(value) for name, value in row.asDict().items()}
+
+    def enforce(self, df: DataFrame, *extra: Column) -> dict[str, int]:
+        counts = self.violations(df, *extra)
+        failed = {name: counts[name] for name, _ in self.checks if counts[name]}
         if failed:
             raise DQViolation(f"DQ gate failed: {failed}")
         return counts

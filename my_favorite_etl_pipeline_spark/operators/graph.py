@@ -20,6 +20,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Each round inside a convergence batch references the previous round's
+# labels twice (neighbour-min build + label update), with no checkpoint in
+# between, so the logical plan grows about 2^k over a batch of k rounds.
+# Past 4 rounds analysis and planning cost more than the driver round trip
+# the batching saves.
+MAX_ROUNDS_PER_CHECK = 4
+
 
 def connected_components(
     edges: DataFrame,
@@ -54,8 +61,15 @@ def connected_components(
     fixtures) converge in one collect instead of two+. Within a batch the
     previous round's label subtree appears on both sides of the next
     round's join; Spark's ReuseExchange dedupes the identical exchange,
-    so the batch costs the same shuffles as unbatched rounds.
+    so the batch costs the same shuffles as unbatched rounds. The plan
+    still grows about 2^k over a batch, so ``rounds_per_check`` above
+    :data:`MAX_ROUNDS_PER_CHECK` raises ``ValueError``.
     """
+    if rounds_per_check > MAX_ROUNDS_PER_CHECK:
+        raise ValueError(
+            f"rounds_per_check={rounds_per_check} exceeds MAX_ROUNDS_PER_CHECK="
+            f"{MAX_ROUNDS_PER_CHECK}: the plan grows about 2^k per convergence batch"
+        )
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     # materialize once — every iteration joins against it, and recomputing
     # the (possibly expensive) pair-generation upstream per round would

@@ -31,6 +31,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def latest_per_key(df: DataFrame, key: str, order_cols: list[str]) -> DataFrame:
@@ -84,23 +85,32 @@ def merge_upsert(
     missing = [c for c in update_cols if c not in cols]
     if missing:
         raise ValueError(f"update_cols not in mart schema: {missing}")
-    b = batch.select(*cols)  # align column order/selection to the mart contract
-    m = mart.alias("m")
-    bb = b.alias("b")
-    matched = F.col(f"b.{key}").isNotNull() & F.col(f"m.{key}").isNotNull()
-    new_row = F.col(f"m.{key}").isNull()
+    # align column order/selection to the mart contract
+    b = batch.selectExpr(*[quote_ident(c) for c in cols])
+    # The output projection is SQL text parsed in one call: building it
+    # from Column objects costs several driver round trips per column.
+    mk, bk = f"m.{quote_ident(key)}", f"b.{quote_ident(key)}"
+    matched = f"({bk} IS NOT NULL AND {mk} IS NOT NULL)"
+    new_row = f"{mk} IS NULL"
     out_cols = []
     for c in cols:
+        q = quote_ident(c)
         if c == key:
-            expr = F.coalesce(F.col(f"m.{key}"), F.col(f"b.{key}"))
+            expr = f"coalesce({mk}, {bk})"
         elif c in update_cols:
             # matched → batch value (even if NULL: the reference's DO UPDATE
             # overwrites with EXCLUDED values unconditionally); new → batch
-            expr = F.when(matched | new_row, F.col(f"b.{c}")).otherwise(F.col(f"m.{c}"))
+            expr = f"CASE WHEN {matched} OR {new_row} THEN b.{q} ELSE m.{q} END"
         else:
-            expr = F.when(new_row, F.col(f"b.{c}")).otherwise(F.col(f"m.{c}"))
-        out_cols.append(expr.alias(c))
-    return m.join(bb, F.col(f"m.{key}") == F.col(f"b.{key}"), "full_outer").select(*out_cols)
+            expr = f"CASE WHEN {new_row} THEN b.{q} ELSE m.{q} END"
+        out_cols.append(f"{expr} AS {q}")
+    joined = mart.alias("m").join(b.alias("b"), F.expr(f"{mk} = {bk}"), "full_outer")
+    return joined.selectExpr(*out_cols)
+
+
+def quote_ident(name: str) -> str:
+    """Backtick-quote a column name for SQL text (dots, keywords, backticks)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def write_staging(df: DataFrame, path: str, run_id: str, run_col: str = "batch_run_id") -> None:
@@ -123,9 +133,19 @@ def write_staging(df: DataFrame, path: str, run_id: str, run_col: str = "batch_r
     )
 
 
-def read_staging_run(spark: SparkSession, path: str, run_id: str, run_col: str = "batch_run_id") -> DataFrame:
-    """Scan one run's staging rows — partition-pruned (dag:310 analogue)."""
-    return spark.read.parquet(path).filter(F.col(run_col) == run_id)
+def read_staging_run(
+    spark: SparkSession,
+    path: str,
+    run_id: str,
+    run_col: str = "batch_run_id",
+    schema: StructType | None = None,
+) -> DataFrame:
+    """Scan one run's staging rows — partition-pruned (dag:310 analogue).
+
+    The writer knows the batch's ``schema``; passing it skips the parquet
+    schema-inference job."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path).filter(F.col(run_col) == run_id)
 
 
 def delete_staging_run(path: str, run_id: str, run_col: str = "batch_run_id") -> bool:

@@ -5,22 +5,28 @@ The reference's six Airflow tasks (check_connections >> extract >> transform
 dag_mgo_pg_schedule_etl_qc.py:482) collapse into a single lazy Catalyst plan
 plus its write/verify actions:
 
-    gate → [extract+transform: one fused plan] → staging write → merge →
-    DQ gate → reconcile
+    empty-window probe → [extract+transform: one fused plan] → staging
+    write → merge, written once and unpublished → DQ gate + reconcile (one
+    aggregate over the written merge) → publish → staging cleanup
 
-Laziness fuses extract and transform into one scan; the only process
-boundaries left are driver→executor job submissions at the 4 actions
-(SURVEY §3.1). Backfill = map this function over historical windows; safe
-because the window predicate scopes the read, the merge is idempotent per
-key, and staging is partition-isolated per run (the reference's headline
-deadlock fix, dag:4, by layout instead of lock order).
+Laziness fuses extract and transform into one scan. The only process
+boundaries left are the 4 actions (probe, staging write, merge write, gate
+aggregate); with AQE's shuffle-stage jobs a batch that merges into a
+parquet mart costs at most 8 Spark jobs, and one into an empty mart 6
+(SURVEY §3.1). Both gates raise before the merge becomes visible.
+
+Backfill = map this function over historical windows; safe because the
+window predicate scopes the read, the merge is idempotent per key, and
+staging is partition-isolated per run (the reference's headline deadlock
+fix, dag:4, by layout instead of lock order).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .caching import materialized_scope
 from .functions.normalize import (
@@ -99,13 +105,24 @@ def run_incremental_batch(
 ) -> tuple[DataFrame, BatchReport]:
     """One scheduled batch of the reference pipeline, Spark-first.
 
-    Returns (new mart DataFrame, report). With ``mart_path`` set, the merged
-    mart is persisted via :class:`~.sources.mart.VersionedMart` — a
-    write-new-dir + atomic-manifest-rename commit (the dag:322
-    ``conn.commit()`` analogue), crash-safe at every cut point — and the
-    returned DataFrame reads from the committed version. Without it the
-    caller owns persistence (Delta MERGE in production) and the merge is
-    pinned via localCheckpoint only.
+    Returns (new mart DataFrame, report). Order: extract → staging write →
+    merge written ONCE, unpublished → one aggregate over that written
+    merge gates it (DQ suite + exact reconciliation) → publish → staging
+    cleanup. A failed gate raises before anything becomes visible.
+
+    With ``mart_path`` set, the merge is written as an unpublished
+    :class:`~.sources.mart.VersionedMart` version and published by the
+    atomic manifest swap (the dag:322 ``conn.commit()`` analogue) only
+    after the gate passes; the returned DataFrame reads the committed
+    version. Without it the caller owns persistence (Delta MERGE in
+    production) and the merge is pinned via localCheckpoint only.
+
+    Job budget: at most 8 Spark jobs for a batch that merges into a
+    parquet mart — the empty-window probe, the staging write (which also
+    counts the extracted rows), the version write (the merge), and the
+    gate's single aggregate. An empty window costs the probe alone; a mart
+    without a ``batch_run_id`` lineage column adds one count of the staged
+    rows (its reconciliation falls back to them).
     """
     with materialized_scope():
         return _run_incremental_batch(
@@ -137,8 +154,12 @@ def _run_incremental_batch(
         return mart, report
 
     batch = transform(extracted, run_id, ts_cols=tuple(ts))
-    write_staging(batch, staging_path, run_id)  # M1: partition-per-run landing
-    staged = read_staging_run(spark, staging_path, run_id)
+    # A1: the source-window count rides the staging write, no second scan
+    landed = Observation()
+    observed = batch.observe(landed, F.count(F.lit(1)).alias("rows"))
+    write_staging(observed, staging_path, run_id)  # M1: partition-per-run landing
+    report.extracted = landed.get["rows"]
+    staged = read_staging_run(spark, staging_path, run_id, schema=batch.schema)
     batch_aligned = staged.select(*mart.columns)
 
     if update_cols is None:
@@ -152,38 +173,46 @@ def _run_incremental_batch(
     # below undercounts, and a healthy overlapping backfill / fresh-run-id
     # retry false-fails. (The reference DAG shares this flaw with
     # airflow_run_id; parity is not worth spurious DQViolations.)
-    if "batch_run_id" in mart.columns and "batch_run_id" not in update_cols:
+    lineage = "batch_run_id" in mart.columns
+    if lineage and "batch_run_id" not in update_cols:
         update_cols = [*update_cols, "batch_run_id"]
     merged = merge_upsert(mart, batch_aligned, key, update_cols)
 
     suite = dq or DQSuite().add_unique(key).add_not_null(key)
-    report.dq_violations = suite.enforce(merged)  # Q1: raises DQViolation on fail
+    stats = [F.count(F.lit(1)).alias("__merged_total")]
+    if lineage:
+        stats.append(F.count(F.when(F.col("batch_run_id") == run_id, 1)).alias("__sink_rows"))
 
-    # A1-A3: source-window count vs merged-batch count, exact (dag:417-420)
-    src_count = extracted.count()
-    report.extracted = src_count
-    dst_count = merged.filter(merged["batch_run_id"] == run_id).count() if (
-        "batch_run_id" in merged.columns
-    ) else batch_aligned.count()
-    reconcile_counts(src_count, dst_count)
+    def gate(written: DataFrame) -> None:
+        """Q1 + A1-A3 over the written merge, in one aggregate: raises
+        DQViolation on a failed check or a count mismatch (exact,
+        dag:417-420)."""
+        counts = suite.enforce(written, *stats)
+        report.merged_total = counts.pop("__merged_total")
+        # without lineage the sink count falls back to the staged rows
+        sink = counts.pop("__sink_rows") if lineage else batch_aligned.count()
+        report.dq_violations = counts
+        reconcile_counts(report.extracted, sink)
 
     # M4 ordering: the merge must be durable BEFORE staging cleanup
     # (dag:322's commit covers insert+upsert+delete). With a mart_path the
     # durability point is the VersionedMart manifest swap — one atomic
-    # rename; a crash before it leaves the previous version fully visible,
-    # a crash after it leaves at worst an uncleaned staging partition that
-    # the idempotent retry re-creates and re-deletes. Without a mart_path,
-    # localCheckpoint materializes the merge (truncating the lineage that
-    # still reads staging) and the caller owns real persistence.
+    # rename, taken only after the gate passed on the written version; a
+    # crash or a failed gate before it leaves the previous version fully
+    # visible, a crash after it leaves at worst an uncleaned staging
+    # partition that the idempotent retry re-creates and re-deletes.
+    # Without a mart_path, localCheckpoint materializes the merge
+    # (truncating the lineage that still reads staging) and the caller
+    # owns real persistence.
     if mart_path is not None:
         from .sources.mart import VersionedMart
 
         vm = VersionedMart(mart_path)
-        vm.commit(merged, version=run_id)
-        merged = vm.read(spark)
+        vm.commit(merged, version=run_id, check=gate)
+        merged = vm.read(spark, schema=merged.schema)
     else:
         merged = merged.localCheckpoint(eager=True)
-    report.merged_total = merged.count()
+        gate(merged)
     delete_staging_run(staging_path, run_id)  # M3: scoped cleanup, metadata-only
     return merged, report
 

@@ -9,8 +9,9 @@ Design notes (100 TB posture):
   ``try_*`` function family explicitly wherever coercion is load-bearing.
 - ``spark.sql.session.timeZone=UTC``: the fixture parquet stores naive
   timestamps; pinning UTC makes Spark's reading byte-identical to DuckDB's.
-- shuffle partitions default to the local core count; on a real cluster this
-  is overridden (or left to AQE coalescing from a high initial value).
+- the local master uses ``SPARK_GRAFT_CPUS`` threads, or every core the
+  machine reports when it is unset; shuffle partitions start at 32 and AQE
+  coalesces them (on a real cluster both are overridden).
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 
 
 def get_spark(app_name: str = "my-favorite-etl-pipeline-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -48,7 +49,7 @@ def get_spark(app_name: str = "my-favorite-etl-pipeline-spark") -> SparkSession:
         # only when every post-shuffle partition's ACTUAL size fits 64 MB).
         # The skew backstop for the static pick is AQE skew-join splitting
         # (enabled above; covers SHJ on Spark >= 3.2), adversarially
-        # exercised by tests/test_shj_skew.py: one hot build-side key far
+        # exercised by tests/test_shj_skew.py: one hot stream-side key far
         # above the per-partition budget completes and splits. A single
         # giant KEY (unsplittable by AQE) is the residual risk at 100 TB —
         # the salting guidance in operators/skew.py is the remedy there.

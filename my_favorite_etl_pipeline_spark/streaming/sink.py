@@ -10,7 +10,7 @@ backfill, and streaming, which is what keeps the three mutually idempotent.
 
 Crash semantics match the batch runner's: the version name derives from the
 micro-batch id, so a replayed batch (streaming's at-least-once delivery
-after a checkpoint recovery) re-commits the same version — an overwrite of
+after a checkpoint recovery) re-commits the same version — a fresh copy of
 an identical state, not a duplicate application — and a crash between the
 data write and the manifest swap leaves the previous version fully visible.
 
@@ -50,9 +50,9 @@ def stream_merge_into_mart(
         spark = batch_df.sparkSession
         mart = vm.read(spark)
         merged = merge_upsert(mart, batch_df.select(*mart.columns), key, update_cols)
-        # localCheckpoint pins the merge BEFORE commit rewrites the files it
-        # was lazily reading — same ordering rule as the batch runner (M4)
-        vm.commit(merged.localCheckpoint(eager=True), version=f"batch_{batch_id}")
+        # commit never writes into the version the merge reads (a replay
+        # lands in a fresh directory), so the merge streams straight into it
+        vm.commit(merged, version=f"batch_{batch_id}")
 
     writer = stream_df.writeStream.foreachBatch(_merge_batch)
     if checkpoint_dir is not None:

@@ -215,6 +215,27 @@ def test_star_cc_matches_propagation_on_random_graph(spark):
     assert a == b
 
 
+def test_cc_rounds_per_check_is_bounded(spark):
+    """Up to MAX_ROUNDS_PER_CHECK rounds per convergence batch give the
+    same components as one; beyond it the 2^k plan growth is refused."""
+    import pytest as _pytest
+
+    from my_favorite_etl_pipeline_spark.operators.graph import (
+        MAX_ROUNDS_PER_CHECK,
+        connected_components,
+    )
+
+    e = spark.createDataFrame([(i, i + 1) for i in range(8)] + [(20, 21)], "src: long, dst: long")
+    one = {tuple(r) for r in connected_components(e, rounds_per_check=1).collect()}
+    most = {
+        tuple(r)
+        for r in connected_components(e, rounds_per_check=MAX_ROUNDS_PER_CHECK).collect()
+    }
+    assert one == most == {(i, 0) for i in range(9)} | {(20, 20), (21, 20)}
+    with _pytest.raises(ValueError, match="rounds_per_check"):
+        connected_components(e, rounds_per_check=MAX_ROUNDS_PER_CHECK + 1)
+
+
 def test_star_cc_converges_on_long_chain(spark):
     # A 300-node path: min-label propagation needs O(300) rounds (its
     # max_iter raises), the star contraction needs O(log^2 n).

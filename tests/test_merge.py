@@ -175,3 +175,26 @@ def test_mart_snapshot_diff_matches_pure_python(spark):
     assert got == expected
     changes = {c for c, *_ in expected.values()}
     assert changes == {"added", "deleted", "updated"}, "all three classes exercised"
+
+
+def test_merge_upsert_quotes_column_names(spark):
+    """The output projection is built from SQL text, so names that need
+    quoting (a dot, a backtick, a keyword — here the key itself) must keep
+    the semantics table: update_cols ← batch, others ← mart, new keys whole."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("order", T.LongType()),
+        T.StructField("a.b", T.StringType()),
+        T.StructField("we`ird", T.StringType()),
+        T.StructField("select", T.LongType()),
+    ])
+    mart = spark.createDataFrame([(1, "x", "keep", 10), (3, "m", "mart-only", 30)], schema)
+    batch = spark.createDataFrame([(1, "y", "no", 11), (2, "z", "new", 12)], schema)
+    out = merge_upsert(mart, batch, "order", ["a.b"])
+    assert out.columns == ["order", "a.b", "we`ird", "select"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, "y", "keep", 10),
+        (2, "z", "new", 12),
+        (3, "m", "mart-only", 30),
+    ]

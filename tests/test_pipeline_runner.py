@@ -217,6 +217,16 @@ def test_runner_persists_mart_atomically_and_retries_after_cleanup_crash(spark, 
 
     assert not os.path.exists(f"{staging}/batch_run_id=r2")
 
+    # re-running the PUBLISHED run id (a window retried after its commit)
+    # merges into the version it reads and republishes the fixpoint
+    published = _rows(merged2)
+    merged3, rep3 = run_incremental_batch(
+        spark, _source(spark), merged2, staging, WINDOW,
+        run_id="r2", mart_path=mart_path,
+    )
+    assert vm.current_version() == "r2" and rep3.merged_total == 2
+    assert _rows(merged3) == published
+
 
 def test_versioned_mart_time_travel_and_retention(spark, tmp_path):
     from my_favorite_etl_pipeline_spark.sources.mart import VersionedMart
@@ -241,3 +251,140 @@ def test_versioned_mart_time_travel_and_retention(spark, tmp_path):
     mart.commit(spark.range(45), "v4", keep=2)
     assert mart.history() == ["v1", "v2", "v3", "v4"]
     assert mart.read(spark).count() == 45
+
+
+def test_merging_batch_job_budget(spark, tmp_path):
+    """One batch that merges into a committed parquet mart runs in at most
+    8 Spark jobs: the empty-window probe, the staging write (which also
+    counts the extracted rows), the version write, and ONE aggregate for
+    the DQ suite, the per-run sink count and the merged total."""
+    from my_favorite_etl_pipeline_spark.sources.mart import VersionedMart
+
+    staging, mart_path = str(tmp_path / "staging"), str(tmp_path / "mart")
+    run_incremental_batch(
+        spark, _source(spark), _empty_mart(spark), staging, WINDOW,
+        run_id="r1", mart_path=mart_path,
+    )
+    mart = VersionedMart(mart_path).read(spark)
+    sc = spark.sparkContext
+    group = "test-merging-batch-job-budget"
+    sc.setJobGroup(group, "one merging batch")
+    try:
+        _, rep = run_incremental_batch(
+            spark, _source(spark), mart, staging, WINDOW,
+            run_id="r2", mart_path=mart_path,
+        )
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert (rep.extracted, rep.merged_total) == (2, 2)
+    assert rep.dq_violations == {"dup__id": 0, "null__id": 0}
+    assert len(jobs) <= 8, sorted(jobs)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_failed_gate_never_publishes_and_orphans_are_vacuumed(spark, tmp_path):
+    """A DQ failure (duplicate _id) and a reconciliation mismatch are both
+    caught on the written, unpublished version: the manifest keeps pointing
+    at the last good version and its rows stay readable. The next good
+    commit's vacuum reclaims the two orphan version directories."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from my_favorite_etl_pipeline_spark.sources.mart import VersionedMart
+
+    staging, mart_path = str(tmp_path / "staging"), str(tmp_path / "mart")
+    run_incremental_batch(
+        spark, _source(spark), _empty_mart(spark), staging, WINDOW,
+        run_id="r1", mart_path=mart_path,
+    )
+    vm = VersionedMart(mart_path)
+    good = _rows(vm.read(spark))
+
+    with pytest.raises(DQViolation, match="dup__id"):
+        run_incremental_batch(
+            spark, _source(spark).union(_source(spark)), vm.read(spark), staging,
+            WINDOW, run_id="r-dup", mart_path=mart_path,
+        )
+    assert vm.current_version() == "r1" and _rows(vm.read(spark)) == good
+
+    # a stale mart row already tagged with the incoming run id makes the
+    # per-run sink count 3 against 2 extracted rows
+    stale = vm.read(spark).limit(1).withColumn("_id", F.lit("99")).withColumn(
+        "batch_run_id", F.lit("r-mismatch")
+    )
+    with pytest.raises(DQViolation, match="reconciliation mismatch"):
+        run_incremental_batch(
+            spark, _source(spark), vm.read(spark).unionByName(stale), staging,
+            WINDOW, run_id="r-mismatch", mart_path=mart_path,
+        )
+    assert vm.current_version() == "r1" and _rows(vm.read(spark)) == good
+    assert sorted(os.listdir(tmp_path / "mart" / "data")) == ["r-dup", "r-mismatch", "r1"]
+
+    run_incremental_batch(
+        spark, _source(spark), vm.read(spark), staging, WINDOW,
+        run_id="r3", mart_path=mart_path,
+    )
+    assert vm.current_version() == "r3"
+    assert os.listdir(tmp_path / "mart" / "data") == ["r3"]
+
+
+def test_gated_commit_never_overwrites_the_published_version(spark, tmp_path):
+    """The check runs on the written version before the swap. Re-committing
+    the published version writes a fresh directory, so neither a failed
+    check nor a failed write job touches the rows the manifest names."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from my_favorite_etl_pipeline_spark.sources.mart import VersionedMart
+
+    vm = VersionedMart(str(tmp_path / "mart"))
+    vm.commit(spark.createDataFrame([Row(_id="1", v="a")]), version="r1")
+    df2 = spark.createDataFrame([Row(_id="1", v="b"), Row(_id="2", v="c")])
+
+    def reject(written):
+        assert vm.current_version() == "r1"
+        assert sorted(r.v for r in written.collect()) == ["b", "c"]
+        raise DQViolation("rejected")
+
+    with pytest.raises(DQViolation):
+        vm.commit(df2, version="r2", check=reject)
+    with pytest.raises(DQViolation):
+        vm.commit(df2, version="r1", check=reject)
+    with pytest.raises(Exception, match="boom"):  # the write job itself fails
+        vm.commit(df2.withColumn("v", F.expr("raise_error('boom')")), version="r1")
+    assert vm.current_version() == "r1"
+    assert {r.v for r in vm.read(spark).collect()} == {"a"}
+
+    assert vm.commit(df2, version="r1", check=lambda written: None) == "r1"
+    assert {r.v for r in vm.read(spark).collect()} == {"b", "c"}
+    # a re-commit may read the very copy it replaces
+    vm.commit(vm.read(spark).withColumn("v", F.upper("v")), version="r1")
+    assert {r.v for r in vm.read(spark).collect()} == {"B", "C"}
+    assert vm.history() == ["r1"]
+    kept = [d for base in ("data", "data.alt") for d in os.listdir(tmp_path / "mart" / base)]
+    assert kept == ["r1"]
+
+
+@pytest.mark.parametrize("persist", [False, True])
+def test_mart_without_lineage_reconciles_on_staged_rows(spark, tmp_path, persist):
+    """A mart with no ``batch_run_id`` column reconciles the extracted rows
+    against the staged ones, with and without a ``mart_path``."""
+    staging = str(tmp_path / "staging")
+    mart_path = str(tmp_path / "mart") if persist else None
+    mart = _empty_mart(spark).drop("batch_run_id")
+    for run_id in ("r1", "r2"):  # into an empty mart, then merging
+        mart, rep = run_incremental_batch(
+            spark, _source(spark), mart, staging, WINDOW,
+            run_id=run_id, mart_path=mart_path,
+        )
+        assert (rep.extracted, rep.merged_total) == (2, 2)
+        assert rep.dq_violations == {"dup__id": 0, "null__id": 0}
+    assert "batch_run_id" not in mart.columns
+    assert {r["_id"] for r in mart.collect()} == {"1", "2"}

@@ -3,15 +3,17 @@
 
 ``session.get_spark`` sets ``spark.sql.join.preferSortMergeJoin=false``.
 The plan-time SHJ pick bounds only the AVERAGE per-partition build size
-(estimated stats × shuffle.partitions), so a skewed build-side key can
-exceed the per-task budget where sort-merge would have spilled — the OOM
-risk ADVICE r15 called out. The engine's backstop is AQE skew-join
-splitting (``spark.sql.adaptive.skewJoin.enabled=true``, which covers
-shuffled-hash joins on Spark >= 3.2). This test exercises that backstop
-adversarially: ONE hot build-side key owns ~95% of the rows and its
-post-shuffle partition is far above both skew thresholds; the join must
-(a) complete with correct results and (b) show an ``AQEShuffleRead`` with
-skew-split partitions in the final adaptive plan.
+(estimated stats × shuffle.partitions), so a skewed key can exceed the
+per-task budget where sort-merge would have spilled — an OOM risk. The
+engine's backstop is AQE skew-join splitting
+(``spark.sql.adaptive.skewJoin.enabled=true``, which covers shuffled-hash
+joins on Spark >= 3.2). This test exercises that backstop adversarially:
+ONE hot key owns ~95% of the 200k-row STREAM side (the build side is the
+8-row table) and its post-shuffle partition is far above both skew
+thresholds; the join must (a) complete with correct results and (b) read
+that stream partition as several partial-reducer splits, which is what
+the ``AQEShuffleReadExec`` partition specs of the final adaptive plan
+record (the build partition is replicated once per split).
 
 Thresholds are scaled DOWN in a scoped conf block (256 MB default →
 256 KB) so the mechanism is provable in a unit-test-sized fixture — the
@@ -48,6 +50,29 @@ def _scoped_conf(spark, confs: dict):
                 spark.conf.set(k, v)
 
 
+def _skew_splits(plan) -> list:
+    """Partition specs produced by a skew split — ``PartialReducerPartitionSpec``
+    entries of every ``AQEShuffleReadExec`` — in a physical plan tree.
+    Query stages are leaves that wrap their plan, so the walk enters them."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _skew_splits(plan.executedPlan())
+    found = []
+    if name == "AQEShuffleReadExec":
+        specs = plan.partitionSpecs()
+        found += [
+            specs.apply(i)
+            for i in range(specs.size())
+            if specs.apply(i).getClass().getSimpleName() == "PartialReducerPartitionSpec"
+        ]
+    if name.endswith("QueryStageExec"):
+        found += _skew_splits(plan.plan())
+    kids = plan.children()
+    for i in range(kids.size()):
+        found += _skew_splits(kids.apply(i))
+    return found
+
+
 def test_shj_skew_split_completes_and_fires(spark):
     confs = {
         # the session posture under test (get_spark sets these; the unit
@@ -60,9 +85,8 @@ def test_shj_skew_split_completes_and_fires(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "256k",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64k",
-        # keep the probe side far below broadcast size? No — broadcast
-        # would dodge the shuffle entirely; force both sides through the
-        # exchange so the skewed stream partition actually exists
+        # no broadcast: it would dodge the shuffle entirely; force both
+        # sides through the exchange so the skewed stream partition exists
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.shuffle.partitions": "8",
         # the r15 posture's runtime SMJ→SHJ demotion knob
@@ -89,6 +113,8 @@ def test_shj_skew_split_completes_and_fires(spark):
 
         # final adaptive plan must show the skew split actually fired
         joined.collect()  # materialize so the SQL-tab final plan exists
-        final = joined._jdf.queryExecution().executedPlan().toString()
-        assert "AQEShuffleRead" in final
-        assert "skewed" in final, final[:2000]
+        final = joined._jdf.queryExecution().executedPlan()
+        splits = _skew_splits(final)
+        # the hot partition is read as several map-range slices of ONE reducer
+        assert len(splits) >= 2, final.toString()[:2000]
+        assert len({spec.reducerIndex() for spec in splits}) == 1

@@ -114,3 +114,60 @@ def test_typed_struct_props_prunes_json_schema_and_scan(spark, sf_dir):
     assert m, f"no ReadSchema in plan:\n{phys}"
     read_cols = {c.split(":")[0] for c in m.group(1).split(",") if c}
     assert read_cols == {"event_id", "event_type", "props"}
+
+
+def _transform_per_column(df, run_id, ts_cols, flatten):
+    """The transform task spelled out one ``withColumn`` per column — the
+    specification the one-projection-per-step combinators must reproduce."""
+    out = normalize_columns(df)
+    out = out.withColumn("_id", F.col("_id").cast("string"))
+    for c in ts_cols:
+        if c in out.columns and not isinstance(out.schema[c].dataType, T.TimestampType):
+            out = out.withColumn(c, F.try_to_timestamp(F.col(c).cast("string")))
+    for col, keys in flatten.items():
+        if col not in out.columns:
+            continue
+        dtype = out.schema[col].dataType
+        for k in keys:
+            if isinstance(dtype, T.StructType):
+                src = F.col(f"{col}.{k}") if k in dtype.names else F.lit(None)
+                out = out.withColumn(f"{col}_{k}", src.cast("string"))
+            else:
+                out = out.withColumn(f"{col}_{k}", F.get_json_object(F.col(col), f"$.{k}"))
+    for f in out.schema.fields:
+        if isinstance(f.dataType, (T.StructType, T.ArrayType, T.MapType)):
+            out = out.withColumn(f.name, F.to_json(F.col(f.name)))
+    return out.withColumn("batch_run_id", F.lit(run_id))
+
+
+def test_transform_matches_per_column_reference(spark):
+    """``transform`` against the per-column reference on FIXTURES §B
+    pathological shapes: a struct missing a field, an absent
+    flatten column (statusChangedBy), a JSON-string struct (updatedBy), an
+    already-typed timestamp next to string and unparseable ones, nested
+    blobs for J1, and a pre-existing lineage column."""
+    from my_favorite_etl_pipeline_spark.pipeline_runner import DEFAULT_FLATTEN, transform
+
+    schema = (
+        "`_id` long, `CreatedAt` timestamp, `updatedAt` string, `stateChangedAt` string, "
+        "`createdBy` struct<id:string,name:string,role:string>, `updatedBy` string, "
+        "`requestParams` struct<k:string,n:int>, tags array<string>, attrs map<string,int>, "
+        "`Batch Run ID` string, `Status` string"
+    )
+    rows = [
+        (1, dt.datetime(2024, 1, 10, 1), "2024-01-10 02:00:00", "not-a-date",
+         ("u1", "ann", "admin"), '{"id": "u9", "name": "zed", "client": "c9"}',
+         ("v", 1), ["x", "y"], {"a": 1}, "old-run", "open"),
+        (2, None, "garbage", None, None, None, None, None, None, None, None),
+        (3, dt.datetime(2024, 1, 10, 3), None, "2024-01-11 00:00:00",
+         (None, "bo", None), "not json", ("w", None), [], {}, "x", "closed"),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    ts_cols = ("createdat", "updatedat", "statechangedat", "statuschangedat")
+    for flatten in (None, {"createdby": ["id", "client"], "requestparams": ["k", "missing"]}):
+        got = transform(df, "run-1", ts_cols=ts_cols, flatten=flatten)
+        spec = flatten if flatten is not None else DEFAULT_FLATTEN
+        want = _transform_per_column(df, "run-1", ts_cols, spec)
+        assert got.schema == want.schema
+        assert sorted(got.collect()) == sorted(want.collect())
+    assert "statuschangedby_id" not in got.columns  # absent column stays absent
