@@ -19,6 +19,13 @@ scripts and the benchmark keep cache reuse across repeated runs.
 
 ``unpersist(blocking=False)`` is deliberate: release is a metadata
 operation; executors drop blocks asynchronously.
+
+Cached plans run full AQE (``canChangeCachedPlanOutputPartitioning``, set
+in session.py). Under Spark's default a persisted post-shuffle frame keeps
+all ``spark.sql.shuffle.partitions`` uncoalesced partitions, and every
+re-scan of it runs that many mostly-empty tasks. With AQE the cache is
+stored coalesced; the price is that a consumer that relied on the cache's
+hash partitioning may plan one extra shuffle.
 """
 
 from __future__ import annotations

@@ -17,6 +17,8 @@ deterministic across runs and partitionings.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -326,42 +328,59 @@ def minhash_near_dups(
     return jaccard_verify(df, pairs, id_col, text_col, threshold)
 
 
-def simhash_bits(text_col: Column | str, bits: int = 64) -> Column:
-    """SimHash signature as an array of ``bits/16`` 16-bit chunk values.
+# the masks 1 << b as foldable calls: the optimizer makes them one array
+# literal (a transform over sequence(0, 63) is rebuilt per token, ~20% slower)
+_SIMHASH_MASKS = "array(" + ", ".join(f"shiftleft(1L, {b})" for b in range(64)) + ")"
 
-    Per token hash h, each bit contributes +1/-1; the sign of the per-bit
-    sum is the signature bit. Computed with one aggregate over the token
-    array using a vector accumulator (zip_with) — no explode, no shuffle.
-    Chunked representation (not one int64) so blocking needs no bit surgery.
+
+def md5_word64(token: Column) -> Column:
+    """The first 64 bits of ``md5(token)`` as a signed long: hex chars 1-8
+    are bits 32-63 and chars 9-16 bits 0-31. md5 is bit-identical in every
+    engine, so a signature over these hashes is DuckDB-reproducible."""
+    return F.conv(F.substring(F.md5(token), 1, 16), 16, -10).cast("long")
+
+
+def simhash_bits(
+    text_col: Column | str,
+    token_hash: Callable[[Column], Column] = lambda t: F.xxhash64(t),
+) -> Column:
+    """64-bit SimHash signature as an array of four 16-bit chunk values.
+
+    Per 64-bit token hash h, each bit contributes +1/-1; the sign of the
+    per-bit sum is the signature bit. One aggregate over the token array
+    with a vector accumulator — no explode, no shuffle. Chunked (not one
+    int64) so blocking needs no bit surgery. ``token_hash`` picks the
+    sketch's hyperplanes: Spark's xxhash64 by default, or the portable
+    :func:`md5_word64`.
     """
     from ..functions.text import tokens
 
-    tok_hashes = F.transform(tokens(text_col), lambda t: F.xxhash64(t))
-    # literal bit masks (the top bit as signed-long min — 1<<63 overflows)
-    masks = F.array(
-        *[F.lit(1 << b if b < 63 else -(2**63)).cast("long") for b in range(bits)]
-    )
-    bitvec = lambda h: F.transform(  # noqa: E731
-        masks,
-        lambda m: F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1),
-    )
     sums = F.aggregate(
-        tok_hashes,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, h: F.zip_with(acc, bitvec(h), lambda x, y: x + y),
+        F.transform(tokens(text_col), token_hash),
+        F.array_repeat(F.lit(0), 64),
+        lambda acc, h: F.zip_with(
+            acc,
+            F.expr(_SIMHASH_MASKS),
+            lambda s, m: s + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1),
+        ),
     )
-    return _chunks_from_sums(sums, bits)
+    return _chunks_from_sums(sums)
 
 
-def _chunks_from_sums(sums: Column, bits: int) -> Column:
-    """Per-bit sums → sign bits → ``bits/16`` 16-bit chunk values (first
-    bit of each chunk most significant, matching the ``acc*2 + bit`` fold)."""
-    n_chunks = bits // 16
+def simhash_bits_portable(text_col: Column | str) -> Column:
+    """:func:`simhash_bits` over :func:`md5_word64`: the oracle-reproducible
+    signature (the hash changes the hyperplanes, not the sketch quality)."""
+    return simhash_bits(text_col, md5_word64)
+
+
+def _chunks_from_sums(sums: Column) -> Column:
+    """64 per-bit sums → sign bits → four 16-bit chunk values (first bit of
+    each chunk most significant, matching the ``acc*2 + bit`` fold)."""
     # let-bind the per-bit sums: the chunk extraction references them 4×
     return let(
         F.transform(sums, lambda s: F.when(s > 0, 1).otherwise(0)),
         lambda sign_bits: F.transform(
-            F.sequence(F.lit(0), F.lit(n_chunks - 1)),
+            F.sequence(F.lit(0), F.lit(3)),
             lambda c: F.aggregate(
                 F.slice(sign_bits, c.cast("int") * 16 + 1, 16),
                 F.lit(0),
@@ -369,57 +388,6 @@ def _chunks_from_sums(sums: Column, bits: int) -> Column:
             ),
         ),
     )
-
-
-def simhash_bits_portable(text_col: Column | str, bits: int = 64) -> Column:
-    """SimHash signature from ENGINE-PORTABLE token hashes.
-
-    Same vector-accumulator dataflow as :func:`simhash_bits`, but each
-    token's 64 hash bits come from md5 (two 8-hex-char halves parsed as
-    32-bit ints: bits 0-31 from chars 9-16, bits 32-63 from chars 1-8)
-    instead of Spark-specific xxhash64 — md5 is bit-identical in every
-    engine, so the whole signature is DuckDB-reproducible and the SimHash
-    family gets a value-hash oracle (xxhash64 kept as the fast production
-    default; the hash choice only changes which random hyperplanes the
-    sketch uses, not its quality).
-    """
-    from ..functions.text import tokens
-
-    assert bits == 64, "portable variant is fixed at 64 bits (md5 halves)"
-    # md5 appears twice on purpose: let-binding it (transform(array(..)))
-    # nests higher-order functions, which drops the expression out of
-    # whole-stage codegen — measured 2x SLOWER than hashing twice in
-    # codegen (8.5 s vs 4.4 s at sf0.1). Two codegen'd md5s win.
-    tok_hashes = F.transform(
-        tokens(text_col),
-        lambda t: F.struct(
-            F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long").alias("hi"),
-            F.conv(F.substring(F.md5(t), 9, 8), 16, 10).cast("long").alias("lo"),
-        ),
-    )
-
-    def bitvec(h: Column) -> Column:
-        return F.array(
-            *[
-                F.when(
-                    (
-                        (h["lo"] if b < 32 else h["hi"]).bitwiseAND(
-                            F.lit(1 << (b % 32)).cast("long")
-                        )
-                    )
-                    != 0,
-                    1,
-                ).otherwise(-1)
-                for b in range(64)
-            ]
-        )
-
-    sums = F.aggregate(
-        tok_hashes,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, h: F.zip_with(acc, bitvec(h), lambda x, y: x + y),
-    )
-    return _chunks_from_sums(sums, bits)
 
 
 def simhash_near_dups(

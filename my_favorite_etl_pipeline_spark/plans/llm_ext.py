@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..functions import text as TX
 from ..operators import similarity as SIM
 from ..operators.dedup import minhash_near_dups, shingles, simhash_bits, simhash_near_dups
+from ..operators.dedup import simhash_bits_portable
 from ..operators.multimodal import documents_as_media, extract_features
 from ..registry import register
 from ..sources.tables import load
@@ -283,8 +284,6 @@ def q_simhash_signatures_portable(spark: SparkSession, sf_dir: str) -> DataFrame
     value-hash oracle (the xxhash64 variant above stays the fast
     production default and keeps its rows-only status for a fundamental
     reason: no other engine reproduces Spark's xxhash64)."""
-    from ..operators.dedup import simhash_bits_portable
-
     docs = load(spark, sf_dir, "documents")
     sig = simhash_bits_portable(F.col("text"))
     return docs.select(
@@ -332,8 +331,6 @@ def q_simhash_near_dups_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     SimHash FAMILY end-to-end value verification (candidate recall is
     separately floor-tested against brute force for the xxhash variant in
     tests/test_dedup_similarity.py)."""
-    from ..operators.dedup import simhash_bits_portable, simhash_near_dups
-
     docs = load(spark, sf_dir, "documents")
     return simhash_near_dups(
         docs, "doc_id", "text", max_hamming=3, bits_fn=simhash_bits_portable

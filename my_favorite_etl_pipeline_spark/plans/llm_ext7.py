@@ -221,9 +221,11 @@ def q_dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan at 100 TB: the feature explode is map-only; the two multinomials
     are ONE hash aggregate over a {_DSIR_B}-key space (map-side combine
-    absorbs the explode volume); the bucket-weight table is {_DSIR_B} rows
-    and broadcasts into the per-doc scoring join; per-doc scores are one
-    more hash agg. The final top-N is the only global ordering and runs on
+    absorbs the explode volume); the side totals are a whole-table window
+    sum over those {_DSIR_B} rows (one partition, bounded by the bucket
+    count, not the corpus); the {_DSIR_B}-row bucket-weight table
+    broadcasts into the per-doc scoring join; per-doc scores are one more
+    hash agg. The final top-N is the only global ordering and runs on
     one row per raw document — TakeOrdered, no full sort. DSIR's actual
     sampling uses Gumbel noise on these same weights; the deterministic
     top-N here is the testable core (noise is a map-only ``-ln(-ln(u))``
@@ -272,14 +274,14 @@ def _dsir_doc_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("is_t"), F.col("c")).otherwise(0)).alias("ct"),
         F.sum(F.when(~F.col("is_t"), F.col("c")).otherwise(0)).alias("cr"),
     )
-    tot = counts.agg(
-        F.sum("ct").alias("tt"), F.sum("cr").alias("tr")
-    )
-    w = counts.crossJoin(F.broadcast(tot)).select(
+    # side totals as whole-table window sums over the bucket rows: counts
+    # is aggregated once, with no second aggregate and no cross join
+    whole = Window.partitionBy()
+    w = counts.select(
         "b",
         (
-            F.log((F.col("ct") + 1.0) / (F.col("tt") + float(_DSIR_B)))
-            - F.log((F.col("cr") + 1.0) / (F.col("tr") + float(_DSIR_B)))
+            F.log((F.col("ct") + 1.0) / (F.sum("ct").over(whole) + float(_DSIR_B)))
+            - F.log((F.col("cr") + 1.0) / (F.sum("cr").over(whole) + float(_DSIR_B)))
         ).alias("lw"),
     )
     docw = (

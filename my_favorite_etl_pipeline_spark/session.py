@@ -9,6 +9,9 @@ Design notes (100 TB posture):
   ``try_*`` function family explicitly wherever coercion is load-bearing.
 - ``spark.sql.session.timeZone=UTC``: the fixture parquet stores naive
   timestamps; pinning UTC makes Spark's reading byte-identical to DuckDB's.
+- ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true``
+  (``false`` by default on Spark 4.1): cached plans run full AQE, so a
+  persisted post-shuffle frame is stored coalesced (see caching.py).
 - the local master uses ``SPARK_GRAFT_CPUS`` threads, or every core the
   machine reports when it is unset; shuffle partitions start at 32 and AQE
   coalesces them (on a real cluster both are overridden).
@@ -21,6 +24,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+CACHED_PLAN_AQE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
 
 def get_spark(app_name: str = "my-favorite-etl-pipeline-spark") -> SparkSession:
@@ -32,27 +36,20 @@ def get_spark(app_name: str = "my-favorite-etl-pipeline-spark") -> SparkSession:
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
+        .config(CACHED_PLAN_AQE, "true")
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Allow shuffled-hash join where its size conditions hold instead of
-        # always sorting both sides (r15-opt, guide §3.1/§9): equal-width
-        # equi-joins on already-small-per-partition sides skip two sorts.
-        # Measured −20% on the merge/cluster join paths, every oracle green.
-        # Safety honesty (ADVICE r15): the two knobs bound DIFFERENT things.
-        # The plan-time SHJ pick bounds the AVERAGE per-partition build size
-        # (autoBroadcastJoinThreshold × shuffle.partitions over ESTIMATED
-        # stats), not the max — a skewed or misestimated build partition can
-        # exceed it, and SHJ's build-side hash map does not spill. The AQE
-        # local-map threshold is the stronger runtime bound (demotes SMJ→SHJ
-        # only when every post-shuffle partition's ACTUAL size fits 64 MB).
-        # The skew backstop for the static pick is AQE skew-join splitting
-        # (enabled above; covers SHJ on Spark >= 3.2), adversarially
-        # exercised by tests/test_shj_skew.py: one hot stream-side key far
-        # above the per-partition budget completes and splits. A single
-        # giant KEY (unsplittable by AQE) is the residual risk at 100 TB —
-        # the salting guidance in operators/skew.py is the remedy there.
+        # always sorting both sides: equal-width equi-joins on small-per-
+        # partition sides skip two sorts (−20% on the merge/cluster joins).
+        # The plan-time pick bounds the AVERAGE per-partition build size over
+        # estimated stats, and SHJ's build-side hash map does not spill; the
+        # AQE local-map threshold is the stronger runtime bound (every actual
+        # post-shuffle partition ≤ 64 MB). AQE skew splitting backs up the
+        # static pick (tests/test_shj_skew.py); a single giant key is the
+        # residual risk at 100 TB — salt it (operators/skew.py).
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
@@ -109,12 +106,11 @@ def tune_session(spark: SparkSession) -> SparkSession:
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.ansi.enabled", "false"),
         ("spark.sql.adaptive.enabled", "true"),
+        (CACHED_PLAN_AQE, "true"),
         # ns-parquet compatibility — session-wide by design (see get_spark);
         # normalize_event_time rebuilds the affected columns after scan
         ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        # perf parity with get_spark (r15-opt): allow shuffled-hash joins on
-        # externally-created sessions too — runtime-settable, size-bounded
-        # (see the get_spark comment), results unchanged by construction
+        # shuffled-hash joins as in get_spark: size-bounded, same results
         ("spark.sql.join.preferSortMergeJoin", "false"),
         (
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",

@@ -11,11 +11,12 @@ into the parquet scan (check ``PushedFilters``/``ReadSchema`` in
 from __future__ import annotations
 
 import os
-from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .. import artifacts
 
 TABLE_NAMES = (
     "region",
@@ -33,9 +34,8 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-@lru_cache(maxsize=256)
 def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — one footer read, cached.
+    """Columns stored as parquet TIMESTAMP(NANOS) — one footer read.
 
     Spark (4.x) rejects nanosecond parquet timestamps outright
     ([PARQUET_TYPE_ILLEGAL]); we detect them driver-side from the footer and
@@ -53,6 +53,23 @@ def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
         )
     except Exception:
         return ()
+
+
+def parquet_schema(spark: SparkSession, path: str) -> tuple[T.StructType, tuple[str, ...]]:
+    """The Spark read schema of a parquet file or directory, and its
+    TIMESTAMP(NANOS) columns, inferred once per file identity in a process:
+    ``(path, mtime_ns, size)`` of the file, or of each part file under the
+    directory, so a rewrite at the same path is inferred again. Reading
+    with an explicit schema skips Spark's per-read inference job."""
+    files = [path] if os.path.isfile(path) else sorted(
+        os.path.join(d, f) for d, _, names in os.walk(path) for f in names
+        if not f.startswith((".", "_"))
+    )
+    identity = tuple((f, os.stat(f).st_mtime_ns, os.stat(f).st_size) for f in files)
+    return artifacts.memoized(
+        spark, "parquet_schema", path, identity,
+        build=lambda: (spark.read.parquet(path).schema, _nanos_timestamp_cols(path)),
+    )
 
 
 def normalize_event_time(df: DataFrame, ns_cols: tuple[str, ...] = ()) -> DataFrame:
@@ -87,12 +104,12 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     path = f"{sf_dir}/{name}.parquet"
-    ns_cols = _nanos_timestamp_cols(path)
+    schema, ns_cols = parquet_schema(spark, path)
     # nanosAsLong is set session-wide at build/tune time (session.py) —
     # a loader must NOT mutate shared session conf mid-query. If the
     # session somehow lacks it AND the fixture is ns this round, the scan
     # throws PARQUET_TYPE_ILLEGAL loudly rather than silently diverging.
-    return normalize_event_time(spark.read.parquet(path), ns_cols)
+    return normalize_event_time(spark.read.schema(schema).parquet(path), ns_cols)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import artifacts
-from ..sources.tables import _nanos_timestamp_cols, normalize_event_time
+from ..sources.tables import normalize_event_time, parquet_schema
 
 
 @contextmanager
@@ -68,10 +68,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     requires ([EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE] on TIMESTAMP_NTZ).
     """
     path = f"{sf_dir}/events.parquet"
-    ns_cols = _nanos_timestamp_cols(path)
     # nanosAsLong is session-wide, set at build/tune time (session.py) —
     # readers never mutate shared conf mid-query.
-    schema = spark.read.parquet(path).schema
+    schema, ns_cols = parquet_schema(spark, path)
     # FileStreamSource requires a directory basePath; point it at sf_dir and
     # glob-filter down to the one table file.
     df = (

@@ -44,3 +44,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture
+def set_conf():
+    """``set_conf(session, key, value)`` sets a SQL conf (``None`` unsets
+    it) for the rest of the test; each key is restored, or unset again,
+    at teardown."""
+    saved = []
+
+    def set_conf(session, key: str, value: str | None) -> None:
+        saved.append((session, key, session.conf.get(key, None)))
+        if value is None:
+            session.conf.unset(key)
+        else:
+            session.conf.set(key, value)
+
+    yield set_conf
+    for session, key, prev in reversed(saved):
+        if prev is None:
+            session.conf.unset(key)
+        else:
+            session.conf.set(key, prev)

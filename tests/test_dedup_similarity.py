@@ -383,3 +383,90 @@ def test_ngram_jaccard_pairs_matches_literal_allpairs(spark, sf_dir):
         .collect()
     }
     assert got == expected and len(got) > 0
+
+
+# The signature expressions as they were before the single-mask rewrite: 64
+# literal masks (xxhash64) and 64 unrolled ``when``s over two md5 halves
+# (portable). Kept as the reference the shared function must reproduce.
+def _reference_simhash_bits(text_col):
+    from my_favorite_etl_pipeline_spark.functions.text import tokens
+    from my_favorite_etl_pipeline_spark.operators.dedup import _chunks_from_sums
+
+    tok_hashes = F.transform(tokens(text_col), lambda t: F.xxhash64(t))
+    masks = F.array(*[F.lit(1 << b if b < 63 else -(2**63)).cast("long") for b in range(64)])
+    bitvec = lambda h: F.transform(  # noqa: E731
+        masks, lambda m: F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1)
+    )
+    sums = F.aggregate(
+        tok_hashes,
+        F.array_repeat(F.lit(0), 64),
+        lambda acc, h: F.zip_with(acc, bitvec(h), lambda x, y: x + y),
+    )
+    return _chunks_from_sums(sums)
+
+
+def _reference_simhash_bits_portable(text_col):
+    from my_favorite_etl_pipeline_spark.functions.text import tokens
+    from my_favorite_etl_pipeline_spark.operators.dedup import _chunks_from_sums
+
+    tok_hashes = F.transform(
+        tokens(text_col),
+        lambda t: F.struct(
+            F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long").alias("hi"),
+            F.conv(F.substring(F.md5(t), 9, 8), 16, 10).cast("long").alias("lo"),
+        ),
+    )
+
+    def bitvec(h):
+        return F.array(
+            *[
+                F.when(
+                    (h["lo"] if b < 32 else h["hi"]).bitwiseAND(F.lit(1 << (b % 32)).cast("long"))
+                    != 0,
+                    1,
+                ).otherwise(-1)
+                for b in range(64)
+            ]
+        )
+
+    sums = F.aggregate(
+        tok_hashes,
+        F.array_repeat(F.lit(0), 64),
+        lambda acc, h: F.zip_with(acc, bitvec(h), lambda x, y: x + y),
+    )
+    return _chunks_from_sums(sums)
+
+
+def test_simhash_signatures_match_the_unrolled_reference(spark, sf_dir):
+    """Both signatures equal the unrolled reference on every fixture
+    document and on single tokens chosen for their sign bits: an md5 low
+    word with bit 31 set, an md5 high word with bit 31 set (a negative
+    packed word), a negative xxhash64, and the empty text."""
+    import hashlib
+
+    from my_favorite_etl_pipeline_spark.operators.dedup import (
+        simhash_bits,
+        simhash_bits_portable,
+    )
+    from my_favorite_etl_pipeline_spark.sources.tables import load
+
+    cands = spark.createDataFrame([(f"tok{i}",) for i in range(64)], ["text"])
+    neg_xx = cands.filter(F.xxhash64("text") < 0).first().text
+    md5 = {t: hashlib.md5(t.encode()).hexdigest() for t in (f"tok{i}" for i in range(64))}
+    lo_bit31 = next(t for t, m in md5.items() if int(m[8], 16) >= 8)
+    hi_bit31 = next(t for t, m in md5.items() if int(m[0], 16) >= 8)
+    picked = spark.createDataFrame(
+        [(-1, neg_xx), (-2, lo_bit31), (-3, hi_bit31), (-4, ""), (-5, f"{neg_xx} {lo_bit31}")],
+        "doc_id long, text string",
+    )
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text").unionByName(picked)
+    got = docs.select(
+        "doc_id",
+        simhash_bits("text").alias("x"),
+        _reference_simhash_bits("text").alias("x_ref"),
+        simhash_bits_portable("text").alias("p"),
+        _reference_simhash_bits_portable("text").alias("p_ref"),
+    ).collect()
+    assert len(got) > 5
+    for r in got:
+        assert (r.x, r.p) == (r.x_ref, r.p_ref), r.doc_id

@@ -1,0 +1,97 @@
+"""Fixed per-query overhead of the text-curation queries: Spark job budgets,
+the DSIR weight-table plan, and the parquet schema memo behind ``load``."""
+
+from __future__ import annotations
+
+import re
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from my_favorite_etl_pipeline_spark.caching import materialized_scope
+from my_favorite_etl_pipeline_spark.registry import REGISTRY
+from my_favorite_etl_pipeline_spark.session import CACHED_PLAN_AQE
+from my_favorite_etl_pipeline_spark.sources.tables import load, parquet_schema
+
+
+def _jobs_to_build_and_run(spark, sf_dir: str, name: str) -> int:
+    """Spark jobs one scoped build + ``noop`` write of a registered query
+    launches on a warm process (the schema memo already filled)."""
+    fn = REGISTRY[name].fn
+    with materialized_scope():
+        fn(spark, sf_dir)  # warm the process-wide memos
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    group = f"test-job-budget-{name}"
+    sc.setJobGroup(group, name)
+    try:
+        with materialized_scope():
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# Measured before the schema memo and the window-summed DSIR totals: 7
+# (simhash) and 12 (dsir) jobs. Each load paid a schema-inference job, and
+# DSIR aggregated its bucket counts a second time to feed a broadcast
+# cross join.
+@pytest.mark.parametrize(
+    "name, budget",
+    [("simhash_near_dups_portable", 6), ("dsir_importance_resample", 8)],
+)
+def test_text_query_job_budget(spark, sf_dir, set_conf, name, budget):
+    set_conf(spark, CACHED_PLAN_AQE, "true")  # as the engine's sessions run
+    assert _jobs_to_build_and_run(spark, sf_dir, name) == budget
+
+
+def test_dsir_weights_aggregate_counts_once_without_a_cross_join(spark, sf_dir):
+    with materialized_scope():
+        qe = REGISTRY["dsir_importance_resample"].fn(spark, sf_dir)._jdf.queryExecution()
+        optimized, physical = qe.optimizedPlan().toString(), qe.executedPlan().toString()
+    # the bucket-count aggregate is the only one grouped on ``b`` alone
+    assert len(re.findall(r"Aggregate \[b#\d+L?\]", optimized)) == 1
+    assert "BroadcastNestedLoopJoin" not in physical
+    assert "CartesianProduct" not in physical
+
+
+def _write_documents(path, **extra):
+    cols = {"doc_id": [1, 2], "text": ["a b", "c d"], **extra}
+    pq.write_table(pa.table(cols), path)
+
+
+def test_load_sees_a_file_rewritten_at_the_same_path(spark, tmp_path):
+    """The schema memo is keyed on file identity, not on the path: a
+    table rewritten in place with an extra column loads with it."""
+    path = tmp_path / "documents.parquet"
+    _write_documents(path)
+    assert load(spark, str(tmp_path), "documents").columns == ["doc_id", "text"]
+    _write_documents(path, lang=["en", "de"])
+    df = load(spark, str(tmp_path), "documents")
+    assert df.columns == ["doc_id", "text", "lang"]
+    assert sorted(r.lang for r in df.collect()) == ["de", "en"]
+
+
+def test_load_repairs_nanosecond_columns_of_a_rewritten_file(spark, tmp_path):
+    """The TIMESTAMP(NANOS) column list shares that memo: a rewrite that
+    adds a nanosecond column is repaired to a microsecond timestamp."""
+    path = tmp_path / "documents.parquet"
+    _write_documents(path)
+    load(spark, str(tmp_path), "documents").collect()
+    ts = pa.array([1_700_000_000_123_456_789, 0], pa.timestamp("ns", tz="UTC"))
+    _write_documents(path, ts=ts)
+    df = load(spark, str(tmp_path), "documents")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    got = sorted(r.ts.timestamp() for r in df.collect())
+    assert got == pytest.approx([0.0, 1_700_000_000.123456])
+
+
+def test_directory_schema_is_keyed_on_its_part_files(spark, tmp_path):
+    part = tmp_path / "t" / "part-0.parquet"
+    part.parent.mkdir()
+    _write_documents(part)
+    assert parquet_schema(spark, str(part.parent))[0].names == ["doc_id", "text"]
+    _write_documents(part, lang=["en", "de"])
+    assert parquet_schema(spark, str(part.parent))[0].names == ["doc_id", "text", "lang"]
