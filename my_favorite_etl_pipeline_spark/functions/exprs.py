@@ -8,6 +8,10 @@ codegen superlinearly — a 32-hash MinHash signature referenced by 16 band
 hashes re-inlines the whole signature 32×). Implemented as
 ``transform(array(value), x -> body(x))[0]``: the array wraps the value,
 the lambda binds it, element 1 unwraps the result.
+
+``spark_md5_32`` / ``duck_md5_32`` — one portable 32-bit hash as a Spark
+column and as the DuckDB SQL fragment that computes the same value (md5
+halves are bit-identical in every engine; xxhash/murmur are not).
 """
 
 from __future__ import annotations
@@ -34,3 +38,27 @@ def surrogate_key(*cols: Column | str, sep: str = "\x1f") -> Column:
     """
     parts = [F.coalesce((F.col(c) if isinstance(c, str) else c).cast("string"), F.lit("")) for c in cols]
     return F.md5(F.concat_ws(sep, *parts))
+
+
+def spark_md5_32(col: Column) -> Column:
+    """The first 8 hex chars of ``md5(col)`` as a long in [0, 2^32)."""
+    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+
+
+def duck_md5_32(expr: str) -> str:
+    """DuckDB twin of :func:`spark_md5_32` over the SQL expression ``expr``.
+
+    DuckDB has no CONV: the hex digits are summed via strpos arithmetic.
+    The lambda variable is named so that ``expr`` may reference a caller's
+    lambda or column ``i`` without being captured by it.
+    """
+    # The outer CAST is load-bearing: DuckDB silently promotes
+    # LIST_SUM(BIGINT[]) to HUGEINT, and the HUGEINT type then infects every
+    # arithmetic expression and UNION ALL branch downstream — invisible to a
+    # value-level comparison but rendered differently by a type-aware
+    # harness. Values always fit: the md5 half is < 2^32.
+    return (
+        "CAST(LIST_SUM(LIST_TRANSFORM(range(8), __md5_nib -> "
+        f"CAST(strpos('0123456789abcdef', substr(md5({expr}), __md5_nib + 1, 1)) - 1 "
+        "AS BIGINT) * (CAST(1 AS BIGINT) << (4 * (7 - __md5_nib))))) AS BIGINT)"
+    )

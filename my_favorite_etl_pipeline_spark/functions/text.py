@@ -77,6 +77,23 @@ def shingles(col: Column | str, n: int = 3) -> Column:
     return F.array_distinct(ngrams(col, n))
 
 
+# DuckDB twin of ``shingles(text, 3)``: the CTE pair ``toks``/``sh`` with
+# one row per document and its distinct 3-gram list ``s``. Oracles embed it
+# with an f-string at import time, so each oracle stays one self-contained
+# SQL string.
+DUCK_SHINGLES = """
+    toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+    sh AS (
+      SELECT doc_id,
+             list_distinct(CASE WHEN len(t) >= 3
+               THEN list_transform(range(len(t) - 2),
+                                   i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])
+               ELSE [] END) AS s
+      FROM toks
+    )
+"""
+
+
 def stopword_count(col: Column | str, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
     return F.size(F.filter(tokens(col), lambda t: t.isin(*stopwords)))
 
@@ -123,3 +140,17 @@ def fingerprint(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.md5(F.lower(F.trim(c)))
+
+
+# The held-out eval slice: ids whose md5 starts with hex '0', a stable
+# pseudo-random ~1/16 of the corpus. md5 is bit-identical in every engine,
+# so both halves select the same rows. documents.doc_id and embeddings.vec_id
+# share one id space, so text and vector passes audit the same slice.
+def spark_held_out(id_col: str = "doc_id") -> Column:
+    """True for rows of the held-out eval slice."""
+    return F.substring(F.md5(F.col(id_col).cast("string")), 1, 1) == "0"
+
+
+def duck_held_out(id_col: str = "doc_id") -> str:
+    """DuckDB twin of :func:`spark_held_out` as a SQL predicate."""
+    return f"substr(md5(CAST({id_col} AS VARCHAR)), 1, 1) = '0'"

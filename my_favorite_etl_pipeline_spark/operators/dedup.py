@@ -641,7 +641,6 @@ def excise_span_duplicates(
     min_tokens: int = 20,
     id_col: str = "doc_id",
     text_col: str = "text",
-    method: str = "canonical",
 ) -> DataFrame:
     """X1/X2 — cut duplicated spans out of the corpus (Lee et al. 2021,
     the excision step of exact-substring dedup).
@@ -651,12 +650,10 @@ def excise_span_duplicates(
     removed. A document can lose several (possibly overlapping) spans to
     different keepers — positions are deduplicated before removal.
 
-    ``method="canonical"`` (default) builds the removal set via
-    :func:`span_removal_positions` — O(df) rows per duplicated gram, the
-    shape that survives viral boilerplate (a licence header in 10⁶ docs).
-    ``method="pairwise"`` derives the identical set from
-    :func:`exact_span_matches` spans (O(df²) per hot gram) — kept for the
-    reporting composition and as the equivalence-test twin.
+    The removal set comes from :func:`span_removal_positions` — O(df) rows
+    per duplicated gram, the shape that survives viral boilerplate (a
+    licence header in 10⁶ docs); the pairwise :func:`exact_span_matches`
+    spans derive the identical set at O(df²) per hot gram.
 
     Dataflow after the removal set: distinct (doc, pos) → left join
     against the per-token explode of the corpus → re-assemble surviving
@@ -667,28 +664,9 @@ def excise_span_duplicates(
     Returns (doc_id, clean_text, n_removed_tokens) for EVERY input
     document (untouched docs come through with 0 removed).
     """
-    if method == "canonical":
-        removed = span_removal_positions(
-            docs, min_tokens=min_tokens, id_col=id_col, text_col=text_col
-        ).withColumn("__cut", F.lit(True))
-    elif method == "pairwise":
-        spans = exact_span_matches(
-            docs, min_tokens=min_tokens, id_col=id_col, text_col=text_col
-        )
-        removed = (
-            spans.select(
-                F.col("doc_b").alias(id_col),
-                F.explode(
-                    F.sequence(
-                        F.col("b_start"), F.col("b_start") + F.col("span_tokens") - 1
-                    )
-                ).alias("pos"),
-            )
-            .distinct()
-            .withColumn("__cut", F.lit(True))
-        )
-    else:
-        raise ValueError(f"unknown excision method: {method!r}")
+    removed = span_removal_positions(
+        docs, min_tokens=min_tokens, id_col=id_col, text_col=text_col
+    ).withColumn("__cut", F.lit(True))
     return _reassemble_without(docs, removed, id_col=id_col, text_col=text_col)
 
 

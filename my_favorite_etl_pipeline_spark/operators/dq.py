@@ -123,6 +123,26 @@ class DQSuite:
         return counts
 
 
+def assert_unique_doc_ids(docs: DataFrame, entry: str) -> None:
+    """Construction-time uniqueness probe (registry LAZINESS contract: a
+    plan may run a tiny scalar job while being built). The Spark mirror
+    of the oracle's ``uq`` error() guard — one count/count_distinct
+    aggregate over the bare id column (map-side partial agg, no text
+    shuffled), so the production path pays ~nothing and a duplicate-id
+    input fails LOUDLY on both engines instead of diverging silently
+    (per-row shingle arrays vs exploded postings inflate differently on
+    duplicates)."""
+    row = docs.agg(
+        F.count(F.lit(1)).alias("n"), F.count_distinct("doc_id").alias("d")
+    ).first()
+    if row.n != row.d:
+        raise ValueError(
+            f"{entry}: duplicate doc_id rows in documents input "
+            f"(rows={row.n}, distinct ids={row.d}); fuzzy decontamination "
+            "requires unique ids — dedupe upstream (dedup_exact_groups)"
+        )
+
+
 def reconcile_counts(src_count: int, dst_count: int) -> None:
     """A3 — exact row-count reconciliation (dag:417-420). Zero tolerance."""
     if src_count != dst_count:

@@ -1271,7 +1271,7 @@ def pq_adc_topk(
     # the full corpus but encodes/scores only probed cells (default: same).
     # ``cb`` (r16-opt): a caller holding the TRAINED codebook as a committed
     # (s, c, cv) table passes it and training is skipped — the serving-
-    # from-committed-artifacts posture (see plans/llm_ext5._pq_serving_tables).
+    # from-committed-artifacts posture (see plans/retrieval.py _pq_serving_tables).
     if cb is None:
         cb = pq_codebook(
             train if train is not None else corpus,

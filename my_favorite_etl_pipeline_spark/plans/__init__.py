@@ -42,21 +42,15 @@ def _import_or_warn(mod_name: str) -> None:
             raise
 
 
-_import_or_warn("llm_ext")
-_import_or_warn("llm_ext2")
-_import_or_warn("llm_ext3")
-_import_or_warn("llm_ext4")
-_import_or_warn("llm_ext5")
-_import_or_warn("llm_ext6")
-_import_or_warn("llm_ext7")
-_import_or_warn("llm_ext8")
-_import_or_warn("llm_ext9")
-_import_or_warn("llm_ext10")
-_import_or_warn("llm_ext11")
-_import_or_warn("llm_ext12")
-_import_or_warn("llm_ext13")
-_import_or_warn("llm_ext14")
-_import_or_warn("llm_ext15")
-_import_or_warn("forensics")
-_import_or_warn("streaming_queries")
-_import_or_warn("docstore_queries")
+for _family in (
+    "dedup",
+    "retrieval",
+    "graph",
+    "tokenizers",
+    "curation",
+    "assembly",
+    "multimodal",
+    "streaming_queries",
+    "docstore_queries",
+):
+    _import_or_warn(_family)

@@ -511,3 +511,65 @@ def gapfill_interpolate_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("v_interp_cents"),
         F.col("vc").isNull().alias("was_gap"),
     ).orderBy("user_id", "bucket")
+
+
+@register(
+    "zorder_events_morton",
+    oracle="""
+    WITH b AS (
+      SELECT MIN(user_id) AS lo_u, MAX(user_id) AS hi_u,
+             MIN(CAST(floor(epoch(ts)) AS BIGINT)) AS lo_t,
+             MAX(CAST(floor(epoch(ts)) AS BIGINT)) AS hi_t
+      FROM events
+    ),
+    r AS (
+      SELECT event_id,
+             CASE WHEN hi_u > lo_u THEN CAST(floor(
+               (user_id - lo_u) / CAST(hi_u - lo_u AS DOUBLE) * 65535
+             ) AS BIGINT) ELSE 0 END AS ru,
+             CASE WHEN hi_t > lo_t THEN CAST(floor(
+               (CAST(floor(epoch(ts)) AS BIGINT) - lo_t)
+               / CAST(hi_t - lo_t AS DOUBLE) * 65535
+             ) AS BIGINT) ELSE 0 END AS rt
+      FROM events CROSS JOIN b
+    )
+    SELECT event_id,
+           CAST(list_sum(list_transform(range(16), bb ->
+             (((ru >> bb) & 1) << (bb * 2)) + (((rt >> bb) & 1) << (bb * 2 + 1))
+           )) AS BIGINT) AS zval
+    FROM r ORDER BY event_id
+    """,
+)
+def q_zorder_events_morton(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Layout — Morton (Z-order) codes over (user_id, event time): the
+    clustering key behind multi-dimensional data skipping (`OPTIMIZE
+    ZORDER BY` in lakehouse formats, re-expressed as plain columns).
+    ``operators/layout.py:write_zordered`` sorts by this value so every
+    parquet file's min/max footers form a tight box in BOTH dimensions;
+    the pruning win is proven in tests/test_curation_filters.py by
+    counting row groups a 2-D box predicate can skip vs a linear layout.
+
+    Plan: one scalar aggregate for the bounds (broadcast 1-row cross
+    join), then a pure per-row HOF bit-interleave — map-only, codegen'd.
+    The oracle recomputes the identical float-then-floor arithmetic, so
+    scaling or interleaving drift is a hash mismatch.
+    """
+    from ..operators.layout import zorder_value
+
+    ev = load(spark, sf_dir, "events")
+    b = ev.agg(
+        F.min("user_id").alias("lo_u"),
+        F.max("user_id").alias("hi_u"),
+        F.min(F.unix_timestamp("ts")).alias("lo_t"),
+        F.max(F.unix_timestamp("ts")).alias("hi_t"),
+    )
+    joined = ev.crossJoin(F.broadcast(b))
+    z = zorder_value(
+        [F.col("user_id").cast("long"), F.unix_timestamp("ts")],
+        [
+            (F.col("lo_u").cast("long"), F.col("hi_u").cast("long")),
+            (F.col("lo_t"), F.col("hi_t")),
+        ],
+        bits=16,
+    )
+    return joined.select("event_id", z.alias("zval")).orderBy("event_id")

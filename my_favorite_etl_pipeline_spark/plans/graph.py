@@ -1,369 +1,45 @@
-"""[EXT] curation round 7 — scale-path decontamination and importance
-resampling (SURVEY.md §2.9 X4; no reference citation exists — the citation
-is BASELINE.json's LLM-data mandate).
+"""kNN-graph plans: construction, search and graph analytics.
 
-- ``decontaminate_bloom_13gram`` — the 100 TB shape of benchmark
-  decontamination: a DataFrame-native Bloom filter over the benchmark's
-  13-gram set (a ~16 K-row (word, bits) bit table built with ONE bit_or
-  aggregate) broadcast against the training side as a probe join, then an
-  EXACT gram semi-join verify on the tiny survivor set. False negatives
-  are impossible by construction (every true hit sets all its probe bits),
-  so the final answer is exact and shares ``contamination_13gram``'s
-  oracle — the bloom stage only prunes what the verify join must touch.
-  This is the production fallback for when the eval suite's gram set is
-  too large to broadcast whole but its Bloom table (KBs) is not.
-- ``dsir_importance_resample`` — Data Selection via Importance Resampling
-  (Xie et al. 2023): fit two bag-of-hashed-ngrams multinomials (target =
-  the benchmark-designated high-quality slice, raw = the rest), score
-  every raw document with its log importance ratio
-  Σ_f c_f·(ln p_target(f) − ln p_raw(f)) under Laplace smoothing, and
-  keep the top-N. The bucket-weight table is O(B) rows and broadcasts;
-  scoring is one equi-join + one hash aggregate — the paper's recipe with
-  every step an operation that survives 100 TB.
+- construction: exact per-cell kNN (fixed and auto k), NN-Descent
+  refinement and its high-quality variant, all scored with the integer
+  quantized-cosine contract so DuckDB replays every edge;
+- search: beam search over the committed graph (single query, batch,
+  durable artifact) and two/three-layer HNSW-style routing;
+- analytics on the undirected graph: PageRank, label propagation,
+  k-core and triangle counts.
+
+The graph and its LPA labels are committed once per process through
+``artifacts.memoized_commit`` and read back as tables.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import artifacts
 from ..caching import tracked_persist
-from ..functions import text as TX
+from ..functions.exprs import duck_md5_32, spark_md5_32
 from ..registry import register
 from ..sources.tables import load
-from .llm_ext3 import _BENCH_PRED_SQL, _DUCK_NGRAMS, _bench_pred
-from .llm_ext4 import AUTO_K_SQL as _AUTO_K_SQL_REF
-from .llm_ext5 import _duck_md5_32, _spark_md5_32
-
-# ---------------------------------------------------------------------------
-# decontaminate_bloom_13gram
-
-_BLOOM_BITS = 1 << 20  # m: 2^20 bits = 16384 64-bit words ≈ 128 KiB
-_BLOOM_K = 5  # probes per gram
-
-
-def _bloom_probes(g: F.Column) -> list[F.Column]:
-    """K bit positions in [0, m) per gram — seeded xxhash64 (NON-portable
-    on purpose: the bloom never influences the final answer, so the fastest
-    JVM hash wins; portability lives in the exact verify stage)."""
-    return [
-        F.pmod(F.xxhash64(F.lit(i), g), F.lit(_BLOOM_BITS)) for i in range(_BLOOM_K)
-    ]
-
-
-def bench_gram_bloom(bench_grams: DataFrame, gram_col: str = "g") -> DataFrame:
-    """Build the (word, bits) Bloom bit table over ``bench_grams`` with ONE
-    bit_or hash aggregate — at most m/64 rows regardless of input size."""
-    pos = bench_grams.select(
-        F.explode(F.array(*_bloom_probes(F.col(gram_col)))).alias("p")
-    )
-    return (
-        pos.select(
-            F.shiftright(F.col("p"), 6).alias("word"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), CAST(p % 64 AS INT))").alias("m"),
-        )
-        .groupBy("word")
-        .agg(F.bit_or("m").alias("bits"))
-    )
-
-
-def bloom_probe_candidates(
-    grams: DataFrame, bloom: DataFrame, gram_col: str = "g"
-) -> DataFrame:
-    """Rows of ``grams`` whose gram passes ALL K probes against ``bloom``
-    (word-indexed broadcast join; an absent word row fails the probe via
-    the inner join). Superset of the true member rows — never a subset."""
-    probes = F.array(
-        *[
-            F.struct(
-                F.shiftright(p, 6).alias("word"),
-                (p % 64).cast("int").alias("bit"),
-            )
-            for p in _bloom_probes(F.col(gram_col))
-        ]
-    )
-    keys = [c for c in grams.columns]
-    exploded = grams.select(*keys, F.explode(probes).alias("pr")).select(
-        *keys,
-        F.col("pr.word").alias("word"),
-        F.expr("shiftleft(CAST(1 AS BIGINT), pr.bit)").alias("m"),
-    )
-    return (
-        exploded.join(F.broadcast(bloom), "word")
-        .filter(F.col("bits").bitwiseAND(F.col("m")) == F.col("m"))
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__npass"))
-        .filter(F.col("__npass") == _BLOOM_K)
-        .drop("__npass")
-    )
-
-
-@register(
-    "decontaminate_bloom_13gram",
-    # Same oracle as contamination_13gram — deliberately: the bloom is a
-    # lossless prefilter (no false negatives; false positives die in the
-    # exact verify join), so the two independent algorithms must produce
-    # the identical flag list, and the shared oracle IS that guarantee
-    # under test (the ssjoin_prefix_filter / minhash precedent).
-    oracle=f"""
-    WITH {_DUCK_NGRAMS.format(n=13)},
-    sh AS (SELECT doc_id, list_distinct(g) AS s FROM grams),
-    u AS (SELECT doc_id, unnest(s) AS g FROM sh),
-    b AS (SELECT doc_id AS bench_id, g FROM u WHERE {_BENCH_PRED_SQL}),
-    t AS (SELECT doc_id, g FROM u WHERE NOT ({_BENCH_PRED_SQL}))
-    SELECT t.doc_id,
-           CAST(COUNT(DISTINCT t.g) AS BIGINT) AS n_grams_hit,
-           CAST(COUNT(DISTINCT b.bench_id) AS BIGINT) AS n_bench_docs
-    FROM t JOIN b ON t.g = b.g
-    GROUP BY t.doc_id ORDER BY t.doc_id
-    """,
-)
-def q_decontaminate_bloom_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r8) — benchmark decontamination through a Bloom prefilter:
-    build the bit table over the benchmark's distinct 13-grams, probe every
-    training gram against the broadcast table (5 seeded-xxhash64 bits,
-    all-must-pass), then exact-verify only the survivors with the plain
-    gram equi-join. Output contract identical to ``contamination_13gram``.
-
-    Plan at 100 TB: ``contamination_13gram`` relies on AQE broadcasting
-    the exploded benchmark gram set — fine for MMLU-sized suites, dead
-    once the held-out side reaches tens of GB. The bloom table is m/64
-    rows (16 K here, ~128 KiB) NO MATTER how many grams feed it, so the
-    broadcast never grows; the training side is filtered down to the
-    true-hit rate + the tuned false-positive rate before anything heavier
-    runs, and the exact verify join's left side is survivor-sized. Both
-    aggregates (bit_or build, all-probes-pass count) are map-side-combined
-    hash aggs on bounded keyspaces.
-    """
-    docs = load(spark, sf_dir, "documents")
-    sh = docs.select("doc_id", TX.shingles(F.col("text"), n=13).alias("sh"))
-    g = sh.select("doc_id", F.explode("sh").alias("g"))
-    bench = g.filter(_bench_pred()).select(F.col("doc_id").alias("bench_id"), "g")
-    train = g.filter(~_bench_pred())
-    bloom = bench_gram_bloom(bench.select("g").distinct())
-    cand = bloom_probe_candidates(train, bloom)
-    return (
-        cand.join(bench, "g")
-        .groupBy("doc_id")
-        .agg(
-            F.countDistinct("g").alias("n_grams_hit"),
-            F.countDistinct("bench_id").alias("n_bench_docs"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# dsir_importance_resample
-
-_DSIR_B = 4096  # hashed-feature buckets
-_DSIR_TOP = 100  # resample size
-
-
-_DSIR_DOCW_CTE = f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    f AS (
-      SELECT doc_id,
-             list_concat(t, CASE WHEN len(t) >= 2
-               THEN list_transform(range(len(t) - 1), i -> t[i+1] || '_' || t[i+2])
-               ELSE [] END) AS fs
-      FROM toks
-    ),
-    fb AS (
-      SELECT doc_id, ({_BENCH_PRED_SQL}) AS is_t,
-             ({_duck_md5_32('x')}) % {_DSIR_B} AS b
-      FROM (SELECT doc_id, UNNEST(fs) AS x FROM f)
-    ),
-    counts AS (
-      SELECT b,
-             COUNT(*) FILTER (WHERE is_t) AS ct,
-             COUNT(*) FILTER (WHERE NOT is_t) AS cr
-      FROM fb GROUP BY b
-    ),
-    tot AS (SELECT SUM(ct) AS tt, SUM(cr) AS tr FROM counts),
-    w AS (
-      SELECT b, LN((ct + 1.0) / (tt + {_DSIR_B}.0))
-               - LN((cr + 1.0) / (tr + {_DSIR_B}.0)) AS lw
-      FROM counts CROSS JOIN tot
-    ),
-    docw AS (
-      SELECT doc_id, ROUND(SUM(c * lw), 4) AS dsir_logw
-      FROM (SELECT doc_id, b, COUNT(*) AS c FROM fb WHERE NOT is_t
-            GROUP BY doc_id, b)
-      JOIN w USING (b) GROUP BY doc_id
-    )
-    """
-
-
-@register(
-    "dsir_importance_resample",
-    oracle=f"""
-    {_DSIR_DOCW_CTE}
-    SELECT CAST(rnk AS INT) AS rank, doc_id, dsir_logw FROM (
-      SELECT doc_id, dsir_logw,
-             ROW_NUMBER() OVER (ORDER BY dsir_logw DESC, doc_id) AS rnk
-      FROM docw
-    ) WHERE rnk <= {_DSIR_TOP} ORDER BY rank
-    """,
-)
-def q_dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r8) — DSIR data selection (Xie et al. 2023): hashed
-    unigram+bigram bag-of-ngrams multinomials fit on the target slice (the
-    benchmark-designated ~1/16, standing in for the Wikipedia/books-style
-    target distribution) and the raw remainder; each raw document scores
-    Σ_f c_f·(ln p̂_target(f) − ln p̂_raw(f)) with Laplace smoothing over
-    {_DSIR_B} buckets; the top-{_DSIR_TOP} by (ROUNDED score, doc_id) are
-    selected. Rank on the ROUNDED weight with the id tie-break so both
-    engines cut the identical set (the impact_truncate idiom).
-
-    Plan at 100 TB: the feature explode is map-only; the two multinomials
-    are ONE hash aggregate over a {_DSIR_B}-key space (map-side combine
-    absorbs the explode volume); the side totals are a whole-table window
-    sum over those {_DSIR_B} rows (one partition, bounded by the bucket
-    count, not the corpus); the {_DSIR_B}-row bucket-weight table
-    broadcasts into the per-doc scoring join; per-doc scores are one more
-    hash agg. The final top-N is the only global ordering and runs on
-    one row per raw document — TakeOrdered, no full sort. DSIR's actual
-    sampling uses Gumbel noise on these same weights; the deterministic
-    top-N here is the testable core (noise is a map-only ``-ln(-ln(u))``
-    column away, with u from the portable md5 idiom).
-    """
-    docw = _dsir_doc_weights(spark, sf_dir)
-    rk = Window.orderBy(F.col("dsir_logw").desc(), F.col("doc_id"))
-    return (
-        docw.withColumn("rank", F.row_number().over(rk).cast("int"))
-        .filter(F.col("rank") <= _DSIR_TOP)
-        .select("rank", "doc_id", "dsir_logw")
-        .orderBy("rank")
-    )
-
-
-def _dsir_doc_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared DSIR scoring frame ``docw(doc_id, dsir_logw)`` — the hashed
-    unigram+bigram importance log-ratio per raw document (the deterministic
-    core both the top-N selector and the Gumbel sampler rank on)."""
-    docs = load(spark, sf_dir, "documents")
-    toks = TX.tokens("text")
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 2),
-            lambda i: F.concat(F.get(toks, i), F.lit("_"), F.get(toks, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    fb = docs.select(
-        "doc_id",
-        _bench_pred().alias("is_t"),
-        F.explode(F.concat(toks, bigrams)).alias("x"),
-    ).select(
-        "doc_id", "is_t", (_spark_md5_32(F.col("x")) % _DSIR_B).alias("b")
-    )
-    # r15-opt (guide §2.3 "aggregate before you shuffle" + §5 persist): the
-    # tokenize+md5 explode fed TWO consumers (bucket multinomials and the
-    # per-doc scoring agg) and ran twice. Collapse it map-side to per-
-    # (doc, side, bucket) counts — exploded volume shrinks to ≤ features-
-    # per-doc rows — and persist THAT; both consumers aggregate from it
-    # with identical integer counts.
-    g = tracked_persist(
-        fb.groupBy("doc_id", "is_t", "b").agg(F.count(F.lit(1)).alias("c"))
-    )
-    counts = g.groupBy("b").agg(
-        F.sum(F.when(F.col("is_t"), F.col("c")).otherwise(0)).alias("ct"),
-        F.sum(F.when(~F.col("is_t"), F.col("c")).otherwise(0)).alias("cr"),
-    )
-    # side totals as whole-table window sums over the bucket rows: counts
-    # is aggregated once, with no second aggregate and no cross join
-    whole = Window.partitionBy()
-    w = counts.select(
-        "b",
-        (
-            F.log((F.col("ct") + 1.0) / (F.sum("ct").over(whole) + float(_DSIR_B)))
-            - F.log((F.col("cr") + 1.0) / (F.sum("cr").over(whole) + float(_DSIR_B)))
-        ).alias("lw"),
-    )
-    docw = (
-        g.filter(~F.col("is_t"))
-        .join(F.broadcast(w), "b")
-        .groupBy("doc_id")
-        .agg(F.round(F.sum(F.col("c") * F.col("lw")), 4).alias("dsir_logw"))
-    )
-    return docw
-
-
-_DSIR_SEED = 7  # sampling seed; part of the query definition, echoed in SQL
-
-
-@register(
-    "dsir_gumbel_topk_sample",
-    oracle=f"""
-    {_DSIR_DOCW_CTE},
-    gum AS (
-      SELECT doc_id, dsir_logw,
-             ROUND(dsir_logw + (-LN(-LN(
-               (({_duck_md5_32("'dsir-gumbel|' || CAST(doc_id AS VARCHAR) || '|' || CAST(" + str(_DSIR_SEED) + " AS VARCHAR)")}) + 0.5)
-               / 4294967296.0))), 4) AS gumbel_key
-      FROM docw
-    )
-    SELECT CAST(rnk AS INT) AS rank, doc_id, gumbel_key FROM (
-      SELECT doc_id, gumbel_key,
-             ROW_NUMBER() OVER (ORDER BY gumbel_key DESC, doc_id) AS rnk
-      FROM gum
-    ) WHERE rnk <= {_DSIR_TOP} ORDER BY rank
-    """,
-)
-def q_dsir_gumbel_topk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r9) — DSIR's ACTUAL sampler (Xie et al. 2023 §2): sample
-    top-{_DSIR_TOP} documents with probability ∝ importance weight via the
-    Gumbel-top-k trick — rank on ``log w_i + g_i`` where ``g_i =
-    -ln(-ln(u_i))`` is standard Gumbel noise and ``u_i ∈ (0,1)`` derives
-    from the portable md5 idiom on (doc_id, seed={_DSIR_SEED}), so the
-    draw is seeded, replayable, and engine-portable. This closes the gap
-    the deterministic top-N arm documented: same ``docw`` scoring frame
-    (shared Spark helper AND shared SQL CTE — the two arms cannot drift),
-    one extra MAP-ONLY noise column, same TakeOrdered tail.
-
-    Plan at 100 TB: identical to the deterministic arm — the noise adds
-    zero shuffles (hash, two LNs, one ADD per row on the one-row-per-doc
-    scoring frame); the global top-N on (rounded key, doc_id) remains the
-    only total order and runs as TakeOrdered on n_docs rows. Ranking on
-    the ROUNDED key with the id tie-break keeps both engines cutting the
-    identical set (the impact_truncate idiom; Gumbel keys are sums of
-    irrational logs, so exact decimal halves have measure ~zero).
-    """
-    docw = _dsir_doc_weights(spark, sf_dir)
-    u = (
-        _spark_md5_32(
-            F.concat_ws(
-                "|", F.lit("dsir-gumbel"), F.col("doc_id"), F.lit(_DSIR_SEED)
-            )
-        )
-        + F.lit(0.5)
-    ) / F.lit(4294967296.0)
-    gum = docw.select(
-        "doc_id",
-        F.round(F.col("dsir_logw") + (-F.log(-F.log(u))), 4).alias("gumbel_key"),
-    )
-    rk = Window.orderBy(F.col("gumbel_key").desc(), F.col("doc_id"))
-    return (
-        gum.withColumn("rank", F.row_number().over(rk).cast("int"))
-        .filter(F.col("rank") <= _DSIR_TOP)
-        .select("rank", "doc_id", "gumbel_key")
-        .orderBy("rank")
-    )
+from .dedup import AUTO_K_SQL as _AUTO_K_SQL_REF
 
 
 # ---------------------------------------------------------------------------
 # knn_graph_topk
 
 _KNN_K = 3  # neighbors per node
+
 _KNN_SEEDS = 5  # deterministic random seed edges per node (NN-Descent init)
+
 _KNN_W = 24  # working-list width between rounds (> K keeps exploratory edges)
+
 _KNN_ROUNDS = 4  # refinement rounds (r13: 3→4 per the measured payoff curve in
 # BASELINE.md — sf0.1 edge recall 0.690→0.796 for ~+20% build; flip armed on
 # the family's r12 all-green driver row, VERDICT r12 item 2)
+
 _KNN_CAP = 24  # per-node fan-out cap in the two-hop join. (W, CAP) flipped
 # 16→24 JOINTLY in r14 per the measured payoff surface (BASELINE.md r13,
 # "NN-Descent width/cap payoff curve"):
@@ -390,7 +66,6 @@ def _int_cos_sql(qa: str, sa: str, qb: str, sb: str) -> str:
         f"(({d} + 2 * {sa} * {sb}) * 10000) // ({sa} * {sb}) - 20000 END AS BIGINT)"
     )
 
-
 # Quantized twin of the assignment CTE: __q = FLOOR(v·10⁴) BIGINT vectors +
 # EXACT integer norms via the isqrt correction step (FLOOR(SQRT(double)) is
 # within ±1 of ⌊√x⌋ for x < 2⁵³ because IEEE sqrt is correctly rounded; one
@@ -413,7 +88,7 @@ _QASSIGN_CTE = """
 
 
 def _knn_base_cte(k_sql: str = "8", keyword: str = "WITH") -> str:
-    """Shared oracle prefix: the SemDeDup assignment (llm_ext4's CTE, so
+    """Shared oracle prefix: the SemDeDup assignment (dedup.py's CTE, so
     the families cannot drift) + the integer-quantized vector table
     ``qassign`` + the within-cell pair scoring + the base top-K edge list
     ``e0(src_id, nbr_id, cos_sim, rnk)``. ``k_sql``: cell count
@@ -422,7 +97,7 @@ def _knn_base_cte(k_sql: str = "8", keyword: str = "WITH") -> str:
     through for recursive compositions (ADVICE r11). All scores are the
     pure-integer quantized cosine (r11) — the ROUND(double·10⁴) form this
     replaces was the family's last IEEE-float hash surface."""
-    from .llm_ext4 import _semdedup_assign_cte
+    from .dedup import _semdedup_assign_cte
 
     return f"""
     {_semdedup_assign_cte(1, k_sql, keyword)},
@@ -499,11 +174,9 @@ def _knn_refined_cte(
     base edges + deterministic random seeds + the NN-Descent round blocks.
     Consumed by the refined-graph oracle (final top-K re-rank) AND the
     graph-search oracle (search over the W-wide working graph), so the
-    graph that is searched is provably the graph that was built; the r11
-    forensic stage entries replay shorter prefixes (n_rounds < default),
-    and the r14 quality-tier twin replays the SAME text at (w, cap) =
+    graph that is searched is provably the graph that was built; the r14 quality-tier twin replays the SAME text at (w, cap) =
     (32, 32) — one generator, every tier."""
-    seed_md5 = _duck_md5_32(
+    seed_md5 = duck_md5_32(
         "'knn|' || CAST(a.vec_id AS VARCHAR) || '|' || CAST(rr.r AS VARCHAR)"
     )
     rounds = "".join(
@@ -557,7 +230,7 @@ def q_knn_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3+ (r8) — approximate k-NN graph construction: the top-{_KNN_K}
     directed neighbor edges per vector, candidates restricted to the
     vector's nearest-centroid cell (the SemDeDup assignment, shared
-    machinery AND shared oracle CTE — llm_ext4._semdedup_assign_cte, so
+    machinery AND shared oracle CTE — dedup._semdedup_assign_cte, so
     the two families cannot drift). The k-NN graph is the input every
     graph-based corpus tool wants: NN-Descent refinement, graph-clustering
     topic discovery, connected-component semantic dedup, HNSW layer
@@ -682,12 +355,12 @@ def q_knn_graph_nn_descent(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("src_id", "rank")
     )
 
-
 # the near-exact tier from the r13 payoff surface: (32, 32) measured 0.994
 # sf0.1 edge recall for ~2× the serving tier's build (probe table in
 # BASELINE.md r13). Registered so the probe's top row is a DRIVER-CHECKABLE
 # choice, not a footnote (VERDICT r13 item 6).
 _KNN_HQ_W = 32
+
 _KNN_HQ_CAP = 32
 
 
@@ -793,9 +466,8 @@ def _knn_graph_marts(spark: SparkSession, sf_dir: str):
 def _knn_seed_scores(spark: SparkSession, sf_dir: str):
     """``(assign, base, sesc)`` — the deterministic NN-Descent seed edges
     with their quantized-integer scores (the Spark twin of the oracle's
-    ``seeds``/``sesc`` CTEs). Factored out (r11) so the forensic
-    ``knn_seed_edges`` entry replays EXACTLY the seed stage the refined
-    build consumes — a divergence there separates scoring/seeding drift
+    ``seeds``/``sesc`` CTEs). Factored out (r11) so a seed-stage
+    probe replays EXACTLY the seed stage the refined build consumes — a divergence there separates scoring/seeding drift
     from round-iteration drift (VERDICT r10 item 1)."""
     from ..operators.similarity import score_id_pairs
 
@@ -805,7 +477,7 @@ def _knn_seed_scores(spark: SparkSession, sf_dir: str):
         "src_id",
         F.explode(F.array(*[F.lit(r) for r in range(1, _KNN_SEEDS + 1)])).alias("r"),
     )
-    h = _spark_md5_32(F.concat_ws("|", F.lit("knn"), F.col("src_id"), F.col("r")))
+    h = spark_md5_32(F.concat_ws("|", F.lit("knn"), F.col("src_id"), F.col("r")))
     seeds = seed_ids.select(
         "src_id",
         ((F.col("src_id") + 1 + F.pmod(h, F.lit(n - 1))) % F.lit(n)).alias("cand_id"),
@@ -856,8 +528,11 @@ def _knn_refined_work(
 # graph_ann_search_topk
 
 _GS_K = 20  # final answer size (matches the embedding_topk_* family)
+
 _GS_BEAM = 32  # beam width: nodes expanded per hop
+
 _GS_HOPS = 4  # search hops
+
 _GS_ENTRIES = 4  # deterministic entry points
 
 
@@ -1461,13 +1136,18 @@ def graph_beam_search_batch(
 # hnsw_two_layer_search — hierarchical routing over the graph family (r11)
 
 _HN_MOD = 8  # 1-in-8 nodes promoted to the upper layer (portable md5)
+
 _HN_K = 3  # upper-layer neighbors per node
+
 _HN_HOPS = 2  # upper-layer hops (the router is shallow by design)
+
 _HN_BEAM = 8  # upper-layer beam
+
 _HN_FAN = 4  # upper results that seed the layer-0 search
 
+
 def _hn_up_sql(mod: int) -> str:
-    return f"({_duck_md5_32('CAST(vec_id AS VARCHAR)')}) % {mod} = 0"
+    return f"({duck_md5_32('CAST(vec_id AS VARCHAR)')}) % {mod} = 0"
 
 
 def _hn_layer_sql(lvl: int) -> str:
@@ -1587,7 +1267,7 @@ def _hnsw_oracle(levels: int = 2) -> str:
 
 def _hn_upper_pred(mod: int = _HN_MOD) -> F.Column:
     return (
-        F.pmod(_spark_md5_32(F.col("vec_id").cast("string")), F.lit(mod)) == 0
+        F.pmod(spark_md5_32(F.col("vec_id").cast("string")), F.lit(mod)) == 0
     )
 
 
@@ -1876,3 +1556,385 @@ def q_hnsw_batch_routed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return graph_beam_search_batch(
         spark, assign, work, qb, entries0, gund=_knn_gund_table(spark, sf_dir)
     )
+
+
+# ---------------------------------------------------------------------------
+# knn_graph_lpa_communities — label propagation over the near-dup graph
+
+_LPA_ROUNDS = 3  # synchronous vote rounds (a knob; one join+agg each)
+
+
+def _lpa_round_cte(i: int) -> str:
+    """One synchronous label-propagation round as a CTE:
+    ``lp{i-1}`` → ``lp{i}``. Each node adopts the most frequent label
+    among its undirected neighbors PLUS itself (the self-vote damps the
+    2-cycle oscillation synchronous LPA is known for), ties → smallest
+    label — pure integer counts and ids, so both engines pick
+    identically."""
+    return f""",
+    v{i} AS (
+      SELECT u.node, l.lab FROM und u JOIN lp{i - 1} l ON u.nbr = l.node
+      UNION ALL
+      SELECT node, lab FROM lp{i - 1}
+    ),
+    lp{i} AS (
+      SELECT node, lab FROM (
+        SELECT node, lab,
+               ROW_NUMBER() OVER (PARTITION BY node
+                                  ORDER BY COUNT(*) DESC, lab) AS rk
+        FROM v{i} GROUP BY node, lab)
+      WHERE rk = 1
+    )"""
+
+
+def _und_ctes() -> str:
+    """The undirected base-kNN edge table ``und(node, nbr)`` (plus the
+    shared ``qassign`` vector table it rides in on) — factored (r15) so
+    label propagation and the k-core peel share ONE
+    undirected-graph definition."""
+
+    return f"""
+    {_knn_base_cte()},
+    ed AS (SELECT src_id, nbr_id FROM e0 WHERE rnk <= {_KNN_K}),
+    und AS (SELECT DISTINCT node, nbr FROM (
+      SELECT src_id AS node, nbr_id AS nbr FROM ed
+      UNION ALL
+      SELECT nbr_id AS node, src_id AS nbr FROM ed))"""
+
+
+def _lpa_cte_chain() -> str:
+    """The full LPA trajectory as a reusable CTE chain ending at
+    ``lp{_LPA_ROUNDS}(node, lab)`` — factored (late r14) so the
+    community-capped selection composes the IDENTICAL clustering (the
+    `_pagerank_cte` precedent)."""
+    rounds = "".join(_lpa_round_cte(i) for i in range(1, _LPA_ROUNDS + 1))
+    return f"""{_und_ctes()},
+    lp0 AS (SELECT vec_id AS node, vec_id AS lab FROM qassign){rounds}"""
+
+
+def _lpa_oracle() -> str:
+    return f"""
+    {_lpa_cte_chain()}
+    SELECT l.node AS vec_id, l.lab AS community,
+           s.n AS community_size
+    FROM lp{_LPA_ROUNDS} l
+    JOIN (SELECT lab, CAST(COUNT(*) AS BIGINT) AS n
+          FROM lp{_LPA_ROUNDS} GROUP BY lab) s ON s.lab = l.lab
+    ORDER BY vec_id
+    """
+
+
+@register("knn_graph_lpa_communities", oracle=_lpa_oracle())
+def q_knn_graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X3+ (late r14) — label-propagation COMMUNITY DETECTION (Raghavan
+    et al. 2007) over the undirected base kNN graph: the graph family's
+    mesoscale readout between connected components (too coarse — one
+    giant component swallows distinct topics) and SemDeDup cells (fixed
+    count, geometry-only). Communities over the near-dup graph are the
+    "topic islands" a curation run reads to audit mixture coverage and
+    to cap per-community sampling. Emits (vec_id, community,
+    community_size) after {_LPA_ROUNDS} synchronous rounds.
+
+    Determinism contract: labels start as node ids; each round every
+    node adopts the most frequent label among its neighbors and itself
+    (the self-vote damps synchronous LPA's classic 2-cycle oscillation),
+    ties → smallest label. Votes are integer counts of integer labels —
+    nothing float anywhere — so every round replays exactly in the
+    oracle's generated per-round CTEs (the PageRank/NN-Descent
+    trajectory precedent).
+
+    Plan at 100 TB: the Pregel-on-DataFrames shape — per round ONE
+    equi-join of the undirected edge list against the n-row label table
+    + one (node, label) hash agg + one per-node top-1 window on the
+    agg output (grouped-top-1, not a global sort). Edges persist once
+    (CACHE OWNERSHIP); labels stay distributed, zero driver state;
+    rounds is a knob, cost linear in it. Since r15 the label frame is a
+    VersionedMart-committed table (`lpa_labels_durable`) every community
+    consumer serves — built once per (corpus, partitioning), never
+    recomputed per consumer.
+    """
+    lp = lpa_labels_durable(spark, sf_dir)
+    sizes = lp.groupBy("lab").agg(F.count(F.lit(1)).cast("long").alias("community_size"))
+    return (
+        lp.join(sizes, "lab")
+        .select(
+            F.col("node").alias("vec_id"),
+            F.col("lab").alias("community"),
+            "community_size",
+        )
+        .orderBy("vec_id")
+    )
+
+
+def _und_frame(spark: SparkSession, sf_dir: str):
+    """``(assign, und)`` — the Spark twin of ``_und_ctes``: the full
+    vector assignment plus the persisted undirected base-kNN edge table,
+    shared by label propagation and the k-core peel."""
+    from ..caching import tracked_persist
+
+    assign, edges = _knn_base_edges(spark, sf_dir)
+    ed = edges.select("src_id", "nbr_id")
+    und = tracked_persist(
+        ed.select(F.col("src_id").alias("node"), F.col("nbr_id").alias("nbr"))
+        .unionAll(ed.select(F.col("nbr_id").alias("node"), F.col("src_id").alias("nbr")))
+        .distinct()
+    )
+    return assign, und
+
+
+def lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """UNORDERED shared label frame ``(node, lab)`` after
+    ``_LPA_ROUNDS`` rounds — the Spark twin of ``_lpa_cte_chain``,
+    consumed by the registered community query and the community-capped
+    selection (one propagation definition, two consumers)."""
+    from pyspark.sql import Window
+
+    assign, und = _und_frame(spark, sf_dir)
+    # seed from EVERY vector, not just edge endpoints: an isolated vector
+    # (alone in its cell — no kNN edge) is its own singleton community
+    # under LPA semantics, and must stay eligible for the capped
+    # selection (r14 review)
+    lp = assign.select(F.col("vec_id").alias("node"), F.col("vec_id").alias("lab"))
+    for _ in range(_LPA_ROUNDS):
+        votes = (
+            und.join(lp.withColumnRenamed("node", "nbr"), "nbr")
+            .select("node", "lab")
+            .unionAll(lp.select("node", "lab"))
+        )
+        cnt = votes.groupBy("node", "lab").agg(F.count(F.lit(1)).alias("c"))
+        w = Window.partitionBy("node").orderBy(F.col("c").desc(), F.col("lab"))
+        lp = (
+            cnt.withColumn("rk", F.row_number().over(w))
+            .filter(F.col("rk") == 1)
+            .select("node", "lab")
+        )
+    return lp
+
+
+def lpa_labels_durable(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(node, lab)`` read back from a :class:`VersionedMart` COMMIT —
+    the durable promotion (VERDICT r14 plan audit: "at production scale
+    the LPA labels would be a committed table rather than recomputed per
+    consumer", the `_knn_refined_tables` precedent). The propagation
+    runs ONCE per (corpus, partitioning), commits through the M4 atomic
+    manifest swap, and every consumer — the registered community
+    readout, the community-capped selection, and the funnel's
+    community-cap stage — serves the committed snapshot. Memo, key and
+    lock rules: :mod:`..artifacts`; the propagation is deterministic
+    (integer label votes, smallest-label ties) and parquet round-trips
+    the two BIGINT columns exactly."""
+    return artifacts.memoized_commit(
+        spark, "lpa_labels", sf_dir,
+        build=lambda commit: commit("labels", lpa_labels(spark, sf_dir)),
+    )["labels"].read(spark)
+
+
+# ---------------------------------------------------------------------------
+# knn_graph_kcore — the graph-density tier over the shared undirected graph
+
+_KCORE_K = 4  # minimum surviving degree (measured: the base graph's
+# undirected degrees sit at 3–9 with median 4, so K=4 peels ~45% in
+# round 1 and leaves a small dense core — both arms fire at every SF;
+# K=3 peels nothing (min degree 3), K=5 empties the graph)
+
+_KCORE_ROUNDS = 3  # peel rounds (a knob; one join + agg each)
+
+
+def _kcore_oracle() -> str:
+    """Replays every peel round as generated CTEs over the SHARED
+    undirected-graph text (_und_ctes — the same ``und`` LPA
+    propagates over): alive set ``a{i}`` = nodes of ``a{i-1}`` whose
+    degree WITHIN ``a{i-1}`` is >= K. Pure integer counts and ids."""
+
+    rounds = "".join(
+        f""",
+    d{i} AS (
+      SELECT u.node, CAST(COUNT(*) AS BIGINT) AS c
+      FROM und u
+      JOIN a{i - 1} x ON u.node = x.node
+      JOIN a{i - 1} y ON u.nbr = y.node
+      GROUP BY u.node
+    ),
+    a{i} AS (SELECT node FROM d{i} WHERE c >= {_KCORE_K})"""
+        for i in range(1, _KCORE_ROUNDS + 1)
+    )
+    survive = "".join(
+        f"""
+             WHEN n.node NOT IN (SELECT node FROM a{i}) THEN {i - 1}"""
+        for i in range(1, _KCORE_ROUNDS + 1)
+    )
+    # _und_ctes opens with the shared _knn_base_cte, which already emits
+    # the WITH keyword (the _lpa_cte_chain convention)
+    return f"""
+    {_und_ctes()},
+    a0 AS (SELECT vec_id AS node FROM qassign),
+    deg AS (
+      SELECT a.node, CAST(COUNT(u.nbr) AS BIGINT) AS d
+      FROM a0 a LEFT JOIN und u ON u.node = a.node GROUP BY a.node
+    ){rounds}
+    SELECT n.node AS vec_id, deg.d AS degree,
+           CAST(CASE{survive}
+             ELSE {_KCORE_ROUNDS} END AS INT) AS rounds_survived,
+           n.node IN (SELECT node FROM a{_KCORE_ROUNDS}) AS in_core
+    FROM a0 n JOIN deg ON deg.node = n.node
+    ORDER BY vec_id
+    """
+
+
+@register("knn_graph_kcore", oracle=_kcore_oracle())
+def q_knn_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X3+ (r15) — k-core PEEL over the undirected base kNN graph
+    (Seidman 1983; Batagelj & Zaversnik 2003): iteratively remove nodes
+    with fewer than {_KCORE_K} surviving neighbors. The graph family's
+    DENSITY tier — degree is too local (a hub of singletons reads
+    dense), LPA partitions without measuring density; the k-core is the
+    standard "mutually-dense region" readout, and over a NEAR-DUP graph
+    dense cores are exactly the boilerplate/template/spam signature a
+    curation run inspects before sampling (the near-dup analog of the
+    Gopher repetition rules). Emits (vec_id, degree, rounds_survived,
+    in_core) after {_KCORE_ROUNDS} peel rounds — the peel trajectory, so
+    a reader sees HOW a node left, not just whether.
+
+    Determinism contract: degrees are integer counts over integer-id
+    edges; the alive sets are pure set operations — nothing to round,
+    nothing order-dependent, so every round replays exactly in the
+    oracle's generated CTEs (the LPA/PageRank trajectory precedent).
+
+    Plan at 100 TB: the SHARED undirected edge table (one definition
+    with LPA — `_und_frame`, persisted once) plus, per round, ONE
+    self-equi-join of edges against the alive set on both endpoints +
+    one per-node hash agg — the Pregel peel; alive sets stay
+    distributed, zero driver state, rounds a fixed knob. Full coreness
+    (peel to convergence) would wrap the same round body in an
+    until-fixed-point loop with localCheckpoint truncation.
+    """
+
+    assign, und = _und_frame(spark, sf_dir)
+    nodes = assign.select(F.col("vec_id").alias("node"))
+    deg = (
+        nodes.join(und, "node", "left")
+        .groupBy("node")
+        .agg(F.count("nbr").cast("long").alias("degree"))
+    )
+    alive = nodes
+    flags = []
+    for i in range(1, _KCORE_ROUNDS + 1):
+        d = (
+            und.join(alive.withColumnRenamed("node", "nbr"), "nbr")
+            .join(alive, "node")
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        # each alive set feeds the NEXT round's two joins AND its own
+        # survival flag below: persist per round (the lpa_labels per-round
+        # pattern) so round i's join lineage runs once, not once per later
+        # consumer — O(rounds), not O(rounds²), as the knob grows
+        alive = tracked_persist(d.filter(F.col("c") >= _KCORE_K).select("node"))
+        flags.append(alive.select("node", F.lit(True).alias(f"__a{i}")))
+    out = deg
+    for i, fl in enumerate(flags, start=1):
+        out = out.join(fl, "node", "left")
+    surv = F.lit(_KCORE_ROUNDS)
+    for i in range(_KCORE_ROUNDS, 0, -1):
+        surv = F.when(F.col(f"__a{i}").isNull(), i - 1).otherwise(surv)
+    return out.select(
+        F.col("node").alias("vec_id"),
+        "degree",
+        surv.cast("int").alias("rounds_survived"),
+        F.col(f"__a{_KCORE_ROUNDS}").isNotNull().alias("in_core"),
+    ).orderBy("vec_id")
+
+
+# ---------------------------------------------------------------------------
+# knn_graph_triangles — local clustering coefficient over the shared graph
+
+
+def _triangles_oracle() -> str:
+    """Wedge join + closing-edge join over the SHARED undirected graph
+    CTE (_und_ctes — one graph definition, four consumers);
+    the coefficient is 2·tri·10⁴ DIV deg·(deg−1) so both engines emit
+    identical BIGINTs, NULL where deg < 2 leaves it undefined."""
+
+    return f"""
+    {_und_ctes()},
+    deg AS (
+      SELECT a.vec_id AS node, CAST(COUNT(u.nbr) AS BIGINT) AS d
+      FROM qassign a LEFT JOIN und u ON u.node = a.vec_id GROUP BY a.vec_id
+    ),
+    tr AS (
+      SELECT e1.node, CAST(COUNT(*) AS BIGINT) AS t
+      FROM und e1
+      JOIN und e2 ON e2.node = e1.node AND e1.nbr < e2.nbr
+      JOIN und e3 ON e3.node = e1.nbr AND e3.nbr = e2.nbr
+      GROUP BY e1.node
+    )
+    SELECT deg.node AS vec_id, deg.d AS degree,
+           CAST(COALESCE(tr.t, 0) AS BIGINT) AS triangles,
+           CASE WHEN deg.d >= 2
+                THEN CAST(COALESCE(tr.t, 0) * 20000 // (deg.d * (deg.d - 1))
+                          AS BIGINT)
+           END AS clustering_bp
+    FROM deg LEFT JOIN tr ON tr.node = deg.node
+    ORDER BY vec_id
+    """
+
+
+@register("knn_graph_triangles", oracle=_triangles_oracle())
+def q_knn_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X3+ (r15) — per-node TRIANGLE count and local clustering
+    coefficient (Watts & Strogatz 1998) over the shared undirected base
+    kNN graph. Completes the graph family's density ladder: degree
+    (volume), k-core (mutually-dense region membership — a SET), and now
+    the clustering coefficient (HOW interlocked a node's neighborhood
+    is — a per-node RATIO). Over a near-dup graph, high-coefficient
+    nodes sit inside template/boilerplate cliques even when their degree
+    is modest — the k-core flags the region, the coefficient ranks
+    within it. Emits (vec_id, degree, triangles, clustering_bp) for
+    every vector; clustering_bp = 2·tri·10⁴ DIV (deg·(deg−1)) in exact
+    basis points, NULL where deg < 2 leaves the coefficient undefined
+    (the correlation entry's zero-variance NULL precedent).
+
+    Determinism contract: triangles are integer counts over integer-id
+    edges; the coefficient is integer floor division — nothing floats,
+    the whole readout value-hash-replays in the oracle's SQL.
+
+    Plan at 100 TB: the SHARED persisted edge table (one definition with
+    LPA and the k-core — ``_und_frame``), then ONE equi-self-join on the
+    wedge apex (per-node volume ≤ C(2K, 2), K the kNN fan-out — bounded
+    per node, linear in n) and ONE (v, w) equi-join against the edge
+    table to close each wedge, both hash joins on integer keys; one
+    per-node hash agg. No driver state, nothing quadratic in n.
+    """
+
+    assign, und = _und_frame(spark, sf_dir)
+    nodes = assign.select(F.col("vec_id").alias("node"))
+    deg = (
+        nodes.join(und, "node", "left")
+        .groupBy("node")
+        .agg(F.count("nbr").cast("long").alias("degree"))
+    )
+    e1 = und.select(F.col("node").alias("u"), F.col("nbr").alias("v"))
+    e2 = und.select(F.col("node").alias("u"), F.col("nbr").alias("w"))
+    wedges = e1.join(e2, "u").filter(F.col("v") < F.col("w"))
+    closing = und.select(F.col("node").alias("v"), F.col("nbr").alias("w"))
+    tri = (
+        wedges.join(closing, ["v", "w"])
+        .groupBy("u")
+        .agg(F.count(F.lit(1)).cast("long").alias("t"))
+        .withColumnRenamed("u", "node")
+    )
+    out = deg.join(tri, "node", "left").select(
+        "node",
+        "degree",
+        F.coalesce("t", F.lit(0)).cast("long").alias("triangles"),
+    )
+    cb = F.when(
+        F.col("degree") >= 2,
+        F.expr("triangles * 20000 DIV (degree * (degree - 1))"),
+    ).cast("long")
+    return out.select(
+        F.col("node").alias("vec_id"),
+        "degree",
+        "triangles",
+        cb.alias("clustering_bp"),
+    ).orderBy("vec_id")

@@ -557,7 +557,7 @@ def q_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array/higher-order function surface — size, index, aggregate, filter.
 
     All JVM-side higher-order functions (no UDF): the at-scale vector path
-    used by the similarity queries in plans/llm_ext.py.
+    used by the similarity queries in plans/retrieval.py.
     """
     e = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 100)
     dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))

@@ -13,6 +13,8 @@ partial aggregation, top-k is TakeOrdered.
 
 from __future__ import annotations
 
+import math as _math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -526,4 +528,174 @@ def map_function_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size("m").alias("n_entries"),
         )
         .orderBy("n_nationkey")
+    )
+
+
+# ---------------------------------------------------------------------------
+# benford_amount_audit — first-digit distribution DQ screen
+
+#: Benford expected proportions log10(1 + 1/d) in integer ppm, generated
+#: once and embedded as literals in BOTH engines (the _ARR_DISC trick).
+_BENFORD_EXP_PPM = tuple(
+    round(1_000_000 * _math.log10(1 + 1 / d)) for d in range(1, 10)
+)
+
+
+def _benford_oracle() -> str:
+    rows = ", ".join(f"({d + 1}, {p})" for d, p in enumerate(_BENFORD_EXP_PPM))
+    return f"""
+    WITH amounts AS (
+      SELECT CAST(substr(CAST(CAST(FLOOR(o_totalprice) AS BIGINT) AS VARCHAR), 1, 1)
+                  AS INT) AS digit
+      FROM orders WHERE o_totalprice >= 1
+    ),
+    obs AS (SELECT digit, CAST(COUNT(*) AS BIGINT) AS n_obs
+            FROM amounts GROUP BY digit),
+    tot AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS t FROM obs),
+    exp AS (SELECT * FROM (VALUES {rows}) AS v(digit, exp_ppm))
+    SELECT e.digit,
+           CAST(COALESCE(o.n_obs, 0) AS BIGINT) AS n_obs,
+           CAST(COALESCE(o.n_obs, 0) * 1000000 // (SELECT t FROM tot)
+                AS BIGINT) AS obs_ppm,
+           CAST(e.exp_ppm AS BIGINT) AS exp_ppm,
+           CAST(COALESCE(o.n_obs, 0) * 1000000 // (SELECT t FROM tot)
+                - e.exp_ppm AS BIGINT) AS dev_ppm
+    FROM exp e LEFT JOIN obs o ON o.digit = e.digit
+    ORDER BY e.digit
+    """
+
+
+@register("benford_amount_audit", oracle=_benford_oracle())
+def q_benford_amount_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DQ+ (r15) — BENFORD first-significant-digit audit over order
+    amounts (Benford 1938; Nigrini's fraud/DQ screen): the leading-digit
+    distribution of naturally-occurring multi-magnitude amounts follows
+    log10(1 + 1/d); synthetic, capped, or fabricated amounts deviate
+    hard. Emits per digit 1-9: observed count, observed ppm, expected
+    ppm (the law as a LITERAL integer grid generated once for both
+    engines — the discount-grid trick), and the signed deviation. The
+    audit MEASURES; thresholds belong to the consuming DQ policy (on
+    this fixture's band-uniform TPC-H-ish prices the deviation reads
+    large BY DESIGN — exactly what the screen exists to surface).
+
+    Plan at 100 TB: first digit is a map-only string projection of the
+    floored amount (integer formatting is engine-identical; values < 1
+    excluded by contract), then ONE 9-row hash agg — map-side
+    combinable, model-sized everything after.
+    """
+    digit = F.substring(
+        F.floor(F.col("o_totalprice")).cast("long").cast("string"), 1, 1
+    ).cast("int")
+    obs = (
+        load(spark, sf_dir, "orders")
+        .filter(F.col("o_totalprice") >= 1)
+        .select(digit.alias("digit"))
+        .groupBy("digit")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
+    )
+    tot = obs.agg(F.sum("n_obs").cast("long").alias("t"))
+    grid = spark.createDataFrame(
+        [(d + 1, p) for d, p in enumerate(_BENFORD_EXP_PPM)],
+        "digit int, exp_ppm long",
+    )
+    return (
+        grid.join(obs, "digit", "left")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "digit",
+            F.coalesce("n_obs", F.lit(0)).cast("long").alias("n_obs"),
+            F.expr(
+                "CAST(COALESCE(n_obs, 0) * 1000000 DIV t AS BIGINT)"
+            ).alias("obs_ppm"),
+            F.col("exp_ppm").cast("long"),
+            F.expr(
+                "CAST(COALESCE(n_obs, 0) * 1000000 DIV t - exp_ppm AS BIGINT)"
+            ).alias("dev_ppm"),
+        )
+        .orderBy("digit")
+    )
+
+
+# ---------------------------------------------------------------------------
+# fk_orphan_audit — cross-table referential-integrity audit matrix
+
+#: every FK edge of the star schema: (child, fk_col, parent, pk_col)
+_FK_EDGES = (
+    ("lineitem", "l_orderkey", "orders", "o_orderkey"),
+    ("lineitem", "l_partkey", "part", "p_partkey"),
+    ("lineitem", "l_suppkey", "supplier", "s_suppkey"),
+    ("orders", "o_custkey", "customer", "c_custkey"),
+    ("customer", "c_nationkey", "nation", "n_nationkey"),
+    ("supplier", "s_nationkey", "nation", "n_nationkey"),
+    ("nation", "n_regionkey", "region", "r_regionkey"),
+)
+
+
+def _fk_audit_oracle() -> str:
+    arms = "\n      UNION ALL ".join(
+        f"""SELECT '{c}' AS child_table, '{ck}' AS fk_col,
+             '{p}' AS parent_table,
+             CAST(COUNT(*) AS BIGINT) AS n_child_rows,
+             CAST(COUNT(*) FILTER (WHERE {ck} IS NOT NULL
+               AND {ck} NOT IN (SELECT {pk} FROM {p})) AS BIGINT) AS n_orphans
+      FROM {c}"""
+        for c, ck, p, pk in _FK_EDGES
+    )
+    return f"""
+    SELECT child_table, fk_col, parent_table, n_child_rows, n_orphans,
+           CAST(n_orphans * 1000000 // n_child_rows AS BIGINT) AS orphan_ppm
+    FROM ({arms})
+    ORDER BY child_table, fk_col
+    """
+
+
+@register("fk_orphan_audit", oracle=_fk_audit_oracle())
+def q_fk_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """DQ+ (r15) — the cross-TABLE referential-integrity audit the
+    per-table DQSuite classes (null/unique/regex/type/range) cannot
+    express: for EVERY foreign-key edge of the star schema, the child
+    row count, orphan count (non-null FK with no parent), and orphan
+    rate in ppm — one row per edge, the constraint-audit matrix a
+    warehouse load publishes next to its DQ gate. On this fixture every
+    edge reads 0 BY CONSTRUCTION (the generator is referentially
+    intact); the detection arm is pinned on a constructed corpus in
+    tests (the dup-id fixture discipline).
+
+    Plan at 100 TB: each edge is ONE left-anti-shaped aggregate — the
+    orphan count folds into a conditional count over an existence join;
+    dims (nation/region) broadcast by size, the big edges
+    (lineitem→orders/part/supplier) are plain equi-shuffles AQE handles;
+    the union tail is |edges| rows.
+    """
+    from ..operators.dq import fk_orphan_counts
+
+    frames = [
+        fk_orphan_counts(
+            load(spark, sf_dir, c), ck, load(spark, sf_dir, p), pk, c, p
+        )
+        for c, ck, p, pk in _FK_EDGES
+    ]
+    out = frames[0]
+    for f_ in frames[1:]:
+        out = out.unionByName(f_)
+    return out.orderBy("child_table", "fk_col")
+
+
+@register(
+    "oracle_probe_duckdb_version",
+    oracle="SELECT CAST(version() AS VARCHAR) AS duckdb_version",
+)
+def q_oracle_probe_duckdb_version(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Probe — the one driver-environment axis no local
+    check can reach: the driver's DuckDB BUILD. The Spark side returns
+    the LOCAL wheel's version string, the oracle returns the DRIVER's
+    ``version()`` — so the row hashes green iff the two DuckDB builds
+    are the same version, and a red here (rows+schema matching, hash
+    differing) READS OUT as "the driver runs a different DuckDB than
+    the one every local oracle was validated against". Single row,
+    costs nothing."""
+    import duckdb
+
+    return spark.createDataFrame(
+        [(f"v{duckdb.__version__}",)], "duckdb_version string"
     )

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.exprs import duck_md5_32, spark_md5_32
 from ..registry import register
 from ..sources.tables import load
 
@@ -736,9 +737,7 @@ _KMV_M = 1 << 32  # hash space (portable 32-bit md5 prefix)
     ORDER BY pr.type_a, pr.type_b
     """.replace(
         "{MD5_32}",
-        __import__(
-            "my_favorite_etl_pipeline_spark.plans.llm_ext5", fromlist=["_duck_md5_32"]
-        )._duck_md5_32("'kmv|' || CAST(user_id AS VARCHAR)"),
+        duck_md5_32("'kmv|' || CAST(user_id AS VARCHAR)"),
     ),
 )
 def q_theta_sketch_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -770,13 +769,11 @@ def q_theta_sketch_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair grid is |types|² and the common-hash join runs on K-row sketch
     sides. No collect anywhere.
     """
-    from .llm_ext5 import _spark_md5_32
-
     ev = load(spark, sf_dir, "events")
     hu = (
         ev.select(
             "event_type",
-            _spark_md5_32(
+            spark_md5_32(
                 F.concat(F.lit("kmv|"), F.col("user_id").cast("string"))
             ).alias("h"),
         )
@@ -1035,10 +1032,8 @@ _CM_TOP = 30  # probe set: the exact top-N tokens
 
 
 def _cm_bucket_sql(token_expr: str) -> str:
-    from .llm_ext5 import _duck_md5_32
-
     return (
-        _duck_md5_32(f"'cm' || CAST(i AS VARCHAR) || '|' || {token_expr}")
+        duck_md5_32(f"'cm' || CAST(i AS VARCHAR) || '|' || {token_expr}")
         + f" % {_CM_W}"
     )
 
@@ -1090,8 +1085,6 @@ def q_countmin_frequency_estimates(spark: SparkSession, sf_dir: str) -> DataFram
     production stream the cm table is the running state and this query
     is its readout; the tf side here exists to verify the estimates.
     """
-    from .llm_ext5 import _spark_md5_32
-
     docs = load(spark, sf_dir, "documents")
     tf = (
         docs.select(F.explode(F.split("text", " ")).alias("token"))
@@ -1101,7 +1094,7 @@ def q_countmin_frequency_estimates(spark: SparkSession, sf_dir: str) -> DataFram
 
     def bucket(i: int) -> F.Column:
         return (
-            _spark_md5_32(F.concat(F.lit(f"cm{i}|"), F.col("token"))) % _CM_W
+            spark_md5_32(F.concat(F.lit(f"cm{i}|"), F.col("token"))) % _CM_W
         ).cast("long")
 
     rows_arr = F.array(

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.text import DUCK_SHINGLES, duck_held_out
 from ..registry import register
 from ..sources.tables import load
 from ..streaming.stateful import (
@@ -224,21 +225,21 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_decontaminate_flags",
-    oracle="""
+    oracle=f"""
     WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
     bgr AS (
       SELECT DISTINCT array_to_string(t[pos + 1:pos + 13], ' ') AS gram
       FROM (SELECT t, UNNEST(range(len(t) - 12)) AS pos
             FROM toks
             WHERE len(t) >= 13
-              AND substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = '0')
+              AND {duck_held_out()})
     ),
     tg AS (
       SELECT doc_id, array_to_string(t[pos + 1:pos + 13], ' ') AS gram
       FROM (SELECT doc_id, t, UNNEST(range(len(t) - 12)) AS pos
             FROM toks
             WHERE len(t) >= 13
-              AND NOT (substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = '0'))
+              AND NOT ({duck_held_out()}))
     )
     SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_flagged_grams
     FROM tg WHERE gram IN (SELECT gram FROM bgr)
@@ -302,7 +303,7 @@ def q_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_ingest_dedup_pairs(spark, sf_dir)
 
 
-from .llm_ext8 import PSI_ORACLE_SQL as _PSI_ORACLE_SQL  # noqa: E402
+from .curation import PSI_ORACLE_SQL as _PSI_ORACLE_SQL  # noqa: E402
 
 
 @register(
@@ -330,7 +331,7 @@ def q_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the snapshot (in production: a saved model-sized table, not a
     rescan) and every PSI-assembly join broadcasts.
     """
-    from .llm_ext8 import _PSI_SPLIT, psi_assemble, psi_value_bucket
+    from .curation import _PSI_SPLIT, psi_assemble, psi_value_bucket
     from ..streaming.windows import stream_current_window_histogram
 
     cur = stream_current_window_histogram(
@@ -350,7 +351,7 @@ def q_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _psi_windowed_oracle() -> str:
-    from .llm_ext8 import _PSI_B, _PSI_SPLIT
+    from .curation import _PSI_B, _PSI_SPLIT
 
     bucket = (
         f"LEAST(GREATEST(CAST(ROUND(value * 100) AS BIGINT), 0) // 5000, "
@@ -431,7 +432,7 @@ def q_stream_psi_windowed_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     its end ≤ max event time − the watermark delay, and NULL-ts rows are
     excluded on both arms (event-time windowing requires a timestamp).
     """
-    from .llm_ext8 import _PSI_B, _PSI_SPLIT, psi_value_bucket
+    from .curation import _PSI_B, _PSI_SPLIT, psi_value_bucket
     from ..streaming.windows import stream_windowed_histograms
 
     # localCheckpoint: the histogram is referenced FOUR times below (wins,
@@ -606,7 +607,7 @@ def q_stream_merge_into_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # stream_shard_manifest — the release manifest maintained AT INGEST TIME
 
-from .llm_ext12 import MANIFEST_ORACLE as _MANIFEST_ORACLE  # noqa: E402
+from .assembly import MANIFEST_ORACLE as _MANIFEST_ORACLE  # noqa: E402
 
 
 @register("stream_shard_manifest", oracle=_MANIFEST_ORACLE)
@@ -637,7 +638,7 @@ def q_stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..streaming.windows import stream_shuffle_scope
-    from .llm_ext12 import manifest_shard_agg
+    from .assembly import manifest_shard_agg
 
     docs = load(spark, sf_dir, "documents")
     root = tempfile.mkdtemp(prefix="mfe_manifest_")
@@ -673,10 +674,10 @@ def q_stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fuzzy_pairs_oracle() -> str:
-    """The SHARED pair CTE of the batch twin (llm_ext13._fuzz_pair_ctes —
+    """The SHARED pair CTE of the batch twin (curation._fuzz_pair_ctes —
     one exact train×bench Jaccard definition, two consumers), emitted at
     pair grain instead of rolled up per doc."""
-    from .llm_ext13 import _fuzz_pair_ctes
+    from .curation import _fuzz_pair_ctes
 
     return f"""
     WITH {_fuzz_pair_ctes()}
@@ -721,10 +722,8 @@ def _containment_screen_oracle() -> str:
     """Exact cross-corpus containment over the even(lake)/odd(arriving)
     split via the inverted-index equi-join; the uq uniqueness guard rides
     the always-built ref side (the _fuzz_pair_ctes pattern)."""
-    from .llm_ext import _DUCK_SHINGLES
-
     return f"""
-    WITH {_DUCK_SHINGLES},
+    WITH {DUCK_SHINGLES},
     sizes AS (SELECT doc_id, LEN(s) AS n FROM sh),
     ex AS (SELECT doc_id, UNNEST(s) AS shingle FROM sh),
     uq AS (

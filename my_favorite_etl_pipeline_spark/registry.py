@@ -76,35 +76,9 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 # dataset-assembly, SCD2, and streaming. Names not yet registered are skipped,
 # so the list may lead the code; everything else follows in registration order.
 CURATED_FIRST: tuple[str, ...] = (
-    # R16 ROTATION (VERDICT r15 item 7): seat ALL FOURTEEN remaining
-    # never-driver-verified entries (the r15-build additions —
-    # ann_ranking_report, lsh_recall_report, knn_graph_kcore,
-    # knn_graph_triangles, containment_overlap_pairs,
-    # containment_dedup_drops, stream_containment_screen,
-    # gram_novelty_scores, hard_negative_pairs, benford_amount_audit,
-    # fk_orphan_audit, unimax_language_budget, weighted_sample_es_topn,
-    # oracle_probe_duckdb_version — each local-green at 3 SFs +
-    # determinism, zero driver rows) and RETURN the verdict-named
-    # veterans: q5/q9/q18 and the HNSW/serving band
-    # (hnsw_two/three_layer_search, hnsw_batch_routed_search,
-    # graph_ann_search_batch, graph_ann_search_durable). OUT: 22
-    # r14/r15-verified entries whose families stay represented —
-    # q8/grouping_sets/range_join (q1/q3/q5/q9/q18 cover relational),
-    # pandas_udf/matryoshka/ann_cell/ivf_recall (bruteforce anchor +
-    # lsh_recall/ann_ranking reports cover similarity),
-    # nn_descent_hq (seated r15 for the row as planned — its inline
-    # (32,32) build cost ~30 s of window time)/auto_k/pagerank/LPA
-    # (nn_descent + serving topk + kcore/triangles/HNSW keep the graph
-    # family rich), ablation/span_profile/semantic_decontaminate
-    # (gram_novelty + the containment trio cover curation),
-    # wordpiece/curriculum (gd_scores + doremi/unimax cover
-    # classifiers/mixtures), greedy ×2/community_capped
-    # (weighted_sample_es_topn covers selection),
-    # semantic_packing/shard_manifest/stream_shard_manifest
-    # (epoch_repeat_plan + pack_efficiency_report cover assembly).
-    # All 50 seats are oracle-backed (no rows-only entries — the r14
-    # hll_sketch_merge no_oracle soft-spot class is excluded by
-    # construction).
+    # Every seat is oracle-backed (no rows-only entries), and the window
+    # rotates through each family's entries so every registered query is
+    # driver-checked in some window; each family keeps at least one anchor.
     #
     # reference-parity pipeline anchors (SURVEY §2.1-§2.8): pinned always
     "incremental_extract",

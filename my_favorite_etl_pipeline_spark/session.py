@@ -27,34 +27,47 @@ DEFAULT_SHUFFLE_PARTITIONS = "32"
 CACHED_PLAN_AQE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
 
+#: The runtime SQL confs every engine session carries: ``get_spark`` builds
+#: with them and ``tune_session`` sets them on a session created elsewhere.
+#: The shuffle-partition count is deliberately not here — an outside
+#: caller's session keeps its own.
+RUNTIME_CONFS: tuple[tuple[str, str], ...] = (
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.ansi.enabled", "false"),
+    ("spark.sql.adaptive.enabled", "true"),
+    (CACHED_PLAN_AQE, "true"),
+    # fixture parquet has shipped TIMESTAMP(NANOS) columns (see
+    # sources/tables.py:normalize_event_time); Spark 4 rejects them
+    # unless read as raw int64. Set ONCE per session — session-wide,
+    # declared, and documented — instead of mutating conf inside load(),
+    # which silently changed how other readers in a shared session saw ns
+    # parquet. Effect when no ns columns exist: none.
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    # Allow shuffled-hash join where its size conditions hold instead of
+    # always sorting both sides: equal-width equi-joins on small-per-
+    # partition sides skip two sorts (−20% on the merge/cluster joins).
+    # The plan-time pick bounds the AVERAGE per-partition build size over
+    # estimated stats, and SHJ's build-side hash map does not spill; the
+    # AQE local-map threshold is the stronger runtime bound (every actual
+    # post-shuffle partition ≤ 64 MB). AQE skew splitting backs up the
+    # static pick (tests/test_shj_skew.py); a single giant key is the
+    # residual risk at 100 TB — salt it (operators/skew.py).
+    ("spark.sql.join.preferSortMergeJoin", "false"),
+    ("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", str(64 * 1024 * 1024)),
+)
+
+
 def get_spark(app_name: str = "my-favorite-etl-pipeline-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
+    for key, val in RUNTIME_CONFS:
+        builder = builder.config(key, val)
     builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        builder.config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", DEFAULT_SHUFFLE_PARTITIONS)
-        .config(CACHED_PLAN_AQE, "true")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Allow shuffled-hash join where its size conditions hold instead of
-        # always sorting both sides: equal-width equi-joins on small-per-
-        # partition sides skip two sorts (−20% on the merge/cluster joins).
-        # The plan-time pick bounds the AVERAGE per-partition build size over
-        # estimated stats, and SHJ's build-side hash map does not spill; the
-        # AQE local-map threshold is the stronger runtime bound (every actual
-        # post-shuffle partition ≤ 64 MB). AQE skew splitting backs up the
-        # static pick (tests/test_shj_skew.py); a single giant key is the
-        # residual risk at 100 TB — salt it (operators/skew.py).
-        .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            str(64 * 1024 * 1024),
-        )
         # runtime row-level filtering: build a bloom filter from the small
         # (filtered) join side and push it into the big side's scan — at
         # 100 TB this skips row groups the join would discard anyway
@@ -63,13 +76,6 @@ def get_spark(app_name: str = "my-favorite-etl-pipeline-spark") -> SparkSession:
         # this build (hangs even range().count()) — verified by bisection;
         # bloom-filter runtime filtering alone is the safe, useful half
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # fixture parquet has shipped TIMESTAMP(NANOS) columns (see
-        # sources/tables.py:normalize_event_time); Spark 4 rejects them
-        # unless read as raw int64. Set ONCE here — session-wide, declared,
-        # and documented — instead of mutating conf inside load(), which
-        # silently changed how other readers in a shared session saw ns
-        # parquet. Effect when no ns columns exist: none.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
@@ -102,21 +108,7 @@ def tune_session(spark: SparkSession) -> SparkSession:
     confs that matter for correctness parity (timezone, ANSI) are settable
     at runtime — apply them defensively.
     """
-    for key, val in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.ansi.enabled", "false"),
-        ("spark.sql.adaptive.enabled", "true"),
-        (CACHED_PLAN_AQE, "true"),
-        # ns-parquet compatibility — session-wide by design (see get_spark);
-        # normalize_event_time rebuilds the affected columns after scan
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        # shuffled-hash joins as in get_spark: size-bounded, same results
-        ("spark.sql.join.preferSortMergeJoin", "false"),
-        (
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            str(64 * 1024 * 1024),
-        ),
-    ):
+    for key, val in RUNTIME_CONFS:
         try:
             spark.conf.set(key, val)
         except Exception:

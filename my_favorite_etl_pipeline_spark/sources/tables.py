@@ -31,9 +31,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
     """Columns stored as parquet TIMESTAMP(NANOS) — one footer read.
 

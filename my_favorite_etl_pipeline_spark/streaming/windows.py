@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import artifacts
+from ..functions.text import spark_held_out
+from ..operators.dq import assert_unique_doc_ids
 from ..sources.tables import normalize_event_time, parquet_schema
 
 
@@ -216,11 +218,7 @@ def stream_contamination_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.tables import load
 
-    # call-time import is cycle-safe (plans is fully imported before any
-    # registered query runs) — the SHARED bench predicate, not a restatement
-    from ..plans.llm_ext3 import _bench_pred
-
-    bench = _bench_pred()
+    bench = spark_held_out()
     toks = F.split(F.col("text"), " ")
     grams13 = F.when(
         F.size(toks) >= 13,
@@ -281,12 +279,7 @@ def stream_fuzzy_decon_pairs(
 
     from ..sources.tables import load
 
-    # call-time import is cycle-safe (plans is fully imported before any
-    # registered query runs) — the SHARED bench predicate, not a restatement
-    from ..plans.llm_ext3 import _bench_pred
-    from ..plans.llm_ext13 import _assert_unique_doc_ids
-
-    bench_pred = _bench_pred()
+    bench_pred = spark_held_out()
     # int64-hashed shingles (r16-opt, the stream_ingest contract): the
     # posting join shuffles/broadcasts 8-byte keys instead of ~25-byte
     # 3-gram strings; collision counts are exact absent an in-pair
@@ -295,7 +288,7 @@ def stream_fuzzy_decon_pairs(
     # the at-ingest arm's id contract, asserted on the batch view of the
     # same input BEFORE the stream starts (an ingest gate validates ids
     # upstream; mirrors the batch twin's probe + the oracle's uq guard)
-    _assert_unique_doc_ids(
+    assert_unique_doc_ids(
         load(spark, sf_dir, "documents"), "stream_fuzzy_decontaminate"
     )
     bench = (
@@ -341,7 +334,7 @@ def stream_fuzzy_decon_pairs(
     jac = c / (F.col("na") + F.col("nb") - c)
     pairs = (
         # UNROUNDED threshold compare — the shared p CTE's boundary rule
-        # (llm_ext13._fuzz_pair_ctes); rounding is display-only. Filter
+        # (plans/curation.py _fuzz_pair_ctes); rounding is display-only. Filter
         # and projection AFTER the aggregation are stateless row ops,
         # legal in complete mode.
         agg.filter(jac >= threshold).select(
@@ -654,10 +647,9 @@ def stream_containment_screen(
     aggregate — no arrays cross the join, no second stateful op.
     """
     from ..functions.text import shingles
-    from ..plans.llm_ext13 import _assert_unique_doc_ids
     from ..sources.tables import load
 
-    _assert_unique_doc_ids(
+    assert_unique_doc_ids(
         load(spark, sf_dir, "documents"), "stream_containment_screen"
     )
     ref_idx = _containment_ref_index(spark, sf_dir)

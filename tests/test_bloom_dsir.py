@@ -30,7 +30,7 @@ def test_bloom_decontamination_equals_exact_algorithm(spark, sf_dir):
 
 def test_bloom_table_bounded_and_probe_broadcasts(spark, sf_dir):
     from my_favorite_etl_pipeline_spark.functions import text as TX
-    from my_favorite_etl_pipeline_spark.plans.llm_ext7 import (
+    from my_favorite_etl_pipeline_spark.plans.curation import (
         _BLOOM_BITS,
         bench_gram_bloom,
         bloom_probe_candidates,
@@ -58,7 +58,7 @@ def test_dsir_rank_contract(spark, sf_dir):
     assert all(a >= b for a, b in zip(ws, ws[1:]))  # non-increasing scores
     # only RAW documents are scored/selected — the target slice never
     # self-selects (it defines the distribution, it is not a candidate)
-    from my_favorite_etl_pipeline_spark.plans.llm_ext3 import _bench_pred
+    from my_favorite_etl_pipeline_spark.functions.text import spark_held_out as _bench_pred
     from my_favorite_etl_pipeline_spark.sources.tables import load
 
     bench = {

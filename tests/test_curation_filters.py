@@ -49,7 +49,7 @@ def test_repetition_metrics_flag_loops(spark):
 
 def test_gopher_rules_on_planted_docs(spark, tmp_path):
     # Route the registered query at a tiny planted corpus via parquet.
-    from my_favorite_etl_pipeline_spark.plans.llm_ext3 import q_gopher_quality_flags
+    from my_favorite_etl_pipeline_spark.plans.curation import q_gopher_quality_flags
 
     docs = _curation_docs(spark).withColumn("lang", F.lit("en")).withColumn(
         "source", F.lit("t")
@@ -65,7 +65,7 @@ def test_gopher_rules_on_planted_docs(spark, tmp_path):
 def test_winnowing_shared_substring_shares_fingerprint(spark, tmp_path):
     # Winnowing guarantee: any common substring of length >= k + w - 1 = 11
     # chars yields at least one common fingerprint.
-    from my_favorite_etl_pipeline_spark.plans.llm_ext3 import q_winnowing_fingerprints
+    from my_favorite_etl_pipeline_spark.plans.dedup import q_winnowing_fingerprints
 
     common = "abcdefghijklmnop"  # 16 chars shared
     df = spark.createDataFrame(
@@ -98,7 +98,7 @@ def test_winnowing_shared_substring_shares_fingerprint(spark, tmp_path):
 
 
 def test_contamination_flags_copied_grams(spark, tmp_path):
-    from my_favorite_etl_pipeline_spark.plans.llm_ext3 import q_contamination_13gram
+    from my_favorite_etl_pipeline_spark.plans.curation import q_contamination_13gram
 
     # doc_ids chosen so md5 first hex char puts exactly one doc in the
     # benchmark bucket: md5('4') = 'a87ff...'? — instead scan for a bucket
@@ -125,7 +125,7 @@ def test_contamination_flags_copied_grams(spark, tmp_path):
 
 
 def test_ssjoin_prefix_filter_matches_allpairs(spark, tmp_path):
-    from my_favorite_etl_pipeline_spark.plans.llm_ext3 import q_ssjoin_prefix_filter
+    from my_favorite_etl_pipeline_spark.plans.dedup import q_ssjoin_prefix_filter
 
     base = " ".join(f"t{i}" for i in range(40))
     df = spark.createDataFrame(

@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from my_favorite_etl_pipeline_spark.plans.llm_ext2 import (
+from my_favorite_etl_pipeline_spark.plans.assembly import (
     dataset_split_hash,
     hash_split,
     pack_sequences_1024,

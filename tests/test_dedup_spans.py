@@ -14,6 +14,7 @@ import random
 from pyspark.sql import functions as F
 
 from my_favorite_etl_pipeline_spark.operators.dedup import (
+    _reassemble_without,
     exact_span_matches,
     excise_span_duplicates,
     span_removal_positions,
@@ -42,6 +43,23 @@ def _random_docs(seed: int, n_docs: int = 12) -> list[tuple[int, str]]:
     return docs
 
 
+def _pairwise_excision(sdf, min_tokens: int):
+    """Reference excision: the removal set derived from every pairwise span
+    (O(df²) per hot gram), cut out by the operator's own re-assembly."""
+    spans = exact_span_matches(sdf, min_tokens=min_tokens)
+    removed = (
+        spans.select(
+            F.col("doc_b").alias("doc_id"),
+            F.explode(
+                F.sequence(F.col("b_start"), F.col("b_start") + F.col("span_tokens") - 1)
+            ).alias("pos"),
+        )
+        .distinct()
+        .withColumn("__cut", F.lit(True))
+    )
+    return _reassemble_without(sdf, removed, id_col="doc_id", text_col="text")
+
+
 def test_span_canonical_equals_pairwise(spark):
     """The O(df) canonical removal set == the O(df²) pairwise-derived one,
     end-to-end through excision (clean_text AND n_removed_tokens), on
@@ -50,11 +68,11 @@ def test_span_canonical_equals_pairwise(spark):
         sdf = spark.createDataFrame(_random_docs(seed), ["doc_id", "text"])
         canon = {
             r.doc_id: (r.clean_text, r.n_removed_tokens)
-            for r in excise_span_duplicates(sdf, min_tokens=W, method="canonical").collect()
+            for r in excise_span_duplicates(sdf, min_tokens=W).collect()
         }
         pair = {
             r.doc_id: (r.clean_text, r.n_removed_tokens)
-            for r in excise_span_duplicates(sdf, min_tokens=W, method="pairwise").collect()
+            for r in _pairwise_excision(sdf, min_tokens=W).collect()
         }
         assert canon == pair, f"seed {seed}: canonical != pairwise"
 

@@ -14,7 +14,7 @@ import os
 
 import pytest
 
-from my_favorite_etl_pipeline_spark.plans.llm_ext7 import (
+from my_favorite_etl_pipeline_spark.plans.graph import (
     _knn_refined_tables,
     graph_beam_search,
     materialize_knn_graph,

@@ -24,7 +24,7 @@ import random
 import duckdb
 import pytest
 
-from my_favorite_etl_pipeline_spark.plans.llm_ext7 import _HN_MOD
+from my_favorite_etl_pipeline_spark.plans.graph import _HN_MOD
 from my_favorite_etl_pipeline_spark.registry import REGISTRY
 
 N_VECS = 50

@@ -21,7 +21,7 @@ from my_favorite_etl_pipeline_spark.operators.similarity import (
     int_cos_x1e4,
     quantize_vectors,
 )
-from my_favorite_etl_pipeline_spark.plans.llm_ext7 import _int_cos_sql
+from my_favorite_etl_pipeline_spark.plans.graph import _int_cos_sql
 
 DIM = 64
 

@@ -10,10 +10,7 @@ import os
 
 import pytest
 
-from my_favorite_etl_pipeline_spark.plans.llm_ext10 import (
-    _QC_BUCKETS,
-    _qc_trained_weights,
-)
+from my_favorite_etl_pipeline_spark.plans.curation import _QC_BUCKETS, _qc_trained_weights
 
 SF01 = "/root/testdata/sf0.01"
 

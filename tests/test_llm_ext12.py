@@ -373,7 +373,7 @@ def test_repeat_shard_assignment_scatters_copies_and_fills_shards(spark):
     shards (a trainer must not replay one doc back-to-back), every shard
     must be populated, and positions must be a contiguous 1..|shard|
     ranking."""
-    from my_favorite_etl_pipeline_spark.plans.llm_ext12 import _MAN_SHARDS
+    from my_favorite_etl_pipeline_spark.plans.assembly import _MAN_SHARDS
 
     rows = engine.queries()["epoch_repeat_shard_assignment"](
         spark, SF_DIR
@@ -422,10 +422,7 @@ def test_pack_shard_bins_are_atomic_and_ordered(spark):
     """Every (source, seq_id) bin must land in ONE shard at CONTIGUOUS
     positions with its docs still in the packing's (cluster, doc_id)
     order, and per-shard positions must rank 1..|shard|."""
-    from my_favorite_etl_pipeline_spark.plans.llm_ext12 import (
-        _MAN_SHARDS,
-        semantic_packed_frame,
-    )
+    from my_favorite_etl_pipeline_spark.plans.assembly import _MAN_SHARDS, semantic_packed_frame
 
     rows = engine.queries()["semantic_pack_shard_assignment"](
         spark, SF_DIR

@@ -11,7 +11,7 @@ import pyarrow.parquet as pq
 import pytest
 
 import my_favorite_etl_pipeline_spark as engine
-from my_favorite_etl_pipeline_spark.plans.llm_ext13 import _COV_N, _COV_ROUNDS
+from my_favorite_etl_pipeline_spark.plans.curation import _COV_N, _COV_ROUNDS
 from tests.conftest import SF_DIR
 
 
@@ -162,7 +162,7 @@ def _batched_python(texts: dict[int, str], rounds: int, b: int):
 
 
 def test_batched_coverage_matches_pure_python(spark):
-    from my_favorite_etl_pipeline_spark.plans.llm_ext13 import _COVB_B, _COVB_ROUNDS
+    from my_favorite_etl_pipeline_spark.plans.curation import _COVB_B, _COVB_ROUNDS
 
     texts = {
         d["doc_id"]: d["text"]
@@ -182,10 +182,7 @@ def test_batched_coverage_matches_pure_python(spark):
 def test_batch_of_one_is_the_exact_greedy(spark):
     """batch=1 through the SHARED body must reproduce the flagship row
     for row — the tier is a parameter choice, not a reimplementation."""
-    from my_favorite_etl_pipeline_spark.plans.llm_ext13 import (
-        _COV_ROUNDS,
-        _greedy_select,
-    )
+    from my_favorite_etl_pipeline_spark.plans.curation import _COV_ROUNDS, _greedy_select
 
     flag = [
         (r.rank, r.doc_id, r.gain, r.covered_total)
@@ -311,7 +308,7 @@ def test_lpa_labels_durable_commits_once_and_matches_fresh(spark):
     snapshot (same version, no rebuild) — the `_knn_refined_tables`
     contract applied to the LPA frame."""
     from my_favorite_etl_pipeline_spark import artifacts
-    from my_favorite_etl_pipeline_spark.plans import llm_ext13 as m
+    from my_favorite_etl_pipeline_spark.plans import graph as m
     from my_favorite_etl_pipeline_spark.sources.mart import VersionedMart
 
     fresh = sorted((r.node, r.lab) for r in m.lpa_labels(spark, SF_DIR).collect())
@@ -401,7 +398,7 @@ def test_curriculum_keeps_shard_membership_and_reorders(spark):
 def test_curriculum_score_is_the_shared_ccnet_score(spark):
     """One scoring definition across the family: the entry's score must
     equal ccnet_bucketed's for every doc (the epoch_repeat_plan rule)."""
-    from my_favorite_etl_pipeline_spark.plans.llm_ext5 import ccnet_bucketed
+    from my_favorite_etl_pipeline_spark.plans.curation import ccnet_bucketed
 
     want = {r.doc_id: r.unigram_nlp for r in ccnet_bucketed(spark, SF_DIR).collect()}
     got = {

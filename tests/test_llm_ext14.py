@@ -12,13 +12,8 @@ import pyarrow.parquet as pq
 import pytest
 
 import my_favorite_etl_pipeline_spark as engine
-from my_favorite_etl_pipeline_spark.plans.llm_ext14 import (
-    _KCORE_K,
-    _KCORE_ROUNDS,
-    _UMX_B_DEN,
-    _UMX_B_NUM,
-    _UMX_EPOCHS,
-)
+from my_favorite_etl_pipeline_spark.plans.assembly import _UMX_B_DEN, _UMX_B_NUM, _UMX_EPOCHS
+from my_favorite_etl_pipeline_spark.plans.graph import _KCORE_K, _KCORE_ROUNDS
 from tests.conftest import SF_DIR
 
 
@@ -30,7 +25,7 @@ def qs():
 def test_kcore_matches_pure_python_peel(spark, qs):
     """Replay the peel over the SAME undirected edges the entry consumes
     (the shared `_und_frame`), in pure Python sets."""
-    from my_favorite_etl_pipeline_spark.plans.llm_ext13 import _und_frame
+    from my_favorite_etl_pipeline_spark.plans.graph import _und_frame
 
     assign, und = _und_frame(spark, SF_DIR)
     edges = [(r.node, r.nbr) for r in und.collect()]
@@ -71,7 +66,7 @@ def test_kcore_matches_pure_python_peel(spark, qs):
 def test_triangles_matches_pure_python(spark, qs):
     """Replay per-node triangle counts and the clustering coefficient
     over the SAME undirected edges the entry consumes."""
-    from my_favorite_etl_pipeline_spark.plans.llm_ext13 import _und_frame
+    from my_favorite_etl_pipeline_spark.plans.graph import _und_frame
 
     assign, und = _und_frame(spark, SF_DIR)
     nodes = {r.vec_id for r in assign.select("vec_id").collect()}
@@ -153,7 +148,7 @@ def test_unimax_all_capped_branch(spark, qs, monkeypatch):
     budget knob from the module global at call time, so monkeypatching
     _UMX_B_NUM = 2*_UMX_EPOCHS + 1 drives budget strictly above the
     total epoch-cap mass at any corpus shape."""
-    import my_favorite_etl_pipeline_spark.plans.llm_ext14 as m
+    import my_favorite_etl_pipeline_spark.plans.assembly as m
 
     monkeypatch.setattr(m, "_UMX_B_NUM", 2 * _UMX_EPOCHS * _UMX_B_DEN + 1)
     t = pq.read_table(f"{SF_DIR}/documents.parquet", columns=["lang", "text"])

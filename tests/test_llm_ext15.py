@@ -10,14 +10,8 @@ import pyarrow.parquet as pq
 import pytest
 
 import my_favorite_etl_pipeline_spark as engine
-from my_favorite_etl_pipeline_spark.plans.llm_ext15 import (
-    _CONT_DEN,
-    _CONT_NUM,
-    _HN_DUP_T,
-    _HN_K,
-    _HN_QMOD,
-    _HN_QREM,
-)
+from my_favorite_etl_pipeline_spark.plans.dedup import _CONT_DEN, _CONT_NUM
+from my_favorite_etl_pipeline_spark.plans.retrieval import _HN_DUP_T, _HN_K, _HN_QMOD, _HN_QREM
 from tests.conftest import SF_DIR
 
 
@@ -138,7 +132,7 @@ def test_lsh_recall_report_matches_pure_python(spark, qs):
     with either engine."""
     import hashlib
 
-    from my_favorite_etl_pipeline_spark.plans.llm_ext15 import (
+    from my_favorite_etl_pipeline_spark.plans.retrieval import (
         _LSH_BAND_ROWS,
         _LSH_PERMS,
         _LSH_RPT_DEN,
@@ -211,10 +205,7 @@ def test_ann_ranking_report_matches_composed_metrics(spark, qs):
     k, and probes) and (b) an independent exact arm (numpy cosine, 4dp)
     — the composition-testing discipline: the report must describe
     exactly the serving pipeline it audits."""
-    from my_favorite_etl_pipeline_spark.plans.llm_ext15 import (
-        _ARR_DISC,
-        _ARR_K,
-    )
+    from my_favorite_etl_pipeline_spark.plans.retrieval import _ARR_DISC, _ARR_K
 
     t = pq.read_table(f"{SF_DIR}/embeddings.parquet", columns=["vec_id", "embedding"])
     vecs = {
@@ -265,7 +256,7 @@ def test_ann_ranking_report_matches_composed_metrics(spark, qs):
 
 
 def test_benford_audit_matches_pure_python(spark, qs):
-    from my_favorite_etl_pipeline_spark.plans.llm_ext15 import _BENFORD_EXP_PPM
+    from my_favorite_etl_pipeline_spark.plans.relational_ext import _BENFORD_EXP_PPM
 
     t = pq.read_table(f"{SF_DIR}/orders.parquet", columns=["o_totalprice"])
     digits = [
@@ -350,10 +341,7 @@ def test_weighted_sample_es_matches_pure_python(spark, qs):
     import hashlib
     from collections import Counter
 
-    from my_favorite_etl_pipeline_spark.plans.llm_ext15 import (
-        _ES_SEED,
-        _ES_TOP,
-    )
+    from my_favorite_etl_pipeline_spark.plans.assembly import _ES_SEED, _ES_TOP
 
     t = pq.read_table(f"{SF_DIR}/documents.parquet", columns=["doc_id", "text"])
     toks = {
@@ -402,7 +390,7 @@ def test_fk_orphan_audit_fixture_clean_and_detection_arm(spark, qs):
     from pyspark.sql import Row
 
     from my_favorite_etl_pipeline_spark.operators.dq import fk_orphan_counts
-    from my_favorite_etl_pipeline_spark.plans.llm_ext15 import _FK_EDGES
+    from my_favorite_etl_pipeline_spark.plans.relational_ext import _FK_EDGES
 
     rows = qs["fk_orphan_audit"](spark, SF_DIR).collect()
     assert len(rows) == len(_FK_EDGES)

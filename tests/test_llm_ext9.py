@@ -18,7 +18,7 @@ def test_unigram_model_contract(spark, sf_dir):
     import math
 
     from my_favorite_etl_pipeline_spark.functions import text as TX
-    from my_favorite_etl_pipeline_spark.plans.llm_ext9 import (
+    from my_favorite_etl_pipeline_spark.plans.tokenizers import (
         _ULM_MAXP,
         _ULM_MAXW,
         _round_half_away,
@@ -59,7 +59,7 @@ def test_unigram_encode_consistent_with_training(spark, sf_dir):
     exact fixed-point fertility of its own totals. Words longer than the
     trainer's vocab cap are excluded on both sides (documented filter)."""
     from my_favorite_etl_pipeline_spark.functions import text as TX
-    from my_favorite_etl_pipeline_spark.plans.llm_ext9 import _ULM_MAXW
+    from my_favorite_etl_pipeline_spark.plans.tokenizers import _ULM_MAXW
     from my_favorite_etl_pipeline_spark.sources.tables import load
 
     rows = REGISTRY["unigram_lm_encode_fertility"].fn(spark, sf_dir).collect()

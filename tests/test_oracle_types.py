@@ -8,11 +8,8 @@ classifier weights) partitioned exactly on "does the oracle's final SELECT
 carry an un-CAST HUGEINT column". This test makes the whole bug class
 unrepresentable: every registered oracle's result schema is DESCRIBEd in
 DuckDB (bind/plan only — nothing executes) and no output column may type as
-HUGEINT or DECIMAL. It would have fired on the first red in round 9.
-
-The one allowlisted entry is the deliberate smoking-gun probe
-(``oracle_probe_hugeint_passthrough``) whose whole purpose is to carry a raw
-HUGEINT column to the driver next to its CAST twin.
+HUGEINT or DECIMAL. It would have fired on the first red in round 9. The lint has no
+exceptions.
 """
 
 from __future__ import annotations
@@ -28,15 +25,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_LINT_SF", "/root/testdata/sf0.001")
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-# Entries whose oracle is INTENTIONALLY un-CAST (diagnostic probes only —
-# never an operator surface). Each needs a one-line justification here.
-ALLOW_HUGEINT = {
-    # the r12 root-cause probe: raw SUM(1) HUGEINT passthrough, paired with
-    # oracle_probe_hugeint_cast — red/green contrast proves the driver-side
-    # rendering divergence in one CORRECTNESS row (VERDICT r11 item 2).
-    "oracle_probe_hugeint_passthrough",
-}
 
 BANNED = ("HUGEINT", "UHUGEINT", "DECIMAL")
 
@@ -59,8 +47,6 @@ def test_every_oracle_output_column_has_portable_type(con):
     assert oracles, "registry produced no oracles"
     offenders: dict[str, list[tuple[str, str]]] = {}
     for name, sql in oracles.items():
-        if name in ALLOW_HUGEINT:
-            continue
         cols = _result_types(con, sql)
         bad = [(c, t) for c, t in cols if any(b in t.upper() for b in BANNED)]
         if bad:
@@ -71,13 +57,3 @@ def test_every_oracle_output_column_has_portable_type(con):
         f"{offenders}"
     )
 
-
-def test_allowlisted_probe_is_actually_hugeint(con):
-    """The passthrough probe must KEEP its raw HUGEINT column — if DuckDB
-    ever changes the promotion rule the probe (and the diagnosis it pins)
-    silently stops probing anything."""
-    oracles = engine.oracle_sql()
-    if "oracle_probe_hugeint_passthrough" not in oracles:
-        pytest.skip("probe not registered")
-    cols = _result_types(con, oracles["oracle_probe_hugeint_passthrough"])
-    assert any("HUGEINT" in t.upper() for _, t in cols), cols

@@ -278,7 +278,7 @@ def test_bm25_tf_saturates_sublinearly(spark):
     in repeating the query term 1x vs 8x; the 8x doc must score well under
     half of the 8x a linear scorer would give (measured ratio ≈ 2.15, the
     f(∞)/f(1) = 1+k1·norm asymptote being ≈ 2.57 here)."""
-    from my_favorite_etl_pipeline_spark.plans.llm_ext3 import q_bm25_topk_docs  # noqa: F401  (shape shared)
+    from my_favorite_etl_pipeline_spark.plans.retrieval import q_bm25_topk_docs  # noqa: F401  (shape shared)
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 

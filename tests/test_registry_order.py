@@ -94,14 +94,14 @@ def test_missing_optional_dep_warns_loudly(monkeypatch):
     real_import = importlib.import_module
 
     def fake_import(name, package=None):
-        if name == ".llm_ext":
+        if name == ".dedup":
             raise ImportError("No module named 'numpy'", name="numpy")
         return real_import(name, package=package)
 
     monkeypatch.setattr(importlib, "import_module", fake_import)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        plans._import_or_warn("llm_ext")
+        plans._import_or_warn("dedup")
     assert any("NOT registered" in str(w.message) for w in caught)
 
 
@@ -117,4 +117,4 @@ def test_unexpected_import_error_reraises(monkeypatch):
 
     monkeypatch.setattr(importlib, "import_module", fake_import)
     with pytest.raises(ImportError):
-        plans._import_or_warn("llm_ext")
+        plans._import_or_warn("dedup")

@@ -11,7 +11,12 @@ import pytest
 import __spark_entry__ as entrymod
 from my_favorite_etl_pipeline_spark.caching import materialized_scope
 from my_favorite_etl_pipeline_spark.registry import REGISTRY
-from my_favorite_etl_pipeline_spark.session import CACHED_PLAN_AQE, get_spark, tune_session
+from my_favorite_etl_pipeline_spark.session import (
+    CACHED_PLAN_AQE,
+    RUNTIME_CONFS,
+    get_spark,
+    tune_session,
+)
 
 
 def _cell(v):
@@ -29,16 +34,13 @@ def _rows(build, ordered: bool):
     return rows if ordered else sorted(rows, key=repr)
 
 
-def test_get_spark_and_tune_session_set_the_cached_plan_conf(spark, set_conf):
-    set_conf(spark, CACHED_PLAN_AQE, None)
-    tuned = tune_session(spark.newSession())
-    assert tuned.conf.get(CACHED_PLAN_AQE) == "true"
-    assert spark.conf.get(CACHED_PLAN_AQE, None) is None
-    # get_spark returns the running session with all of its confs applied;
-    # put every one of them back for the tests that follow
+@contextmanager
+def _confs_restored(spark):
+    """``get_spark`` returns the running session with all of its confs
+    applied; put every one of them back for the tests that follow."""
     before = spark.conf.getAll
     try:
-        assert get_spark().conf.get(CACHED_PLAN_AQE) == "true"
+        yield
     finally:
         for key, value in spark.conf.getAll.items():
             if not spark.conf.isModifiable(key):
@@ -47,6 +49,37 @@ def test_get_spark_and_tune_session_set_the_cached_plan_conf(spark, set_conf):
                 spark.conf.unset(key)
             elif value != before[key]:
                 spark.conf.set(key, before[key])
+
+
+def test_get_spark_and_tune_session_set_the_cached_plan_conf(spark, set_conf):
+    set_conf(spark, CACHED_PLAN_AQE, None)
+    tuned = tune_session(spark.newSession())
+    assert tuned.conf.get(CACHED_PLAN_AQE) == "true"
+    assert spark.conf.get(CACHED_PLAN_AQE, None) is None
+    with _confs_restored(spark):
+        assert get_spark().conf.get(CACHED_PLAN_AQE) == "true"
+
+
+def test_both_session_paths_set_every_runtime_conf(spark, set_conf):
+    """``tune_session`` sets every ``RUNTIME_CONFS`` entry and nothing
+    else (the caller keeps its shuffle partitions); ``get_spark`` sets
+    every entry too."""
+    s = spark.newSession()
+    for key, _ in RUNTIME_CONFS:
+        s.conf.unset(key)
+    s.conf.set("spark.sql.shuffle.partitions", "3")
+    before = s.conf.getAll
+    after = tune_session(s).conf.getAll
+    assert {key: after.get(key) for key, _ in RUNTIME_CONFS} == dict(RUNTIME_CONFS)
+    changed = {k for k in set(before) | set(after) if before.get(k) != after.get(k)}
+    assert changed <= {key for key, _ in RUNTIME_CONFS}
+    assert after["spark.sql.shuffle.partitions"] == "3"
+
+    for key, _ in RUNTIME_CONFS:
+        set_conf(spark, key, None)
+    with _confs_restored(spark):
+        built = get_spark().conf
+        assert {key: built.get(key) for key, _ in RUNTIME_CONFS} == dict(RUNTIME_CONFS)
 
 
 @pytest.mark.parametrize(

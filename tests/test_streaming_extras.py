@@ -349,7 +349,7 @@ def test_windowed_psi_histograms_respect_watermark(spark, tmp_path):
     import glob
     import shutil
 
-    from my_favorite_etl_pipeline_spark.plans.llm_ext8 import psi_value_bucket
+    from my_favorite_etl_pipeline_spark.plans.curation import psi_value_bucket
     from my_favorite_etl_pipeline_spark.streaming.windows import (
         stream_windowed_histograms,
     )

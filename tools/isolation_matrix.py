@@ -17,16 +17,15 @@ axes that harness lacks and that a driver plausibly differs on:
   and every parallel reduce topology.
 
 The third suspect axis — the driver's DuckDB build — cannot be vendored
-here (no network, one wheel baked in); it is covered instead by the
-registered engine-behavior probes in ``plans/forensics.py``
-(oracle_probe_float_sum_order / _round_half / _tokenize_md5 /
-_float_cosine_x1e4), which fingerprint the behaviors a different build
-could change and run INSIDE the driver's own environment.
+here (no network, one wheel baked in); the registered
+``oracle_probe_duckdb_version`` entry (``plans/relational_ext.py``) reads it
+out instead, INSIDE the driver's own environment: its row matches only when
+the oracle's DuckDB build is the local wheel's version.
 
 Usage:
     python tools/isolation_matrix.py [sf_dir] [query ...]
-    # default queries: the graph + classifier families and their r11
-    # forensic stage entries (the two-round red families)
+    # default queries: the graph + classifier families (the two-round
+    # red families)
 
 Exit 0 iff every cell PASSes its oracle check in its isolated process.
 """
@@ -41,27 +40,17 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DEFAULT_QUERIES = (
-    # the r9-r11 red family (re-typed oracles, r12) + the kept stage
-    # detectors + the r12 searches built on the same committed graph
+    # the r9-r11 red family (re-typed oracles, r12) + the r12 searches
+    # built on the same committed graph
     "knn_graph_nn_descent",
     "graph_ann_search_topk",
     "graph_ann_search_durable",
     "graph_ann_search_batch",
     "hnsw_three_layer_search",
     "hnsw_batch_routed_search",
-    "knn_seed_edges",
-    "knn_nn_descent_round1",
-    # the classifier pair + its kept stage detector
+    # the classifier pair
     "quality_classifier_train_gd",
     "quality_classifier_gd_scores",
-    "qc_train_epoch1_weights",
-    # engine-behavior probes (cheap; fingerprint DuckDB/Spark behavior),
-    # incl. the r12 HUGEINT smoking-gun pair
-    "oracle_probe_hugeint_passthrough",
-    "oracle_probe_hugeint_cast",
-    "oracle_probe_round_half",
-    "oracle_probe_float_sum_order",
-    "oracle_probe_float_cosine_x1e4",
 )
 
 CORE_AXIS = ("32", "4")

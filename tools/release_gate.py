@@ -79,8 +79,7 @@ def main() -> int:
         results.append((f"determinism @ {SF001_DIR}", rc, _grep_tail(log, r"\d+ failures[^\n]*")))
 
         # fresh-process-per-query × core-count matrix over the driver-red
-        # families and their forensic stage entries (VERDICT r10 item 4:
-        # the axes the in-process determinism sweep cannot vary)
+        # families (the axes the in-process determinism sweep cannot vary)
         rc, log = _run(
             "isolation_matrix", [sys.executable, "tools/isolation_matrix.py", SF001_DIR]
         )
