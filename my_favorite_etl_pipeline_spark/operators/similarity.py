@@ -302,24 +302,8 @@ def build_ivf_centroids(
     ``embedding_topk_ivf`` carry a value-hash oracle instead of a
     rows-only check.
     """
-    per_dim = (
-        corpus.select(F.col(cell_col), F.posexplode(_dbl(F.col(vec_col))).alias("dim", "val"))
-        .withColumn("sv", F.floor(F.col("val") * CENTROID_SCALE).cast("long"))
-        .groupBy(cell_col, "dim")
-        .agg(F.sum("sv").alias("s"), F.count(F.lit(1)).alias("c"))
-        .select(
-            cell_col,
-            "dim",
-            (F.col("s") / (F.col("c") * F.lit(float(CENTROID_SCALE)))).alias("mean_val"),
-        )
-    )
-    return (
-        per_dim.groupBy(cell_col)
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "mean_val"))).alias("pairs"))
-        .select(
-            F.col(cell_col),
-            F.transform(F.col("pairs"), lambda p: p.mean_val).alias("centroid"),
-        )
+    return fixed_point_means(
+        corpus.select(F.col(cell_col), _dbl(F.col(vec_col)).alias("__v")), [cell_col], "__v"
     )
 
 
@@ -445,6 +429,34 @@ def ivf_topk_batch(
 CENTROID_SCALE = 10_000_000
 
 
+def fixed_point_means(
+    rows: DataFrame, keys: list[str], vec_col: str, out: str = "centroid"
+) -> DataFrame:
+    """``(*keys, out)``: the element-wise mean of the double-array column
+    ``vec_col`` per ``keys`` group, as ``Σ floor(x·CENTROID_SCALE) /
+    (count·CENTROID_SCALE)`` per dimension — exact BIGINT sums, so the
+    mean is bit-identical on Spark and DuckDB and across partitionings —
+    re-assembled into a dimension-ordered array."""
+    per_dim = (
+        rows.select(*keys, F.posexplode(F.col(vec_col)).alias("__dim", "__x"))
+        .groupBy(*keys, "__dim")
+        .agg(
+            F.sum(F.floor(F.col("__x") * CENTROID_SCALE).cast("long")).alias("__sum"),
+            F.count(F.lit(1)).alias("__n"),
+        )
+        .select(
+            *keys,
+            "__dim",
+            (F.col("__sum") / (F.col("__n") * F.lit(float(CENTROID_SCALE)))).alias("__mean"),
+        )
+    )
+    return per_dim.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("__dim", "__mean"))), lambda p: p["__mean"]
+        ).alias(out)
+    )
+
+
 def build_hash_centroids(
     corpus: DataFrame,
     k: int = 16,
@@ -466,27 +478,12 @@ def build_hash_centroids(
     order is nondeterministic, so a float mean could flip last bits vs the
     DuckDB oracle; BIGINT summation is exact and order-free on both.
     """
-    per_dim = (
+    return fixed_point_means(
         corpus.select(
-            (F.col(id_col) % k).cast("long").alias("cid"),
-            F.posexplode(_dbl(F.col(vec_col))).alias("dim", "val"),
-        )
-        .withColumn("sv", F.floor(F.col("val") * CENTROID_SCALE).cast("long"))
-        .groupBy("cid", "dim")
-        .agg(F.sum("sv").alias("s"), F.count(F.lit(1)).alias("c"))
-        .select(
-            "cid",
-            "dim",
-            (F.col("s") / (F.col("c") * F.lit(float(CENTROID_SCALE)))).alias("mean_val"),
-        )
-    )
-    return (
-        per_dim.groupBy("cid")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "mean_val"))).alias("pairs"))
-        .select(
-            F.col("cid"),
-            F.transform(F.col("pairs"), lambda p: p.mean_val).alias("centroid"),
-        )
+            (F.col(id_col) % k).cast("long").alias("cid"), _dbl(F.col(vec_col)).alias("__v")
+        ),
+        ["cid"],
+        "__v",
     )
 
 
@@ -556,24 +553,7 @@ def kmeans_iterate(
             )
             .select(F.col("__best.__cid").alias("cid"), F.col("__best.__v").alias("__v"))
         )
-        per_dim = (
-            assigned.select("cid", F.posexplode(F.col("__v")).alias("dim", "val"))
-            .withColumn("sv", F.floor(F.col("val") * CENTROID_SCALE).cast("long"))
-            .groupBy("cid", "dim")
-            .agg(F.sum("sv").alias("s"), F.count(F.lit(1)).alias("c"))
-            .select(
-                "cid",
-                "dim",
-                (F.col("s") / (F.col("c") * F.lit(float(CENTROID_SCALE)))).alias("mean_val"),
-            )
-        )
-        refreshed = (
-            per_dim.groupBy("cid")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "mean_val"))).alias("pairs"))
-            .select(
-                F.col("cid"), F.transform(F.col("pairs"), lambda p: p.mean_val).alias("centroid")
-            )
-        )
+        refreshed = fixed_point_means(assigned, ["cid"], "__v")
         cent = tracked_persist(
             cent.select("cid", F.col("centroid").alias("__prev"))
             .join(refreshed, "cid", "left")
@@ -1078,6 +1058,26 @@ def semdedup_pairs(
     return pairs.orderBy("cluster", "id_a", "id_b")
 
 
+def _pq_subvectors(rows: DataFrame, vec_col: str) -> DataFrame:
+    """``rows`` with ``vec_col`` (the raw vector) replaced by one row per
+    contiguous 8-dim subspace: ``(*other columns, s, vsub)``, ``vsub`` the
+    slice of the UNIT vector."""
+    dsub = 8
+    keep = [c for c in rows.columns if c != vec_col]
+    return rows.select(*keep, unit_vec(F.col(vec_col)).alias("__u")).select(
+        *keep,
+        F.inline(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(7)),
+                lambda s: F.struct(
+                    s.cast("int").alias("s"),
+                    F.slice(F.col("__u"), s * dsub + 1, dsub).alias("vsub"),
+                ),
+            )
+        ),
+    )
+
+
 def pq_codebook(
     corpus: DataFrame,
     m: int = 8,
@@ -1109,29 +1109,15 @@ def pq_codebook(
     execution. Persisting an m·kc-row model table per round is the same
     contract :func:`kmeans_iterate` has always had.
     """
-    pd_ = (
-        corpus.select(
-            (F.col(id_col) % kc).cast("int").alias("c"),
-            unit_vec(F.col(vec_col)).alias("__u"),
-        )
-        .select("c", F.posexplode(F.col("__u")).alias("dim", "val"))
-        .withColumn("s", F.floor(F.col("dim") / 8).cast("int"))
-        .withColumn("sv", F.floor(F.col("val") * CENTROID_SCALE).cast("long"))
-        .groupBy("s", "c", "dim")
-        .agg(F.sum("sv").alias("sm"), F.count(F.lit(1)).alias("n"))
-        .select(
-            "s",
-            "c",
-            "dim",
-            (F.col("sm") / (F.col("n") * F.lit(float(CENTROID_SCALE)))).alias(
-                "mean_val"
-            ),
-        )
-    )
     cb = tracked_persist(
-        pd_.groupBy("s", "c")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "mean_val"))).alias("p"))
-        .select("s", "c", F.transform("p", lambda x: x.mean_val).alias("cv"))
+        fixed_point_means(
+            _pq_subvectors(
+                corpus.select((F.col(id_col) % kc).cast("int").alias("c"), vec_col), vec_col
+            ),
+            ["s", "c"],
+            "vsub",
+            "cv",
+        )
     )
     for _ in range(n_iter):
         cb = tracked_persist(
@@ -1159,23 +1145,7 @@ def _pq_lloyd_round(
     m-per-row explode, a broadcast join against the m·kc codebook, and two
     narrow aggregates. Training cost, not scoring cost.
     """
-    dsub = 8
-    vs = (
-        corpus.select(F.col(id_col), unit_vec(F.col(vec_col)).alias("__u"))
-        .select(
-            F.col(id_col),
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(7)),
-                    lambda s: F.struct(
-                        s.cast("int").alias("s"),
-                        F.slice(F.col("__u"), s * dsub + 1, dsub).alias("vsub"),
-                    ),
-                )
-            ).alias("x"),
-        )
-        .select(id_col, "x.s", "x.vsub")
-    )
+    vs = _pq_subvectors(corpus.select(id_col, vec_col), vec_col)
     dfx = F.floor(
         F.lit(PQ_SCALE)
         * F.aggregate(
@@ -1196,27 +1166,7 @@ def _pq_lloyd_round(
         )
         .select("s", F.col("b.c").alias("c"), F.col("b.vsub").alias("vsub"))
     )
-    pd1 = (
-        assigned.select(
-            "s", "c", F.posexplode(F.col("vsub")).alias("i", "val")
-        )
-        .withColumn("sv", F.floor(F.col("val") * CENTROID_SCALE).cast("long"))
-        .groupBy("s", "c", "i")
-        .agg(F.sum("sv").alias("sm"), F.count(F.lit(1)).alias("n"))
-        .select(
-            "s",
-            "c",
-            "i",
-            (F.col("sm") / (F.col("n") * F.lit(float(CENTROID_SCALE)))).alias(
-                "mean_val"
-            ),
-        )
-    )
-    cb1 = (
-        pd1.groupBy("s", "c")
-        .agg(F.array_sort(F.collect_list(F.struct("i", "mean_val"))).alias("p"))
-        .select("s", "c", F.transform("p", lambda x: x.mean_val).alias("cv1"))
-    )
+    cb1 = fixed_point_means(assigned, ["s", "c"], "vsub", "cv1")
     # both sides are O(m·kc) model tables — broadcast explicitly (the
     # initial plan would otherwise SMJ two 128-row aggregates; the hint is
     # safe because the codebook size is a parameter, never corpus-scale)

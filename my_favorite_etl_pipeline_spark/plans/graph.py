@@ -3,8 +3,9 @@
 - construction: exact per-cell kNN (fixed and auto k), NN-Descent
   refinement and its high-quality variant, all scored with the integer
   quantized-cosine contract so DuckDB replays every edge;
-- search: beam search over the committed graph (single query, batch,
-  durable artifact) and two/three-layer HNSW-style routing;
+- search: one query-keyed beam search over the committed graph; the
+  single-query, batched, durable and two/three-layer HNSW-routed entries
+  differ only in their query set and entry points;
 - analytics on the undirected graph: PageRank, label propagation,
   k-core and triangle counts.
 
@@ -428,13 +429,6 @@ def _knn_refined_tables(spark: SparkSession, sf_dir: str):
     return marts["assign"].read(spark), marts["edges"].read(spark)
 
 
-def _knn_gund_table(spark: SparkSession, sf_dir: str):
-    """The committed undirected adjacency (node, nbr) of the refined
-    graph — built and committed alongside assign/edges; a parquet scan at
-    search time."""
-    return _knn_graph_marts(spark, sf_dir)["gund"].read(spark)
-
-
 def _knn_graph_marts(spark: SparkSession, sf_dir: str):
     """The refined graph's ``assign``, ``edges`` and ``gund`` marts,
     committed once."""
@@ -451,14 +445,7 @@ def _knn_graph_marts(spark: SparkSession, sf_dir: str):
         # it belongs in the build, not in every search call (r16-opt:
         # rebuilding + persisting it per search measured ~0.9 s/call of
         # the serving floor)
-        commit(
-            "gund",
-            edges.select(F.col("src_id").alias("node"), F.col("nbr_id").alias("nbr"))
-            .unionAll(
-                edges.select(F.col("nbr_id").alias("node"), F.col("src_id").alias("nbr"))
-            )
-            .distinct(),
-        )
+        commit("gund", _undirected(edges))
 
     return artifacts.memoized_commit(spark, "knn_graph", sf_dir, build=build)
 
@@ -525,9 +512,13 @@ def _knn_refined_work(
 
 
 # ---------------------------------------------------------------------------
-# graph_ann_search_topk
+# Beam search over the committed graph. One query-keyed walk serves every
+# search entry: a single query is a batch of one (query_id = its vec_id),
+# and the HNSW routers only choose each query's layer-0 entries.
 
-_GS_K = 20  # final answer size (matches the embedding_topk_* family)
+_GS_K = 20  # final answer size of the single-query entries (the embedding_topk_* size)
+
+_GB_K = 10  # results per query of the batched entries (the embedding_topk_ivf_batch size)
 
 _GS_BEAM = 32  # beam width: nodes expanded per hop
 
@@ -535,63 +526,394 @@ _GS_HOPS = 4  # search hops
 
 _GS_ENTRIES = 4  # deterministic entry points
 
+_HN_MOD = 8  # 1-in-8 nodes promoted to the upper layer (portable md5)
 
-def _gs_hop_cte(i: int, graph: str = "gund", pfx: str = "gv", beam: int = _GS_BEAM) -> str:
-    """One beam-search hop as CTEs: visited ``{pfx}{i-1}`` -> ``{pfx}{i}``.
-    Beam = top-``beam`` of ALL visited (best-first with bounded frontier);
-    expand the beam's undirected neighbors in ``graph``, score vs the
-    query, merge. Parameterized (r11) so the HNSW upper layer replays the
-    same hop over its own edge table and visited chain."""
+_HN_K = 3  # upper-layer neighbors per node
+
+_HN_HOPS = 2  # upper-layer hops (the router is shallow by design)
+
+_HN_BEAM = 8  # upper-layer beam
+
+_HN_FAN = 4  # upper results that seed the layer below
+
+# The serving batch, one predicate text for both engines: every
+# vec_id % 100 == 0 (the embedding_topk_ivf_batch convention — 5 at sf0.01,
+# 20 at sf0.1). The single-query entries search vec 0 (the embedding_topk_*
+# convention).
+_BATCH_QUERIES = "vec_id % 100 = 0"
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The undirected adjacency ``(node, nbr)`` of a directed
+    ``(src_id, nbr_id)`` edge table: both directions, de-duplicated.
+    SQL twin: :func:`_undirected_sql`."""
+    return (
+        edges.select(F.col("src_id").alias("node"), F.col("nbr_id").alias("nbr"))
+        .unionAll(edges.select(F.col("nbr_id").alias("node"), F.col("src_id").alias("nbr")))
+        .distinct()
+    )
+
+
+def _undirected_sql(edges: str) -> str:
+    """SQL twin of :func:`_undirected` over the edge table named ``edges``."""
+    return f"""SELECT DISTINCT node, nbr FROM (
+      SELECT src_id AS node, nbr_id AS nbr FROM {edges}
+      UNION ALL
+      SELECT nbr_id AS node, src_id AS nbr FROM {edges})"""
+
+
+def _per_query_top_sql(chain: str, n: int) -> str:
+    """Each query's top-``n`` rows of the visited table ``chain`` (score
+    desc, id asc) with their rank ``rn``."""
+    return f"""SELECT query_id, vec_id, cos_sim, rn FROM (
+        SELECT query_id, vec_id, cos_sim,
+               ROW_NUMBER() OVER (PARTITION BY query_id
+                                  ORDER BY cos_sim DESC, vec_id) AS rn
+        FROM {chain})
+      WHERE rn <= {n}"""
+
+
+def _gs_hop_cte(i: int, graph: str, pfx: str, beam: int) -> str:
+    """One beam hop as CTEs: visited ``{pfx}{i-1}`` -> ``{pfx}{i}``, keyed
+    by query_id. The beam is each query's top-``beam`` of ALL visited
+    nodes; its neighbors in ``graph`` are scored against their own query
+    (``qb``) and merged in."""
     prev = f"{pfx}{i - 1}"
     return f""",
-    {pfx}bm{i} AS (
-      SELECT vec_id FROM (
-        SELECT vec_id, ROW_NUMBER() OVER (ORDER BY cos_sim DESC, vec_id) AS rn
-        FROM {prev})
-      WHERE rn <= {beam}
-    ),
+    {pfx}bm{i} AS (SELECT query_id, vec_id FROM ({_per_query_top_sql(prev, beam)})),
     {pfx}{i} AS MATERIALIZED (
-      SELECT DISTINCT vec_id, cos_sim FROM (
-        SELECT vec_id, cos_sim FROM {prev}
+      SELECT DISTINCT query_id, vec_id, cos_sim FROM (
+        SELECT query_id, vec_id, cos_sim FROM {prev}
         UNION ALL
-        SELECT u.nbr AS vec_id,
-               {_int_cos_sql("x.q", "x.s", "qq.qv", "qq.qn")} AS cos_sim
+        SELECT b.query_id, u.nbr AS vec_id,
+               {_int_cos_sql("x.q", "x.s", "qb.qv", "qb.qn")} AS cos_sim
         FROM {pfx}bm{i} b
         JOIN {graph} u ON u.node = b.vec_id
         JOIN qassign x ON x.vec_id = u.nbr
-        CROSS JOIN qq)
+        JOIN qb ON qb.query_id = b.query_id)
     )"""
 
 
-def _graph_search_oracle() -> str:
-    """Beam search replayed in SQL over the SHARED refined-graph prefix:
-    the searched graph is definitionally the built graph."""
-    hops = "".join(_gs_hop_cte(i) for i in range(1, _GS_HOPS + 1))
-    return f"""
-    {_knn_refined_cte()},
-    gund AS MATERIALIZED (
-      SELECT DISTINCT node, nbr FROM (
-        SELECT src_id AS node, nbr_id AS nbr FROM wk{_KNN_ROUNDS}
-        UNION ALL
-        SELECT nbr_id AS node, src_id AS nbr FROM wk{_KNN_ROUNDS})
+def _walk_sql(pfx: str, entries: str, graph: str, hops: int, beam: int) -> str:
+    """One layer's walk as CTEs: the ``(query_id, vec_id)`` entry query
+    ``entries`` as ``{pfx}ent``, its scores as ``{pfx}0``, then ``hops``
+    hops over ``graph`` ending at ``{pfx}{hops}``."""
+    chain = "".join(_gs_hop_cte(i, graph, pfx, beam) for i in range(1, hops + 1))
+    return f""",
+    {pfx}ent AS ({entries}),
+    {pfx}0 AS MATERIALIZED (
+      SELECT DISTINCT e.query_id, x.vec_id,
+             {_int_cos_sql("x.q", "x.s", "qb.qv", "qb.qn")} AS cos_sim
+      FROM {pfx}ent e JOIN qassign x ON x.vec_id = e.vec_id
+      JOIN qb ON qb.query_id = e.query_id
+    ){chain}"""
+
+
+def _rank_strided_sql(nodes: str) -> str:
+    """Every query entering at ranks 1, 1+c//4, 1+2c//4, 1+3c//4 of the
+    id-ordered ``nodes`` — the twin of :func:`_rank_strided`."""
+    return f"""SELECT qb.query_id, s.vec_id FROM (
+        SELECT vec_id FROM (
+          SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM {nodes})
+        CROSS JOIN (SELECT COUNT(*) AS c FROM {nodes})
+        WHERE rn IN (1, 1 + c // 4, 1 + (2 * c) // 4, 1 + (3 * c) // 4)) s
+      CROSS JOIN qb"""
+
+
+def _routed_entries_sql(lvl: int, top: int) -> str:
+    """Entries of layer ``lvl`` (0 = the base graph) under a router whose
+    top layer is ``top`` — the twin of :func:`_route`: rank strides at the
+    top layer; below it, each query's top-{_HN_FAN} of the layer above,
+    or rank strides over this layer when the layer above promoted
+    nothing."""
+    nodes = f"hu{lvl}" if lvl else "qassign"
+    if lvl == top:
+        return _rank_strided_sql(nodes)
+    fan_in = _per_query_top_sql(f"h{lvl + 1}v{_HN_HOPS}", _HN_FAN)
+    return f"""SELECT query_id, vec_id FROM ({fan_in})
+      UNION ALL
+      {_rank_strided_sql(nodes)}
+      WHERE NOT EXISTS (SELECT 1 FROM hu{lvl + 1})"""
+
+
+def _hn_layer_sql(lvl: int) -> str:
+    """The upper-layer build at level ``lvl`` as CTE text — the twin of
+    :func:`_hn_layer`: promoted node set ``hu{lvl}`` (md5 % {_HN_MOD}^lvl),
+    within-cell scored pairs, top-{_HN_K} directed edges, undirected
+    adjacency ``hg{lvl}``."""
+    mod = _HN_MOD**lvl
+    return f""",
+    hu{lvl} AS (SELECT * FROM qassign WHERE ({duck_md5_32('CAST(vec_id AS VARCHAR)')}) % {mod} = 0),
+    hp{lvl} AS (
+      SELECT a.vec_id AS src_id, b.vec_id AS nbr_id,
+             {_int_cos_sql("a.q", "a.s", "b.q", "b.s")} AS cos_sim
+      FROM hu{lvl} a JOIN hu{lvl} b
+        ON a.cluster = b.cluster AND a.vec_id <> b.vec_id
     ),
-    qq AS (SELECT q AS qv, s AS qn FROM qassign WHERE vec_id = 0),
-    ent AS (
-      SELECT ((nn.n // {_GS_ENTRIES}) * g.g) AS vec_id
+    he{lvl} AS (
+      SELECT src_id, nbr_id FROM (
+        SELECT src_id, nbr_id,
+               ROW_NUMBER() OVER (PARTITION BY src_id
+                                  ORDER BY cos_sim DESC, nbr_id) AS rn
+        FROM hp{lvl}) WHERE rn <= {_HN_K}
+    ),
+    hg{lvl} AS MATERIALIZED ({_undirected_sql(f"he{lvl}")})"""
+
+
+def _search_oracle(query: int | None, levels: int) -> str:
+    """The search replayed in SQL over the SHARED refined-graph prefix, so
+    the searched graph is definitionally the built graph — the twin of
+    :func:`_search`. The queries ``qb`` are vector ``query`` (top-{_GS_K}
+    as ``(vec_id, cos_sim)``) or, for None, the serving batch (top-{_GB_K}
+    per query as ``(query_id, rank, vec_id, cos_sim)``); with ``levels``
+    > 1 every query is routed down the ``levels - 1`` upper layers (each
+    its own build and walk) to its layer-0 entries, with ``levels`` = 1 it
+    enters at the fixed ``n // {_GS_ENTRIES}`` strides."""
+    if query is None:
+        pred, k, cols = _BATCH_QUERIES, _GB_K, "query_id, rank, vec_id, cos_sim"
+    else:
+        pred, k, cols = f"vec_id = {query}", _GS_K, "vec_id, cos_sim"
+    top = levels - 1
+    layers = "".join(
+        _hn_layer_sql(lvl)
+        + _walk_sql(f"h{lvl}v", _routed_entries_sql(lvl, top), f"hg{lvl}", _HN_HOPS, _HN_BEAM)
+        for lvl in range(top, 0, -1)
+    )
+    entries = _routed_entries_sql(0, top) if top else f"""
+      SELECT qb.query_id, (nn.n // {_GS_ENTRIES}) * g.g AS vec_id
       FROM (SELECT COUNT(*) AS n FROM embeddings) nn
       CROSS JOIN (SELECT UNNEST(range({_GS_ENTRIES})) AS g) g
-    ),
-    gv0 AS MATERIALIZED (
-      SELECT DISTINCT x.vec_id,
-             {_int_cos_sql("x.q", "x.s", "qq.qv", "qq.qn")} AS cos_sim
-      FROM ent e JOIN qassign x ON x.vec_id = e.vec_id CROSS JOIN qq
-    ){hops}
-    SELECT vec_id, cos_sim / 10000.0 AS cos_sim FROM gv{_GS_HOPS}
-    ORDER BY cos_sim DESC, vec_id LIMIT {_GS_K}
+      CROSS JOIN qb"""
+    return f"""
+    {_knn_refined_cte()},
+    gund AS MATERIALIZED ({_undirected_sql(f"wk{_KNN_ROUNDS}")}),
+    qb AS (SELECT vec_id AS query_id, q AS qv, s AS qn FROM qassign
+           WHERE {pred}){layers}{_walk_sql("gv", entries, "gund", _GS_HOPS, _GS_BEAM)}
+    SELECT {cols} FROM (
+      SELECT query_id, CAST(rn AS INT) AS rank, vec_id, cos_sim / 10000.0 AS cos_sim
+      FROM ({_per_query_top_sql(f"gv{_GS_HOPS}", k)}))
+    ORDER BY query_id, rank
     """
 
 
-@register("graph_ann_search_topk", oracle=_graph_search_oracle())
+def _per_query_top(
+    visited: dict[tuple[int, int], int], n: int
+) -> list[tuple[int, int, int, int]]:
+    """``(query_id, rank, vec_id, score)`` for each query's top-``n``
+    visited nodes, score desc then id asc (the SQL twin's order)."""
+    by_q: dict[int, list[tuple[int, int]]] = {}
+    for (qid, vid), s in visited.items():
+        by_q.setdefault(qid, []).append((-s, vid))
+    return [
+        (qid, rank, vid, -neg)
+        for qid in sorted(by_q)
+        for rank, (neg, vid) in enumerate(sorted(by_q[qid])[:n], start=1)
+    ]
+
+
+def graph_beam_search(
+    spark: SparkSession,
+    assign: DataFrame,
+    gund: DataFrame,
+    qvec: dict[int, tuple[list[int], int]],
+    entries: DataFrame,
+    *,
+    hops: int = _GS_HOPS,
+    beam: int = _GS_BEAM,
+    k: int = _GS_K,
+) -> DataFrame:
+    """Beam-search every query of ``qvec`` ``{query_id: (qv, qn)}`` over
+    the undirected adjacency ``gund`` ``(node, nbr)``, starting from the
+    ``(query_id, vec_id)`` ``entries``: ``hops`` hops, each expanding
+    every query's top-``beam`` visited nodes. Returns each query's
+    top-``k`` visited nodes as ``(query_id, rank, vec_id, cos_sim)``,
+    scored by the pure-integer quantized cosine against ``assign``.
+
+    The search state is held on the driver: B·(entries + hops·beam·2W)
+    (query, node, score) triples, bounded by batch size and search
+    parameters, never by corpus size. Each hop is ONE distributed job for
+    the whole batch: the ≤ B·beam beam table is broadcast against the
+    edge table and the neighbors are fetched and scored. The queries are
+    scored as a literal ``query_id -> (qv, qn)`` map, so no score job
+    re-derives the query subplan (scoring one query against literals
+    measured 3.06 → 2.64 s at sf0.1 over a per-hop broadcast query join).
+    The map holds B·dim longs and is analysed in every score plan; it was
+    measured for batches of up to 20 64-dim queries. Measured and not
+    taken: a single lazy plan over all hops (5.4 s vs 3.4 s warm at sf0.1
+    — each hop's window and distinct add shuffle stages that cost more
+    than the collects they save), a broadcast hint on the neighbor id set
+    (an extra build job per hop), and driver-side dedup instead of the
+    per-hop distinct.
+    """
+    from ..operators.similarity import int_cos_x1e4
+
+    pairs = ", ".join(
+        f"{qid}L, named_struct('qv', array({', '.join(f'{x}L' for x in qv)}), 'qn', {qn}L)"
+        for qid, (qv, qn) in qvec.items()
+    )
+    q = F.expr(
+        f"CAST(map({pairs}) AS map<bigint, struct<qv: array<bigint>, qn: bigint>>)"
+    )[F.col("query_id")]
+
+    def score(ids: DataFrame) -> dict[tuple[int, int], int]:
+        rows = (
+            ids.join(assign, "vec_id")
+            .select(
+                "query_id",
+                "vec_id",
+                int_cos_x1e4(F.col("__q"), F.col("__s"), q["qv"], q["qn"]).alias("cos_sim"),
+            )
+            .collect()
+        )
+        return {(r.query_id, r.vec_id): r.cos_sim for r in rows}
+
+    visited = score(entries)
+    for _ in range(hops):
+        beam_df = spark.createDataFrame(
+            [(qid, vid) for qid, _, vid, _ in _per_query_top(visited, beam)],
+            "query_id long, node long",
+        )
+        nbrs = (
+            F.broadcast(beam_df)
+            .join(gund, "node")
+            .select("query_id", F.col("nbr").alias("vec_id"))
+            .distinct()
+        )
+        visited.update(score(nbrs))
+    return spark.createDataFrame(
+        [(qid, rank, vid, s / 10000.0) for qid, rank, vid, s in _per_query_top(visited, k)],
+        "query_id long, rank int, vec_id long, cos_sim double",
+    )
+
+
+def _every_query_at(qids: DataFrame, ids: list[int]) -> DataFrame:
+    """Entries ``(query_id, vec_id)``: every query of ``qids`` enters at
+    ``ids``."""
+    return qids.select(
+        "query_id", F.explode(F.array(*[F.lit(i).cast("long") for i in ids])).alias("vec_id")
+    )
+
+
+def _hn_layer(assign: DataFrame, mod: int):
+    """``(nodes, edges)`` of the upper layer at promotion modulus ``mod``:
+    the within-cell top-{_HN_K} graph among md5-promoted nodes, the SAME
+    bounded join shape as the base graph on a 1/mod slice."""
+    from ..operators.similarity import int_cos_x1e4, knn_topk_edges
+
+    up = assign.filter(
+        F.pmod(spark_md5_32(F.col("vec_id").cast("string")), F.lit(mod)) == 0
+    )
+    a = up.select(
+        F.col("vec_id").alias("src_id"), "cluster",
+        F.col("__q").alias("aq"), F.col("__s").alias("asn"),
+    )
+    b = up.select(
+        F.col("vec_id").alias("nbr_id"), "cluster",
+        F.col("__q").alias("bq"), F.col("__s").alias("bsn"),
+    )
+    pairs = (
+        a.join(b, "cluster")
+        .filter(F.col("src_id") != F.col("nbr_id"))
+        .select(
+            "src_id", "nbr_id",
+            int_cos_x1e4(F.col("aq"), F.col("asn"), F.col("bq"), F.col("bsn"))
+            .alias("cos_sim"),
+        )
+    )
+    return up, knn_topk_edges(pairs, _HN_K).select("src_id", "nbr_id", "cos_sim")
+
+
+def _rank_strided(nodes: DataFrame, qids: DataFrame) -> DataFrame | None:
+    """Every query of ``qids`` entering at ranks 1, 1+c//4, 1+2c//4,
+    1+3c//4 of the id-ordered ``nodes`` (deterministic; the ≤ 4-id
+    collect is parameter-sized driver traffic), or None when ``nodes`` is
+    empty."""
+    from pyspark.sql import Window
+
+    c = nodes.count()
+    ranks = {1, 1 + c // 4, 1 + (2 * c) // 4, 1 + (3 * c) // 4}
+    ids = [
+        r.vec_id
+        for r in nodes.select(
+            "vec_id", F.row_number().over(Window.orderBy("vec_id")).alias("rn")
+        )
+        .filter(F.col("rn").isin(*ranks))
+        .collect()
+    ]
+    return _every_query_at(qids, ids) if ids else None
+
+
+def _route(
+    spark: SparkSession,
+    assign: DataFrame,
+    qvec: dict[int, tuple[list[int], int]],
+    qids: DataFrame,
+    levels: int,
+) -> DataFrame:
+    """Layer-0 entries ``(query_id, vec_id)`` from an HNSW router with
+    ``levels - 1`` upper layers (Malkov & Yashunin 2018's hierarchy,
+    md5-deterministic: layer ℓ keeps the nodes with md5 % {_HN_MOD}^ℓ = 0,
+    so the layers nest). The top layer is entered at rank strides; each
+    layer's walk ({_HN_HOPS} hops, beam {_HN_BEAM}) hands its top-{_HN_FAN}
+    per query to the layer below. An EMPTY layer (corpora ≲ {_HN_MOD}^ℓ
+    vectors) hands nothing, so the layer below is entered at its own
+    rank strides, down to layer 0 — the search returns a full top-k on
+    any non-empty corpus. Twin: :func:`_routed_entries_sql`."""
+    entries = None
+    for lvl in range(levels - 1, 0, -1):
+        up, edges = _hn_layer(assign, _HN_MOD**lvl)
+        if entries is None:
+            entries = _rank_strided(up, qids)
+        if entries is not None:
+            entries = graph_beam_search(
+                spark, assign, tracked_persist(_undirected(edges)), qvec, entries,
+                hops=_HN_HOPS, beam=_HN_BEAM, k=_HN_FAN,
+            ).select("query_id", "vec_id")
+    return entries if entries is not None else _rank_strided(assign, qids)
+
+
+def _search(
+    spark: SparkSession,
+    sf_dir: str,
+    assign: DataFrame,
+    gund: DataFrame,
+    query: int | None,
+    levels: int,
+) -> DataFrame:
+    """Every registered search over ``(assign, gund)``: vector ``query``
+    (top-{_GS_K} as ``(vec_id, cos_sim)``) or, for None, the serving batch
+    (top-{_GB_K} per query, keyed), entering at the fixed
+    ``n // {_GS_ENTRIES}`` strides (``levels`` = 1) or where the
+    ``levels``-layer router puts each query. Twin: :func:`_search_oracle`.
+    Raises ``ValueError`` when assign has no vector ``query``.
+    """
+    pred = _BATCH_QUERIES if query is None else F.col("vec_id") == query
+    qvec = {
+        qid: (qv, qn)
+        for qid, qv, qn in assign.filter(pred).select("vec_id", "__q", "__s").collect()
+    }
+    if query is not None and query not in qvec:
+        raise ValueError(f"query vector {query} missing from assign")
+    qids = spark.createDataFrame([(qid,) for qid in qvec], "query_id long")
+    if levels > 1:
+        entries = _route(spark, assign, qvec, qids, levels)
+    else:
+        stride = load(spark, sf_dir, "embeddings").count() // _GS_ENTRIES
+        entries = _every_query_at(qids, [stride * g for g in range(_GS_ENTRIES)])
+    if query is None:
+        return graph_beam_search(spark, assign, gund, qvec, entries, k=_GB_K)
+    return graph_beam_search(spark, assign, gund, qvec, entries).select("vec_id", "cos_sim")
+
+
+def _committed_search(spark: SparkSession, sf_dir: str, query: int | None, levels: int):
+    """:func:`_search` over the committed refined graph (:func:`_knn_graph_marts`)."""
+    marts = _knn_graph_marts(spark, sf_dir)
+    return _search(
+        spark, sf_dir, marts["assign"].read(spark), marts["gund"].read(spark), query, levels
+    )
+
+
+@register("graph_ann_search_topk", oracle=_search_oracle(0, 1))
 def q_graph_ann_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3+ (r9) — graph-based ANN SEARCH over the NN-Descent graph: the
     query-time half of the HNSW/NSG family (Malkov & Yashunin 2018 layer-0
@@ -600,163 +922,20 @@ def q_graph_ann_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     expands the current beam's undirected neighbors in the W={_KNN_W}
     working graph, scores them against the query (vec_id 0, the
     embedding_topk_* convention), and merges into the visited set; the
-    answer is the visited top-{_GS_K}. Completes the r9 graph story:
+    answer is the visited top-{_GS_K}. Completes the graph story:
     build (knn_graph_topk) → refine (knn_graph_nn_descent) → SEARCH.
 
-    Plan at 100 TB: at query time the graph is a PRECOMPUTED table (here
-    it is rebuilt inline so the oracle can replay end-to-end — the
-    docstring-of-record for production is: materialize wk{_KNN_ROUNDS}
-    once, search many). Search cost is independent of corpus size:
-    ≤ BEAM × (2W) candidate rows per hop, each hop one equi-join of a
-    {_GS_BEAM}-row beam against the edge table (broadcast the beam) plus
-    one id-join to fetch vectors — O(BEAM·W·HOPS) score evaluations
-    total vs the brute-force O(n). Deterministic: rounded scores, id
-    tie-breaks, fixed entries at n//{_GS_ENTRIES} strides. Recall vs
-    brute-force top-{_GS_K} is floor-pinned at two scales in
-    tests/test_recall_scales.py.
+    Plan at 100 TB: the graph is a committed table (built once per
+    corpus and partitioning, shared with knn_graph_nn_descent). Search
+    cost is independent of corpus size: ≤ BEAM × (2W) candidate rows per
+    hop, each hop one equi-join of a {_GS_BEAM}-row beam against the edge
+    table (broadcast the beam) plus one id-join to fetch vectors —
+    O(BEAM·W·HOPS) score evaluations total vs the brute-force O(n).
+    Deterministic: integer scores, id tie-breaks, fixed entries at
+    n//{_GS_ENTRIES} strides. Recall vs brute-force top-{_GS_K} is
+    floor-pinned at two scales in tests/test_recall_scales.py.
     """
-    # The graph-build is a VersionedMart-committed snapshot shared with
-    # knn_graph_nn_descent (_knn_refined_tables — build once, commit,
-    # search many; the durable posture IS the default since r12.
-    # graph_ann_search_durable adds the cross-process restart semantics:
-    # fresh mart handles over a materialize_knn_graph root).
-    assign, work = _knn_refined_tables(spark, sf_dir)
-    n = load(spark, sf_dir, "embeddings").count()
-    return graph_beam_search(
-        spark, assign, work, n, gund=_knn_gund_table(spark, sf_dir)
-    )
-
-
-def graph_beam_search(
-    spark: SparkSession,
-    assign: DataFrame,
-    work: DataFrame,
-    n: int | None = None,
-    *,
-    entry_ids: list[int] | None = None,
-    hops: int = _GS_HOPS,
-    beam: int = _GS_BEAM,
-    k: int = _GS_K,
-    raw: bool = False,
-    gund: DataFrame | None = None,
-):
-    """The beam search proper, over any (assign, edges) pair — shared by
-    the session-materialized (`graph_ann_search_topk`) and durable
-    (`graph_ann_search_durable`) registered forms so the two postures
-    cannot diverge in search semantics, and parameterized (r11) so the
-    HNSW-style two-layer router (`hnsw_two_layer_search`) runs the SAME
-    body on its sparse upper layer (own entries/hops/beam; ``raw=True``
-    returns the (id, integer score) list for layer chaining).
-
-    The hop loop re-reads `assign` (vector fetches) and `gund` (edge
-    expansion) ~2×HOPS times, and gund's self-union references the
-    edge table TWICE — against parquet those are cheap re-scans, and
-    gund is additionally persisted (registry CACHE OWNERSHIP contract).
-    An earlier uncached-lineage variant re-ran the whole NN-Descent
-    build chain twice in one job and OOMed a default-1g driver.
-
-    r15-opt note (measured, kept as-is): a single-lazy-plan variant of
-    this loop (the oracle's gv CTE cascade as DataFrames, per-hop
-    tracked_persist) was built and MEASURED SLOWER — 5.4 s vs 3.4 s warm
-    at sf0.1 — because each hop's window + distinct adds shuffle stages
-    whose scheduling/AQE overhead exceeds the ~0.5 s/job collect cost it
-    saves. The driver-looped form with one job per hop stands.
-
-    r16-opt (VERDICT r15 items 2-3, measured A/B with identical top-k on
-    every variant): (a) the r15 ``F.broadcast`` hint on the id set is
-    REVERTED — it was the one driver-measured regression with touched
-    code (3.36 → 4.69 s), and the calm A/B confirms it: forcing a
-    BroadcastExchange of the lazy nbrs subplan serializes an extra
-    build-job per hop (3.66 → 3.06 s without the hint), while the
-    planner left alone broadcasts the SMALL side of the point-lookup
-    join from its own size estimates. (b) the query row is collected
-    ONCE per search (one 1-row job) and scored as integer literals —
-    the per-hop crossJoin(broadcast(qv)) re-derived the query subplan
-    in every score job (3.06 → 2.64 s). Also measured and NOT taken:
-    dropping the per-hop distinct in favor of driver-side dedup (3.08 s
-    — the duplicate rows cost more in the lookup join than the distinct
-    exchange saved). At 100 TB this inline path is the oracle-replayable
-    measurement twin; the production posture (docstring above) serves
-    the committed graph through a point-lookup store where join-side
-    estimates are table statistics.
-    """
-    from ..caching import tracked_persist
-    from ..operators.similarity import int_cos_x1e4
-
-    # ONE parameter-sized collect: the query's quantized vector + exact
-    # integer norm become literals in every score plan (driver state, the
-    # same class as the beam itself; integer arithmetic is bit-identical
-    # to the column form — A/B-verified SAME top-k)
-    qrows = (
-        assign.filter(F.col("vec_id") == 0)
-        .select(F.col("__q").alias("qq"), F.col("__s").alias("qs"))
-        .collect()
-    )
-    if not qrows:
-        raise ValueError("query vector 0 missing from assign")
-    qrow = qrows[0]
-    if gund is None:
-        # derive the undirected adjacency per call; callers holding it as
-        # a COMMITTED table (_knn_gund_table) pass it in and skip this
-        # symmetrize + distinct + persist per search (~0.9 s/call, r16-opt)
-        gund = tracked_persist(
-            work.select(F.col("src_id").alias("node"), F.col("nbr_id").alias("nbr"))
-            .unionAll(
-                work.select(F.col("nbr_id").alias("node"), F.col("src_id").alias("nbr"))
-            )
-            .distinct()
-        )
-    qq_lit = F.array(*[F.lit(int(x)) for x in qrow.qq])
-    qs_lit = F.lit(int(qrow.qs))
-
-    def score(ids: DataFrame) -> list:
-        # pure-integer quantized ten-thousandth scores end-to-end
-        # (score_id_pairs / int_cos_x1e4 contract — r11, no IEEE float)
-        return (
-            ids.join(assign, "vec_id")
-            .select(
-                "vec_id",
-                int_cos_x1e4(
-                    F.col("__q"), F.col("__s"), qq_lit, qs_lit
-                ).alias("cos_sim"),
-            )
-            .collect()
-        )
-
-    # The search STATE is held on the driver: it is bounded at
-    # ENTRIES + HOPS·BEAM·2W rows INDEPENDENT of corpus size (the
-    # k-centroids-collect precedent — parameter-sized, never data-sized;
-    # HNSW search state is driver-sized by construction). Each hop runs
-    # exactly one distributed job: broadcast the ≤BEAM-row beam against
-    # the cached edge table, fetch + score the neighbor vectors. An
-    # earlier DataFrame-looped variant (localCheckpoint per hop) OOMed a
-    # default-1g driver on plan/lineage overhead for the same ~4k rows.
-    if entry_ids is None:
-        if n is None:
-            raise ValueError("graph_beam_search needs n when entry_ids is omitted")
-        stride = n // _GS_ENTRIES
-        entry_ids = [stride * g for g in range(_GS_ENTRIES)]
-    entries = spark.createDataFrame([(i,) for i in entry_ids], "vec_id long")
-    visited: dict[int, int] = {
-        r.vec_id: r.cos_sim for r in score(entries)
-    }
-    for _ in range(hops):
-        bm = sorted(visited.items(), key=lambda kv: (-kv[1], kv[0]))[:beam]
-        beam_df = spark.createDataFrame([(i,) for i, _ in bm], "node long")
-        nbrs = (
-            F.broadcast(beam_df)
-            .join(gund, "node")
-            .select(F.col("nbr").alias("vec_id"))
-            .distinct()
-        )
-        for r in score(nbrs):
-            visited[r.vec_id] = r.cos_sim
-    top = sorted(visited.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-    if raw:
-        return top
-    return spark.createDataFrame(
-        [(i, s / 10000.0) for i, s in top], "vec_id long, cos_sim double"
-    )
+    return _committed_search(spark, sf_dir, 0, 1)
 
 
 # ---------------------------------------------------------------------------
@@ -893,22 +1072,20 @@ def materialize_knn_graph(spark: SparkSession, sf_dir: str, root: str, version: 
     return am, em
 
 
-@register("graph_ann_search_durable", oracle=_graph_search_oracle())
+@register("graph_ann_search_durable", oracle=_search_oracle(0, 1))
 def q_graph_ann_search_durable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3+ (r10) — the graph ANN search in its PRODUCTION posture: the
     NN-Descent graph is committed once as durable versioned tables
     (:func:`materialize_knn_graph` — manifest-swap atomic commit,
     readable across sessions) and the beam search runs against the
     COMMITTED snapshot read back through the mart, never against session
-    state. Closes the r9 judge's last documented-not-implemented gap
-    ("durable pre-materialized graph table ... exists only as a
-    docstring-of-record"). Same oracle as ``graph_ann_search_topk``: the
-    searched graph is definitionally the built graph, and the shared
-    :func:`graph_beam_search` body guarantees the two postures cannot
-    drift in search semantics — what this entry adds to the contract is
-    the durable round-trip (build → commit → read-back → search) on the
-    oracle-checked path. Restart/versioning semantics (fresh mart handle,
-    no rebuild, history) are pinned in tests/test_graph_durable.py.
+    state. Same oracle as ``graph_ann_search_topk``: the searched graph
+    is definitionally the built graph, and the shared :func:`_search`
+    body guarantees the two postures cannot drift in search semantics —
+    what this entry adds to the contract is the durable round-trip
+    (build → commit → read-back → search) on the oracle-checked path.
+    Restart/versioning semantics (fresh mart handle, no rebuild, history)
+    are pinned in tests/test_graph_durable.py.
 
     The marts live under the per-process :mod:`..artifacts` root here
     (fixture stand-in); production points ``materialize_knn_graph`` at a
@@ -921,405 +1098,38 @@ def q_graph_ann_search_durable(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, sf_dir, artifacts.directory(spark, "knn_graph_durable", sf_dir)
         ),
     )
-    n = load(spark, sf_dir, "embeddings").count()
-    return graph_beam_search(spark, am.read(spark), em.read(spark), n)
+    gund = tracked_persist(_undirected(em.read(spark)))
+    return _search(spark, sf_dir, am.read(spark), gund, 0, 1)
 
 
 # ---------------------------------------------------------------------------
 # graph_ann_search_batch — the serving shape: many queries, one plan (r12)
 
-_GB_K = 10  # results per query (matches embedding_topk_ivf_batch)
 
-
-def _gs_batch_hop_cte(
-    i: int, graph: str = "gund", pfx: str = "bv", beam: int = _GS_BEAM
-) -> str:
-    """One batched beam hop: the visited chain ``{pfx}{i-1}`` ->
-    ``{pfx}{i}`` keyed by query_id — the flat search's hop CTE with every
-    window and join carrying the query key, so B queries replay as ONE
-    chain. Parameterized (r12) exactly like the single-query hop, so the
-    batched HNSW router replays its upper layer through the same text."""
-    prev = f"{pfx}{i - 1}"
-    return f""",
-    {pfx}bm{i} AS (
-      SELECT query_id, vec_id FROM (
-        SELECT query_id, vec_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY cos_sim DESC, vec_id) AS rn
-        FROM {prev})
-      WHERE rn <= {beam}
-    ),
-    {pfx}{i} AS MATERIALIZED (
-      SELECT DISTINCT query_id, vec_id, cos_sim FROM (
-        SELECT query_id, vec_id, cos_sim FROM {prev}
-        UNION ALL
-        SELECT b.query_id, u.nbr AS vec_id,
-               {_int_cos_sql("x.q", "x.s", "qb.qv", "qb.qn")} AS cos_sim
-        FROM {pfx}bm{i} b
-        JOIN {graph} u ON u.node = b.vec_id
-        JOIN qassign x ON x.vec_id = u.nbr
-        JOIN qb ON qb.query_id = b.query_id)
-    )"""
-
-
-def _graph_search_batch_oracle() -> str:
-    hops = "".join(_gs_batch_hop_cte(i) for i in range(1, _GS_HOPS + 1))
-    return f"""
-    {_knn_refined_cte()},
-    gund AS MATERIALIZED (
-      SELECT DISTINCT node, nbr FROM (
-        SELECT src_id AS node, nbr_id AS nbr FROM wk{_KNN_ROUNDS}
-        UNION ALL
-        SELECT nbr_id AS node, src_id AS nbr FROM wk{_KNN_ROUNDS})
-    ),
-    qb AS (SELECT vec_id AS query_id, q AS qv, s AS qn FROM qassign
-           WHERE vec_id % 100 = 0),
-    ent AS (
-      SELECT ((nn.n // {_GS_ENTRIES}) * g.g) AS vec_id
-      FROM (SELECT COUNT(*) AS n FROM embeddings) nn
-      CROSS JOIN (SELECT UNNEST(range({_GS_ENTRIES})) AS g) g
-    ),
-    bv0 AS MATERIALIZED (
-      SELECT DISTINCT qb.query_id, x.vec_id,
-             {_int_cos_sql("x.q", "x.s", "qb.qv", "qb.qn")} AS cos_sim
-      FROM ent e JOIN qassign x ON x.vec_id = e.vec_id CROSS JOIN qb
-    ){hops}
-    SELECT query_id, CAST(rn AS INT) AS rank, vec_id,
-           cos_sim / 10000.0 AS cos_sim FROM (
-      SELECT query_id, vec_id, cos_sim,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cos_sim DESC, vec_id) AS rn
-      FROM bv{_GS_HOPS})
-    WHERE rn <= {_GB_K} ORDER BY query_id, rank
-    """
-
-
-@register("graph_ann_search_batch", oracle=_graph_search_batch_oracle())
+@register("graph_ann_search_batch", oracle=_search_oracle(None, 1))
 def q_graph_ann_search_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3+ (r12) — graph ANN search in its SERVING shape (VERDICT r11
-    item 8): every query with vec_id % 100 == 0 (the
-    ``embedding_topk_ivf_batch`` batch convention — 5 at sf0.01, 20 at
-    sf0.1) beam-searched over the committed NN-Descent graph with ONE
-    distributed job per hop FOR THE WHOLE BATCH: the beam table carries
-    (query_id, node), expansion is one equi-join of the |Q|·{_GS_BEAM}-row
-    beam against the edge table, scoring joins each neighbor against its
-    own query's vector through the broadcast |Q|-row query table. Same
-    entries, hops, beam, and integer score contract as the single-query
-    flat search; top-{_GB_K} per query.
+    """X3+ (r12) — graph ANN search in its SERVING shape: every query with
+    vec_id % 100 == 0 beam-searched over the committed NN-Descent graph
+    with ONE distributed job per hop FOR THE WHOLE BATCH. Same entries,
+    hops, beam, and integer score contract as ``graph_ann_search_topk``
+    (the same walk; that entry is this one with a batch of one);
+    top-{_GB_K} per query.
 
     Plan at 100 TB: the per-query driver loop amortizes — B queries cost
-    {_GS_HOPS} jobs total, not {_GS_HOPS}·B, and per-hop work is
+    {_GS_HOPS} hop jobs total, not {_GS_HOPS}·B, and per-hop work is
     ≤ B·{_GS_BEAM}·2W candidate rows (corpus-independent, the HNSW search
-    invariant per query). Driver-held search state is
-    B·(ENTRIES + HOPS·BEAM·2W) (query_id, node, score) triples — batch
-    size is the knob that trades driver memory for job amortization, and
-    a serving tier shards the query stream into batches sized to that
-    bound. The full batched walk replays in SQL over the SHARED
-    refined-graph prefix with the visited chain keyed by query_id.
+    invariant per query). Batch size is the knob that trades driver
+    memory for job amortization; a serving tier shards the query stream
+    into batches sized to that bound.
     """
-    assign, work = _knn_refined_tables(spark, sf_dir)
-    n = load(spark, sf_dir, "embeddings").count()
-    qb = _batch_queries(assign)
-    stride = n // _GS_ENTRIES
-    entries = spark.createDataFrame(
-        [(stride * g,) for g in range(_GS_ENTRIES)], "vec_id long"
-    ).crossJoin(qb.select("query_id"))
-    return graph_beam_search_batch(
-        spark, assign, work, qb, entries, gund=_knn_gund_table(spark, sf_dir)
-    )
-
-
-def _batch_queries(assign: DataFrame) -> DataFrame:
-    """The serving batch: every vec_id % 100 == 0 with its integer
-    contract columns (the ``embedding_topk_ivf_batch`` convention)."""
-    return assign.filter(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("__q").alias("qv"),
-        F.col("__s").alias("qn"),
-    )
-
-
-def graph_beam_search_batch(
-    spark: SparkSession,
-    assign: DataFrame,
-    work: DataFrame,
-    qb: DataFrame,
-    entries: DataFrame,
-    *,
-    hops: int = _GS_HOPS,
-    beam: int = _GS_BEAM,
-    k: int = _GB_K,
-    raw: bool = False,
-    gund: DataFrame | None = None,
-):
-    """The batched beam search proper — B queries through one plan, the
-    query-keyed twin of :func:`graph_beam_search` (shared by the flat
-    batch entry and the batched HNSW router so the two cannot drift).
-    ``entries`` is a (query_id, vec_id) frame; ``raw=True`` returns the
-    visited top-k as (query_id, vec_id, score) tuples for layer chaining.
-
-    Driver state is B·(|entries/query| + hops·beam·2W) triples — bounded
-    by batch size and search parameters, never by corpus size; each hop
-    is ONE distributed job for the whole batch (broadcast the ≤ B·beam
-    beam table against the cached edge table, fetch + score neighbors
-    against their own query via the broadcast B-row query table)."""
-    from ..caching import tracked_persist
-    from ..operators.similarity import int_cos_x1e4
-
-    if gund is None:
-        # see graph_beam_search: committed-table callers pass gund in
-        gund = tracked_persist(
-            work.select(F.col("src_id").alias("node"), F.col("nbr_id").alias("nbr"))
-            .unionAll(
-                work.select(F.col("nbr_id").alias("node"), F.col("src_id").alias("nbr"))
-            )
-            .distinct()
-        )
-
-    def score(pairs: DataFrame) -> list:
-        # (query_id, vec_id) -> integer ten-thousandth scores, one job
-        return (
-            pairs.join(assign, "vec_id")
-            .join(F.broadcast(qb), "query_id")
-            .select(
-                "query_id",
-                "vec_id",
-                int_cos_x1e4(
-                    F.col("__q"), F.col("__s"), F.col("qv"), F.col("qn")
-                ).alias("cos_sim"),
-            )
-            .collect()
-        )
-
-    visited: dict[tuple[int, int], int] = {
-        (r.query_id, r.vec_id): r.cos_sim for r in score(entries)
-    }
-    for _ in range(hops):
-        beams: list[tuple[int, int]] = []
-        by_q: dict[int, list[tuple[int, int]]] = {}
-        for (qid, vid), s in visited.items():
-            by_q.setdefault(qid, []).append((vid, s))
-        for qid, items in by_q.items():
-            items.sort(key=lambda vs: (-vs[1], vs[0]))
-            beams.extend((qid, vid) for vid, _ in items[:beam])
-        beam_df = spark.createDataFrame(beams, "query_id long, node long")
-        nbrs = (
-            F.broadcast(beam_df)
-            .join(gund, "node")
-            .select("query_id", F.col("nbr").alias("vec_id"))
-            .distinct()
-        )
-        for r in score(nbrs):
-            visited[(r.query_id, r.vec_id)] = r.cos_sim
-    by_q2: dict[int, list[tuple[int, int]]] = {}
-    for (qid, vid), s in visited.items():
-        by_q2.setdefault(qid, []).append((vid, s))
-    top: list[tuple[int, int, int]] = []
-    for qid in sorted(by_q2):
-        items = sorted(by_q2[qid], key=lambda vs: (-vs[1], vs[0]))[:k]
-        top.extend((qid, vid, s) for vid, s in items)
-    if raw:
-        return top
-    rows = []
-    rk = 0
-    prev_q = None
-    for qid, vid, s in top:
-        rk = rk + 1 if qid == prev_q else 1
-        prev_q = qid
-        rows.append((qid, rk, vid, s / 10000.0))
-    return spark.createDataFrame(
-        rows, "query_id long, rank int, vec_id long, cos_sim double"
-    )
+    return _committed_search(spark, sf_dir, None, 1)
 
 
 # ---------------------------------------------------------------------------
 # hnsw_two_layer_search — hierarchical routing over the graph family (r11)
 
-_HN_MOD = 8  # 1-in-8 nodes promoted to the upper layer (portable md5)
 
-_HN_K = 3  # upper-layer neighbors per node
-
-_HN_HOPS = 2  # upper-layer hops (the router is shallow by design)
-
-_HN_BEAM = 8  # upper-layer beam
-
-_HN_FAN = 4  # upper results that seed the layer-0 search
-
-
-def _hn_up_sql(mod: int) -> str:
-    return f"({duck_md5_32('CAST(vec_id AS VARCHAR)')}) % {mod} = 0"
-
-
-def _hn_layer_sql(lvl: int) -> str:
-    """The upper-layer build at level ``lvl`` as CTE text: promoted node
-    set ``hu{lvl}`` (md5 % {_HN_MOD}^lvl), within-cell scored pairs,
-    top-{_HN_K} directed edges, undirected adjacency ``hg{lvl}``. Shared
-    by the single-query HNSW oracles AND the batched router's oracle, so
-    the layer that routes a batch is textually the layer the single-query
-    entries search."""
-    mod = _HN_MOD**lvl
-    return f""",
-    hu{lvl} AS (SELECT * FROM qassign WHERE {_hn_up_sql(mod)}),
-    hp{lvl} AS (
-      SELECT a.vec_id AS src_id, b.vec_id AS nbr_id,
-             {_int_cos_sql("a.q", "a.s", "b.q", "b.s")} AS cos_sim
-      FROM hu{lvl} a JOIN hu{lvl} b
-        ON a.cluster = b.cluster AND a.vec_id <> b.vec_id
-    ),
-    he{lvl} AS (
-      SELECT src_id, nbr_id FROM (
-        SELECT src_id, nbr_id,
-               ROW_NUMBER() OVER (PARTITION BY src_id
-                                  ORDER BY cos_sim DESC, nbr_id) AS rn
-        FROM hp{lvl}) WHERE rn <= {_HN_K}
-    ),
-    hg{lvl} AS MATERIALIZED (
-      SELECT DISTINCT node, nbr FROM (
-        SELECT src_id AS node, nbr_id AS nbr FROM he{lvl}
-        UNION ALL
-        SELECT nbr_id AS node, src_id AS nbr FROM he{lvl})
-    )"""
-
-
-def _hnsw_oracle(levels: int = 2) -> str:
-    """ALL layers replayed in SQL over the SHARED refined-graph prefix.
-    Upper layers are numbered ℓ = levels−1 (sparsest, promotion modulus
-    {_HN_MOD}^ℓ — the true HNSW geometric level rule, md5-deterministic)
-    down to 1; each gets its own within-cell top-{_HN_K} graph build
-    (``hu{{ℓ}}``/``he{{ℓ}}``/``hg{{ℓ}}``), its own visited chain
-    (``h{{ℓ}}v*`` via the shared hop CTE), rank-strided entries at the
-    TOP layer and top-{_HN_FAN} fan-in from the layer above elsewhere;
-    the layer-1 result seeds the standard layer-0 beam search. The routed
-    search is definitionally over the graphs that were built."""
-    parts: list[str] = []
-    top = levels - 1
-    for lvl in range(top, 0, -1):
-        parts.append(_hn_layer_sql(lvl))
-        if lvl == top:
-            parts.append(f""",
-    h{lvl}ent AS (
-      SELECT vec_id FROM (
-        SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM hu{lvl})
-      CROSS JOIN (SELECT COUNT(*) AS c FROM hu{lvl})
-      WHERE rn IN (1, 1 + c // 4, 1 + (2 * c) // 4, 1 + (3 * c) // 4)
-    )""")
-        else:
-            # fan-in from the layer above, FALLING BACK to rank-strided
-            # entries over THIS layer's node set when the layer above
-            # promoted nothing (corpora ≲ mod^(lvl+1) vectors — VERDICT
-            # r12 item 3: without the fallback the router seeds from
-            # nothing and the whole search silently returns empty)
-            parts.append(f""",
-    h{lvl}ent AS (
-      SELECT vec_id FROM (
-        SELECT vec_id, ROW_NUMBER() OVER (ORDER BY cos_sim DESC, vec_id) AS rn
-        FROM h{lvl + 1}v{_HN_HOPS}) WHERE rn <= {_HN_FAN}
-      UNION ALL
-      SELECT vec_id FROM (
-        SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM hu{lvl})
-      CROSS JOIN (SELECT COUNT(*) AS c FROM hu{lvl})
-      WHERE rn IN (1, 1 + c // 4, 1 + (2 * c) // 4, 1 + (3 * c) // 4)
-        AND NOT EXISTS (SELECT 1 FROM hu{lvl + 1})
-    )""")
-        parts.append(f""",
-    h{lvl}v0 AS MATERIALIZED (
-      SELECT DISTINCT x.vec_id,
-             {_int_cos_sql("x.q", "x.s", "qq.qv", "qq.qn")} AS cos_sim
-      FROM h{lvl}ent e JOIN qassign x ON x.vec_id = e.vec_id CROSS JOIN qq
-    )""")
-        parts.append(
-            "".join(
-                _gs_hop_cte(i, graph=f"hg{lvl}", pfx=f"h{lvl}v", beam=_HN_BEAM)
-                for i in range(1, _HN_HOPS + 1)
-            )
-        )
-    layers = "".join(parts)
-    l0_hops = "".join(_gs_hop_cte(i) for i in range(1, _GS_HOPS + 1))
-    return f"""
-    {_knn_refined_cte()},
-    gund AS MATERIALIZED (
-      SELECT DISTINCT node, nbr FROM (
-        SELECT src_id AS node, nbr_id AS nbr FROM wk{_KNN_ROUNDS}
-        UNION ALL
-        SELECT nbr_id AS node, src_id AS nbr FROM wk{_KNN_ROUNDS})
-    ),
-    qq AS (SELECT q AS qv, s AS qn FROM qassign WHERE vec_id = 0){layers},
-    l0ent AS (
-      SELECT vec_id FROM (
-        SELECT vec_id, ROW_NUMBER() OVER (ORDER BY cos_sim DESC, vec_id) AS rn
-        FROM h1v{_HN_HOPS}) WHERE rn <= {_HN_FAN}
-      UNION ALL
-      SELECT vec_id FROM (
-        SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM qassign)
-      CROSS JOIN (SELECT COUNT(*) AS c FROM qassign)
-      WHERE rn IN (1, 1 + c // 4, 1 + (2 * c) // 4, 1 + (3 * c) // 4)
-        AND NOT EXISTS (SELECT 1 FROM hu1)
-    ),
-    gv0 AS MATERIALIZED (
-      SELECT DISTINCT x.vec_id,
-             {_int_cos_sql("x.q", "x.s", "qq.qv", "qq.qn")} AS cos_sim
-      FROM l0ent e JOIN qassign x ON x.vec_id = e.vec_id CROSS JOIN qq
-    ){l0_hops}
-    SELECT vec_id, cos_sim / 10000.0 AS cos_sim FROM gv{_GS_HOPS}
-    ORDER BY cos_sim DESC, vec_id LIMIT {_GS_K}
-    """
-
-
-def _hn_upper_pred(mod: int = _HN_MOD) -> F.Column:
-    return (
-        F.pmod(spark_md5_32(F.col("vec_id").cast("string")), F.lit(mod)) == 0
-    )
-
-
-def _hn_layer(assign: DataFrame, mod: int):
-    """``(nodes, edges)`` for the upper layer at promotion modulus ``mod``
-    — the within-cell top-{_HN_K} graph among md5-promoted nodes, the
-    SAME bounded join shape as the base graph on a 1/mod slice (shared by
-    the two- and three-layer routed searches so the layer build cannot
-    drift between them)."""
-    from ..operators.similarity import int_cos_x1e4, knn_topk_edges
-
-    up = assign.filter(_hn_upper_pred(mod))
-    a = up.select(
-        F.col("vec_id").alias("src_id"), "cluster",
-        F.col("__q").alias("aq"), F.col("__s").alias("asn"),
-    )
-    b = up.select(
-        F.col("vec_id").alias("nbr_id"), "cluster",
-        F.col("__q").alias("bq"), F.col("__s").alias("bsn"),
-    )
-    pairs = (
-        a.join(b, "cluster")
-        .filter(F.col("src_id") != F.col("nbr_id"))
-        .select(
-            "src_id", "nbr_id",
-            int_cos_x1e4(F.col("aq"), F.col("asn"), F.col("bq"), F.col("bsn"))
-            .alias("cos_sim"),
-        )
-    )
-    return up, knn_topk_edges(pairs, _HN_K).select("src_id", "nbr_id", "cos_sim")
-
-
-def _hn_strided_entries(up: DataFrame) -> tuple[list[int], int]:
-    """Rank-strided entry ids over the id-ordered node list: rows 1,
-    1+c//4, 1+2c//4, 1+3c//4 (deterministic; the 4-id collect is the
-    k-centroids-precedent parameter-sized driver traffic)."""
-    from pyspark.sql import Window as _W
-
-    c = up.count()
-    ranks = {1, 1 + c // 4, 1 + (2 * c) // 4, 1 + (3 * c) // 4}
-    ids = [
-        r.vec_id
-        for r in up.select(
-            "vec_id", F.row_number().over(_W.orderBy("vec_id")).alias("rn")
-        )
-        .filter(F.col("rn").isin(*ranks))
-        .collect()
-    ]
-    return ids, c
-
-
-@register("hnsw_two_layer_search", oracle=_hnsw_oracle(2))
+@register("hnsw_two_layer_search", oracle=_search_oracle(0, 2))
 def q_hnsw_two_layer_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3+ (r11) — HNSW-style TWO-LAYER routed ANN search (Malkov &
     Yashunin 2018's hierarchy, md5-deterministic instead of random level
@@ -1332,230 +1142,64 @@ def q_hnsw_two_layer_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     points near the query before the expensive walk starts — the reason
     HNSW's hop count is logarithmic in corpus size.
 
-    Plan at 100 TB: the upper layer is n/{_HN_MOD} nodes (recursively
-    promotable — each extra layer divides by {_HN_MOD} again, the true
-    HNSW shape) and its build is the SAME bounded within-cell join as the
-    base graph on 1/{_HN_MOD} of the rows; search state stays
-    driver-sized (the HNSW invariant) with one distributed job per hop;
-    everything scores through the shared pure-integer quantized-cosine
-    contract, and both layers replay end-to-end in the oracle over the
-    shared refined-graph prefix. Entries are rank-strided over the upper
-    node list (deterministic, corpus-independent); recall@20 vs exact
-    brute force is floor-pinned at two scales alongside the flat search.
-    Small-corpus totality (r13): an empty upper layer (corpora ≲
-    {_HN_MOD} vectors) degrades to rank-strided layer-0 entries — the
-    flat search — mirrored in the oracle and fixture-tested.
+    Plan at 100 TB: the upper layer is n/{_HN_MOD} nodes and its build is
+    the SAME bounded within-cell join as the base graph on 1/{_HN_MOD} of
+    the rows; search state stays driver-sized (the HNSW invariant) with
+    one distributed job per hop. Recall@20 vs exact brute force is
+    floor-pinned at two scales alongside the flat search. An empty upper
+    layer degrades to rank-strided layer-0 entries (:func:`_route`),
+    fixture-tested in tests/test_hnsw_small_corpus.py.
     """
-    assign, work = _knn_refined_tables(spark, sf_dir)
-    up, uedges = _hn_layer(assign, _HN_MOD)
-    uent, _ = _hn_strided_entries(up)
-    if uent:
-        routed = graph_beam_search(
-            spark, assign, uedges,
-            entry_ids=uent, hops=_HN_HOPS, beam=_HN_BEAM, k=_HN_FAN, raw=True,
-        )
-        l0_entries = [i for i, _ in routed]
-    else:
-        # small-corpus totality (r13): nothing promoted to layer 1
-        # (corpora ≲ _HN_MOD vectors) — enter layer 0 by rank stride,
-        # i.e. degrade to the flat search. Mirrored in the oracle's
-        # NOT EXISTS arm on l0ent.
-        l0_entries, _ = _hn_strided_entries(assign)
-    return graph_beam_search(
-        spark, assign, work.select("src_id", "nbr_id", "cos_sim"),
-        entry_ids=l0_entries, gund=_knn_gund_table(spark, sf_dir),
-    )
+    return _committed_search(spark, sf_dir, 0, 2)
 
 
-@register("hnsw_three_layer_search", oracle=_hnsw_oracle(3))
+@register("hnsw_three_layer_search", oracle=_search_oracle(0, 3))
 def q_hnsw_three_layer_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3+ (r12) — the HNSW hierarchy taken to THREE layers, exercising
-    the promotion rule's recursion (VERDICT r11 item 8): layer 2 keeps
-    1-in-{_HN_MOD}² nodes (md5 % {_HN_MOD}² = 0 — a strict subset of
-    layer 1's 1-in-{_HN_MOD}, the nested-level invariant real HNSW gets
-    from geometric level draws), builds its own within-cell
-    top-{_HN_K} graph, and routes the query with rank-strided entries;
-    its top-{_HN_FAN} results become layer 1's entries, layer 1's
-    top-{_HN_FAN} seed the layer-0 beam walk. Every layer runs the SAME
-    ``graph_beam_search`` body and the SAME ``_hn_layer`` build as the
-    two-layer router — adding a layer is composition, not new machinery,
-    which is the point of registering it.
+    the promotion rule's recursion: layer 2 keeps 1-in-{_HN_MOD}² nodes
+    (md5 % {_HN_MOD}² = 0 — a strict subset of layer 1's 1-in-{_HN_MOD},
+    the nested-level invariant real HNSW gets from geometric level
+    draws), builds its own within-cell top-{_HN_K} graph, and routes the
+    query with rank-strided entries; its top-{_HN_FAN} results become
+    layer 1's entries, layer 1's top-{_HN_FAN} seed the layer-0 walk.
+    Adding a layer is one more level of the same router, not new
+    machinery.
 
     Plan at 100 TB: layer ℓ holds n/{_HN_MOD}^ℓ nodes, so the upper
     builds cost a geometric series dominated by layer 1 (~1/{_HN_MOD} of
-    the base build); search state stays driver-sized with one
-    distributed job per hop per layer; hop count per layer is constant —
-    corpus growth is absorbed by ADDING layers (log_{_HN_MOD} n of
-    them), the HNSW scaling argument made literal. Over the r13 4-round
-    graph the recursion is also the family's best fixture-scale recall:
-    measured recall@20 1.0 @ sf0.01 / 0.95 @ sf0.1 vs the two-layer
-    router's 1.0 / 0.85 and the flat search's 1.0 / 0.85 (floors pinned
-    at two scales in tests/test_recall_scales.py) — with better layer-0
-    edges, routing layer 1 from layer 2's fan-in seeds beats entering
-    by fixed stride. Small-corpus totality (r13): when a promoted layer
-    is EMPTY the entry set cascades — empty layer 2 routes layer 1 from
-    its own rank-strided entries (the two-layer degradation), empty
-    layer 1 enters layer 0 by rank stride (the flat-search degradation)
-    — so the search returns a full top-k on ANY non-empty corpus.
-    Mirrored in the oracle's NOT EXISTS arms and pinned by the 50- and
-    16-vector fixture tests (tests/test_hnsw_small_corpus.py), each
-    proving Spark ≡ DuckDB through its fallback branch.
+    the base build); hop count per layer is constant — corpus growth is
+    absorbed by ADDING layers (log_{_HN_MOD} n of them). Measured
+    recall@20 1.0 @ sf0.01 / 0.95 @ sf0.1 vs the two-layer router's
+    1.0 / 0.85 (floors pinned in tests/test_recall_scales.py). Empty
+    layers cascade (:func:`_route`), pinned by the 50- and 16-vector
+    fixture tests (tests/test_hnsw_small_corpus.py), each proving
+    Spark ≡ DuckDB through its fallback branch.
     """
-    assign, work = _knn_refined_tables(spark, sf_dir)
-    up2, e2 = _hn_layer(assign, _HN_MOD * _HN_MOD)
-    up1, e1 = _hn_layer(assign, _HN_MOD)
-    ent2, c2 = _hn_strided_entries(up2)
-    if ent2:
-        routed2 = graph_beam_search(
-            spark, assign, e2, c2,
-            entry_ids=ent2, hops=_HN_HOPS, beam=_HN_BEAM, k=_HN_FAN, raw=True,
-        )
-        l1_entries = [i for i, _ in routed2]
-    else:
-        # SMALL-CORPUS FALLBACK (VERDICT r12 item 3): corpora ≲ _HN_MOD²
-        # vectors can promote NOTHING to layer 2; seeding layer 1 from
-        # the empty routed set made the whole search silently return
-        # empty (and the oracle agreed — a masked-green spec bug). Route
-        # layer 1 from its own rank-strided entries instead, i.e. the
-        # degraded hierarchy IS the two-layer router. Mirrored in the
-        # oracle (_hnsw_oracle's NOT EXISTS arm) and pinned by the
-        # 50-vector fixture test.
-        l1_entries, _ = _hn_strided_entries(up1)
-    if l1_entries:
-        routed1 = graph_beam_search(
-            spark, assign, e1,
-            entry_ids=l1_entries,
-            hops=_HN_HOPS, beam=_HN_BEAM, k=_HN_FAN, raw=True,
-        )
-        l0_entries = [i for i, _ in routed1]
-    else:
-        # layer 1 ALSO empty (corpora ≲ _HN_MOD vectors, self-review
-        # r13): cascade one more step — enter layer 0 by rank stride,
-        # the flat search. The promotion sets nest (md5 % 64 = 0 ⇒
-        # md5 % 8 = 0), so "hu1 empty" is the single oracle gate.
-        l0_entries, _ = _hn_strided_entries(assign)
-    return graph_beam_search(
-        spark, assign, work.select("src_id", "nbr_id", "cos_sim"),
-        entry_ids=l0_entries, gund=_knn_gund_table(spark, sf_dir),
-    )
+    return _committed_search(spark, sf_dir, 0, 3)
 
 
 # ---------------------------------------------------------------------------
 # hnsw_batch_routed_search — the router × the batch: the true serving shape
 
 
-def _hnsw_batch_oracle() -> str:
-    """The batched walk with per-query HNSW routing, all in SQL: the
-    layer-1 build (shared ``_hn_layer_sql`` text), the batch routed
-    across it from the same strided entries (query-keyed hop chain
-    ``ub*``), each query's top-{_HN_FAN} routed nodes seeding ITS OWN
-    layer-0 chain (``bv*``)."""
-    up_hops = "".join(
-        _gs_batch_hop_cte(i, graph="hg1", pfx="ub", beam=_HN_BEAM)
-        for i in range(1, _HN_HOPS + 1)
-    )
-    l0_hops = "".join(_gs_batch_hop_cte(i) for i in range(1, _GS_HOPS + 1))
-    return f"""
-    {_knn_refined_cte()},
-    gund AS MATERIALIZED (
-      SELECT DISTINCT node, nbr FROM (
-        SELECT src_id AS node, nbr_id AS nbr FROM wk{_KNN_ROUNDS}
-        UNION ALL
-        SELECT nbr_id AS node, src_id AS nbr FROM wk{_KNN_ROUNDS})
-    ),
-    qb AS (SELECT vec_id AS query_id, q AS qv, s AS qn FROM qassign
-           WHERE vec_id % 100 = 0){_hn_layer_sql(1)},
-    h1ent AS (
-      SELECT vec_id FROM (
-        SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM hu1)
-      CROSS JOIN (SELECT COUNT(*) AS c FROM hu1)
-      WHERE rn IN (1, 1 + c // 4, 1 + (2 * c) // 4, 1 + (3 * c) // 4)
-    ),
-    ub0 AS MATERIALIZED (
-      SELECT DISTINCT qb.query_id, x.vec_id,
-             {_int_cos_sql("x.q", "x.s", "qb.qv", "qb.qn")} AS cos_sim
-      FROM h1ent e JOIN qassign x ON x.vec_id = e.vec_id CROSS JOIN qb
-    ){up_hops},
-    bl0 AS (
-      SELECT query_id, vec_id FROM (
-        SELECT query_id, vec_id,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY cos_sim DESC, vec_id) AS rn
-        FROM ub{_HN_HOPS}) WHERE rn <= {_HN_FAN}
-      UNION ALL
-      SELECT qb.query_id, s.vec_id FROM (
-        SELECT vec_id FROM (
-          SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM qassign)
-        CROSS JOIN (SELECT COUNT(*) AS c FROM qassign)
-        WHERE rn IN (1, 1 + c // 4, 1 + (2 * c) // 4, 1 + (3 * c) // 4)) s
-      CROSS JOIN qb
-      WHERE NOT EXISTS (SELECT 1 FROM hu1)
-    ),
-    bv0 AS MATERIALIZED (
-      SELECT DISTINCT b.query_id, x.vec_id,
-             {_int_cos_sql("x.q", "x.s", "qb.qv", "qb.qn")} AS cos_sim
-      FROM bl0 b JOIN qassign x ON x.vec_id = b.vec_id
-      JOIN qb ON qb.query_id = b.query_id
-    ){l0_hops}
-    SELECT query_id, CAST(rn AS INT) AS rank, vec_id,
-           cos_sim / 10000.0 AS cos_sim FROM (
-      SELECT query_id, vec_id, cos_sim,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cos_sim DESC, vec_id) AS rn
-      FROM bv{_GS_HOPS})
-    WHERE rn <= {_GB_K} ORDER BY query_id, rank
-    """
-
-
-@register("hnsw_batch_routed_search", oracle=_hnsw_batch_oracle())
+@register("hnsw_batch_routed_search", oracle=_search_oracle(None, 2))
 def q_hnsw_batch_routed_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3+ (r12) — the TRUE serving shape: the query batch (vec_id % 100
-    == 0) routed through the HNSW upper layer PER QUERY, then batch
+    == 0) routed through the HNSW upper layer PER QUERY, then
     beam-searched over layer 0 from each query's own routed entries.
     ``graph_ann_search_batch`` amortizes jobs but enters every query at
     the same fixed strides; this entry gives each query the router's
-    personalized entry points at batch cost: upper routing adds
-    {_HN_HOPS} jobs for the WHOLE batch (the layer-1 graph is 1/{_HN_MOD}
-    of the corpus), layer 0 runs the identical batched walk. Composition
-    of two already-checked bodies — ``_hn_layer`` (shared with the
-    single-query routers) and ``graph_beam_search_batch`` (shared with
-    the flat batch) — plus one fan-in between them; the oracle replays
-    both stages query-keyed over the shared refined-graph prefix.
+    entry points at batch cost: upper routing adds {_HN_HOPS} hop jobs
+    for the WHOLE batch (the layer-1 graph is 1/{_HN_MOD} of the
+    corpus), and layer 0 runs the same batched walk.
 
-    Plan at 100 TB: per batch, {_HN_HOPS} + {_GS_HOPS} distributed jobs
-    TOTAL regardless of batch size B; per-hop candidate volume ≤
-    B·beam·2W rows; driver state B·(layer visited bounds) — the batch
-    knob trades driver memory for amortization exactly as the flat batch
-    documents, and the router's per-query entries are what keep layer-0
-    hop counts flat as the corpus grows (the HNSW argument, now available
-    at serving batch size).
+    Plan at 100 TB: per batch, {_HN_HOPS} + {_GS_HOPS} hop jobs TOTAL
+    regardless of batch size B; per-hop candidate volume ≤ B·beam·2W
+    rows; the router's per-query entries are what keep layer-0 hop
+    counts flat as the corpus grows (the HNSW argument at serving batch
+    size).
     """
-    assign, work = _knn_refined_tables(spark, sf_dir)
-    qb = _batch_queries(assign)
-    up1, e1 = _hn_layer(assign, _HN_MOD)
-    ent1, _ = _hn_strided_entries(up1)
-    if ent1:
-        entries1 = spark.createDataFrame(
-            [(v,) for v in ent1], "vec_id long"
-        ).crossJoin(qb.select("query_id"))
-        routed = graph_beam_search_batch(
-            spark, assign, e1, qb, entries1,
-            hops=_HN_HOPS, beam=_HN_BEAM, k=_HN_FAN, raw=True,
-        )
-        entries0 = spark.createDataFrame(
-            [(qid, vid) for qid, vid, _ in routed], "query_id long, vec_id long"
-        )
-    else:
-        # small-corpus totality (r13): empty upper layer — every query
-        # enters layer 0 by rank stride (the flat batch), mirroring the
-        # oracle's NOT EXISTS arm on bl0
-        sent, _ = _hn_strided_entries(assign)
-        entries0 = spark.createDataFrame(
-            [(v,) for v in sent], "vec_id long"
-        ).crossJoin(qb.select("query_id"))
-    return graph_beam_search_batch(
-        spark, assign, work, qb, entries0, gund=_knn_gund_table(spark, sf_dir)
-    )
+    return _committed_search(spark, sf_dir, None, 2)
 
 
 # ---------------------------------------------------------------------------
@@ -1596,10 +1240,7 @@ def _und_ctes() -> str:
     return f"""
     {_knn_base_cte()},
     ed AS (SELECT src_id, nbr_id FROM e0 WHERE rnk <= {_KNN_K}),
-    und AS (SELECT DISTINCT node, nbr FROM (
-      SELECT src_id AS node, nbr_id AS nbr FROM ed
-      UNION ALL
-      SELECT nbr_id AS node, src_id AS nbr FROM ed))"""
+    und AS ({_undirected_sql("ed")})"""
 
 
 def _lpa_cte_chain() -> str:
@@ -1670,16 +1311,8 @@ def _und_frame(spark: SparkSession, sf_dir: str):
     """``(assign, und)`` — the Spark twin of ``_und_ctes``: the full
     vector assignment plus the persisted undirected base-kNN edge table,
     shared by label propagation and the k-core peel."""
-    from ..caching import tracked_persist
-
     assign, edges = _knn_base_edges(spark, sf_dir)
-    ed = edges.select("src_id", "nbr_id")
-    und = tracked_persist(
-        ed.select(F.col("src_id").alias("node"), F.col("nbr_id").alias("nbr"))
-        .unionAll(ed.select(F.col("nbr_id").alias("node"), F.col("src_id").alias("nbr")))
-        .distinct()
-    )
-    return assign, und
+    return assign, tracked_persist(_undirected(edges))
 
 
 def lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1031,7 +1031,14 @@ _CM_W = 512  # sketch width (buckets per row)
 _CM_TOP = 30  # probe set: the exact top-N tokens
 
 
+def _cm_bucket(i: int) -> F.Column:
+    """Sketch row ``i``'s bucket of the ``token`` column: each row hashes
+    with its own ``cm{i}|`` salt. DuckDB twin: :func:`_cm_bucket_sql`."""
+    return (spark_md5_32(F.concat(F.lit(f"cm{i}|"), F.col("token"))) % _CM_W).cast("long")
+
+
 def _cm_bucket_sql(token_expr: str) -> str:
+    """DuckDB twin of :func:`_cm_bucket` for the row held in column ``i``."""
     return (
         duck_md5_32(f"'cm' || CAST(i AS VARCHAR) || '|' || {token_expr}")
         + f" % {_CM_W}"
@@ -1092,14 +1099,9 @@ def q_countmin_frequency_estimates(spark: SparkSession, sf_dir: str) -> DataFram
         .agg(F.count(F.lit(1)).alias("c"))
     )
 
-    def bucket(i: int) -> F.Column:
-        return (
-            spark_md5_32(F.concat(F.lit(f"cm{i}|"), F.col("token"))) % _CM_W
-        ).cast("long")
-
     rows_arr = F.array(
         *[
-            F.struct(F.lit(i).cast("long").alias("i"), bucket(i).alias("b"))
+            F.struct(F.lit(i).cast("long").alias("i"), _cm_bucket(i).alias("b"))
             for i in range(_CM_D)
         ]
     )

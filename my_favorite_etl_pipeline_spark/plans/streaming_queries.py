@@ -637,7 +637,7 @@ def q_stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..streaming.windows import stream_shuffle_scope
+    from ..streaming.windows import run_to_memory
     from .assembly import manifest_shard_agg
 
     docs = load(spark, sf_dir, "documents")
@@ -650,21 +650,13 @@ def q_stream_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(f"{root}/in")
         )
         agg = manifest_shard_agg(stream)
-        import time as _time
-
-        name = f"stream_manifest_{int(_time.time() * 1000) % 10_000_000}"
-        with stream_shuffle_scope(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
         # the memory-sink table lives in driver memory, but materialize
         # before the input directory disappears (lazy reads re-plan)
-        return spark.table(name).orderBy("shard").localCheckpoint(eager=True)
+        return (
+            run_to_memory(agg, "stream_manifest", "complete")
+            .orderBy("shard")
+            .localCheckpoint(eager=True)
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

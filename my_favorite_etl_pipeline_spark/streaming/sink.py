@@ -14,7 +14,7 @@ after a checkpoint recovery) re-commits the same version — a fresh copy of
 an identical state, not a duplicate application — and a crash between the
 data write and the manifest swap leaves the previous version fully visible.
 
-The harness-only memory sink lives in ``stateful._run_to_memory``; THIS
+The harness-only memory sink lives in ``windows.run_to_memory``; THIS
 module is the path a production job wires up.
 """
 

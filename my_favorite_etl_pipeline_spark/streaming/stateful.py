@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .windows import read_events_stream, stream_shuffle_scope
+from .windows import read_events_stream, run_to_memory
 
 USER_STATS_SCHEMA = T.StructType(
     [
@@ -81,7 +81,7 @@ def user_stats_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    return _run_to_memory(out, "user_stats_stateful")
+    return run_to_memory(out, "user_stats_stateful")
 
 
 class _UserStatsProcessor:
@@ -176,7 +176,7 @@ def user_stats_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
                 timeMode="None",
             )
         )
-        return _run_to_memory(out, "user_stats_tws")
+        return run_to_memory(out, "user_stats_tws")
     finally:
         if prev is None:
             spark.conf.unset(key)
@@ -195,7 +195,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = stream.dropDuplicatesWithinWatermark(["event_id"]).select(
         "event_id", "user_id", "event_type", "value"
     )
-    return _run_to_memory(deduped, "stream_dedup")
+    return run_to_memory(deduped, "stream_dedup")
 
 
 def stream_stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -239,29 +239,4 @@ def stream_stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFr
         "purchase_id",
         (F.unix_micros("p_ts") - F.unix_micros("v_ts")).alias("micros_to_purchase"),
     )
-    return _run_to_memory(joined, "stream_stream_join")
-
-
-def _run_to_memory(df: DataFrame, prefix: str) -> DataFrame:
-    """HARNESS-ONLY sink: funnels the whole stream into driver memory so the
-    oracle can compare final state. That is a deliberate driver bottleneck —
-    NEVER route a production path here. The production sink is
-    ``foreachBatch`` → :func:`~..operators.merge.merge_upsert` (distributed,
-    idempotent; tested in tests/test_streaming_extras.py). The guard below
-    enforces the boundary: only availableNow (bounded, batch-parity) runs
-    may use the memory sink.
-    """
-    import time
-
-    assert df.isStreaming, "_run_to_memory is for bounded availableNow harness runs"
-    name = f"{prefix}_{int(time.time() * 1000) % 10_000_000}"
-    with stream_shuffle_scope(df.sparkSession):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return df.sparkSession.table(name)
+    return run_to_memory(joined, "stream_stream_join")

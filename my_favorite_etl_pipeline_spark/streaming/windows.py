@@ -60,6 +60,37 @@ def stream_shuffle_scope(spark: SparkSession, n: int = 4):
             spark.conf.set(key, prev)
 
 
+def run_to_memory(
+    df: DataFrame, prefix: str, mode: str = "append", partitions: int = 4
+) -> DataFrame:
+    """Run the bounded stream ``df`` to completion (``availableNow``) into a
+    fresh memory-sink table ``{prefix}_<ms>`` in output ``mode``
+    (``append`` or ``complete``) with ``partitions`` state-store
+    partitions (:func:`stream_shuffle_scope`), and return that table.
+
+    HARNESS-ONLY sink: it funnels the whole stream into driver memory so
+    the oracle can compare final state. That is a deliberate driver
+    bottleneck — NEVER route a production path here. The production sink
+    is ``foreachBatch`` → :func:`~..operators.merge.merge_upsert`
+    (distributed, idempotent; tested in tests/test_streaming_extras.py).
+    The guard below enforces the boundary: only bounded streaming runs
+    may use the memory sink.
+    """
+    assert df.isStreaming, "run_to_memory is for bounded availableNow harness runs"
+    spark = df.sparkSession
+    name = f"{prefix}_{int(time.time() * 1000) % 10_000_000}"
+    with stream_shuffle_scope(spark, partitions):
+        (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    return spark.table(name)
+
+
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan of the events parquet with the ns-timestamp repair.
 
@@ -110,17 +141,7 @@ def watermarked_hourly_counts(
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "n_events")
     )
-    sink_name = f"watermark_sink_{int(time.time() * 1000) % 10_000_000}"
-    with stream_shuffle_scope(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink_name)
+    return run_to_memory(agg, "watermark_sink", "append")
 
 
 def tumbling_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,17 +158,7 @@ def tumbling_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("sum_value", 4).alias("total_value"),
         )
     )
-    sink_name = f"tumbling_sink_{int(time.time() * 1000) % 10_000_000}"
-    with stream_shuffle_scope(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink_name)
+    return run_to_memory(agg, "tumbling_sink", "complete")
 
 
 def session_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -177,17 +188,7 @@ def session_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    sink_name = f"session_sink_{int(time.time() * 1000) % 10_000_000}"
-    with stream_shuffle_scope(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink_name)
+    return run_to_memory(agg, "session_sink", "complete")
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -240,17 +241,7 @@ def stream_contamination_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_flagged_grams"))
     )
-    sink_name = f"decon_sink_{int(time.time() * 1000) % 10_000_000}"
-    with stream_shuffle_scope(spark):
-        q = (
-            flagged.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink_name).orderBy("doc_id")
+    return run_to_memory(flagged, "decon_sink", "complete").orderBy("doc_id")
 
 
 def stream_fuzzy_decon_pairs(
@@ -341,17 +332,7 @@ def stream_fuzzy_decon_pairs(
             "doc_id", "bench_id", F.round(jac, 4).alias("jaccard")
         )
     )
-    sink_name = f"fuzzy_decon_sink_{int(time.time() * 1000) % 10_000_000}"
-    with stream_shuffle_scope(spark, n=16):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink_name).orderBy("doc_id", "bench_id")
+    return run_to_memory(pairs, "fuzzy_decon_sink", "complete", 16).orderBy("doc_id", "bench_id")
 
 
 def _fuzzy_bench_index(
@@ -490,17 +471,7 @@ def stream_ingest_dedup_pairs(
         .groupBy("doc_id", "ref_id")
         .agg(F.min("jaccard").alias("jaccard"))  # identical on every dup row
     )
-    sink_name = f"ingest_dedup_sink_{int(time.time() * 1000) % 10_000_000}"
-    with stream_shuffle_scope(spark, n=16):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink_name).orderBy("doc_id", "ref_id")
+    return run_to_memory(pairs, "ingest_dedup_sink", "complete", 16).orderBy("doc_id", "ref_id")
 
 
 def stream_windowed_histograms(
@@ -548,17 +519,7 @@ def stream_windowed_histograms(
             F.col("w.start").alias("window_start"), "event_type", "b", "c"
         )
     )
-    sink_name = f"psi_wnd_sink_{int(time.time() * 1000) % 10_000_000}"
-    with stream_shuffle_scope(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink_name)
+    return run_to_memory(agg, "psi_wnd_sink", "append")
 
 
 def stream_current_window_histogram(
@@ -589,17 +550,7 @@ def stream_current_window_histogram(
         .groupBy("event_type", "b")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    sink_name = f"psi_sink_{int(time.time() * 1000) % 10_000_000}"
-    with stream_shuffle_scope(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink_name)
+    return run_to_memory(agg, "psi_sink", "complete")
 
 
 def _containment_ref_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -670,14 +621,6 @@ def stream_containment_screen(
         F.col("c").cast("long").alias("n_shared"),
         F.expr("CAST(c * 10000 DIV na AS BIGINT)").alias("containment_bp"),
     )
-    sink_name = f"containment_screen_sink_{int(time.time() * 1000) % 10_000_000}"
-    with stream_shuffle_scope(spark, n=16):
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(sink_name).orderBy("doc_id", "ref_id")
+    return run_to_memory(pairs, "containment_screen_sink", "complete", 16).orderBy(
+        "doc_id", "ref_id"
+    )

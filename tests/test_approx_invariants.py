@@ -422,3 +422,46 @@ def test_anomalous_hours_mad_zero_mad_branch(spark, tmp_path):
         assert r[5] == (r[2] != r[3])
     vary_rows = [r for r in got if r[0] == "vary"]
     assert all(r[4] > 0 for r in vary_rows), "vary type must keep MAD>0"
+
+
+def test_countmin_rows_hash_independently_and_identically_on_both_engines(spark, sf_dir):
+    """Every Count-Min row is its own hash, the same on Spark and DuckDB.
+    The oracle check cannot see this: at fixture scale the top tokens'
+    estimates equal their exact counts even when all rows share one hash
+    (as they did while the DuckDB md5 fragment's lambda variable captured
+    the row column ``i``). Over the whole vocabulary, 4 independent
+    512-bucket rows put a token in one bucket on every row with
+    probability 512⁻³ — so any such token means the rows collapsed."""
+    import duckdb
+    import pyarrow as pa
+
+    from my_favorite_etl_pipeline_spark.plans.relational_ext2 import (
+        _CM_D,
+        _cm_bucket,
+        _cm_bucket_sql,
+    )
+
+    vocab = (
+        load(spark, sf_dir, "documents")
+        .select(F.explode(F.split("text", " ")).alias("token"))
+        .distinct()
+    )
+    on_spark = {
+        r.token: tuple(r.b)
+        for r in vocab.select(
+            "token", F.array(*[_cm_bucket(i) for i in range(_CM_D)]).alias("b")
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.register("vocab", pa.table({"token": list(on_spark)}))
+    on_duck: dict[str, tuple] = {}
+    for token, b in con.execute(
+        f"""SELECT token, {_cm_bucket_sql("token")} AS b
+            FROM vocab CROSS JOIN (SELECT UNNEST(range({_CM_D})) AS i)
+            ORDER BY token, i"""
+    ).fetchall():
+        on_duck[token] = on_duck.get(token, ()) + (b,)
+    assert on_spark
+    assert on_duck == on_spark
+    collapsed = [t for t, b in on_spark.items() if len(set(b)) == 1]
+    assert not collapsed, collapsed[:5]

@@ -7,6 +7,8 @@ SAME entries, hops, beam, and integer score contract as the single-query
 the batch's top-10 must equal the flat search's first 10 rows exactly.
 A divergence here means the batching changed semantics (beam selection,
 tie-breaks, or state merging), which no amortization is allowed to do.
+The same holds for the routed pair: ``hnsw_batch_routed_search`` is
+``hnsw_two_layer_search`` over the batch.
 """
 
 from __future__ import annotations
@@ -24,15 +26,22 @@ pytestmark = pytest.mark.skipif(
 )
 
 
-def test_batch_query0_equals_flat_search_prefix(spark):
+@pytest.mark.parametrize(
+    "flat_name, batch_name",
+    [
+        ("graph_ann_search_topk", "graph_ann_search_batch"),
+        ("hnsw_two_layer_search", "hnsw_batch_routed_search"),
+    ],
+)
+def test_batch_query0_equals_flat_search_prefix(spark, flat_name, batch_name):
     qs = engine.queries()
     flat = [
         (r.vec_id, r.cos_sim)
-        for r in qs["graph_ann_search_topk"](spark, SF_DIR).collect()
+        for r in qs[flat_name](spark, SF_DIR).collect()
     ]
     batch = [
         (r.vec_id, r.cos_sim)
-        for r in qs["graph_ann_search_batch"](spark, SF_DIR)
+        for r in qs[batch_name](spark, SF_DIR)
         .filter("query_id = 0")
         .orderBy("rank")
         .collect()

@@ -16,7 +16,8 @@ import pytest
 
 from my_favorite_etl_pipeline_spark.plans.graph import (
     _knn_refined_tables,
-    graph_beam_search,
+    _search,
+    _undirected,
     materialize_knn_graph,
 )
 from my_favorite_etl_pipeline_spark.sources.mart import VersionedMart
@@ -26,12 +27,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(SF_DIR), reason="fixture tables absent"
 )
-
-
-def _n(spark):
-    from my_favorite_etl_pipeline_spark.sources.tables import load
-
-    return load(spark, SF_DIR, "embeddings").count()
 
 
 def test_durable_commit_roundtrips_graph_exactly(spark, tmp_path):
@@ -54,10 +49,9 @@ def test_fresh_handle_serves_identical_search_without_rebuild(spark, tmp_path):
     # fresh handles, as a new process would construct them
     assign = VersionedMart(os.path.join(root, "assign")).read(spark)
     edges = VersionedMart(os.path.join(root, "edges")).read(spark)
-    n = _n(spark)
-    served = graph_beam_search(spark, assign, edges, n).collect()
+    served = _search(spark, SF_DIR, assign, _undirected(edges), 0, 1).collect()
     sa, sw = _knn_refined_tables(spark, SF_DIR)
-    session = graph_beam_search(spark, sa, sw.select("src_id", "nbr_id", "cos_sim"), n).collect()
+    session = _search(spark, SF_DIR, sa, _undirected(sw), 0, 1).collect()
     assert [tuple(r) for r in served] == [tuple(r) for r in session]
     assert len(served) > 0
 
@@ -79,4 +73,4 @@ def test_recommit_preserves_time_travel_to_prior_graph(spark, tmp_path):
 def test_search_without_query_vector_fails_loudly(spark):
     assign, edges = _knn_refined_tables(spark, SF_DIR)
     with pytest.raises(ValueError, match="query vector 0 missing from assign"):
-        graph_beam_search(spark, assign.filter("vec_id != 0"), edges, _n(spark))
+        _search(spark, SF_DIR, assign.filter("vec_id != 0"), _undirected(edges), 0, 1)

@@ -47,6 +47,28 @@ def test_text_query_job_budget(spark, sf_dir, set_conf, name, budget):
     assert _jobs_to_build_and_run(spark, sf_dir, name) == budget
 
 
+# The six graph searches share one query-keyed walk. Measured before it
+# on this fixture: topk 25, durable 26, batch 30, two-layer 42,
+# three-layer 57, routed 49 jobs. A batched search scored its queries
+# through a broadcast join (one build job per score), every search read
+# the committed edge table it no longer uses, and each routed layer
+# collected the query vectors again.
+@pytest.mark.parametrize(
+    "name, budget",
+    [
+        ("graph_ann_search_topk", 24),
+        ("graph_ann_search_durable", 26),
+        ("graph_ann_search_batch", 24),
+        ("hnsw_two_layer_search", 40),
+        ("hnsw_three_layer_search", 54),
+        ("hnsw_batch_routed_search", 40),
+    ],
+)
+def test_graph_search_job_budget(spark, sf_dir, set_conf, name, budget):
+    set_conf(spark, CACHED_PLAN_AQE, "true")
+    assert _jobs_to_build_and_run(spark, sf_dir, name) == budget
+
+
 def test_dsir_weights_aggregate_counts_once_without_a_cross_join(spark, sf_dir):
     with materialized_scope():
         qe = REGISTRY["dsir_importance_resample"].fn(spark, sf_dir)._jdf.queryExecution()

@@ -23,7 +23,7 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from my_favorite_etl_pipeline_spark.caching import materialized_scope
 

@@ -46,6 +46,7 @@ DEFAULT_QUERIES = (
     "graph_ann_search_topk",
     "graph_ann_search_durable",
     "graph_ann_search_batch",
+    "hnsw_two_layer_search",
     "hnsw_three_layer_search",
     "hnsw_batch_routed_search",
     # the classifier pair

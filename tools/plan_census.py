@@ -21,10 +21,11 @@ invariant, not a one-time audit.
 from __future__ import annotations
 
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _args = [a for a in sys.argv[1:] if a != "--assert"]
 ASSERT = "--assert" in sys.argv[1:]

@@ -6,10 +6,11 @@ Usage: python tools/time_queries.py [sf_dir] [runs] query [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from my_favorite_etl_pipeline_spark.caching import materialized_scope
 
