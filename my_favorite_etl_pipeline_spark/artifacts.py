@@ -32,6 +32,7 @@ import threading
 from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .session import shuffle_partitions_tag
 from .sources.mart import VersionedMart
@@ -92,7 +93,8 @@ def memoized_commit(
     ``build(commit)`` calls ``commit(name, df)``, which commits ``df`` as
     table ``name`` and returns the committed table read back, so later
     tables can be built from earlier ones. Returns ``{name: mart}``;
-    callers ``read`` only the tables they use (each read is a Spark job).
+    callers ``read`` only the tables they use. Each mart reads with the
+    schema it was committed with, so a read costs no schema-inference job.
     """
 
     def build_marts() -> dict[str, VersionedMart]:
@@ -100,7 +102,7 @@ def memoized_commit(
         built: dict[str, VersionedMart] = {}
 
         def commit(name: str, df: DataFrame) -> DataFrame:
-            mart = VersionedMart(os.path.join(base, name))
+            mart = _CommittedMart(os.path.join(base, name), df.schema)
             mart.commit(df, "v1")
             built[name] = mart
             return mart.read(spark)
@@ -110,3 +112,14 @@ def memoized_commit(
 
     return memoized(spark, kind, sf_dir, *extra, build=build_marts)
 
+
+class _CommittedMart(VersionedMart):
+    """A mart read with the schema it was committed with, unless the caller
+    passes one: no read spends a parquet schema-inference job."""
+
+    def __init__(self, root: str, schema: StructType) -> None:
+        super().__init__(root)
+        self.schema = schema
+
+    def read(self, spark, version=None, schema=None) -> DataFrame:
+        return super().read(spark, version, schema or self.schema)

@@ -94,6 +94,38 @@ DUCK_SHINGLES = """
 """
 
 
+def duck_jaccard_pairs(threshold: float) -> str:
+    """DuckDB twin of ``operators.dedup.near_dup_pairs``: CTE text, after
+    :data:`DUCK_SHINGLES`, ending in ``jp(id_a, id_b, j)`` — every document
+    pair ``id_a < id_b`` whose UNROUNDED shingle Jaccard ``j`` is at least
+    ``threshold`` (callers that return it round it to 4 places).
+
+    Exact all-pairs by an inverted-index equi-join, not the O(n²)
+    inequality join (a single-threaded nested loop in DuckDB): a pair with
+    j > 0 shares a shingle, so joining the (doc, shingle) postings on the
+    shingle counts |A∩B| for every such pair, and |A∪B| = |A| + |B| − |A∩B|.
+    The CTE is ``jp``, not ``p``: the PageRank prefix already binds ``p``.
+    """
+    return f"""
+    {DUCK_SHINGLES},
+    sizes AS (SELECT doc_id, LEN(s) AS n FROM sh),
+    ex AS (SELECT doc_id, UNNEST(s) AS shingle FROM sh),
+    inter AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
+      FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY 1, 2
+    ),
+    jp AS (
+      SELECT id_a, id_b, j FROM (
+        SELECT inter.id_a, inter.id_b,
+               CAST(c AS DOUBLE) / (sa.n + sb.n - c) AS j
+        FROM inter
+        JOIN sizes sa ON inter.id_a = sa.doc_id
+        JOIN sizes sb ON inter.id_b = sb.doc_id)
+      WHERE j >= {threshold}
+    )"""
+
+
 def stopword_count(col: Column | str, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
     return F.size(F.filter(tokens(col), lambda t: t.isin(*stopwords)))
 

@@ -171,28 +171,27 @@ def prefix_filter_pairs(
     collision can only ADD candidates (merged postings), never lose a
     qualifying pair, and candidates are verified exactly downstream.
     """
-    sh = ensure_min_partitions(df).select(
-        F.col(id_col),
-        F.transform(shingles(F.col(text_col)), lambda x: F.xxhash64(x)).alias("sh"),
+    return _prefix_candidates(_hashed_shingles(df, id_col, text_col), id_col, threshold)
+
+
+def _hashed_shingles(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(id, sh)``: each document's shingle set as ``xxhash64`` int64s,
+    upsized and persisted — the one frame both the prefix-filter funnel
+    and the exact verify read, so a document is shingled once."""
+    return tracked_persist(
+        ensure_min_partitions(df).select(
+            F.col(id_col),
+            F.transform(shingles(F.col(text_col)), lambda x: F.xxhash64(x)).alias("sh"),
+        )
     )
-    # tok feeds the frequency agg AND the ranked re-agg; pref self-joins.
-    # Without persistence the shingle/explode chain runs four times —
-    # persist the two fan-out points (spill-safe) so it runs once.
-    tok = tracked_persist(sh.select(id_col, F.explode("sh").alias("t")))
-    freq = tok.groupBy("t").agg(F.count(F.lit(1)).alias("f"))
-    ranked = (
-        tok.join(freq, "t")
-        .groupBy(id_col)
-        .agg(F.array_sort(F.collect_list(F.struct("f", "t"))).alias("ord"))
-    )
-    n = F.size("ord")
-    plen = F.greatest(n - ceil_frac(n, threshold) + 1, F.lit(1))
-    pref = ranked.select(
-        F.col(id_col),
-        n.alias("n"),
-        F.explode(F.slice(F.transform("ord", lambda s: s["t"]), F.lit(1), plen)).alias("t"),
-    )
-    pref = tracked_persist(pref)
+
+
+def _prefix_candidates(sh: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """``prefix_filter_pairs`` over the hashed shingle frame ``sh``."""
+    # the postings feed the frequency agg AND the ranked re-agg (an explode
+    # of the persisted sh, map-only); pref self-joins, so persist it
+    tok = sh.select(id_col, F.explode("sh").alias("t"))
+    pref = tracked_persist(_rarest_first_prefix(tok, id_col, threshold))
     a, b = pref.alias("a"), pref.alias("b")
     return (
         a.join(
@@ -204,6 +203,26 @@ def prefix_filter_pairs(
         )
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
+    )
+
+
+def _rarest_first_prefix(tok: DataFrame, id_col: str, threshold: float) -> DataFrame:
+    """``(id, n, t)``: each document's first ``n - ceil(threshold·n) + 1``
+    tokens under the global rarest-first order (corpus frequency, then
+    token), from the exploded ``(id, t)`` postings ``tok``; ``n`` is the
+    document's token count. The prefix both funnels join on."""
+    freq = tok.groupBy("t").agg(F.count(F.lit(1)).alias("f"))
+    ranked = (
+        tok.join(freq, "t")
+        .groupBy(id_col)
+        .agg(F.array_sort(F.collect_list(F.struct("f", "t"))).alias("ord"))
+    )
+    n = F.size("ord")
+    plen = F.greatest(n - ceil_frac(n, threshold) + 1, F.lit(1))
+    return ranked.select(
+        F.col(id_col),
+        n.alias("n"),
+        F.explode(F.slice(F.transform("ord", lambda s: s["t"]), F.lit(1), plen)).alias("t"),
     )
 
 
@@ -229,26 +248,14 @@ def containment_pairs(
 
     Returns (doc_id, container_id, n_shingles, n_shared, containment_bp).
     """
-    t = num / den
     sh = tracked_persist(
         ensure_min_partitions(df).select(
             F.col(id_col), shingles(F.col(text_col)).alias("sh")
         )
     )
     tok = tracked_persist(sh.select(id_col, F.explode("sh").alias("t")))
-    freq = tok.groupBy("t").agg(F.count(F.lit(1)).alias("f"))
-    ranked = (
-        tok.join(freq, "t")
-        .groupBy(id_col)
-        .agg(F.array_sort(F.collect_list(F.struct("f", "t"))).alias("ord"))
-    )
-    n = F.size("ord")
-    plen = F.greatest(n - ceil_frac(n, t) + 1, F.lit(1))
-    pref = ranked.select(
-        F.col(id_col).alias("ida"),
-        F.explode(
-            F.slice(F.transform("ord", lambda s: s["t"]), F.lit(1), plen)
-        ).alias("t"),
+    pref = _rarest_first_prefix(tok, id_col, num / den).select(
+        F.col(id_col).alias("ida"), "t"
     )
     cand = (
         pref.join(tok.select(F.col(id_col).alias("idb"), "t"), "t")
@@ -277,16 +284,20 @@ def containment_pairs(
 
 
 def jaccard_verify(
-    df: DataFrame,
+    sh: DataFrame,
     pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
+    id_col: str,
+    threshold: float,
 ) -> DataFrame:
-    """X2 verification — exact shingle Jaccard on candidates only.
+    """X2 verification — exact shingle Jaccard on candidates only, from
+    the persisted hashed shingle frame ``sh`` (:func:`_hashed_shingles`).
 
     Joins the (small) candidate set back to the corpus twice; at scale both
-    joins broadcast the pair list. Returns (id_a, id_b, jaccard≥threshold).
+    joins broadcast the pair list. Returns (id_a, id_b, jaccard) for the
+    pairs whose UNROUNDED Jaccard is ≥ ``threshold``; the returned
+    ``jaccard`` is rounded to 4 places. Filtering before rounding keeps
+    the rule of every DuckDB twin (``functions.text.duck_jaccard_pairs``):
+    a pair at J = 0.89995 is not a 0.9 near-duplicate.
 
     Shingles ride as ``xxhash64`` int64 arrays (r16-opt): 3× narrower
     persisted/joined rows and an integer intersect/union instead of a
@@ -295,14 +306,6 @@ def jaccard_verify(
     P ≤ C(|A∪B|,2)/2^64 ≈ 3e-16 per pair, the stream_ingest /
     MinHash-family collision contract.
     """
-    # the self-join below would otherwise compute the shingle projection
-    # twice — persist the single map-only pass instead
-    sh = tracked_persist(
-        ensure_min_partitions(df).select(
-            F.col(id_col),
-            F.transform(shingles(F.col(text_col)), lambda x: F.xxhash64(x)).alias("sh"),
-        )
-    )
     a = sh.alias("sa")
     b = sh.alias("sb")
     jac = (
@@ -312,8 +315,8 @@ def jaccard_verify(
     return (
         pairs.join(a, pairs.id_a == F.col(f"sa.{id_col}"))
         .join(b, pairs.id_b == F.col(f"sb.{id_col}"))
+        .filter(jac >= threshold)
         .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
     )
 
 
@@ -325,7 +328,17 @@ def minhash_near_dups(
 ) -> DataFrame:
     """X2 end-to-end — LSH candidates + exact verification."""
     pairs = lsh_candidate_pairs(df, id_col, text_col)
-    return jaccard_verify(df, pairs, id_col, text_col, threshold)
+    return jaccard_verify(_hashed_shingles(df, id_col, text_col), pairs, id_col, threshold)
+
+
+def near_dup_pairs(docs: DataFrame, threshold: float) -> DataFrame:
+    """X2 end-to-end, exact — prefix-filter candidates + exact
+    verification over ``docs(doc_id, text)``: every pair with shingle
+    Jaccard ≥ ``threshold``, at 100% recall by the prefix theorem. The
+    twin of :func:`minhash_near_dups`; same ``(id_a, id_b, jaccard)``
+    contract. Both stages read one hashed shingle frame."""
+    sh = _hashed_shingles(docs, "doc_id", "text")
+    return jaccard_verify(sh, _prefix_candidates(sh, "doc_id", threshold), "doc_id", threshold)
 
 
 # the masks 1 << b as foldable calls: the optimizer makes them one array

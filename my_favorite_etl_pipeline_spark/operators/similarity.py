@@ -1058,20 +1058,36 @@ def semdedup_pairs(
     return pairs.orderBy("cluster", "id_a", "id_b")
 
 
+#: product quantization splits a 64-dim vector into _PQ_M subspaces of
+#: _PQ_DSUB dims; :func:`_pq_subvectors` rejects any other width
+_PQ_M, _PQ_DSUB = 8, 8
+
+
 def _pq_subvectors(rows: DataFrame, vec_col: str) -> DataFrame:
     """``rows`` with ``vec_col`` (the raw vector) replaced by one row per
     contiguous 8-dim subspace: ``(*other columns, s, vsub)``, ``vsub`` the
-    slice of the UNIT vector."""
-    dsub = 8
+    slice of the UNIT vector. A vector that is not 64 wide fails the query
+    (``raise_error`` inside the projection, so the check costs no job)
+    instead of training on its first 64 dims."""
+    width = _PQ_M * _PQ_DSUB
+    vec = F.col(vec_col)
+    unit = F.when(F.size(vec) == width, unit_vec(vec)).otherwise(
+        F.raise_error(
+            F.concat(
+                F.lit(f"product quantization needs {width}-dim vectors, got "),
+                F.size(vec).cast("string"),
+            )
+        )
+    )
     keep = [c for c in rows.columns if c != vec_col]
-    return rows.select(*keep, unit_vec(F.col(vec_col)).alias("__u")).select(
+    return rows.select(*keep, unit.alias("__u")).select(
         *keep,
         F.inline(
             F.transform(
-                F.sequence(F.lit(0), F.lit(7)),
+                F.sequence(F.lit(0), F.lit(_PQ_M - 1)),
                 lambda s: F.struct(
                     s.cast("int").alias("s"),
-                    F.slice(F.col("__u"), s * dsub + 1, dsub).alias("vsub"),
+                    F.slice(F.col("__u"), s * _PQ_DSUB + 1, _PQ_DSUB).alias("vsub"),
                 ),
             )
         ),
@@ -1080,16 +1096,15 @@ def _pq_subvectors(rows: DataFrame, vec_col: str) -> DataFrame:
 
 def pq_codebook(
     corpus: DataFrame,
-    m: int = 8,
     kc: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_iter: int = 1,
 ) -> DataFrame:
     """Product-quantization codebook (Jégou et al. 2011, "Product
-    quantization for nearest neighbor search"): split the vector into ``m``
-    contiguous subspaces and learn ``kc`` centroids per subspace. Returns
-    ``(s, c, cv)`` — subspace index, code id, centroid (dim/m doubles).
+    quantization for nearest neighbor search"): split the 64-dim vector into
+    m = 8 contiguous subspaces and learn ``kc`` centroids per subspace.
+    Returns ``(s, c, cv)`` — subspace index, code id, centroid (8 doubles).
 
     Same deterministic recipe as :func:`build_hash_centroids`: code buckets
     init as ``id % kc`` and per-dim means use fixed-point BIGINT sums, then
@@ -1186,7 +1201,6 @@ def pq_adc_topk(
     query: DataFrame,
     k: int = 10,
     shortlist: int = 50,
-    m: int = 8,
     kc: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -1194,7 +1208,7 @@ def pq_adc_topk(
     cb: DataFrame | None = None,
 ) -> DataFrame:
     """X3 scale path — PQ-ADC retrieval with exact re-rank: encode every
-    vector as ``m`` one-byte codes, score candidates by Asymmetric
+    vector as m = 8 one-byte codes, score candidates by Asymmetric
     Distance Computation (sum of per-subspace query·centroid partial dot
     products — a 128-entry table lookup instead of a 64-dim dot), keep a
     ``shortlist``, then re-rank the shortlist with the TRUE cosine. This
@@ -1215,8 +1229,7 @@ def pq_adc_topk(
     distances and partial dots (integer argmin/sums — no float ordering
     anywhere), code ties to the smaller id, final ties to ``id_col``.
     """
-    assert m == 8, "fixture vectors are 64-dim; 8 dims per subspace"
-    dsub = 8  # 64-dim fixture vectors / m
+    m, dsub = _PQ_M, _PQ_DSUB
     # ``train`` separates codebook training from scan set: IVF-PQ trains on
     # the full corpus but encodes/scores only probed cells (default: same).
     # ``cb`` (r16-opt): a caller holding the TRAINED codebook as a committed
@@ -1225,7 +1238,7 @@ def pq_adc_topk(
     if cb is None:
         cb = pq_codebook(
             train if train is not None else corpus,
-            m=m, kc=kc, id_col=id_col, vec_col=vec_col,
+            kc=kc, id_col=id_col, vec_col=vec_col,
         )
     # ONE broadcastable row: cbn[s][c][i] — nested sort_array folds keep
     # subspace and code order deterministic.

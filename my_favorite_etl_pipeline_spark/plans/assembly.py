@@ -19,11 +19,10 @@ from pyspark.sql import functions as F
 from ..caching import tracked_persist
 from ..functions import text as TX
 from ..functions.exprs import duck_md5_32, spark_md5_32
-from ..functions.text import DUCK_SHINGLES
-from ..registry import REGISTRY, register
+from ..registry import register
 from ..sources.tables import load
 from .curation import _CCNET_CTES, ccnet_bucketed
-from .dedup import _semdedup_assign_cte
+from .dedup import DUCK_COMPONENTS, _near_dup_components, _semdedup_assign_cte
 
 
 def hash_split(
@@ -429,33 +428,13 @@ def q_quota_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "leakage_safe_split",
     oracle=f"""
-    WITH RECURSIVE {DUCK_SHINGLES},
-    sizes AS (SELECT doc_id, LEN(s) AS n FROM sh),
-    ex AS (SELECT doc_id, UNNEST(s) AS shingle FROM sh),
-    inter AS (
-      SELECT a.doc_id AS u, b.doc_id AS v, COUNT(*) AS c
-      FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    p AS (
-      SELECT u, v FROM inter
-      JOIN sizes sa ON inter.u = sa.doc_id
-      JOIN sizes sb ON inter.v = sb.doc_id
-      WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.9
-    ),
-    edges AS (SELECT u, v FROM p UNION SELECT v, u FROM p),
-    reach(node, root) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.v, r.root FROM reach r JOIN edges e ON e.u = r.node
-    ),
-    comp AS (SELECT node, MIN(root) AS component FROM reach GROUP BY node),
+    WITH RECURSIVE {DUCK_COMPONENTS},
     mixed AS (
-      SELECT node, component,
+      SELECT doc_id, component,
              ({duck_md5_32('CAST(component AS VARCHAR)')}) % 10 AS mix
       FROM comp
     )
-    SELECT CAST(node AS BIGINT) AS doc_id,
+    SELECT CAST(doc_id AS BIGINT) AS doc_id,
            CAST(component AS BIGINT) AS component,
            CASE WHEN mix <= 7 THEN 'train'
                 WHEN mix = 8 THEN 'val'
@@ -469,7 +448,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate cluster lands in the same split. A per-doc random/hash split
     leaks training text into eval whenever near-duplicates straddle the
     cut — the exact failure mode decontamination exists to prevent, created
-    by the splitter itself. Composes the registered
+    by the splitter itself. Composes the
     ``dedup_cluster_components`` clustering (prefix-filtered >= 0.9-Jaccard
     edges -> min-label components) with md5 split mixing; 80/10/10.
 
@@ -488,7 +467,7 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero clustering cost. Within one session the same effect comes from
     ``tracked_persist`` on the component frame before fanning out.
     """
-    comp = REGISTRY["dedup_cluster_components"].fn(spark, sf_dir)
+    comp = _near_dup_components(load(spark, sf_dir, "documents"))
     mix = spark_md5_32(F.col("component").cast("string")) % 10
     return comp.select(
         "doc_id",

@@ -8,14 +8,17 @@
   md5-portable twin), exact n-gram Jaccard, the PPJoin prefix-filter
   ssjoin, winnowing fingerprints, edit distance, containment pairs and
   drops, and the cross-source overlap matrix;
-- clusters: connected components over the near-duplicate graph (full,
-  star and 1-in-10 sampled twins) and the PageRank-canonical survivor;
+- clusters: connected components over the near-duplicate graph (min-label
+  and star) and the PageRank-canonical survivor;
 - semantic: embedding cosine pairs (exact and LSH), SemDeDup cluster pairs
   and D4 prototype pruning;
 - spans: exact 20-token span dedup and span excision.
 
 Every entry replays exactly in DuckDB; the shared DuckDB fragments (the
-shingle CTE, md5 buckets) live in ``functions`` next to their Spark halves.
+shingle CTE, the Jaccard pair CTE, md5 buckets) live in ``functions`` next
+to their Spark halves. The ≥ t Jaccard pair graph is built once per engine:
+``near_dup_pairs`` in Spark, ``duck_jaccard_pairs`` in DuckDB, both
+filtering on the unrounded ratio and returning it rounded to 4 places.
 """
 
 from __future__ import annotations
@@ -23,47 +26,57 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import tracked_persist
 from ..functions import text as TX
-from ..functions.text import DUCK_SHINGLES
+from ..functions.text import DUCK_SHINGLES, duck_jaccard_pairs
 from ..operators import similarity as SIM
 from ..operators.dedup import (
     minhash_near_dups,
+    near_dup_pairs,
     shingles,
     simhash_bits,
     simhash_bits_portable,
     simhash_near_dups,
 )
-from ..operators.graph import connected_components
+from ..operators.graph import connected_components, connected_components_star
 from ..registry import register
 from ..sources.tables import load
 
 
-# EXACT all-pairs Jaccard via an inverted-index equi-join instead of the
-# O(n²) inequality join: any pair with jaccard > 0 shares >= 1 shingle, so
-# joining the exploded (doc, shingle) postings on shingle equality and
-# counting matches per pair yields |A∩B| for exactly the candidate pairs
-# that can pass a positive threshold; |A∪B| = |A| + |B| - |A∩B|. Same
-# result set, but the join parallelizes in DuckDB (the inequality join ran
-# a single-threaded nested loop — 12.5M pairs took ~20 min at sf0.1 and
-# stalled the sweep; this form takes seconds).
-_DUCK_JACCARD_PAIRS = f"""
-    {DUCK_SHINGLES},
-    sizes AS (SELECT doc_id, LEN(s) AS n FROM sh),
-    ex AS (SELECT doc_id, UNNEST(s) AS shingle FROM sh),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-      FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
+def _pairs_oracle(threshold: float) -> str:
+    """Exact all-pairs ``(id_a, id_b, jaccard)`` at ``threshold`` — the
+    oracle of every near-dup pair entry, whatever its candidate path."""
+    return f"""
+    WITH {duck_jaccard_pairs(threshold)}
+    SELECT id_a, id_b, ROUND(j, 4) AS jaccard FROM jp
+    """
+
+
+# The near-dup components as CTE text ending in ``comp(doc_id, component)``:
+# the min doc id reachable over the ≥ 0.9 pair graph, as a recursive CTE —
+# an algorithm independent of both Spark CC operators, so agreement checks
+# their fixpoints. The caller opens the block with ``WITH RECURSIVE``.
+DUCK_COMPONENTS = f"""
+    {duck_jaccard_pairs(0.9)},
+    edges AS (SELECT id_a AS u, id_b AS v FROM jp UNION SELECT id_b, id_a FROM jp),
+    reach(node, root) AS (
+      SELECT doc_id, doc_id FROM documents
+      UNION
+      SELECT e.v, r.root FROM reach r JOIN edges e ON e.u = r.node
     ),
-    p AS (
-      SELECT inter.id_a, inter.id_b,
-             ROUND(CAST(c AS DOUBLE) / (sa.n + sb.n - c), 4) AS jaccard
-      FROM inter
-      JOIN sizes sa ON inter.id_a = sa.doc_id
-      JOIN sizes sb ON inter.id_b = sb.doc_id
+    comp AS (SELECT node AS doc_id, MIN(root) AS component FROM reach GROUP BY node)"""
+
+
+def _near_dup_components(docs: DataFrame, cc=connected_components) -> DataFrame:
+    """``(doc_id, component)`` for every document over the ≥ 0.9
+    ``near_dup_pairs`` graph, ``component`` = the min doc_id of its
+    component; ``cc`` is either CC operator (same contract)."""
+    comp = cc(
+        near_dup_pairs(docs, 0.9), vertices=docs.select("doc_id"), src="id_a", dst="id_b"
     )
-"""
+    return comp.select(
+        F.col("node").cast("long").alias("doc_id"),
+        F.col("comp").cast("long").alias("component"),
+    )
 
 
 @register(
@@ -126,13 +139,7 @@ def q_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "minhash_near_dups",
-    oracle=f"""
-    WITH {_DUCK_JACCARD_PAIRS}
-    SELECT * FROM p WHERE jaccard >= 0.5
-    """,
-)
+@register("minhash_near_dups", oracle=_pairs_oracle(0.5))
 def q_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 — MinHash+LSH near-dup detection, end-to-end.
 
@@ -146,13 +153,7 @@ def q_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_near_dups(docs, "doc_id", "text", threshold=0.5)
 
 
-@register(
-    "ngram_jaccard_pairs",
-    oracle=f"""
-    WITH {_DUCK_JACCARD_PAIRS}
-    SELECT * FROM p WHERE jaccard >= 0.9
-    """,
-)
+@register("ngram_jaccard_pairs", oracle=_pairs_oracle(0.9))
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 exact variant — EXACT all-pairs n-gram Jaccard at a high
     threshold, via the inverted-index equi-join (optimization r15; the
@@ -199,11 +200,9 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    jac = F.round(
-        F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c")), 4
-    )
-    return inter.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= 0.9
+    jac = F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
+    return inter.filter(jac >= 0.9).select(
+        "id_a", "id_b", F.round(jac, 4).alias("jaccard")
     )
 
 
@@ -411,39 +410,16 @@ def q_embedding_cosine_near_dups_lsh(spark: SparkSession, sf_dir: str) -> DataFr
     return SIM.lsh_pairs_cosine(emb, threshold=0.4, n_bands=16, band_bits=4)
 
 
-@register(
-    "dedup_cluster_components",
-    # edge generation via the inverted-index equi-join: identical >= 0.9
-    # pair set to the O(n²) inequality join (any qualifying pair shares a
-    # shingle), but it parallelizes in DuckDB — the nested-loop form is
-    # what made this oracle "30 minutes at sf0.1" and excluded it from the
-    # round sweeps through r4
-    oracle=f"""
-    WITH RECURSIVE {DUCK_SHINGLES},
-    sizes AS (SELECT doc_id, LEN(s) AS n FROM sh),
-    ex AS (SELECT doc_id, UNNEST(s) AS shingle FROM sh),
-    inter AS (
-      SELECT a.doc_id AS u, b.doc_id AS v, COUNT(*) AS c
-      FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    p AS (
-      SELECT u, v FROM inter
-      JOIN sizes sa ON inter.u = sa.doc_id
-      JOIN sizes sb ON inter.v = sb.doc_id
-      WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.9
-    ),
-    edges AS (SELECT u, v FROM p UNION SELECT v, u FROM p),
-    reach(node, root) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.v, r.root FROM reach r JOIN edges e ON e.u = r.node
-    )
-    SELECT CAST(node AS BIGINT) AS doc_id,
-           CAST(MIN(root) AS BIGINT) AS component
-    FROM reach GROUP BY node ORDER BY doc_id
-    """,
-)
+# The min-label component of every document — the oracle of both the
+# min-label and the star clustering entries.
+_CLUSTER_ORACLE = f"""
+    WITH RECURSIVE {DUCK_COMPONENTS}
+    SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(component AS BIGINT) AS component
+    FROM comp ORDER BY doc_id
+    """
+
+
+@register("dedup_cluster_components", oracle=_CLUSTER_ORACLE)
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2+ — near-dup CLUSTERING: ≥0.9-Jaccard pairs become an edge list,
     connected components merge transitive chains (A~B, B~C ⇒ one group even
@@ -453,136 +429,14 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle computes the same fixpoint as a DuckDB recursive CTE
     (min reachable id per node) — an independent algorithm, so agreement
     checks the iteration's convergence, not just its arithmetic. Edge
-    generation is the prefix-filtered set-similarity join (EXACT — 100%
-    recall at the threshold, so the all-pairs oracle still matches) plus
-    an exact-Jaccard verify on the candidates only: the scale path, not
-    the fixture-only all-pairs baseline ``ngram_jaccard_pairs`` keeps.
+    generation is ``near_dup_pairs``: the prefix-filtered set-similarity
+    join (EXACT — 100% recall at the threshold, so the all-pairs oracle
+    still matches) plus an exact-Jaccard verify on the candidates only —
+    the scale path, not the fixture-only all-pairs baseline
+    ``ngram_jaccard_pairs`` keeps.
     """
     docs = load(spark, sf_dir, "documents")
-    pairs = near_dup_pairs_90(docs)
-    comp = connected_components(pairs, vertices=docs.select("doc_id"))
-    return comp.select(
-        F.col("node").cast("long").alias("doc_id"),
-        F.col("comp").cast("long").alias("component"),
-    ).orderBy("doc_id")
-
-
-def near_dup_pairs_90(docs: DataFrame) -> DataFrame:
-    """``(src, dst)`` ≥0.9-Jaccard near-dup pairs via the prefix-filtered
-    set-similarity join + exact verify — the edge generation of
-    ``dedup_cluster_components``, factored (r11) so the canonical-selection
-    composition ``dedup_canonical_pagerank`` consumes the identical graph."""
-    from ..operators.dedup import prefix_filter_pairs
-
-    cand = prefix_filter_pairs(docs, "doc_id", "text", threshold=0.9)
-    # hashed shingle arrays (r16-opt) — the jaccard_verify contract: int64
-    # intersect/union, sizes exact absent an in-pair xxhash64 collision
-    sh = tracked_persist(  # self-joined below: shingle once, not twice
-        docs.select(
-            "doc_id",
-            F.transform(TX.shingles(F.col("text")), lambda x: F.xxhash64(x)).alias("sh"),
-        )
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    jac = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh"))) / F.size(
-        F.array_union(F.col("a.sh"), F.col("b.sh"))
-    )
-    return (
-        cand.join(a, cand.id_a == F.col("a.doc_id"))
-        .join(b, cand.id_b == F.col("b.doc_id"))
-        .filter(jac >= 0.9)
-        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-    )
-
-# Deterministic 1-in-10 doc subset for the SAMPLED cluster twins: the full
-# recursive-CTE oracle is all-pairs over |documents| and grinds for 30+ min
-# at sf0.1 (5 000 docs) — these twins restrict BOTH engine and oracle to
-# doc_id % 10 == 0 so the local sf0.1 sweep can hash-check the cluster
-# family end-to-end (r4 verdict item 4). The Spark side is the identical
-# operator composition; only the input set shrinks.
-_DUCK_SHINGLES_SAMPLED = """
-    sdocs AS (SELECT * FROM documents WHERE doc_id % 10 = 0),
-    toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM sdocs),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3
-               THEN list_transform(range(len(t) - 2),
-                                   i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])
-               ELSE [] END) AS s
-      FROM toks
-    )
-"""
-
-_CLUSTER_SAMPLED_ORACLE = f"""
-    WITH RECURSIVE {_DUCK_SHINGLES_SAMPLED},
-    p AS (
-      SELECT a.doc_id AS u, b.doc_id AS v
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE CAST(LEN(list_intersect(a.s, b.s)) AS DOUBLE)
-            / LEN(list_distinct(list_concat(a.s, b.s))) >= 0.9
-    ),
-    edges AS (SELECT u, v FROM p UNION SELECT v, u FROM p),
-    reach(node, root) AS (
-      SELECT doc_id, doc_id FROM sdocs
-      UNION
-      SELECT e.v, r.root FROM reach r JOIN edges e ON e.u = r.node
-    )
-    SELECT CAST(node AS BIGINT) AS doc_id,
-           CAST(MIN(root) AS BIGINT) AS component
-    FROM reach GROUP BY node ORDER BY doc_id
-    """
-
-
-def _sampled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-
-
-@register("dedup_cluster_components_sampled", oracle=_CLUSTER_SAMPLED_ORACLE)
-def q_dedup_cluster_components_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2+ sweep twin of ``dedup_cluster_components`` on the deterministic
-    doc_id %% 10 subset — same exact prefix-filter + verify + min-label CC
-    composition, but the recursive-CTE oracle stays tractable at sf0.1, so
-    the scale sweep hash-checks this family instead of skipping it."""
-    from ..operators.dedup import prefix_filter_pairs
-
-    docs = _sampled_docs(spark, sf_dir)
-    cand = prefix_filter_pairs(docs, "doc_id", "text", threshold=0.9)
-    sh = docs.select("doc_id", TX.shingles(F.col("text")).alias("sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    jac = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh"))) / F.size(
-        F.array_union(F.col("a.sh"), F.col("b.sh"))
-    )
-    pairs = (
-        cand.join(a, cand.id_a == F.col("a.doc_id"))
-        .join(b, cand.id_b == F.col("b.doc_id"))
-        .filter(jac >= 0.9)
-        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-    )
-    comp = connected_components(pairs, vertices=docs.select("doc_id"))
-    return comp.select(
-        F.col("node").cast("long").alias("doc_id"),
-        F.col("comp").cast("long").alias("component"),
-    ).orderBy("doc_id")
-
-
-@register("dedup_cluster_components_star_sampled", oracle=_CLUSTER_SAMPLED_ORACLE)
-def q_dedup_cluster_components_star_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sweep twin of ``dedup_cluster_components_star`` (large/small-star
-    contraction) on the doc_id %% 10 subset — triangulates BOTH iterative
-    CC algorithms against the recursive CTE at sf0.1."""
-    from ..operators.dedup import jaccard_verify, prefix_filter_pairs
-    from ..operators.graph import connected_components_star
-
-    docs = _sampled_docs(spark, sf_dir)
-    cand = prefix_filter_pairs(docs, "doc_id", "text", threshold=0.9)
-    pairs = jaccard_verify(docs, cand, "doc_id", "text", threshold=0.9).select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    comp = connected_components_star(pairs, vertices=docs.select("doc_id"))
-    return comp.select(
-        F.col("node").cast("long").alias("doc_id"),
-        F.col("comp").cast("long").alias("component"),
-    ).orderBy("doc_id")
+    return _near_dup_components(docs).orderBy("doc_id")
 
 
 @register(
@@ -626,39 +480,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "ssjoin_prefix_filter",
-    # exact Jaccard via the inverted-index equi-join (see
-    # _DUCK_JACCARD_PAIRS): identical result set to the O(n²) inequality
-    # join for any positive threshold, but parallelizable in DuckDB — the
-    # nested-loop form stalled the sf0.1 sweep for ~20 min per query
-    oracle="""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3
-               THEN list_transform(range(len(t) - 2),
-                                   i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])
-               ELSE [] END) AS s
-      FROM toks
-    ),
-    sizes AS (SELECT doc_id, LEN(s) AS n FROM sh),
-    ex AS (SELECT doc_id, UNNEST(s) AS shingle FROM sh),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-      FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    p AS (
-      SELECT inter.id_a, inter.id_b,
-             ROUND(CAST(c AS DOUBLE) / (sa.n + sb.n - c), 4) AS jaccard
-      FROM inter
-      JOIN sizes sa ON inter.id_a = sa.doc_id
-      JOIN sizes sb ON inter.id_b = sb.doc_id
-    )
-    SELECT * FROM p WHERE jaccard >= 0.9
-    """,
-)
+@register("ssjoin_prefix_filter", oracle=_pairs_oracle(0.9))
 def q_ssjoin_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 — EXACT set-similarity self-join via prefix filtering
     (SSJoin/PPJoin): candidates from the rare-token prefix equi-join, then
@@ -668,11 +490,7 @@ def q_ssjoin_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline — every step is an equi-shuffle that survives 100 TB. The
     all-pairs oracle agreeing is exactly the recall guarantee under test.
     """
-    from ..operators.dedup import jaccard_verify, prefix_filter_pairs
-
-    docs = load(spark, sf_dir, "documents")
-    cand = prefix_filter_pairs(docs, "doc_id", "text", threshold=0.9)
-    return jaccard_verify(docs, cand, "doc_id", "text", threshold=0.9)
+    return near_dup_pairs(load(spark, sf_dir, "documents"), threshold=0.9)
 
 
 @register(
@@ -767,17 +585,7 @@ def q_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cluster_oracle() -> str:
-    """Reuse dedup_cluster_components' recursive-CTE oracle verbatim — the
-    star variant must produce the identical component assignment. Safe at
-    decoration time: dedup_cluster_components registers earlier in this
-    module."""
-    from ..registry import REGISTRY
-
-    return REGISTRY["dedup_cluster_components"].oracle
-
-
-@register("dedup_cluster_components_star", oracle=_cluster_oracle())
+@register("dedup_cluster_components_star", oracle=_CLUSTER_ORACLE)
 def q_dedup_cluster_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2+ — near-dup clustering with the large-star/small-star contraction
     (Kiveris et al. 2014) instead of min-label propagation: O(log² n)
@@ -787,47 +595,14 @@ def q_dedup_cluster_components_star(spark: SparkSession, sf_dir: str) -> DataFra
     ``dedup_cluster_components`` — agreement across BOTH iterative
     algorithms and the DuckDB recursive CTE triangulates the fixpoint.
     """
-    from ..operators.dedup import jaccard_verify, prefix_filter_pairs
-    from ..operators.graph import connected_components_star
-
     docs = load(spark, sf_dir, "documents")
-    cand = prefix_filter_pairs(docs, "doc_id", "text", threshold=0.9)
-    pairs = jaccard_verify(docs, cand, "doc_id", "text", threshold=0.9).select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    comp = connected_components_star(pairs, vertices=docs.select("doc_id"))
-    return comp.select(
-        F.col("node").cast("long").alias("doc_id"),
-        F.col("comp").cast("long").alias("component"),
-    ).orderBy("doc_id")
+    return _near_dup_components(docs, connected_components_star).orderBy("doc_id")
 
 
 @register(
     "dedup_keep_best",
-    # inverted-index edge generation — identical pair set, parallelizable
-    # (see dedup_cluster_components)
     oracle=f"""
-    WITH RECURSIVE {DUCK_SHINGLES},
-    sizes AS (SELECT doc_id, LEN(s) AS n FROM sh),
-    ex AS (SELECT doc_id, UNNEST(s) AS shingle FROM sh),
-    inter AS (
-      SELECT a.doc_id AS u, b.doc_id AS v, COUNT(*) AS c
-      FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    p AS (
-      SELECT u, v FROM inter
-      JOIN sizes sa ON inter.u = sa.doc_id
-      JOIN sizes sb ON inter.v = sb.doc_id
-      WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.9
-    ),
-    edges AS (SELECT u, v FROM p UNION SELECT v, u FROM p),
-    reach(node, root) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.v, r.root FROM reach r JOIN edges e ON e.u = r.node
-    ),
-    comp AS (SELECT node AS doc_id, MIN(root) AS component FROM reach GROUP BY node),
+    WITH RECURSIVE {DUCK_COMPONENTS},
     ranked AS (
       SELECT c.component, d.doc_id, d.n_chars,
              ROW_NUMBER() OVER (PARTITION BY c.component
@@ -857,103 +632,17 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew; the heavy lifting stays in the pair join, which is bounded by the
     prefix filter.
     """
-    from ..operators.dedup import prefix_filter_pairs
-
     docs = load(spark, sf_dir, "documents")
-    cand = prefix_filter_pairs(docs, "doc_id", "text", threshold=0.9)
-    sh = tracked_persist(  # self-joined below: shingle once, not twice
-        docs.select("doc_id", TX.shingles(F.col("text")).alias("sh"))
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    jac = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh"))) / F.size(
-        F.array_union(F.col("a.sh"), F.col("b.sh"))
-    )
-    pairs = (
-        cand.join(a, cand.id_a == F.col("a.doc_id"))
-        .join(b, cand.id_b == F.col("b.doc_id"))
-        .filter(jac >= 0.9)
-        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-    )
-    comp = connected_components(pairs, vertices=docs.select("doc_id"))
     w = Window.partitionBy("component").orderBy(F.col("n_chars").desc(), F.col("doc_id"))
     return (
-        comp.select(F.col("node").alias("doc_id"), F.col("comp").alias("component"))
+        _near_dup_components(docs)
         .join(docs.select("doc_id", "n_chars"), "doc_id")
         .withColumn("rn", F.row_number().over(w))
         .withColumn("n_docs", F.count(F.lit(1)).over(Window.partitionBy("component")))
         .filter(F.col("rn") == 1)
         .select(
-            F.col("component").cast("long").alias("component"),
-            F.col("doc_id").cast("long").alias("kept_doc_id"),
-            F.col("n_chars").cast("long").alias("kept_chars"),
-            F.col("n_docs").cast("long").alias("n_docs"),
-        )
-        .orderBy("component")
-    )
-
-
-@register(
-    "dedup_keep_best_sampled",
-    oracle=f"""
-    WITH RECURSIVE {_DUCK_SHINGLES_SAMPLED},
-    p AS (
-      SELECT a.doc_id AS u, b.doc_id AS v
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE CAST(LEN(list_intersect(a.s, b.s)) AS DOUBLE)
-            / LEN(list_distinct(list_concat(a.s, b.s))) >= 0.9
-    ),
-    edges AS (SELECT u, v FROM p UNION SELECT v, u FROM p),
-    reach(node, root) AS (
-      SELECT doc_id, doc_id FROM sdocs
-      UNION
-      SELECT e.v, r.root FROM reach r JOIN edges e ON e.u = r.node
-    ),
-    comp AS (SELECT node AS doc_id, MIN(root) AS component FROM reach GROUP BY node),
-    ranked AS (
-      SELECT c.component, d.doc_id, d.n_chars,
-             ROW_NUMBER() OVER (PARTITION BY c.component
-                                ORDER BY d.n_chars DESC, d.doc_id) AS rn,
-             COUNT(*) OVER (PARTITION BY c.component) AS n_docs
-      FROM comp c JOIN sdocs d ON d.doc_id = c.doc_id
-    )
-    SELECT CAST(component AS BIGINT) AS component,
-           CAST(doc_id AS BIGINT) AS kept_doc_id,
-           CAST(n_chars AS BIGINT) AS kept_chars,
-           CAST(n_docs AS BIGINT) AS n_docs
-    FROM ranked WHERE rn = 1 ORDER BY component
-    """,
-)
-def q_dedup_keep_best_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sweep twin of ``dedup_keep_best`` on the deterministic doc_id %% 10
-    subset (see the sampled cluster twins): the recursive-CTE +
-    per-component argmax oracle stays tractable at sf0.1, so the scale
-    sweep hash-checks cluster→canonical selection instead of skipping it."""
-    from ..operators.dedup import prefix_filter_pairs
-
-    docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    cand = prefix_filter_pairs(docs, "doc_id", "text", threshold=0.9)
-    sh = docs.select("doc_id", TX.shingles(F.col("text")).alias("sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    jac = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh"))) / F.size(
-        F.array_union(F.col("a.sh"), F.col("b.sh"))
-    )
-    pairs = (
-        cand.join(a, cand.id_a == F.col("a.doc_id"))
-        .join(b, cand.id_b == F.col("b.doc_id"))
-        .filter(jac >= 0.9)
-        .select(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
-    )
-    comp = connected_components(pairs, vertices=docs.select("doc_id"))
-    w = Window.partitionBy("component").orderBy(F.col("n_chars").desc(), F.col("doc_id"))
-    return (
-        comp.select(F.col("node").alias("doc_id"), F.col("comp").alias("component"))
-        .join(docs.select("doc_id", "n_chars"), "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .withColumn("n_docs", F.count(F.lit(1)).over(Window.partitionBy("component")))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("component").cast("long").alias("component"),
-            F.col("doc_id").cast("long").alias("kept_doc_id"),
+            "component",
+            F.col("doc_id").alias("kept_doc_id"),
             F.col("n_chars").cast("long").alias("kept_chars"),
             F.col("n_docs").cast("long").alias("n_docs"),
         )
@@ -1339,31 +1028,9 @@ _SOM_T = 0.9  # near-dup Jaccard threshold (the ssjoin/minhash contract)
 @register(
     "source_overlap_matrix",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(CASE WHEN len(t) >= 3
-               THEN list_transform(range(len(t) - 2),
-                                   i -> t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])
-               ELSE [] END) AS s
-      FROM toks
-    ),
-    sizes AS (SELECT doc_id, LEN(s) AS n FROM sh),
-    ex AS (SELECT doc_id, UNNEST(s) AS shingle FROM sh),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS c
-      FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    pairs AS (
-      SELECT inter.id_a, inter.id_b
-      FROM inter
-      JOIN sizes sa ON inter.id_a = sa.doc_id
-      JOIN sizes sb ON inter.id_b = sb.doc_id
-      WHERE ROUND(CAST(c AS DOUBLE) / (sa.n + sb.n - c), 4) >= {_SOM_T}
-    ),
-    dir AS (SELECT id_a AS d, id_b AS o FROM pairs
-            UNION ALL SELECT id_b, id_a FROM pairs),
+    WITH {duck_jaccard_pairs(_SOM_T)},
+    dir AS (SELECT id_a AS d, id_b AS o FROM jp
+            UNION ALL SELECT id_b, id_a FROM jp),
     ds AS (SELECT doc_id, source FROM documents),
     e AS (SELECT a.source AS src_a, b.source AS src_b, dir.d
           FROM dir JOIN ds a ON dir.d = a.doc_id
@@ -1403,13 +1070,8 @@ def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     two small integers lands on exact rounding halves far too often to
     survive cross-engine ROUND.
     """
-    from ..operators.dedup import jaccard_verify, prefix_filter_pairs
-
     docs = load(spark, sf_dir, "documents")
-    cand = prefix_filter_pairs(docs, "doc_id", "text", threshold=_SOM_T)
-    pairs = jaccard_verify(docs, cand, "doc_id", "text", threshold=_SOM_T).select(
-        "id_a", "id_b"
-    )
+    pairs = near_dup_pairs(docs, threshold=_SOM_T).select("id_a", "id_b")
     direct = pairs.select(
         F.col("id_a").alias("d"), F.col("id_b").alias("o")
     ).unionByName(pairs.select(F.col("id_b").alias("d"), F.col("id_a").alias("o")))
@@ -1446,33 +1108,10 @@ def _canonical_oracle() -> str:
     from .graph import _PR_ROUNDS, _pagerank_cte
 
     # one WITH block: the pagerank trajectory opens it with the RECURSIVE
-    # keyword the reachability fixpoint needs (threaded parameter, ADVICE
-    # r11), then the near-dup edge CTEs append after it (jp, not p — the
-    # graph prefix already binds p)
-    pr_cte = _pagerank_cte(recursive=True)
+    # keyword the reachability fixpoint needs, then the components append
     return f"""
-    {pr_cte},
-    {DUCK_SHINGLES},
-    sizes AS (SELECT doc_id, LEN(s) AS n FROM sh),
-    ex AS (SELECT doc_id, UNNEST(s) AS shingle FROM sh),
-    inter AS (
-      SELECT a.doc_id AS u, b.doc_id AS v, COUNT(*) AS c
-      FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    jp AS (
-      SELECT u, v FROM inter
-      JOIN sizes sa ON inter.u = sa.doc_id
-      JOIN sizes sb ON inter.v = sb.doc_id
-      WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.9
-    ),
-    uedges AS (SELECT u, v FROM jp UNION SELECT v, u FROM jp),
-    reach(node, root) AS (
-      SELECT doc_id, doc_id FROM documents
-      UNION
-      SELECT e.v, r.root FROM reach r JOIN uedges e ON e.u = r.node
-    ),
-    comp AS (SELECT node AS doc_id, MIN(root) AS component FROM reach GROUP BY node),
+    {_pagerank_cte(recursive=True)},
+    {DUCK_COMPONENTS},
     members AS (
       SELECT c.component, c.doc_id, COALESCE(p.s, 0) AS s
       FROM comp c LEFT JOIN pr{_PR_ROUNDS} p ON p.node = c.doc_id
@@ -1513,17 +1152,13 @@ def q_dedup_canonical_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-component max_by hash aggregate — output is cluster-sized, no new
     shuffle shape, no collect.
     """
-    from ..operators.graph import connected_components
     from .graph import pagerank_scores
 
-    docs = load(spark, sf_dir, "documents")
-    comp = connected_components(
-        near_dup_pairs_90(docs), vertices=docs.select("doc_id")
-    )
+    comp = _near_dup_components(load(spark, sf_dir, "documents"))
     pr = pagerank_scores(spark, sf_dir)
-    members = comp.join(pr, comp.node == pr.vec_id, "left").select(
-        F.col("comp").alias("component"),
-        F.col("node").alias("doc_id"),
+    members = comp.join(pr, comp.doc_id == pr.vec_id, "left").select(
+        "component",
+        "doc_id",
         F.coalesce(F.col("pagerank_x1e6"), F.lit(0)).cast("long").alias("s"),
     )
     best = members.groupBy("component").agg(
@@ -1536,7 +1171,7 @@ def q_dedup_canonical_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         best.filter(F.col("n_members") >= 2)
         .select(
-            F.col("component").cast("long"),
+            "component",
             F.col("b.doc_id").alias("keep_id"),
             F.col("n_members").cast("long"),
             F.col("b.s").alias("keep_pagerank_x1e6"),

@@ -827,17 +827,17 @@ def _rank_strided(nodes: DataFrame, qids: DataFrame) -> DataFrame | None:
     """Every query of ``qids`` entering at ranks 1, 1+c//4, 1+2c//4,
     1+3c//4 of the id-ordered ``nodes`` (deterministic; the ≤ 4-id
     collect is parameter-sized driver traffic), or None when ``nodes`` is
-    empty."""
+    empty. One collect: ``c`` is ``count(*) over ()``, as in the twin."""
     from pyspark.sql import Window
 
-    c = nodes.count()
-    ranks = {1, 1 + c // 4, 1 + (2 * c) // 4, 1 + (3 * c) // 4}
     ids = [
         r.vec_id
         for r in nodes.select(
-            "vec_id", F.row_number().over(Window.orderBy("vec_id")).alias("rn")
+            "vec_id",
+            F.row_number().over(Window.orderBy("vec_id")).alias("rn"),
+            F.count(F.lit(1)).over(Window.partitionBy()).alias("c"),
         )
-        .filter(F.col("rn").isin(*ranks))
+        .filter(F.col("rn").isin(*[F.expr(f"1 + ({k} * c) div 4") for k in range(4)]))
         .collect()
     ]
     return _every_query_at(qids, ids) if ids else None

@@ -645,7 +645,7 @@ def _pq_serving_tables(spark: SparkSession, sf_dir: str):
             assign_full, _ = kmeans_assign_and_probe(
                 emb, emb.limit(1), n_clusters=16, n_probe=1, n_iter=2, cent=cent,
             )
-            cb = pq_codebook(emb, m=8, kc=64, n_iter=1)
+            cb = pq_codebook(emb, kc=64, n_iter=1)
             commit("centroids", cent.select("cid", "centroid"))
             commit("assign", assign_full.select("vec_id", "__cid"))
             commit("codebook", cb.select("s", "c", "cv"))

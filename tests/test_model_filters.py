@@ -210,6 +210,19 @@ def test_pq_lloyd_round_reduces_quantization_error(spark, sf_dir):
     assert e1 < e0  # the Lloyd refinement must tighten the codebook
 
 
+def test_pq_codebook_rejects_vectors_that_are_not_64_wide(spark):
+    """PQ splits 64 dims into 8 subspaces of 8: a 72-dim corpus must fail
+    loudly, not train on its first 64 dims."""
+    from my_favorite_etl_pipeline_spark.operators import similarity as S
+
+    emb = spark.createDataFrame(
+        [(i, [float(i + d) for d in range(72)]) for i in range(20)],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(Exception, match="needs 64-dim vectors, got 72"):
+        S.pq_codebook(emb).collect()
+
+
 def test_curation_funnel_monotone_and_consistent(spark, sf_dir):
     rows = REGISTRY["curation_funnel_report"].fn(spark, sf_dir).collect()
     assert [r.stage for r in rows] == [

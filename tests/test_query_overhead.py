@@ -52,21 +52,49 @@ def test_text_query_job_budget(spark, sf_dir, set_conf, name, budget):
 # three-layer 57, routed 49 jobs. A batched search scored its queries
 # through a broadcast join (one build job per score), every search read
 # the committed edge table it no longer uses, and each routed layer
-# collected the query vectors again.
+# collected the query vectors again. Then topk 24, durable 26, batch 24,
+# two-layer 40, three-layer 54, routed 40: each committed-artifact read
+# inferred its parquet schema (one job per table), and each layer entered
+# at rank strides counted its nodes before collecting them.
 @pytest.mark.parametrize(
     "name, budget",
     [
-        ("graph_ann_search_topk", 24),
+        ("graph_ann_search_topk", 22),
         ("graph_ann_search_durable", 26),
-        ("graph_ann_search_batch", 24),
-        ("hnsw_two_layer_search", 40),
-        ("hnsw_three_layer_search", 54),
-        ("hnsw_batch_routed_search", 40),
+        ("graph_ann_search_batch", 22),
+        ("hnsw_two_layer_search", 36),
+        ("hnsw_three_layer_search", 50),
+        ("hnsw_batch_routed_search", 36),
     ],
 )
 def test_graph_search_job_budget(spark, sf_dir, set_conf, name, budget):
     set_conf(spark, CACHED_PLAN_AQE, "true")
     assert _jobs_to_build_and_run(spark, sf_dir, name) == budget
+
+
+# The Jaccard near-dup family shares one pair function (prefix filter +
+# exact verify). Measured before it on this fixture: cluster 38, star 52,
+# keep-best 40, ssjoin 15, source overlap 31, PageRank canonical 69,
+# leakage split 38, MinHash 11 jobs. Entries that iterate connected
+# components or broadcast vary by a job or two between identical runs, at
+# the parent too (AQE submits query stages as asynchronous jobs), so each
+# budget is a ceiling: the highest count seen over five runs.
+@pytest.mark.parametrize(
+    "name, budget",
+    [
+        ("dedup_cluster_components", 35),
+        ("dedup_cluster_components_star", 49),
+        ("dedup_keep_best", 36),
+        ("ssjoin_prefix_filter", 12),
+        ("source_overlap_matrix", 26),
+        ("dedup_canonical_pagerank", 66),
+        ("leakage_safe_split", 35),
+        ("minhash_near_dups", 11),
+    ],
+)
+def test_near_dup_family_job_budget(spark, sf_dir, set_conf, name, budget):
+    set_conf(spark, CACHED_PLAN_AQE, "true")
+    assert _jobs_to_build_and_run(spark, sf_dir, name) <= budget
 
 
 def test_dsir_weights_aggregate_counts_once_without_a_cross_join(spark, sf_dir):

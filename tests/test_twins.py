@@ -6,15 +6,18 @@ from __future__ import annotations
 import hashlib
 
 import duckdb
+import pytest
 from pyspark.sql import functions as F
 
 from my_favorite_etl_pipeline_spark.functions.exprs import duck_md5_32, spark_md5_32
 from my_favorite_etl_pipeline_spark.functions.text import (
     DUCK_SHINGLES,
     duck_held_out,
+    duck_jaccard_pairs,
     shingles,
     spark_held_out,
 )
+from my_favorite_etl_pipeline_spark.operators.dedup import near_dup_pairs
 from my_favorite_etl_pipeline_spark.sources.tables import load
 
 STRINGS = ("", "abc", "abc#0", "héllo wörld", "0", "the quick brown fox")
@@ -94,3 +97,37 @@ def test_shingle_cte_matches_spark_shingles(spark, sf_dir):
     }
     assert got_spark == got_duck
     assert got_spark[-4] == ["x y x", "y x y"] and got_spark[-2] == []
+
+
+def _two_docs(shared: int, tail: int) -> list[tuple[int, str]]:
+    """Two documents sharing a run of ``shared`` distinct tokens, each
+    followed by ``tail`` tokens of its own."""
+    run = [f"s{i}" for i in range(shared)]
+    return [(d, " ".join(run + [f"t{d}_{i}" for i in range(tail)])) for d in (1, 2)]
+
+
+@pytest.mark.parametrize(
+    "shared, tail, want",
+    [
+        # 1,918 shingles each, 1,817 shared: J = 1817/2019 = 0.89995, which
+        # rounds to 0.9 but is below it — dropped on both engines
+        (1819, 101, []),
+        # 19 shingles each, 18 shared: J = 18/20, exactly the threshold
+        (20, 1, [(1, 2, 0.9)]),
+    ],
+)
+def test_jaccard_pair_twins_filter_before_rounding(spark, shared, tail, want):
+    docs = _two_docs(shared, tail)
+    got_spark = [
+        tuple(r)
+        for r in near_dup_pairs(
+            spark.createDataFrame(docs, "doc_id long, text string"), threshold=0.9
+        ).collect()
+    ]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", docs)
+    got_duck = con.execute(
+        f"WITH {duck_jaccard_pairs(0.9)} SELECT id_a, id_b, ROUND(j, 4) FROM jp"
+    ).fetchall()
+    assert got_spark == got_duck == want
