@@ -9,6 +9,14 @@ Two tiers:
   probe the nearest ``n_probe`` cells, brute-force only inside them. At
   100 TB with √N cells this cuts the scan by ~√N; cells are a partition
   key so a probe touches only its partitions.
+
+The centroid-cell family shares one fixed-point mean
+(:func:`fixed_point_means`), one nearest-cell assignment
+(:func:`assign_cells`) and one query probe (:func:`probe_cells`); the
+k-means/PQ index is trained once and served as committed tables
+(:func:`kmeans_index`). Corpora are ``(vec_id, embedding)`` frames (plus
+``label`` for the label-cell IVF), query sets ``(query_id, embedding)``;
+``functions.vectors`` holds the DuckDB twins.
 """
 
 from __future__ import annotations
@@ -16,7 +24,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd  # module-scope: pandas_udf resolves string type hints here
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..caching import tracked_persist
@@ -25,6 +33,13 @@ from .scaling import ensure_min_partitions
 
 def _dbl(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
+
+
+def _vectors(corpus: DataFrame) -> DataFrame:
+    """``(vec_id, __v, __n)``: the double vector and its norm."""
+    return corpus.select(
+        "vec_id", _dbl(F.col("embedding")).alias("__v"), norm(F.col("embedding")).alias("__n")
+    )
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -127,36 +142,24 @@ def unit_vec(a: Column) -> Column:
     return F.transform(_dbl(a), lambda x: x / norm(a))
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    query: DataFrame,
-    k: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, query: DataFrame, k: int = 20) -> DataFrame:
     """X3 baseline — exact cosine top-k of ``corpus`` against a 1-row query.
 
     The query side is broadcast (it is by definition tiny); the corpus is
     scanned once, map-only, then TakeOrdered(k). Ties broken by id for
     determinism.
     """
-    q = F.broadcast(query.select(F.col(vec_col).alias("__qvec")))
-    sim = F.round(cosine(F.col(vec_col), F.col("__qvec")), 4)
+    q = F.broadcast(query.select(F.col("embedding").alias("__qvec")))
+    sim = F.round(cosine(F.col("embedding"), F.col("__qvec")), 4)
     return (
         ensure_min_partitions(corpus).crossJoin(q)
-        .select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
+        .select(F.col("vec_id"), sim.alias("cos_sim"))
+        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(k)
     )
 
 
-def brute_force_topk_pandas(
-    corpus: DataFrame,
-    query: DataFrame,
-    k: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk_pandas(corpus: DataFrame, query: DataFrame, k: int = 20) -> DataFrame:
     """X3 via Arrow-vectorized Pandas UDF — the same top-k, Python-side.
 
     The when-you-must-use-Python path (SURVEY §2.10): a scalar
@@ -168,7 +171,7 @@ def brute_force_topk_pandas(
     """
     from pyspark.sql.functions import pandas_udf
 
-    qvec = np.array(query.select(vec_col).head()[0], dtype=np.float64)
+    qvec = np.array(query.select("embedding").head()[0], dtype=np.float64)
     qnorm = float(np.sqrt((qvec * qvec).sum()))
 
     @pandas_udf("double")
@@ -179,36 +182,29 @@ def brute_force_topk_pandas(
 
     return (
         ensure_min_partitions(corpus)
-        .select(F.col(id_col), cos_sim(F.col(vec_col)).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
+        .select(F.col("vec_id"), cos_sim(F.col("embedding")).alias("cos_sim"))
+        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(k)
     )
 
 
-def all_pairs_cosine(
-    corpus: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def all_pairs_cosine(corpus: DataFrame, threshold: float) -> DataFrame:
     """X2 (embedding) exact baseline — all pairs with cosine ≥ threshold.
 
     O(n²) self-join on ``id_a < id_b``; norms are precomputed per row so the
     join-side work is one dot product per pair. Fixture-scale ground truth
     for :func:`lsh_pairs_cosine` — never run this beyond ~10⁵ rows.
     """
-    side = ensure_min_partitions(corpus).select(
-        F.col(id_col), _dbl(F.col(vec_col)).alias("__v"), norm(F.col(vec_col)).alias("__n")
-    )
+    side = _vectors(ensure_min_partitions(corpus))
     a, b = side.alias("pa"), side.alias("pb")
     cos = F.round(
         dot(F.col("pa.__v"), F.col("pb.__v")) / (F.col("pa.__n") * F.col("pb.__n")), 4
     )
     return (
-        a.join(b, F.col(f"pa.{id_col}") < F.col(f"pb.{id_col}"))
+        a.join(b, F.col("pa.vec_id") < F.col("pb.vec_id"))
         .select(
-            F.col(f"pa.{id_col}").alias("id_a"),
-            F.col(f"pb.{id_col}").alias("id_b"),
+            F.col("pa.vec_id").alias("id_a"),
+            F.col("pb.vec_id").alias("id_b"),
             cos.alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
@@ -216,12 +212,7 @@ def all_pairs_cosine(
 
 
 def lsh_pairs_cosine(
-    corpus: DataFrame,
-    threshold: float,
-    n_bands: int = 16,
-    band_bits: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, threshold: float, n_bands: int = 16, band_bits: int = 4
 ) -> DataFrame:
     """X2 (embedding) scale path — banded sign-hyperplane LSH + verify.
 
@@ -245,20 +236,20 @@ def lsh_pairs_cosine(
     """
     n_usable = F.greatest(
         F.lit(1),
-        F.least(F.lit(n_bands), F.floor(F.size(F.col(vec_col)) / band_bits)),
+        F.least(F.lit(n_bands), F.floor(F.size(F.col("embedding")) / band_bits)),
     ).cast("int")
     bands = F.transform(
         F.sequence(F.lit(0), n_usable - 1),
         lambda b: F.aggregate(
-            F.slice(_dbl(F.col(vec_col)), b * band_bits + 1, band_bits),
+            F.slice(_dbl(F.col("embedding")), b * band_bits + 1, band_bits),
             F.lit(0).cast("long"),
             lambda acc, x: acc * 2 + F.when(x >= 0, 1).otherwise(0),
         ),
     )
     side = ensure_min_partitions(corpus).select(
-        F.col(id_col),
-        _dbl(F.col(vec_col)).alias("__v"),
-        norm(F.col(vec_col)).alias("__n"),
+        F.col("vec_id"),
+        _dbl(F.col("embedding")).alias("__v"),
+        norm(F.col("embedding")).alias("__n"),
         F.posexplode(bands).alias("__band_idx", "__band_val"),
     )
     a, b = side.alias("pa"), side.alias("pb")
@@ -270,11 +261,11 @@ def lsh_pairs_cosine(
             b,
             (F.col("pa.__band_idx") == F.col("pb.__band_idx"))
             & (F.col("pa.__band_val") == F.col("pb.__band_val"))
-            & (F.col(f"pa.{id_col}") < F.col(f"pb.{id_col}")),
+            & (F.col("pa.vec_id") < F.col("pb.vec_id")),
         )
         .select(
-            F.col(f"pa.{id_col}").alias("id_a"),
-            F.col(f"pb.{id_col}").alias("id_b"),
+            F.col("pa.vec_id").alias("id_a"),
+            F.col("pb.vec_id").alias("id_b"),
             cos.alias("cos_sim"),
         )
         .distinct()
@@ -282,84 +273,96 @@ def lsh_pairs_cosine(
     )
 
 
-def build_ivf_centroids(
-    corpus: DataFrame,
-    cell_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF coarse quantizer: mean vector per cell.
+def build_ivf_centroids(corpus: DataFrame) -> DataFrame:
+    """IVF coarse quantizer: ``(label, centroid)``, the mean vector of each
+    ``label`` cell.
 
     posexplode → per-(cell, dim) mean → re-assemble ordered arrays. Two
     narrow aggregations; output is #cells rows (always broadcastable).
     A production build would k-means-iterate this; one mean step is the
-    same dataflow shape.
-
-    Means use the same fixed-point integer sums as
-    :func:`build_hash_centroids` (``Σ floor(x·1e7) / (count·1e7)``): float
-    ``avg`` is partial-aggregation-order dependent, so centroids would
-    differ in last bits run-to-run AND vs the DuckDB oracle; BIGINT sums
-    are exact and order-free on both engines, which is what lets
-    ``embedding_topk_ivf`` carry a value-hash oracle instead of a
-    rows-only check.
+    same dataflow shape. Fixed-point means (:func:`fixed_point_means`)
+    make the centroids bit-identical across partitionings and against the
+    DuckDB oracle.
     """
     return fixed_point_means(
-        corpus.select(F.col(cell_col), _dbl(F.col(vec_col)).alias("__v")), [cell_col], "__v"
+        corpus.select("label", _dbl(F.col("embedding")).alias("__v")), ["label"], "__v"
     )
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    query: DataFrame,
-    k: int = 20,
-    n_probe: int = 3,
-    id_col: str = "vec_id",
-    cell_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """X3 scale path — probe the ``n_probe`` nearest cells only.
-
-    centroids (broadcast) × query → nearest cells; semi-join the corpus on
-    cell membership (partition pruning when the table is laid out by cell);
-    exact cosine within. Approximate overall, exact within probed cells.
-    """
-    centroids = build_ivf_centroids(corpus, cell_col, vec_col)
-    q = F.broadcast(query.select(F.col(vec_col).alias("__qvec")))
-    probed = F.broadcast(
-        centroids.crossJoin(q)
-        .select(F.col(cell_col), cosine(F.col("centroid"), F.col("__qvec")).alias("c_sim"))
-        .orderBy(F.col("c_sim").desc(), F.col(cell_col))
-        .limit(n_probe)
-        .select(cell_col)
+def probe_cells(cent: DataFrame, queries: DataFrame, n_probe: int) -> DataFrame:
+    """``(query_id, cid, __qv, __qn)``: each query of ``queries(query_id,
+    embedding)`` with its ``n_probe`` nearest cells of ``cent(cid,
+    centroid)`` and its double vector and norm. Cells rank by UNROUNDED
+    centroid cosine, ties to the lower cid. A single query is a batch of
+    one. One row-number window over |Q|·cells scored rows: the centroid
+    table is model-sized and broadcast."""
+    q = queries.select(
+        "query_id", _dbl(F.col("embedding")).alias("__qv"), norm(F.col("embedding")).alias("__qn")
     )
-    sim = F.round(cosine(F.col(vec_col), F.col("__qvec")), 4)
+    csim = dot(F.col("centroid"), F.col("__qv")) / (norm(F.col("centroid")) * F.col("__qn"))
+    rank = F.row_number().over(
+        Window.partitionBy("query_id").orderBy(F.col("__csim").desc(), F.col("cid"))
+    )
     return (
-        ensure_min_partitions(corpus).join(probed, cell_col, "left_semi")
-        .crossJoin(q)
-        .select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
+        q.crossJoin(F.broadcast(cent))
+        .withColumn("__csim", csim)
+        .withColumn("__pr", rank)
+        .filter(F.col("__pr") <= n_probe)
+        .select("query_id", "cid", "__qv", "__qn")
+    )
+
+
+def _query_cosine() -> Column:
+    """A probed row's ``embedding`` cosine to its query, rounded to 4."""
+    return F.round(
+        dot(F.col("embedding"), F.col("__qv")) / (norm(F.col("embedding")) * F.col("__qn")), 4
+    ).alias("cos_sim")
+
+
+def _top_of_one(cand: DataFrame, k: int) -> DataFrame:
+    """The single-query cut over probed rows ``(vec_id, embedding, __qv,
+    __qn)``: TakeOrdered(k) by (cos_sim DESC, vec_id)."""
+    return (
+        cand.select("vec_id", _query_cosine())
+        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(k)
     )
 
 
-def ivf_topk_batch(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_probe: int = 3,
-    id_col: str = "vec_id",
-    cell_col: str = "label",
-    vec_col: str = "embedding",
-    qid_col: str = "query_id",
-) -> DataFrame:
-    """X3 serving shape — a whole query SET through the IVF index in ONE
-    job (no per-query driver loop).
+def _one_query(query: DataFrame) -> DataFrame:
+    return query.select(F.lit(0).cast("long").alias("query_id"), "embedding")
 
-    The single-query :func:`ivf_topk` is the index-design story; real
-    retrieval serves batches, and the batched plan is *different*, not a
-    loop: centroids (O(cells), broadcast) cross the query set (O(|Q|),
-    model-sized) into a per-query probe table; ONE corpus pass joins each
-    probed cell's inverted list against every query probing it (the probe
-    table broadcasts — |Q|·n_probe rows); the per-query top-k cut is
+
+def _label_cells(corpus: DataFrame) -> DataFrame:
+    return build_ivf_centroids(corpus).select(F.col("label").alias("cid"), "centroid")
+
+
+def ivf_topk(corpus: DataFrame, query: DataFrame, k: int = 20, n_probe: int = 3) -> DataFrame:
+    """X3 scale path — probe the ``n_probe`` nearest ``label`` cells only.
+
+    Label centroids (broadcast) × query → nearest cells (:func:`probe_cells`);
+    join the corpus on cell membership (partition pruning when the table is
+    laid out by cell); exact cosine within. Approximate overall, exact
+    within probed cells.
+    """
+    probe = probe_cells(_label_cells(corpus), _one_query(query), n_probe)
+    cand = ensure_min_partitions(corpus).join(
+        F.broadcast(probe), F.col("label") == F.col("cid")
+    )
+    return _top_of_one(cand, k)
+
+
+def ivf_topk_batch(
+    corpus: DataFrame, queries: DataFrame, k: int = 10, n_probe: int = 3
+) -> DataFrame:
+    """X3 serving shape — a whole query SET ``(query_id, embedding)``
+    through the label-cell IVF index in ONE job (no per-query client loop).
+
+    The batched plan is *different*, not a loop: centroids (O(cells),
+    broadcast) cross the query set (O(|Q|), model-sized) into a per-query
+    probe table; ONE corpus pass joins each probed cell's inverted list
+    against every query probing it (the probe table broadcasts —
+    |Q|·n_probe rows); the per-query top-k cut is
     :func:`retrieval.impact_truncate` — the same salted two-phase exact
     top-k that bounds posting lists, with the query id as the "term", so
     a popular cell never lands a corpus-sized candidate list on one
@@ -373,28 +376,15 @@ def ivf_topk_batch(
     """
     from .retrieval import impact_truncate
 
-    centroids = build_ivf_centroids(corpus, cell_col, vec_col)
-    qset = queries.select(
-        F.col(qid_col), _dbl(F.col(vec_col)).alias("__qvec")
-    )
-    wprobe = Window.partitionBy(qid_col).orderBy(
-        F.col("__csim").desc(), F.col(cell_col)
-    )
-    # |Q|·n_probe rows, consumed twice (the cand_max scalar probe below
-    # and the broadcast candidate join): persist so the centroid build +
-    # probe ranking run once, not once per consumer (ADVICE r9)
-    probe = tracked_persist(
-        qset.crossJoin(F.broadcast(centroids))
-        .withColumn("__csim", cosine(F.col("centroid"), F.col("__qvec")))
-        .withColumn("__pr", F.row_number().over(wprobe))
-        .filter(F.col("__pr") <= n_probe)
-        .select(qid_col, cell_col, "__qvec")
-    )
+    # |Q|·n_probe rows, consumed twice (the cand_max probe below and the
+    # broadcast candidate join): persist so the centroid build + probe
+    # ranking run once, not once per consumer
+    probe = tracked_persist(probe_cells(_label_cells(corpus), queries, n_probe))
     # scalar probe: worst-case candidates for one query = Σ probed cell sizes
     cand_max = (
-        probe.select(qid_col, cell_col)
-        .join(corpus.groupBy(cell_col).count(), cell_col)
-        .groupBy(qid_col)
+        probe.select("query_id", "cid")
+        .join(corpus.groupBy(F.col("label").alias("cid")).count(), "cid")
+        .groupBy("query_id")
         .agg(F.sum("count").alias("nc"))
         .agg(F.max("nc"))
         .collect()[0][0]
@@ -402,23 +392,17 @@ def ivf_topk_batch(
     )
     cand = (
         ensure_min_partitions(corpus)
-        .join(F.broadcast(probe), cell_col)
-        .select(
-            F.col(qid_col),
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col), F.col("__qvec")), 4).alias("cos_sim"),
-        )
+        .join(F.broadcast(probe), F.col("label") == F.col("cid"))
+        .select("query_id", "vec_id", _query_cosine())
     )
     topk = impact_truncate(
-        cand, "cos_sim", id_col=id_col, term_col=qid_col, k=k, df_max=float(cand_max)
+        cand, "cos_sim", id_col="vec_id", term_col="query_id", k=k, df_max=float(cand_max)
     )
-    wrank = Window.partitionBy(qid_col).orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    )
+    wrank = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
     return (
         topk.withColumn("rank", F.row_number().over(wrank).cast("int"))
-        .select(qid_col, "rank", id_col, "cos_sim")
-        .orderBy(qid_col, "rank")
+        .select("query_id", "rank", "vec_id", "cos_sim")
+        .orderBy("query_id", "rank")
     )
 
 
@@ -457,102 +441,95 @@ def fixed_point_means(
     )
 
 
-def build_hash_centroids(
-    corpus: DataFrame,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Fixed-k coarse quantizer: mean vector of each of ``k`` hash buckets.
+def build_hash_centroids(corpus: DataFrame, k: int = 16) -> DataFrame:
+    """Fixed-k coarse quantizer: ``(cid, centroid)``, the mean vector of
+    each of ``k`` hash buckets ``cid = vec_id % k``.
 
-    ``bucket = id % k`` — k is a PARAMETER, independent of corpus size, so
-    the centroid table is O(k) rows (always broadcastable) and any
-    nearest-centroid assignment against it is O(n·k), never O(n²). This is
-    the scale-honest centroid source for SemDeDup/IVF-style operators; a
-    production build k-means-iterates from these buckets (same dataflow:
-    see :func:`kmeans_iterate`), which tightens clusters but never changes
-    the cost shape.
-
-    Means use fixed-point integer sums (``Σ floor(x·1e7) / (count·1e7)``):
-    float summation is order-dependent and Spark's partial aggregation
-    order is nondeterministic, so a float mean could flip last bits vs the
-    DuckDB oracle; BIGINT summation is exact and order-free on both.
+    k is a PARAMETER, independent of corpus size, so the centroid table is
+    O(k) rows (always broadcastable) and any nearest-centroid assignment
+    against it is O(n·k), never O(n²). This is the scale-honest centroid
+    source for SemDeDup/IVF-style operators and the init of
+    :func:`kmeans_iterate`, which tightens clusters but never changes the
+    cost shape.
     """
     return fixed_point_means(
         corpus.select(
-            (F.col(id_col) % k).cast("long").alias("cid"), _dbl(F.col(vec_col)).alias("__v")
+            (F.col("vec_id") % k).cast("long").alias("cid"), _dbl(F.col("embedding")).alias("__v")
         ),
         ["cid"],
         "__v",
     )
 
 
-def kmeans_iterate(
-    corpus: DataFrame,
-    k: int = 16,
-    n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Lloyd k-means refinement of :func:`build_hash_centroids`.
+def assign_cells(corpus: DataFrame, cent: DataFrame, top: int = 1) -> DataFrame:
+    """``(vec_id, cid, cos_c, __v, __n)``: every vector of ``corpus(vec_id,
+    embedding)`` with its ``top`` nearest cells of ``cent(cid, centroid)``
+    (one row each), the cosine to that cell rounded to 4 places, and the
+    double vector and norm for downstream joins. Ties go to the lower cid.
 
-    Each round: broadcast the k centroids, assign every vector to its
-    nearest (one max_by aggregate, same shape as :func:`semdedup_pairs`
-    assignment), recompute fixed-point means per assigned cluster. Cost per
-    round is one O(n·k) map + two narrow aggregations — the round count is
-    a constant (pretraining-corpus quantizers converge usefully in 2-5
-    rounds; SemDeDup uses k-means centroids exactly this way), so the
-    total stays O(n·k·iters) with an O(k) broadcast. Empty clusters keep
-    their previous centroid (standard Lloyd fallback) via left join.
+    One broadcast crossJoin of the O(k) centroid table and ONE aggregate:
+    ``max_by`` at top 1, a k-bounded collect/sort/slice of the (cos, cid)
+    scores above it. Both collapse the n·k scored rows map-side before the
+    only shuffle; there is no per-vector window, and the vector itself is
+    never replicated into the collected scores.
+    """
+    cells = F.broadcast(
+        cent.select(
+            F.col("cid").alias("__cid"),
+            F.col("centroid").alias("__cv"),
+            norm(F.col("centroid")).alias("__cn"),
+        )
+    )
+    cos_c = F.round(dot(F.col("__v"), F.col("__cv")) / (F.col("__n") * F.col("__cn")), 4)
+    # descending struct order = cos DESC, cid ASC
+    score = F.struct(cos_c.alias("c"), (-F.col("__cid")).alias("nc"), F.col("__cid").alias("cid"))
+    scored = _vectors(ensure_min_partitions(corpus)).crossJoin(cells).select(
+        "vec_id", "__v", "__n", score.alias("__s")
+    )
+    if top == 1:
+        best = scored.groupBy("vec_id").agg(
+            F.max_by(F.struct("__s", "__v", "__n"), F.col("__s")).alias("__b")
+        )
+        picked = best.select("vec_id", F.col("__b.__s").alias("__t"), "__b.__v", "__b.__n")
+    else:
+        tops = scored.groupBy("vec_id").agg(
+            F.slice(F.reverse(F.sort_array(F.collect_list("__s"))), 1, top).alias("__ts"),
+            F.first("__v").alias("__v"),
+            F.first("__n").alias("__n"),
+        )
+        picked = tops.select("vec_id", F.explode("__ts").alias("__t"), "__v", "__n")
+    return picked.select(
+        "vec_id", F.col("__t.cid").alias("cid"), F.col("__t.c").alias("cos_c"), "__v", "__n"
+    )
+
+
+def kmeans_iterate(corpus: DataFrame, k: int = 16, n_iter: int = 2) -> DataFrame:
+    """``(cid, centroid)``: Lloyd k-means refinement of
+    :func:`build_hash_centroids`.
+
+    Each round assigns every vector to its nearest centroid
+    (:func:`assign_cells`) and recomputes fixed-point means per cell. Cost
+    per round is one O(n·k) map + two narrow aggregations; the round count
+    is a constant (quantizers converge usefully in 2-5 rounds; SemDeDup
+    uses k-means centroids exactly this way), so the total stays
+    O(n·k·iters) with an O(k) broadcast. Empty clusters keep their
+    previous centroid (standard Lloyd fallback) via left join.
 
     Converged rounds are skipped: after each round a digest of the O(k·d)
-    centroid table (two scalar aggregates — the :func:`graph._edge_digest`
-    probe pattern) is compared to the previous round's; identical digests
-    mean every later round is the identity, so the loop stops early. The
-    probe is safe for hash-checked oracles that unroll a FIXED round count
-    in SQL — skipped rounds are no-ops by construction. Probing is gated
-    on ``n_iter >= 3`` (r15-opt): below that the probes' construction-time
-    collect jobs cost more than the one round they could skip, and running
-    a converged round anyway is bit-identical. Each round's
+    centroid table is compared to the previous round's, and identical
+    digests mean every later round is the identity. Skipped rounds are
+    no-ops, so oracles that unroll a FIXED round count in SQL agree. Each
+    digest is a collect() job at construction time, so probing costs
+    n_iter + 1 jobs to skip at most n_iter − 1 rounds: it runs only from
+    ``n_iter >= 3``, where skipping a converged tail can win. Each round's
     centroid table is tracked_persist'ed (k rows) so the digest probe and
-    the next round share one computation; construction therefore launches
-    small jobs (see the registry LAZINESS note).
+    the next round share one computation.
     """
-    cent = tracked_persist(
-        build_hash_centroids(corpus, k=k, id_col=id_col, vec_col=vec_col)
-    )
-    side = corpus.select(F.col(id_col), _dbl(F.col(vec_col)).alias("__v"))
-    # Fixpoint probing is gated on the round count (r15-opt, guide §1.2
-    # per-task work): each digest is a collect() JOB at plan-construction
-    # time, so probing costs n_iter+1 driver round-trips to skip at most
-    # n_iter−1 converged rounds. At the serving tiers' n_iter ≤ 2 that is
-    # 3 jobs (~0.9 s/call measured) to maybe save one, a strict loss —
-    # and a skipped round is the identity by definition, so running it
-    # anyway yields bit-identical centroids. Probe only when the round
-    # count is big enough that skipping the converged tail can win.
+    cent = tracked_persist(build_hash_centroids(corpus, k=k))
     use_probe = n_iter >= 3
     digest = _centroid_digest(cent) if use_probe else None
     for _ in range(n_iter):
-        c = F.broadcast(
-            cent.select(
-                F.col("cid").alias("__cid"),
-                F.col("centroid").alias("__cv"),
-                norm(F.col("centroid")).alias("__cn"),
-            )
-        )
-        cos_c = F.round(dot(F.col("__v"), F.col("__cv")) / (norm(F.col("__v")) * F.col("__cn")), 4)
-        assigned = (
-            side.crossJoin(c)
-            .withColumn("__cos_c", cos_c)
-            .groupBy(id_col)
-            .agg(
-                F.max_by(
-                    F.struct(F.col("__cid"), F.col("__v")),
-                    F.struct(F.col("__cos_c").alias("c"), (-F.col("__cid")).alias("nc")),
-                ).alias("__best")
-            )
-            .select(F.col("__best.__cid").alias("cid"), F.col("__best.__v").alias("__v"))
-        )
+        assigned = assign_cells(corpus, cent).select("cid", "__v")
         refreshed = fixed_point_means(assigned, ["cid"], "__v")
         cent = tracked_persist(
             cent.select("cid", F.col("centroid").alias("__prev"))
@@ -580,121 +557,62 @@ def _centroid_digest(cent: DataFrame) -> tuple[int, int]:
     return row.n, row.h
 
 
+#: the family's trained index: 16 k-means cells after 2 Lloyd rounds, and a
+#: product-quantization codebook of 64 codes per subspace after 1 round
+INDEX_CELLS, INDEX_ROUNDS, INDEX_CODES = 16, 2, 64
+
+
+def kmeans_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The trained index over ``sf_dir``'s embeddings as committed tables:
+    ``centroids(cid, centroid)`` (:func:`kmeans_iterate`), ``assign(vec_id,
+    cid)`` (:func:`assign_cells` against them: the "assignment is a stored
+    partition column" posture) and ``codebook(s, c, cv)``
+    (:func:`pq_codebook`).
+
+    Training runs once per (corpus, partitioning) in a process and is
+    committed through VersionedMart; every serving entry reads the tables,
+    which cache pressure cannot evict. Memo, key and lock rules:
+    :mod:`..artifacts`.
+    """
+    from .. import artifacts
+    from ..caching import materialized_scope
+    from ..sources.tables import load
+
+    def build(commit) -> None:
+        emb = load(spark, sf_dir, "embeddings")
+        # the commits materialize the parquet; the scope releases the
+        # training persists
+        with materialized_scope():
+            cent = commit("centroids", kmeans_iterate(emb, k=INDEX_CELLS, n_iter=INDEX_ROUNDS))
+            commit("assign", assign_cells(emb, cent).select("vec_id", "cid"))
+            commit("codebook", pq_codebook(emb, kc=INDEX_CODES, n_iter=1))
+
+    marts = artifacts.memoized_commit(spark, "kmeans_index", sf_dir, build=build)
+    return tuple(marts[n].read(spark) for n in ("centroids", "assign", "codebook"))
+
+
 def ivf_topk_kmeans(
     corpus: DataFrame,
     query: DataFrame,
+    cent: DataFrame,
+    assign: DataFrame,
     k: int = 20,
-    n_clusters: int = 16,
     n_probe: int = 3,
-    n_iter: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """X3 scale path without a pre-existing cell column: IVF over
-    :func:`kmeans_iterate` centroids (fixed ``n_clusters``, hash-bucket
-    init + Lloyd refinement) instead of :func:`ivf_topk`'s requirement
-    that the corpus already carries a ``label`` cell.
+    """X3 scale path without a cell column in the corpus: IVF over a
+    trained k-means index (``cent(cid, centroid)``, ``assign(vec_id,
+    cid)``, see :func:`kmeans_index`).
 
-    Dataflow: centroids (O(n_clusters), broadcast) → assign every vector
-    to its nearest via ONE max_by aggregate (same shape as
-    :func:`semdedup_pairs` assignment) → score centroids against the query
-    and keep the ``n_probe`` best cells → exact cosine only inside probed
-    cells → TakeOrdered(k). At 100 TB the assignment is precomputed once
-    and stored as a partition column (then this reduces to
-    :func:`ivf_topk` with partition pruning); recomputing it per query,
-    as here, is still one O(n·n_clusters) map + one shuffle.
+    Probe the query's ``n_probe`` nearest cells (:func:`probe_cells`),
+    take their members from the stored assignment, score exact cosine only
+    inside them → TakeOrdered(k). Serving is table reads plus the O(k)
+    query-side probe; at 100 TB the assignment is a partition column and
+    the member join becomes partition pruning (:func:`ivf_topk`'s plan).
     """
-    assign, probed = kmeans_assign_and_probe(
-        corpus, query, n_clusters=n_clusters, n_probe=n_probe, n_iter=n_iter,
-        id_col=id_col, vec_col=vec_col,
-    )
-    q = F.broadcast(query.select(_dbl(F.col(vec_col)).alias("__qv"), norm(F.col(vec_col)).alias("__qn")))
-    sim = F.round(dot(F.col("__v"), F.col("__qv")) / (F.col("__n") * F.col("__qn")), 4)
-    return (
-        assign.join(probed, "__cid", "left_semi")
-        .crossJoin(q)
-        .select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def kmeans_assign_and_probe(
-    corpus: DataFrame,
-    query: DataFrame,
-    n_clusters: int,
-    n_probe: int,
-    n_iter: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cent: DataFrame | None = None,
-    assign: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """The IVF coarse stage shared by :func:`ivf_topk_kmeans` and
-    :func:`ivf_pq_topk` (factored r7 so the two cannot drift): k-means
-    centroids (hash init + ``n_iter`` digest-early-stopped Lloyd rounds),
-    per-vector nearest-cell assignment via ONE max_by aggregate (rounded
-    cosine, lowest-cid ties), and the query's ``n_probe`` best cells
-    (UNROUNDED centroid cosine, cid ties — the original ivf_topk contract
-    the ivf_kmeans oracle replays). Returns (assign, probed):
-    ``(id, __cid, __v, __n)`` and the broadcastable ``(__cid)`` probe set.
-
-    ``cent``/``assign`` (r16-opt, guide §5 "cache what is reused"): a
-    caller holding the TRAINED index as committed tables (the
-    ``_pq_serving_tables`` mart memo — the durable-graph posture) passes
-    the ``(cid, centroid)`` table and/or the ``(id, __cid)`` assignment;
-    training (and for ``assign`` the corpus-wide nearest-cell aggregate)
-    is then skipped entirely — serving becomes table reads + the O(k)
-    query-side probe. A passed ``assign`` is returned AS-IS (no
-    ``__v``/``__n`` re-attach): the only such caller (:func:`ivf_pq_topk`)
-    consumes ids alone; exact-scoring callers must train inline or pass
-    an assign that carries the vectors.
-    """
-    if cent is None:
-        cent = kmeans_iterate(
-            corpus, k=n_clusters, n_iter=n_iter, id_col=id_col, vec_col=vec_col
-        )
-    cent = F.broadcast(
-        cent.select(
-            F.col("cid").alias("__cid"),
-            F.col("centroid").alias("__cv"),
-            norm(F.col("centroid")).alias("__cn"),
-        )
-    )
-    if assign is None:
-        side = ensure_min_partitions(corpus).select(
-            F.col(id_col), _dbl(F.col(vec_col)).alias("__v"), norm(F.col(vec_col)).alias("__n")
-        )
-        cos_c = F.round(dot(F.col("__v"), F.col("__cv")) / (F.col("__n") * F.col("__cn")), 4)
-        assign = (
-            side.crossJoin(cent)
-            .withColumn("__cos_c", cos_c)
-            .groupBy(id_col)
-            .agg(
-                F.max_by(
-                    F.struct(F.col("__cid"), F.col("__v"), F.col("__n")),
-                    F.struct(F.col("__cos_c").alias("c"), (-F.col("__cid")).alias("nc")),
-                ).alias("__best")
-            )
-            .select(
-                F.col(id_col),
-                F.col("__best.__cid").alias("__cid"),
-                F.col("__best.__v").alias("__v"),
-                F.col("__best.__n").alias("__n"),
-            )
-        )
-    q = F.broadcast(query.select(_dbl(F.col(vec_col)).alias("__qv"), norm(F.col(vec_col)).alias("__qn")))
-    probed = F.broadcast(
-        cent.crossJoin(q)
-        .select(
-            "__cid",
-            (dot(F.col("__cv"), F.col("__qv")) / (F.col("__cn") * F.col("__qn"))).alias("__c_sim"),
-        )
-        .orderBy(F.col("__c_sim").desc(), F.col("__cid"))
-        .limit(n_probe)
-        .select("__cid")
-    )
-    return assign, probed
+    probe = probe_cells(cent, _one_query(query), n_probe)
+    members = assign.join(F.broadcast(probe), "cid").select("vec_id", "__qv", "__qn")
+    cand = ensure_min_partitions(corpus).join(members, "vec_id")
+    return _top_of_one(cand, k)
 
 
 def resolve_cell_count(
@@ -707,9 +625,9 @@ def resolve_cell_count(
     """Resolve a cell/centroid count: an int passes through; ``"auto"``
     scales it with the corpus — ``k = clamp(ceil(n / target_cell_size))``.
 
-    THE fixed-k scale hole (VERDICT r8 item 6): every within-cell candidate
-    join (SemDeDup, kNN-graph, IVF verify) costs Σ|cell|² ≈ n²/k rows — with
-    k FIXED that is quadratic in n, silently. Holding the TARGET CELL SIZE
+    THE fixed-k scale hole: every within-cell candidate join (SemDeDup,
+    kNN-graph, IVF verify) costs Σ|cell|² ≈ n²/k rows — with k FIXED that
+    is quadratic in n, silently. Holding the TARGET CELL SIZE
     fixed instead makes k ∝ n, so per-cell work stays O(target²) and the
     total candidate count is O(n·target) — linear. The centroid table grows
     O(n/target) rows, broadcast-safe far past 100 TB (1e9 docs / 64 ≈ 16 M
@@ -728,61 +646,20 @@ def resolve_cell_count(
     return int(k)
 
 
-def nearest_centroid(
-    corpus: DataFrame,
-    k=8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    target_cell_size: int = 64,
-) -> DataFrame:
-    """Nearest-of-k-centroids assignment, the shared primitive under
-    SemDeDup and prototype pruning: ``(id, cluster, proto_sim, __v, __n)``
-    where ``proto_sim`` is the rounded cosine to the OWN cluster centroid
-    (the "prototypicality" D4-style pruning ranks on) and ``__v``/``__n``
-    are the double vector + norm for downstream pair joins.
+def nearest_centroid(corpus: DataFrame, k=8, target_cell_size: int = 64) -> DataFrame:
+    """``(vec_id, cluster, proto_sim, __v, __n)``: every vector's nearest of
+    ``k`` hash-bucket centroids (:func:`build_hash_centroids`,
+    :func:`assign_cells`), the primitive under SemDeDup, prototype pruning
+    and the kNN graph. ``proto_sim`` is the rounded cosine to the vector's
+    own centroid (the "prototypicality" D4-style pruning ranks on).
 
-    One broadcast-crossJoin of the O(k) fixed-point centroid table
-    (:func:`build_hash_centroids`) + ONE ``max_by`` aggregate — the n·k
-    scored rows collapse map-side before the only shuffle; no per-vector
-    window. Deterministic: rounded cosine, lowest-cid tie-break — the
-    same (cos DESC, cid ASC) order the top-m branch of
-    :func:`semdedup_pairs` applies.
-
-    ``k`` may be ``"auto"`` (r9): resolved via :func:`resolve_cell_count`
-    so cell COUNT scales with the corpus and cell SIZE stays fixed — the
+    ``k`` may be ``"auto"``: resolved via :func:`resolve_cell_count` so
+    cell COUNT scales with the corpus and cell SIZE stays fixed — the
     within-cell Σ|cell|² joins downstream stay linear in n.
     """
     k = resolve_cell_count(corpus, k, target_cell_size=target_cell_size)
-    side = ensure_min_partitions(corpus).select(
-        F.col(id_col), _dbl(F.col(vec_col)).alias("__v"), norm(F.col(vec_col)).alias("__n")
-    )
-    cent = build_hash_centroids(corpus, k=k, id_col=id_col, vec_col=vec_col).select(
-        F.col("cid").alias("__cid"),
-        F.col("centroid").alias("__cv"),
-        norm(F.col("centroid")).alias("__cn"),
-    )
-    cos_c = F.round(
-        dot(F.col("__v"), F.col("__cv")) / (F.col("__n") * F.col("__cn")), 4
-    )
-    return (
-        side.crossJoin(F.broadcast(cent))
-        .withColumn("__cos_c", cos_c)
-        .groupBy(id_col)
-        .agg(
-            F.max_by(
-                F.struct(
-                    F.col("__cid"), F.col("__cos_c"), F.col("__v"), F.col("__n")
-                ),
-                F.struct(F.col("__cos_c").alias("c"), (-F.col("__cid")).alias("nc")),
-            ).alias("__best")
-        )
-        .select(
-            F.col(id_col),
-            F.col("__best.__cid").alias("cluster"),
-            F.col("__best.__cos_c").alias("proto_sim"),
-            F.col("__best.__v").alias("__v"),
-            F.col("__best.__n").alias("__n"),
-        )
+    return assign_cells(corpus, build_hash_centroids(corpus, k=k)).select(
+        "vec_id", F.col("cid").alias("cluster"), F.col("cos_c").alias("proto_sim"), "__v", "__n"
     )
 
 
@@ -921,12 +798,7 @@ def score_id_pairs(
 
 
 def semdedup_pairs(
-    corpus: DataFrame,
-    threshold: float,
-    k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    assign_top: int = 1,
+    corpus: DataFrame, threshold: float, k: int = 8, assign_top: int = 1
 ) -> DataFrame:
     """X2 (embedding, scale path) — SemDeDup-style semantic dedup
     (Abbas et al. 2023, "SemDeDup: Data-efficient learning at web-scale
@@ -937,84 +809,33 @@ def semdedup_pairs(
     per-cluster joins are plain equi-shuffles on the cluster id. Centroids
     come from :func:`build_hash_centroids` with FIXED k — the centroid
     table is O(k) (broadcast never grows with the corpus) and assignment
-    is O(n·k), not the O(n²/100) a corpus-sampled centroid set degrades
-    to. Assignment itself is ONE aggregate: broadcast-crossJoin the k
-    centroids, then ``max_by`` on (rounded cosine, −centroid_id) — partial
-    map-side combine collapses the n·k scored rows to n before the only
-    shuffle, and there is no per-vector window. Deterministic on both
-    engines: fixed-point centroid means, rounded cosine, id tie-break.
+    (:func:`assign_cells`) is O(n·k), not the O(n²/100) a corpus-sampled
+    centroid set degrades to. Deterministic on both engines: fixed-point
+    centroid means, rounded cosine, id tie-break.
 
     Recall trades off against k (only within-cluster pairs are found, and
     borderline pairs straddle boundaries): pick k for the target cluster
     size (n/k vectors each), not for recall — production SemDeDup accepts
     this by design. :func:`kmeans_iterate` centroids recover a few points
-    of recall at the same k if needed, and ``assign_top=2`` (r7) applies
-    the standard boundary-recall fix: each vector joins its TOP-2 nearest
+    of recall at the same k if needed, and ``assign_top=2`` applies the
+    standard boundary-recall fix: each vector joins its TOP-2 nearest
     clusters, so a borderline pair is found whenever the two vectors share
     EITHER of their two cells. Cost model: assignment output doubles to
     2n rows and the within-cluster join quadruples to ≈ 4n²/k — the same
     Σ|cluster|² shape, still nothing quadratic in n — and pairs caught in
-    both shared cells dedup through one (id_a, id_b) aggregate. For
-    ``assign_top > 1`` the per-vector top-m runs as ONE collect_list(k
-    structs)+sort_array+slice aggregate over the (cos, cid) scores only
-    (map-side combinable, k-bounded — no per-vector window, and the
-    64-dim vector itself is never replicated across the k scored rows).
+    both shared cells dedup through one (id_a, id_b) aggregate.
 
-    ``k`` may be ``"auto"`` (r10): resolved ONCE here via
+    ``k`` may be ``"auto"``: resolved ONCE here via
     :func:`resolve_cell_count` so the centroid build and the assignment
     see the same count, cell COUNT scales with the corpus, and the
-    Σ|cluster|² join stays linear in n (the registered auto-k twin is the
-    benched scale-safe plan).
+    Σ|cluster|² join stays linear in n.
     """
     k = resolve_cell_count(corpus, k)
-    side = ensure_min_partitions(corpus).select(
-        F.col(id_col), _dbl(F.col(vec_col)).alias("__v"), norm(F.col(vec_col)).alias("__n")
-    )
-    cent = build_hash_centroids(corpus, k=k, id_col=id_col, vec_col=vec_col).select(
-        F.col("cid").alias("__cid"),
-        F.col("centroid").alias("__cv"),
-        norm(F.col("centroid")).alias("__cn"),
-    )
-    cos_c = F.round(
-        dot(F.col("__v"), F.col("__cv")) / (F.col("__n") * F.col("__cn")), 4
-    )
-    if assign_top == 1:
-        assign = nearest_centroid(corpus, k=k, id_col=id_col, vec_col=vec_col).select(
-            F.col(id_col), F.col("cluster"), F.col("__v"), F.col("__n")
+    assign = tracked_persist(
+        assign_cells(corpus, build_hash_centroids(corpus, k=k), assign_top).select(
+            "vec_id", F.col("cid").alias("cluster"), "__v", "__n"
         )
-    else:
-        # top-m assignment: one collect_list(k (cos, -cid, cid) structs) +
-        # sort_array + slice aggregate — k-bounded per vector, map-side
-        # combinable; descending struct order = cos DESC, cid ASC, the
-        # same tie-break the m=1 max_by applies. The vector/norm ride the
-        # group as any-row values (identical on every scored row).
-        scored = side.crossJoin(F.broadcast(cent)).select(
-            F.col(id_col),
-            F.col("__v"),
-            F.col("__n"),
-            F.struct(
-                cos_c.alias("c"), (-F.col("__cid")).alias("nc"), F.col("__cid").alias("cid")
-            ).alias("__s"),
-        )
-        assign = (
-            scored.groupBy(id_col)
-            .agg(
-                F.slice(
-                    F.reverse(F.sort_array(F.collect_list("__s"))), 1, assign_top
-                ).alias("__tops"),
-                F.first("__v").alias("__v"),
-                F.first("__n").alias("__n"),
-            )
-            .select(
-                F.col(id_col),
-                F.explode("__tops").alias("__t"),
-                F.col("__v"),
-                F.col("__n"),
-            )
-            .select(
-                F.col(id_col), F.col("__t.cid").alias("cluster"), F.col("__v"), F.col("__n")
-            )
-        )
+    )
     # Pair join, skew-aware: the natural key (cluster) has only k distinct
     # values, so a plain equi-join runs k tasks no matter how many cores
     # exist and each task does |cluster|²/2 dot products. Salting spreads
@@ -1024,10 +845,9 @@ def semdedup_pairs(
     # k·B groups, and per-group work drops to |cluster|²/B. The persist
     # above keeps the B-fold replication from recomputing the assignment
     # aggregate per branch.
-    assign = tracked_persist(assign)
     B = 8
     a = assign.withColumn("__b", F.explode(F.sequence(F.lit(0), F.lit(B - 1)))).alias("sa")
-    b = assign.withColumn("__b", F.pmod(F.xxhash64(F.col(id_col)), F.lit(B)).cast("int")).alias(
+    b = assign.withColumn("__b", F.pmod(F.xxhash64(F.col("vec_id")), F.lit(B)).cast("int")).alias(
         "sb"
     )
     cos = F.round(
@@ -1038,12 +858,12 @@ def semdedup_pairs(
             b,
             (F.col("sa.cluster") == F.col("sb.cluster"))
             & (F.col("sa.__b") == F.col("sb.__b"))
-            & (F.col(f"sa.{id_col}") < F.col(f"sb.{id_col}")),
+            & (F.col("sa.vec_id") < F.col("sb.vec_id")),
         )
         .select(
             F.col("sa.cluster").alias("cluster"),
-            F.col(f"sa.{id_col}").alias("id_a"),
-            F.col(f"sb.{id_col}").alias("id_b"),
+            F.col("sa.vec_id").alias("id_a"),
+            F.col("sb.vec_id").alias("id_b"),
             cos.alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
@@ -1063,14 +883,14 @@ def semdedup_pairs(
 _PQ_M, _PQ_DSUB = 8, 8
 
 
-def _pq_subvectors(rows: DataFrame, vec_col: str) -> DataFrame:
-    """``rows`` with ``vec_col`` (the raw vector) replaced by one row per
+def _pq_subvectors(rows: DataFrame) -> DataFrame:
+    """``rows`` with ``embedding`` (the raw vector) replaced by one row per
     contiguous 8-dim subspace: ``(*other columns, s, vsub)``, ``vsub`` the
     slice of the UNIT vector. A vector that is not 64 wide fails the query
     (``raise_error`` inside the projection, so the check costs no job)
     instead of training on its first 64 dims."""
     width = _PQ_M * _PQ_DSUB
-    vec = F.col(vec_col)
+    vec = F.col("embedding")
     unit = F.when(F.size(vec) == width, unit_vec(vec)).otherwise(
         F.raise_error(
             F.concat(
@@ -1079,7 +899,7 @@ def _pq_subvectors(rows: DataFrame, vec_col: str) -> DataFrame:
             )
         )
     )
-    keep = [c for c in rows.columns if c != vec_col]
+    keep = [c for c in rows.columns if c != "embedding"]
     return rows.select(*keep, unit.alias("__u")).select(
         *keep,
         F.inline(
@@ -1094,26 +914,20 @@ def _pq_subvectors(rows: DataFrame, vec_col: str) -> DataFrame:
     )
 
 
-def pq_codebook(
-    corpus: DataFrame,
-    kc: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_iter: int = 1,
-) -> DataFrame:
+def pq_codebook(corpus: DataFrame, kc: int = 16, n_iter: int = 1) -> DataFrame:
     """Product-quantization codebook (Jégou et al. 2011, "Product
     quantization for nearest neighbor search"): split the 64-dim vector into
     m = 8 contiguous subspaces and learn ``kc`` centroids per subspace.
     Returns ``(s, c, cv)`` — subspace index, code id, centroid (8 doubles).
 
     Same deterministic recipe as :func:`build_hash_centroids`: code buckets
-    init as ``id % kc`` and per-dim means use fixed-point BIGINT sums, then
+    init as ``vec_id % kc`` and per-dim means use fixed-point BIGINT sums, then
     ``n_iter`` Lloyd rounds (:func:`_pq_lloyd_round`) tighten each
     subspace's codes — all bit-identical across engines and partitionings.
     Output is m·kc rows — O(1) in the corpus, always broadcastable: the
     codebook is a model artifact, not data.
 
-    Persistence (optimization r15, guide §3.3/§5): the codebook is
+    Persistence: the codebook is
     ``tracked_persist``-ed at init and after every Lloyd round. Each round
     references the previous codebook TWICE (assignment join + empty-code
     coalesce) and downstream consumers fold it twice more (``cbn`` +
@@ -1127,7 +941,7 @@ def pq_codebook(
     cb = tracked_persist(
         fixed_point_means(
             _pq_subvectors(
-                corpus.select((F.col(id_col) % kc).cast("int").alias("c"), vec_col), vec_col
+                corpus.select((F.col("vec_id") % kc).cast("int").alias("c"), "embedding")
             ),
             ["s", "c"],
             "vsub",
@@ -1135,19 +949,11 @@ def pq_codebook(
         )
     )
     for _ in range(n_iter):
-        cb = tracked_persist(
-            _pq_lloyd_round(corpus, cb, kc=kc, id_col=id_col, vec_col=vec_col)
-        )
+        cb = tracked_persist(_pq_lloyd_round(corpus, cb))
     return cb
 
 
-def _pq_lloyd_round(
-    corpus: DataFrame,
-    cb: DataFrame,
-    kc: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
+def _pq_lloyd_round(corpus: DataFrame, cb: DataFrame) -> DataFrame:
     """One Lloyd refinement per subspace: re-assign every subvector to its
     nearest code (fixed-point BIGINT distance, ties → smaller code), then
     recompute fixed-point means per (subspace, code). Codes that lose all
@@ -1160,7 +966,7 @@ def _pq_lloyd_round(
     m-per-row explode, a broadcast join against the m·kc codebook, and two
     narrow aggregates. Training cost, not scoring cost.
     """
-    vs = _pq_subvectors(corpus.select(id_col, vec_col), vec_col)
+    vs = _pq_subvectors(corpus.select("vec_id", "embedding"))
     dfx = F.floor(
         F.lit(PQ_SCALE)
         * F.aggregate(
@@ -1171,8 +977,8 @@ def _pq_lloyd_round(
     ).cast("long")
     assigned = (
         vs.join(F.broadcast(cb), "s")
-        .select(id_col, "s", "vsub", F.col("c"), dfx.alias("dfx"))
-        .groupBy(id_col, "s")
+        .select("vec_id", "s", "vsub", F.col("c"), dfx.alias("dfx"))
+        .groupBy("vec_id", "s")
         .agg(
             F.min_by(
                 F.struct(F.col("c"), F.col("vsub")),
@@ -1199,47 +1005,34 @@ PQ_SCALE = 10_000_000.0
 def pq_adc_topk(
     corpus: DataFrame,
     query: DataFrame,
+    cb: DataFrame,
     k: int = 10,
     shortlist: int = 50,
-    kc: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train: DataFrame | None = None,
-    cb: DataFrame | None = None,
 ) -> DataFrame:
-    """X3 scale path — PQ-ADC retrieval with exact re-rank: encode every
-    vector as m = 8 one-byte codes, score candidates by Asymmetric
-    Distance Computation (sum of per-subspace query·centroid partial dot
-    products — a 128-entry table lookup instead of a 64-dim dot), keep a
-    ``shortlist``, then re-rank the shortlist with the TRUE cosine. This
-    is the memory story behind billion-vector ANN (FAISS IVF-PQ): 8 bytes
-    per vector instead of 256, so the scan set fits in RAM at scales where
-    raw vectors cannot; compose with the IVF cell probe
-    (:func:`ivf_topk_kmeans`) to also cut the scan set — the two are
-    orthogonal stages of the same pipeline.
+    """X3 scale path — PQ-ADC retrieval with exact re-rank against a
+    trained codebook ``cb(s, c, cv)`` (:func:`pq_codebook`; the code count
+    is read from it): encode every vector as m = 8 one-byte codes,
+    score candidates by Asymmetric Distance Computation (sum of
+    per-subspace query·centroid partial dot products — a 128-entry table
+    lookup instead of a 64-dim dot), keep a ``shortlist``, then re-rank the
+    shortlist with the TRUE cosine. This is the memory story behind
+    billion-vector ANN (FAISS IVF-PQ): 8 bytes per vector instead of 256,
+    so the scan set fits in RAM at scales where raw vectors cannot;
+    compose with the IVF cell probe (:func:`ivf_pq_topk`) to also cut the
+    scan set — the two are orthogonal stages of the same pipeline.
 
-    Spark shape — ZERO corpus-scale shuffles after the codebook agg: the
-    codebook and the query's ADC table are folded into ONE broadcast row
-    of nested arrays (``cbn[s][c][i]``, ``ptab[s][c]``), and encoding +
-    scoring run per-row inside higher-order functions (slice, zip_with
-    fold, array_min over (dist, code) structs, element_at lookups) — a
-    pure map stage, then TakeOrdered(shortlist) carrying the vector, then
-    a broadcast crossJoin re-rank of ``shortlist`` rows. Deterministic on
-    both engines: fixed-point codebook means, floor-scaled BIGINT
-    distances and partial dots (integer argmin/sums — no float ordering
-    anywhere), code ties to the smaller id, final ties to ``id_col``.
+    Spark shape — ZERO corpus-scale shuffles: the codebook and the query's
+    ADC table are folded into ONE broadcast row of nested arrays
+    (``cbn[s][c][i]``, ``ptab[s][c]``), and encoding + scoring run per-row
+    inside higher-order functions (slice, zip_with fold, array_min over
+    (dist, code) structs, element_at lookups) — a pure map stage, then
+    TakeOrdered(shortlist) carrying the vector, then a broadcast crossJoin
+    re-rank of ``shortlist`` rows. Deterministic on both engines:
+    fixed-point codebook means, floor-scaled BIGINT distances and partial
+    dots (integer argmin/sums — no float ordering anywhere), code ties to
+    the smaller id, final ties to ``vec_id``.
     """
     m, dsub = _PQ_M, _PQ_DSUB
-    # ``train`` separates codebook training from scan set: IVF-PQ trains on
-    # the full corpus but encodes/scores only probed cells (default: same).
-    # ``cb`` (r16-opt): a caller holding the TRAINED codebook as a committed
-    # (s, c, cv) table passes it and training is skipped — the serving-
-    # from-committed-artifacts posture (see plans/retrieval.py _pq_serving_tables).
-    if cb is None:
-        cb = pq_codebook(
-            train if train is not None else corpus,
-            kc=kc, id_col=id_col, vec_col=vec_col,
-        )
     # ONE broadcastable row: cbn[s][c][i] — nested sort_array folds keep
     # subspace and code order deterministic.
     cbn = (
@@ -1251,7 +1044,7 @@ def pq_adc_topk(
         .select(F.transform("p", lambda x: x.cbs).alias("cbn"))
     )
     # query-side ADC table ptab[s][c] = floor(1e7 · q_sub·centroid)
-    q1 = query.select(unit_vec(F.col(vec_col)).alias("__qv"))
+    q1 = query.select(unit_vec(F.col("embedding")).alias("__qv"))
     ptab = (
         cb.crossJoin(F.broadcast(q1))
         .select(
@@ -1296,7 +1089,7 @@ def pq_adc_topk(
     ).cast("long")
     best_code = lambda s: F.array_min(
         F.transform(
-            F.sequence(F.lit(0), F.lit(kc - 1)),
+            F.sequence(F.lit(0), F.size(F.element_at(F.col("cbn"), s + 1)) - 1),
             lambda c: F.struct(dist_fx(s, c).alias("d"), c.alias("c")),
         )
     )["c"]
@@ -1315,46 +1108,21 @@ def pq_adc_topk(
         # unit_vec inside the 128 encode lambdas would re-evaluate the norm
         # per term (higher-order-function bodies sit outside codegen's
         # common-subexpression elimination; measured 4x on the fixture).
-        # __v stays the RAW vector: the re-rank's exact-cosine arithmetic
-        # must be the brute-force twin's, not a pre-normalized variant that
-        # rounds differently in the last bit.
+        # The raw vector rides along for the re-rank, which is the
+        # brute-force twin's exact cosine.
         ensure_min_partitions(corpus)
-        .select(
-            F.col(id_col),
-            _dbl(F.col(vec_col)).alias("__v"),
-            unit_vec(F.col(vec_col)).alias("__u"),
-        )
+        .select("vec_id", "embedding", unit_vec(F.col("embedding")).alias("__u"))
         .crossJoin(F.broadcast(cbn))
         .crossJoin(F.broadcast(ptab))
-        .select(F.col(id_col), F.col("__v"), adc_fx.alias("__adc"))
-        .orderBy(F.col("__adc").desc(), F.col(id_col))
+        .select("vec_id", "embedding", adc_fx.alias("__adc"))
+        .orderBy(F.col("__adc").desc(), F.col("vec_id"))
         .limit(shortlist)
     )
-    qn = query.select(
-        _dbl(F.col(vec_col)).alias("__qv"), norm(F.col(vec_col)).alias("__qn")
-    )
-    sim = F.round(
-        F.aggregate(
-            F.zip_with(F.col("__v"), F.col("__qv"), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / (
-            F.sqrt(
-                F.aggregate(
-                    F.transform(F.col("__v"), lambda x: x * x),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            )
-            * F.col("__qn")
-        ),
-        4,
-    )
+    q = F.broadcast(query.select(F.col("embedding").alias("__qvec")))
     return (
-        short.crossJoin(F.broadcast(qn))
-        .select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
+        short.crossJoin(q)
+        .select("vec_id", F.round(cosine(F.col("embedding"), F.col("__qvec")), 4).alias("cos_sim"))
+        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(k)
     )
 
@@ -1362,66 +1130,38 @@ def pq_adc_topk(
 def ivf_pq_topk(
     corpus: DataFrame,
     query: DataFrame,
+    cent: DataFrame,
+    assign: DataFrame,
+    cb: DataFrame,
     k: int = 10,
     shortlist: int = 30,
-    n_cells: int = 16,
     n_probe: int = 6,
-    n_iter: int = 2,
-    kc: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cent: DataFrame | None = None,
-    assign: DataFrame | None = None,
-    cb: DataFrame | None = None,
 ) -> DataFrame:
     """X3 — the COMPOSED FAISS-style index: IVF cell probe (scan cut) ×
-    PQ-ADC codes (memory cut) × exact re-rank. The two halves the
-    docstrings of :func:`ivf_topk_kmeans` and :func:`pq_adc_topk` describe
-    as orthogonal, composed the way a production billion-vector index
-    actually runs: probe the ``n_probe`` nearest of ``n_cells`` coarse
-    cells, ADC-score ONLY vectors assigned to probed cells against the
-    query's distance table, shortlist, re-rank with true cosine.
+    PQ-ADC codes (memory cut) × exact re-rank, served from a trained index
+    (``cent``/``assign``/``cb``, see :func:`kmeans_index`): probe the
+    ``n_probe`` nearest coarse cells, ADC-score ONLY vectors assigned to
+    probed cells against the query's distance table, shortlist, re-rank
+    with true cosine.
 
-    Scan set ≈ (n_probe/n_cells)·corpus and each scanned vector costs a
+    Scan set ≈ (n_probe/cells)·corpus and each scanned vector costs a
     table lookup instead of a 64-dim dot; memory per vector is m codes.
-    The PQ codebook trains on the FULL corpus (``train=`` arg — the
-    codebook must not depend on which cells a query probes, or codes
-    would be query-dependent). The coarse stage is the SAME Lloyd-refined
-    k-means assignment+probe as ``embedding_topk_ivf_kmeans``
-    (:func:`kmeans_assign_and_probe` — factored so the two cannot drift),
-    with the family's probe-6 recall knob as the default: on this
-    fixture's near-isotropic synthetic embeddings the probe is the recall
+    The codebook is trained on the FULL corpus — it must not depend on
+    which cells a query probes, or codes would be query-dependent. The
+    probe is :func:`ivf_topk_kmeans`'s (:func:`probe_cells`), with the
+    family's probe-6 recall knob as the default: on this fixture's
+    near-isotropic synthetic embeddings the probe is the recall
     bottleneck (hash-init cells measured 0.42 mean recall@10; Lloyd+6
     probes ≈ 0.6+). Deterministic end-to-end, so the DuckDB oracle
     replays the full composition.
-
-    ``cent``/``assign``/``cb`` (r16-opt): the trained index artifacts as
-    committed tables (see :func:`kmeans_assign_and_probe` /
-    :func:`pq_adc_topk`) — with all three provided, serving runs ZERO
-    training passes: probe the committed centroids, semi-join the
-    committed assignment, ADC-score against the committed codebook.
     """
-    assign, probed = kmeans_assign_and_probe(
-        corpus, query, n_clusters=n_cells, n_probe=n_probe, n_iter=n_iter,
-        id_col=id_col, vec_col=vec_col, cent=cent, assign=assign,
-    )
-    in_cells = assign.join(probed, "__cid", "left_semi").select(id_col)
-    # NO broadcast hint: in_cells is (n_probe/n_cells)·corpus — it SCALES.
+    probe = probe_cells(cent, _one_query(query), n_probe).select("cid")
+    in_cells = assign.join(F.broadcast(probe), "cid", "left_semi").select("vec_id")
+    # NO broadcast hint: in_cells is (n_probe/cells)·corpus — it SCALES.
     # At 100 TB the assignment is a stored partition column and this join
-    # becomes partition pruning (the ivf_topk_kmeans note); AQE picks the
-    # strategy at fixture scale.
-    subset = corpus.join(in_cells, id_col, "left_semi")
-    return pq_adc_topk(
-        subset,
-        query,
-        k=k,
-        shortlist=shortlist,
-        kc=kc,
-        id_col=id_col,
-        vec_col=vec_col,
-        train=corpus,
-        cb=cb,
-    )
+    # becomes partition pruning; AQE picks the strategy at fixture scale.
+    subset = corpus.join(in_cells, "vec_id", "left_semi")
+    return pq_adc_topk(subset, query, cb, k=k, shortlist=shortlist)
 
 
 # ---------------------------------------------------------------------------

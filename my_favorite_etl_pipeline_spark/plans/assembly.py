@@ -19,10 +19,11 @@ from pyspark.sql import functions as F
 from ..caching import tracked_persist
 from ..functions import text as TX
 from ..functions.exprs import duck_md5_32, spark_md5_32
+from ..functions.vectors import duck_hash_assign
 from ..registry import register
 from ..sources.tables import load
 from .curation import _CCNET_CTES, ccnet_bucketed
-from .dedup import DUCK_COMPONENTS, _near_dup_components, _semdedup_assign_cte
+from .dedup import DUCK_COMPONENTS, _near_dup_components
 
 
 def hash_split(
@@ -808,11 +809,11 @@ def repeat_plan_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: ONE text for the packing readout and the pack-then-shard seam below, so
 #: the two entries replay the identical bins (the twin-oracle-drift rule).
 _SEM_PACK_CTES = f"""
-    {_semdedup_assign_cte(1, "8")},
+    {duck_hash_assign(1)},
     tk AS (
       SELECT d.doc_id, d.source,
              CAST(LEN(string_split(d.text, ' ')) AS BIGINT) AS n_tokens,
-             CAST(a.cluster AS BIGINT) AS cluster
+             CAST(a.cid AS BIGINT) AS cluster
       FROM documents d JOIN assign a ON a.vec_id = d.doc_id
     ),
     cum AS (

@@ -24,12 +24,18 @@ from ..caching import tracked_persist
 from ..functions import text as TX
 from ..functions.exprs import duck_md5_32, spark_md5_32
 from ..functions.text import DUCK_SHINGLES, duck_held_out, spark_held_out
+from ..functions.vectors import (
+    DUCK_QASSIGN,
+    EN,
+    duck_hash_assign,
+    duck_int_cos,
+    duck_kmeans_cells,
+)
+from ..operators import similarity as SIM
 from ..operators.dq import assert_unique_doc_ids
 from ..registry import REGISTRY, register
 from ..sources.tables import load
-from .dedup import _semdedup_assign_cte
-from .graph import _LPA_ROUNDS, _QASSIGN_CTE, _int_cos_sql, _lpa_cte_chain, lpa_labels_durable
-from .retrieval import _lloyd_rounds_sql
+from .graph import _LPA_ROUNDS, _lpa_cte_chain, lpa_labels_durable
 
 
 @register(
@@ -1934,38 +1940,14 @@ def q_quality_classifier_gd_scores(spark: SparkSession, sf_dir: str) -> DataFram
 # ---------------------------------------------------------------------------
 # topic_cluster_cards — the cluster-level corpus audit report
 
-_TC_K = 16  # clusters (matches the ivf_kmeans fixture geometry)
-
-_TC_ITERS = 2  # Lloyd rounds (shared _lloyd_rounds_sql / kmeans_iterate pair)
-
 _TC_TOP = 3  # terms per card
 
 
 def _tc_oracle() -> str:
     return f"""
-    WITH e AS (SELECT vec_id, LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE)) AS v
-               FROM embeddings),
-    en AS (SELECT vec_id, v, SQRT(LIST_SUM(LIST_TRANSFORM(v, x -> x * x))) AS n FROM e),
-    dims AS (SELECT UNNEST(range(64)) AS dim),
-    pd0 AS (
-      SELECT vec_id % {_TC_K} AS cid, d.dim,
-             CAST(SUM(CAST(FLOOR(v[d.dim + 1] * 10000000) AS BIGINT)) AS DOUBLE)
-               / (COUNT(*) * 10000000.0) AS mean_val
-      FROM e CROSS JOIN dims d GROUP BY 1, 2
-    ),
-    c0 AS (SELECT cid, LIST(mean_val ORDER BY dim) AS centroid FROM pd0 GROUP BY cid),
-    {_lloyd_rounds_sql(_TC_ITERS)},
-    af AS MATERIALIZED (
-      SELECT vec_id, cid FROM (
-        SELECT en.vec_id, c.cid,
-               ROUND(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> en.v[i] * c.centroid[i]))
-                 / (en.n * SQRT(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> c.centroid[i] * c.centroid[i])))),
-               4) AS cc
-        FROM en CROSS JOIN c{_TC_ITERS} c
-      ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cc DESC, cid ASC) = 1
-    ),
+    WITH {EN},{duck_kmeans_cells(SIM.INDEX_CELLS, SIM.INDEX_ROUNDS)},
     toks AS (SELECT doc_id, UNNEST(string_split(text, ' ')) AS term FROM documents),
-    dt AS (SELECT a.cid, t.term FROM toks t JOIN af a ON t.doc_id = a.vec_id),
+    dt AS (SELECT a.cid, t.term FROM toks t JOIN kassign a ON t.doc_id = a.vec_id),
     tf AS (SELECT cid, term, COUNT(*) AS tf FROM dt GROUP BY 1, 2),
     cdf AS (SELECT term, COUNT(*) AS cdf FROM tf GROUP BY 1),
     sc AS (SELECT tf.cid, tf.term, (tf.tf * 10000) // cdf.cdf AS score_x10000
@@ -1974,7 +1956,7 @@ def _tc_oracle() -> str:
                   ROW_NUMBER() OVER (PARTITION BY cid
                                      ORDER BY score_x10000 DESC, term) AS rnk
            FROM sc),
-    nc AS (SELECT cid, COUNT(*) AS n_docs FROM af GROUP BY 1)
+    nc AS (SELECT cid, COUNT(*) AS n_docs FROM kassign GROUP BY 1)
     SELECT r.cid AS cluster, CAST(n.n_docs AS BIGINT) AS n_docs,
            CAST(r.rnk AS INT) AS rank, r.term,
            CAST(r.score_x10000 AS BIGINT) AS score_x10000
@@ -1985,10 +1967,10 @@ def _tc_oracle() -> str:
 
 @register("topic_cluster_cards", oracle=_tc_oracle())
 def q_topic_cluster_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r10) — per-cluster TOPIC CARDS: k-means-cluster the corpus
-    embeddings ({_TC_K} cells, the shared kmeans_iterate/_lloyd_rounds_sql
-    pair, so the clustering cannot drift from the IVF family's) and label
-    each cluster with its size and top-{_TC_TOP} most DISTINCTIVE terms —
+    """X4+ — per-cluster TOPIC CARDS: the cells of the family's committed
+    k-means index (:func:`operators.similarity.kmeans_index`, the IVF
+    entries' clustering; the oracle replays the same generated SQL), each
+    labelled with its size and top-{_TC_TOP} most DISTINCTIVE terms —
     the BERTopic-style cluster report (Grootendorst 2022's c-TF-IDF idea)
     a corpus curator reads before weighting or pruning by topic, and the
     aggregate view behind "what IS in this crawl slice". Distinctiveness
@@ -1998,21 +1980,13 @@ def q_topic_cluster_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (ties broken by term; the registry rounding rule).
 
     Plan at 100 TB: ONE corpus token pass (explode → (cluster, term) hash
-    agg, map-side combinable); the embedding side is the standard k-means
-    shape — model-sized centroid table broadcast, assignment one max_by
-    aggregate; everything downstream of the two corpus passes is bounded
-    by k·|vocab| (tf), |vocab| (cluster-df), and k·{_TC_TOP} (the cards).
-    The doc→cluster equi-join shuffles on the id key — near-uniform by
-    construction. No collect anywhere.
+    agg, map-side combinable); the embedding side is a read of the stored
+    cell assignment; everything downstream is bounded by k·|vocab| (tf),
+    |vocab| (cluster-df), and k·{_TC_TOP} (the cards). The doc→cluster
+    equi-join shuffles on the id key — near-uniform by construction. No
+    collect anywhere.
     """
-    from ..operators.similarity import kmeans_assign_and_probe
-
-    emb = load(spark, sf_dir, "embeddings")
-    assign, _ = kmeans_assign_and_probe(
-        emb, emb.filter(F.col("vec_id") == 0), n_clusters=_TC_K,
-        n_probe=1, n_iter=_TC_ITERS,
-    )
-    assign = assign.select("vec_id", F.col("__cid").alias("cid"))
+    _, assign, _ = SIM.kmeans_index(spark, sf_dir)
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(TX.tokens("text")).alias("term"))
     dt = toks.join(
@@ -2059,13 +2033,13 @@ _SD_TAU = 3000  # flag threshold, integer ten-thousandths. 0.30 flags 36
 @register(
     "semantic_decontaminate_topk",
     oracle=f"""
-    {_semdedup_assign_cte(1)},
-    {_QASSIGN_CTE},
+    {duck_hash_assign(1)},
+    {DUCK_QASSIGN},
     ev AS (SELECT * FROM qassign WHERE {duck_held_out('vec_id')}),
     tr AS (SELECT * FROM qassign WHERE NOT ({duck_held_out('vec_id')})),
     sc AS (
       SELECT t.vec_id AS doc_id, e.vec_id AS eval_id,
-             {_int_cos_sql("t.q", "t.s", "e.q", "e.s")} AS cos_x1e4
+             {duck_int_cos("t.q", "t.s", "e.q", "e.s")} AS cos_x1e4
       FROM tr t JOIN ev e ON t.cluster = e.cluster
     ),
     best AS (

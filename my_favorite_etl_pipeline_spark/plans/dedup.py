@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from ..functions.text import DUCK_SHINGLES, duck_jaccard_pairs
+from ..functions.vectors import AUTO_K_SQL, duck_hash_assign
 from ..operators import similarity as SIM
 from ..operators.dedup import (
     minhash_near_dups,
@@ -679,74 +680,21 @@ def q_dedup_normalized_text(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("fp")
     )
 
-#: SQL twin of operators.similarity.resolve_cell_count(k="auto",
-#: target_cell_size=64): the oracle derives the cell count from the SAME
-#: rule the engine resolves, so auto-k queries replay without a Python-side
-#: count leaking into the oracle text.
-AUTO_K_SQL = (
-    "(SELECT GREATEST(4, LEAST(1048576, CAST(CEIL(COUNT(*) / 64.0) AS BIGINT)))"
-    " FROM embeddings)"
-)
-
-
-def _semdedup_assign_cte(assign_top: int, k_sql: str = "8", keyword: str = "WITH") -> str:
-    """The shared CTE prefix — fixed-point hash centroids + top-m
-    nearest-centroid assignment (mirrors operators.similarity
-    build_hash_centroids / nearest_centroid). Factored (r8) so the
-    SemDeDup pair oracles AND the kNN-graph oracle (graph.py) replay ONE
-    assignment text and cannot drift. ``k_sql`` is the cell-count
-    expression — a literal for the fixed-k flagships, ``AUTO_K_SQL`` for
-    the auto-k twins (r10). ``keyword`` lets a composition that appends a
-    recursive CTE open the block with ``WITH RECURSIVE`` (ADVICE r11: a
-    parameter instead of substring surgery on generated SQL)."""
-    return f"""
-    {keyword} n AS (
-      SELECT vec_id,
-             LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE)) AS v,
-             SQRT(LIST_SUM(LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-      FROM embeddings
-    ),
-    dims AS (
-      SELECT vec_id % {k_sql} AS cid, d.dim AS dim,
-             CAST(FLOOR(v[d.dim] * 10000000.0) AS BIGINT) AS sv
-      FROM n, (SELECT UNNEST(range(1, 65)) AS dim) d
-    ),
-    cstat AS (SELECT cid, dim, SUM(sv) AS s, COUNT(*) AS c FROM dims GROUP BY cid, dim),
-    cvec AS (
-      SELECT cid, LIST(s / (c * 10000000.0) ORDER BY dim) AS cv
-      FROM cstat GROUP BY cid
-    ),
-    cent AS (SELECT cid, cv, SQRT(LIST_SUM(LIST_TRANSFORM(cv, x -> x * x))) AS cn FROM cvec),
-    scored AS (
-      SELECT n.vec_id, n.v, n.nrm, c.cid,
-             ROUND(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> n.v[i] * c.cv[i]))
-                   / (n.nrm * c.cn), 4) AS cos_c
-      FROM n CROSS JOIN cent c
-    ),
-    assign AS MATERIALIZED (
-      SELECT vec_id, v, nrm, cid AS cluster
-      FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                         ORDER BY cos_c DESC, cid) AS rn
-            FROM scored)
-      WHERE rn <= {assign_top}
-    )"""
-
-
 def _semdedup_oracle(assign_top: int, k_sql: str = "8") -> str:
-    """SemDeDup oracle, parameterized by the per-vector assignment count
-    (r7): top-1 is classic SemDeDup; top-2 is the boundary-recall variant.
+    """SemDeDup oracle, parameterized by the per-vector assignment count:
+    top-1 is classic SemDeDup; top-2 is the boundary-recall variant.
     The pair aggregate (GROUP BY pair, MIN over identical values) is an
     identity at top-1 and the duplicate-cell collapse at top-2, so ONE
     template serves both and cannot drift. ``k_sql``: see
-    ``_semdedup_assign_cte``."""
+    ``duck_hash_assign``."""
     return f"""
-    {_semdedup_assign_cte(assign_top, k_sql)},
+    {duck_hash_assign(assign_top, k_sql)},
     p AS (
-      SELECT MIN(a.cluster) AS cluster, a.vec_id AS id_a, b.vec_id AS id_b,
+      SELECT MIN(a.cid) AS cluster, a.vec_id AS id_a, b.vec_id AS id_b,
              MIN(ROUND(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> a.v[i] * b.v[i]))
-                   / (a.nrm * b.nrm), 4)) AS cos_sim
+                   / (a.n * b.n), 4)) AS cos_sim
       FROM assign a JOIN assign b
-        ON a.cluster = b.cluster AND a.vec_id < b.vec_id
+        ON a.cid = b.cid AND a.vec_id < b.vec_id
       GROUP BY a.vec_id, b.vec_id
     )
     SELECT cluster, id_a, id_b, cos_sim FROM p
@@ -781,7 +729,7 @@ def q_semdedup_cluster_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_semdedup_oracle(2),
 )
 def q_semdedup_cluster_pairs_top2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2+ — SemDeDup with TOP-2-centroid assignment (r7): the standard
+    """X2+ — SemDeDup with TOP-2-centroid assignment: the standard
     boundary-recall fix — each vector joins its two nearest cells, so a
     borderline pair straddling one boundary is still found when the two
     vectors share EITHER cell. Assignment is one collect_list(k)+sort+
@@ -804,15 +752,14 @@ def q_semdedup_cluster_pairs_top2(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle=_semdedup_oracle(1, k_sql=AUTO_K_SQL),
 )
 def q_semdedup_cluster_pairs_auto_k(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2+ (r10) — SemDeDup with the AUTO cell count, the scale-safe plan
-    (VERDICT r9 item 5): ``k = max(4, ceil(n / 64))`` from
-    ``resolve_cell_count``, so cell COUNT grows with the corpus and cell
-    SIZE stays pinned at the 64-vector target — the within-cell Σ|cell|²
-    candidate join is O(n·64), linear in n, where the k=8 flagship (kept
-    for oracle-replay continuity and as the recall baseline) silently goes
-    quadratic past fixture scale. The oracle derives the SAME count in SQL
-    (``AUTO_K_SQL``), so the twin replays end-to-end with no Python count
-    in the oracle text. The linearity bound itself is pinned across a 10×
+    """X2+ — SemDeDup with the AUTO cell count, the scale-safe plan:
+    ``k = max(4, ceil(n / 64))`` from ``resolve_cell_count``, so cell
+    COUNT grows with the corpus and cell SIZE stays pinned at the 64-vector
+    target — the within-cell Σ|cell|² candidate join is O(n·64), linear in
+    n, where the k=8 flagship (kept for oracle-replay continuity and as
+    the recall baseline) silently goes quadratic past fixture scale. The
+    oracle derives the SAME count in SQL (``AUTO_K_SQL``), so the twin
+    replays end-to-end with no Python count in the oracle text. The linearity bound itself is pinned across a 10×
     corpus growth in tests/test_recall_scales.py
     (test_auto_cell_count_bounds_candidates_across_scales).
     """
@@ -930,51 +877,24 @@ def q_dedup_excise_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "prototype_prune_d4",
-    oracle="""
-    WITH e AS (SELECT vec_id,
-                      LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE)) AS v
-               FROM embeddings),
-    en AS (SELECT vec_id, v,
-                  SQRT(LIST_SUM(LIST_TRANSFORM(v, x -> x * x))) AS nrm
-           FROM e),
-    dims AS (SELECT UNNEST(range(64)) AS dim),
-    pd AS (SELECT e.vec_id % 8 AS cid, d.dim,
-                  CAST(SUM(CAST(FLOOR(e.v[d.dim + 1] * 10000000) AS BIGINT)) AS DOUBLE)
-                    / (COUNT(*) * 10000000.0) AS mean_val
-           FROM e CROSS JOIN dims d GROUP BY 1, 2),
-    cent AS (SELECT cid, LIST(mean_val ORDER BY dim) AS centroid
-             FROM pd GROUP BY cid),
-    cn AS (SELECT cid, centroid,
-                  SQRT(LIST_SUM(LIST_TRANSFORM(centroid, x -> x * x))) AS cnrm
-           FROM cent),
-    scored AS (
-      SELECT en.vec_id, c.cid,
-             ROUND(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> en.v[i] * c.centroid[i]))
-               / (en.nrm * c.cnrm), 4) AS cos_c
-      FROM en CROSS JOIN cn c
-    ),
-    assign AS (
-      SELECT vec_id, cid AS cluster, cos_c AS proto_sim FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                     ORDER BY cos_c DESC, cid) AS rn
-        FROM scored) WHERE rn = 1
-    ),
-    hist AS (SELECT cluster, proto_sim AS s, COUNT(*) AS c
+    oracle=f"""
+    {duck_hash_assign(1)},
+    hist AS (SELECT cid AS cluster, cos_c AS s, COUNT(*) AS c
              FROM assign GROUP BY 1, 2),
     cum AS (SELECT cluster, s,
                    SUM(c) OVER (PARTITION BY cluster ORDER BY s DESC) AS cge
             FROM hist),
-    nc AS (SELECT cluster, COUNT(*) AS n FROM assign GROUP BY 1),
+    nc AS (SELECT cid AS cluster, COUNT(*) AS n FROM assign GROUP BY 1),
     th AS (SELECT cum.cluster, MIN(CASE WHEN cge * 4 <= n THEN s END) AS tc
            FROM cum JOIN nc USING (cluster) GROUP BY 1)
-    SELECT a.vec_id, CAST(a.cluster AS BIGINT) AS cluster, a.proto_sim
-    FROM assign a JOIN th USING (cluster)
-    WHERE th.tc IS NULL OR a.proto_sim < th.tc
+    SELECT a.vec_id, CAST(a.cid AS BIGINT) AS cluster, a.cos_c AS proto_sim
+    FROM assign a JOIN th ON th.cluster = a.cid
+    WHERE th.tc IS NULL OR a.cos_c < th.tc
     ORDER BY a.vec_id
     """,
 )
 def q_prototype_prune_d4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2+/X3 (r7) — SSL-prototypes/D4-style diversity pruning (Sorscher
+    """X2+/X3 — SSL-prototypes/D4-style diversity pruning (Sorscher
     et al. 2022 "Beyond neural scaling laws"; Tirumala et al. 2023 "D4"):
     cluster the embedding space, rank every vector by similarity to its
     OWN cluster centroid ("prototypicality"), and DROP the most

@@ -23,9 +23,9 @@ from pyspark.sql import functions as F
 from .. import artifacts
 from ..caching import tracked_persist
 from ..functions.exprs import duck_md5_32, spark_md5_32
+from ..functions.vectors import AUTO_K_SQL, DUCK_QASSIGN, duck_hash_assign, duck_int_cos
 from ..registry import register
 from ..sources.tables import load
-from .dedup import AUTO_K_SQL as _AUTO_K_SQL_REF
 
 
 # ---------------------------------------------------------------------------
@@ -52,60 +52,22 @@ _KNN_CAP = 24  # per-node fan-out cap in the two-hop join. (W, CAP) flipped
 # re-binds if K/SEEDS ever change (the probe's own closing note).
 
 
-def _int_cos_sql(qa: str, sa: str, qb: str, sb: str) -> str:
-    """The quantized-cosine score in SQL — the DuckDB twin of
-    ``operators.similarity.int_cos_x1e4``: pure integer arithmetic on the
-    FLOOR(v·10⁴) quantized vectors and their exact isqrt norms, with the
-    ``+2·sa·sb`` offset keeping the dividend nonnegative — the regime
-    where DuckDB ``//`` (truncating) and Spark's pmod-floor agree. The
-    offset only bounds the dividend when BOTH norms are ≥ 2, so the guard
-    routes sa < 2 OR sb < 2 through the zero branch, exactly like the
-    Spark twin (ADVICE r11). No IEEE float anywhere (VERDICT r10 item 2)."""
-    d = f"CAST(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> {qa}[i] * {qb}[i])) AS BIGINT)"
-    return (
-        f"CAST(CASE WHEN {sa} < 2 OR {sb} < 2 THEN 0 ELSE "
-        f"(({d} + 2 * {sa} * {sb}) * 10000) // ({sa} * {sb}) - 20000 END AS BIGINT)"
-    )
-
-# Quantized twin of the assignment CTE: __q = FLOOR(v·10⁴) BIGINT vectors +
-# EXACT integer norms via the isqrt correction step (FLOOR(SQRT(double)) is
-# within ±1 of ⌊√x⌋ for x < 2⁵³ because IEEE sqrt is correctly rounded; one
-# CASE step makes it exact on ANY engine — operators.similarity.int_isqrt).
-_QASSIGN_CTE = """
-    qassign AS MATERIALIZED (
-      SELECT vec_id, cluster, q,
-             CASE WHEN (s0 + 1) * (s0 + 1) <= n2 THEN s0 + 1
-                  WHEN s0 * s0 > n2 THEN s0 - 1 ELSE s0 END AS s
-      FROM (
-        SELECT vec_id, cluster, q, n2,
-               CAST(FLOOR(SQRT(CAST(n2 AS DOUBLE))) AS BIGINT) AS s0
-        FROM (
-          SELECT vec_id, cluster, q,
-                 CAST(LIST_SUM(LIST_TRANSFORM(q, x -> x * x)) AS BIGINT) AS n2
-          FROM (SELECT vec_id, cluster,
-                       LIST_TRANSFORM(v, x -> CAST(FLOOR(x * 10000) AS BIGINT)) AS q
-                FROM assign)))
-    )"""
-
-
 def _knn_base_cte(k_sql: str = "8", keyword: str = "WITH") -> str:
-    """Shared oracle prefix: the SemDeDup assignment (dedup.py's CTE, so
-    the families cannot drift) + the integer-quantized vector table
-    ``qassign`` + the within-cell pair scoring + the base top-K edge list
-    ``e0(src_id, nbr_id, cos_sim, rnk)``. ``k_sql``: cell count
-    expression — "8" for the fixed-k flagship, ``AUTO_K_SQL`` for the
-    scale-safe auto-k twin (r10); ``keyword`` threads ``WITH RECURSIVE``
-    through for recursive compositions (ADVICE r11). All scores are the
-    pure-integer quantized cosine (r11) — the ROUND(double·10⁴) form this
-    replaces was the family's last IEEE-float hash surface."""
-    from .dedup import _semdedup_assign_cte
-
+    """Shared oracle prefix: the SemDeDup assignment
+    (``functions.vectors.duck_hash_assign``, so the families cannot drift)
+    + the integer-quantized vector table ``qassign`` + the within-cell pair
+    scoring + the base top-K edge list ``e0(src_id, nbr_id, cos_sim,
+    rnk)``. ``k_sql``: cell count expression — "8" for the fixed-k
+    flagship, ``AUTO_K_SQL`` for the scale-safe auto-k twin; ``keyword``
+    threads ``WITH RECURSIVE`` through for recursive compositions. All
+    scores are the pure-integer quantized cosine, so no IEEE float reaches
+    a hashed value."""
     return f"""
-    {_semdedup_assign_cte(1, k_sql, keyword)},
-    {_QASSIGN_CTE},
+    {duck_hash_assign(1, k_sql, keyword)},
+    {DUCK_QASSIGN},
     p AS (
       SELECT a.vec_id AS src_id, b.vec_id AS nbr_id,
-             {_int_cos_sql("a.q", "a.s", "b.q", "b.s")} AS cos_sim
+             {duck_int_cos("a.q", "a.s", "b.q", "b.s")} AS cos_sim
       FROM qassign a JOIN qassign b
         ON a.cluster = b.cluster AND a.vec_id <> b.vec_id
     ),
@@ -151,7 +113,7 @@ def _knn_round_cte(i: int, cap: int, w: int) -> str:
     ),
     resc{i} AS (
       SELECT c.src_id, c.nbr_id,
-             {_int_cos_sql("x.q", "x.s", "y.q", "y.s")} AS cos_sim
+             {duck_int_cos("x.q", "x.s", "y.q", "y.s")} AS cos_sim
       FROM cand{i} c
       JOIN qassign x ON x.vec_id = c.src_id
       JOIN qassign y ON y.vec_id = c.nbr_id
@@ -195,7 +157,7 @@ def _knn_refined_cte(
     ),
     sesc AS (
       SELECT s.src_id, s.nbr_id,
-             {_int_cos_sql("x.q", "x.s", "y.q", "y.s")} AS cos_sim
+             {duck_int_cos("x.q", "x.s", "y.q", "y.s")} AS cos_sim
       FROM seeds s
       JOIN qassign x ON x.vec_id = s.src_id
       JOIN qassign y ON y.vec_id = s.nbr_id
@@ -228,11 +190,11 @@ def _knn_nn_descent_oracle() -> str:
 
 @register("knn_graph_topk", oracle=_knn_oracle())
 def q_knn_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3+ (r8) — approximate k-NN graph construction: the top-{_KNN_K}
+    """X3+ — approximate k-NN graph construction: the top-{_KNN_K}
     directed neighbor edges per vector, candidates restricted to the
     vector's nearest-centroid cell (the SemDeDup assignment, shared
-    machinery AND shared oracle CTE — dedup._semdedup_assign_cte, so
-    the two families cannot drift). The k-NN graph is the input every
+    machinery AND shared oracle CTE — ``functions.vectors.duck_hash_assign``,
+    so the two families cannot drift). The k-NN graph is the input every
     graph-based corpus tool wants: NN-Descent refinement, graph-clustering
     topic discovery, connected-component semantic dedup, HNSW layer
     seeding.
@@ -296,7 +258,7 @@ def _knn_base_edges(spark: SparkSession, sf_dir: str, k=8):
     return assign, knn_topk_edges(pairs, _KNN_K)
 
 
-@register("knn_graph_topk_auto_k", oracle=_knn_oracle(k_sql=_AUTO_K_SQL_REF))
+@register("knn_graph_topk_auto_k", oracle=_knn_oracle(k_sql=AUTO_K_SQL))
 def q_knn_graph_topk_auto_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X3+ (r10) — the kNN-graph base build with the AUTO cell count, the
     scale-safe benched plan (VERDICT r9 item 5): cells pinned at the
@@ -586,7 +548,7 @@ def _gs_hop_cte(i: int, graph: str, pfx: str, beam: int) -> str:
         SELECT query_id, vec_id, cos_sim FROM {prev}
         UNION ALL
         SELECT b.query_id, u.nbr AS vec_id,
-               {_int_cos_sql("x.q", "x.s", "qb.qv", "qb.qn")} AS cos_sim
+               {duck_int_cos("x.q", "x.s", "qb.qv", "qb.qn")} AS cos_sim
         FROM {pfx}bm{i} b
         JOIN {graph} u ON u.node = b.vec_id
         JOIN qassign x ON x.vec_id = u.nbr
@@ -603,7 +565,7 @@ def _walk_sql(pfx: str, entries: str, graph: str, hops: int, beam: int) -> str:
     {pfx}ent AS ({entries}),
     {pfx}0 AS MATERIALIZED (
       SELECT DISTINCT e.query_id, x.vec_id,
-             {_int_cos_sql("x.q", "x.s", "qb.qv", "qb.qn")} AS cos_sim
+             {duck_int_cos("x.q", "x.s", "qb.qv", "qb.qn")} AS cos_sim
       FROM {pfx}ent e JOIN qassign x ON x.vec_id = e.vec_id
       JOIN qb ON qb.query_id = e.query_id
     ){chain}"""
@@ -646,7 +608,7 @@ def _hn_layer_sql(lvl: int) -> str:
     hu{lvl} AS (SELECT * FROM qassign WHERE ({duck_md5_32('CAST(vec_id AS VARCHAR)')}) % {mod} = 0),
     hp{lvl} AS (
       SELECT a.vec_id AS src_id, b.vec_id AS nbr_id,
-             {_int_cos_sql("a.q", "a.s", "b.q", "b.s")} AS cos_sim
+             {duck_int_cos("a.q", "a.s", "b.q", "b.s")} AS cos_sim
       FROM hu{lvl} a JOIN hu{lvl} b
         ON a.cluster = b.cluster AND a.vec_id <> b.vec_id
     ),
@@ -1098,8 +1060,10 @@ def q_graph_ann_search_durable(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, sf_dir, artifacts.directory(spark, "knn_graph_durable", sf_dir)
         ),
     )
-    gund = tracked_persist(_undirected(em.read(spark)))
-    return _search(spark, sf_dir, am.read(spark), gund, 0, 1)
+    # read with the committed tables' schemas: no schema-inference job
+    assign, edges = _knn_refined_tables(spark, sf_dir)
+    gund = tracked_persist(_undirected(em.read(spark, schema=edges.schema)))
+    return _search(spark, sf_dir, am.read(spark, schema=assign.schema), gund, 0, 1)
 
 
 # ---------------------------------------------------------------------------

@@ -14,15 +14,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .. import artifacts
 from ..caching import tracked_persist
 from ..functions.exprs import duck_md5_32, spark_md5_32
-from ..functions.text import DUCK_SHINGLES
+from ..functions.text import duck_jaccard_pairs
+from ..functions.vectors import (
+    AUTO_K_SQL,
+    EN,
+    duck_hash_assign,
+    duck_int_cos,
+    duck_kmeans_cells,
+    duck_label_ivf,
+    duck_pq_topk,
+    duck_probe,
+)
 from ..operators import similarity as SIM
 from ..registry import register
 from ..sources.tables import load
-from .dedup import AUTO_K_SQL, _semdedup_assign_cte
-from .graph import _int_cos_sql
 
 
 @register(
@@ -82,38 +89,8 @@ def q_embedding_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_topk_ivf",
-    oracle="""
-    WITH e AS (SELECT vec_id, label,
-                      LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE)) AS v
-               FROM embeddings),
-    q AS (SELECT v AS qv, SQRT(LIST_SUM(LIST_TRANSFORM(v, x -> x * x))) AS qn
-          FROM e WHERE vec_id = 0),
-    dims AS (SELECT UNNEST(range(64)) AS dim),
-    per_dim AS (
-      SELECT e.label, d.dim,
-             CAST(SUM(CAST(FLOOR(e.v[d.dim + 1] * 10000000) AS BIGINT)) AS DOUBLE)
-               / (COUNT(*) * 10000000.0) AS mean_val
-      FROM e CROSS JOIN dims d
-      GROUP BY e.label, d.dim
-    ),
-    cent AS (SELECT label, LIST(mean_val ORDER BY dim) AS centroid
-             FROM per_dim GROUP BY label),
-    probed AS (
-      SELECT label FROM (
-        SELECT c.label,
-               LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> c.centroid[i] * q.qv[i]))
-                 / (SQRT(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> c.centroid[i] * c.centroid[i])))
-                    * q.qn) AS c_sim
-        FROM cent c CROSS JOIN q
-      ) ORDER BY c_sim DESC, label LIMIT 3
-    )
-    SELECT vec_id, cos_sim FROM (
-      SELECT e.vec_id,
-             ROUND(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> e.v[i] * q.qv[i]))
-               / (SQRT(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> e.v[i] * e.v[i]))) * q.qn),
-             4) AS cos_sim
-      FROM e JOIN probed p ON e.label = p.label CROSS JOIN q
-    ) ORDER BY cos_sim DESC, vec_id LIMIT 20
+    oracle=f"""{duck_label_ivf("vec_id = 0")}
+    SELECT vec_id, cos_sim FROM cand ORDER BY cos_sim DESC, vec_id LIMIT 20
     """,
 )
 def q_embedding_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,100 +98,25 @@ def q_embedding_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Centroids built per ``label`` cell (one narrow agg, broadcastable);
     the probe semi-join prunes ~70% of the corpus here and ~(1 - p/√N) at
-    scale. Approximate vs exact top-k, but DETERMINISTIC as an algorithm
-    (r5): fixed-point centroid means are order-free BIGINT sums, cosines
+    scale. Approximate vs exact top-k, but DETERMINISTIC as an algorithm:
+    fixed-point centroid means are order-free BIGINT sums, cosines
     sequential-fold doubles, probe ties broken by label — so the oracle
-    replays the same IVF computation in SQL and the driver hash-checks it
-    (was rows-only through r4; recall-vs-brute-force floor additionally
-    pinned in tests/test_approx_invariants.py).
+    replays the same IVF computation in SQL (the batch prefix with a batch
+    of one) and the oracle check hashes it; the recall-vs-brute-force floor
+    is pinned in tests/test_approx_invariants.py.
     """
     emb = load(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == 0)
     return SIM.ivf_topk(emb, query, k=20, n_probe=3)
 
 
-def _lloyd_rounds_sql(n_rounds: int) -> str:
-    """Unroll ``n_rounds`` deterministic Lloyd iterations as DuckDB CTEs.
-
-    Round i assigns every vector to its nearest c{i-1} centroid (4-decimal
-    rounded cosine, cid tie-break — exactly kmeans_iterate's max_by struct),
-    recomputes fixed-point means, and COALESCEs empty clusters to the
-    previous centroid. Generated, not hand-written, so the SQL round count
-    always matches the query's n_iter (the engine may stop EARLIER on a
-    converged digest — skipped rounds are identities, so the results agree).
-    """
-    out = []
-    for i in range(1, n_rounds + 1):
-        prev = f"c{i - 1}"
-        out.append(f"""
-    a{i} AS (
-      SELECT vec_id, cid, v FROM (
-        SELECT en.vec_id, c.cid, en.v,
-               ROUND(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> en.v[i] * c.centroid[i]))
-                 / (en.n * SQRT(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> c.centroid[i] * c.centroid[i])))),
-               4) AS cc
-        FROM en CROSS JOIN {prev} c
-      ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cc DESC, cid ASC) = 1
-    ),
-    pd{i} AS (
-      SELECT a{i}.cid, d.dim,
-             CAST(SUM(CAST(FLOOR(a{i}.v[d.dim + 1] * 10000000) AS BIGINT)) AS DOUBLE)
-               / (COUNT(*) * 10000000.0) AS mean_val
-      FROM a{i} CROSS JOIN dims d GROUP BY 1, 2
-    ),
-    r{i} AS (SELECT cid, LIST(mean_val ORDER BY dim) AS centroid FROM pd{i} GROUP BY cid),
-    c{i} AS (SELECT {prev}.cid, COALESCE(r{i}.centroid, {prev}.centroid) AS centroid
-           FROM {prev} LEFT JOIN r{i} ON {prev}.cid = r{i}.cid)""")
-    return ",".join(out)
-
-_IVF_KMEANS_ITERS = 2
-
-
 def _ivf_kmeans_oracle(n_probe: int) -> str:
-    """The k-means-IVF oracle, parameterized by probe count (r7): the
-    probe-6 recall variant replays the IDENTICAL pipeline with one
-    different LIMIT, so the two oracles cannot drift apart."""
-    return _IVF_KMEANS_ORACLE_TEMPLATE.replace("LIMIT {N_PROBE}", f"LIMIT {n_probe}")
-
-_IVF_KMEANS_ORACLE_TEMPLATE = f"""
-    WITH e AS (SELECT vec_id, LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE)) AS v
-               FROM embeddings),
-    en AS (SELECT vec_id, v, SQRT(LIST_SUM(LIST_TRANSFORM(v, x -> x * x))) AS n FROM e),
-    q AS (SELECT v AS qv, SQRT(LIST_SUM(LIST_TRANSFORM(v, x -> x * x))) AS qn
-          FROM e WHERE vec_id = 0),
-    dims AS (SELECT UNNEST(range(64)) AS dim),
-    pd0 AS (
-      SELECT vec_id % 16 AS cid, d.dim,
-             CAST(SUM(CAST(FLOOR(v[d.dim + 1] * 10000000) AS BIGINT)) AS DOUBLE)
-               / (COUNT(*) * 10000000.0) AS mean_val
-      FROM e CROSS JOIN dims d GROUP BY 1, 2
-    ),
-    c0 AS (SELECT cid, LIST(mean_val ORDER BY dim) AS centroid FROM pd0 GROUP BY cid),
-    {_lloyd_rounds_sql(_IVF_KMEANS_ITERS)},
-    af AS (
-      SELECT vec_id, cid, v, n FROM (
-        SELECT en.vec_id, c.cid, en.v, en.n,
-               ROUND(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> en.v[i] * c.centroid[i]))
-                 / (en.n * SQRT(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> c.centroid[i] * c.centroid[i])))),
-               4) AS cc
-        FROM en CROSS JOIN c{_IVF_KMEANS_ITERS} c
-      ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cc DESC, cid ASC) = 1
-    ),
-    probed AS (
-      SELECT cid FROM (
-        SELECT c.cid,
-               LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> c.centroid[i] * q.qv[i]))
-                 / (SQRT(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> c.centroid[i] * c.centroid[i])))
-                    * q.qn) AS cs
-        FROM c{_IVF_KMEANS_ITERS} c CROSS JOIN q
-      ) ORDER BY cs DESC, cid LIMIT {{N_PROBE}}
-    )
-    SELECT vec_id, cos_sim FROM (
-      SELECT af.vec_id,
-             ROUND(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> af.v[i] * q.qv[i]))
-               / (af.n * q.qn), 4) AS cos_sim
-      FROM af JOIN probed p ON af.cid = p.cid CROSS JOIN q
-    ) ORDER BY cos_sim DESC, vec_id LIMIT 20
+    """The committed index's training replayed in SQL, then the query's
+    ``n_probe`` cells and the top 20 inside them; the probe-3 and probe-6
+    entries differ only in ``n_probe``."""
+    return f"""WITH {EN},{duck_kmeans_cells(SIM.INDEX_CELLS, SIM.INDEX_ROUNDS)},
+    {duck_probe("kcells", "kassign", "vec_id = 0", n_probe)}
+    SELECT vec_id, cos_sim FROM cand ORDER BY cos_sim DESC, vec_id LIMIT 20
     """
 
 
@@ -223,29 +125,24 @@ _IVF_KMEANS_ORACLE_TEMPLATE = f"""
     oracle=_ivf_kmeans_oracle(3),
 )
 def q_embedding_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3 scale path, self-contained — IVF top-20 over FIXED-k k-means
-    centroids (hash-bucket init + 2 digest-early-stopped Lloyd rounds): no
-    pre-existing cell
-    column needed, closing the r4 verdict's gap that ``build_ivf_centroids``
-    only worked when a ``label`` already partitioned the corpus. Centroid
-    table is O(n_clusters) broadcast; assignment is one max_by aggregate.
-    Recall floor vs the exact brute force is pinned in
+    """X3 scale path, self-contained — IVF top-20 over the family's
+    committed k-means index (16 cells, hash-bucket init + 2 Lloyd rounds,
+    :func:`operators.similarity.kmeans_index`): no pre-existing cell
+    column needed, unlike ``embedding_topk_ivf``'s ``label`` cells. The
+    centroid table is O(cells) and broadcast; serving reads the stored
+    assignment. Recall floor vs the exact brute force is pinned in
     tests/test_approx_invariants.py.
 
-    Hash-checked since r5: every step is deterministic (hash-bucket init,
+    Hash-checked: every step is deterministic (hash-bucket init,
     order-free fixed-point means, 4-decimal-rounded assignment cosines with
     cid tie-break), so the oracle unrolls the Lloyd rounds in SQL
-    (generated by _lloyd_rounds_sql, count pinned to _IVF_KMEANS_ITERS) —
-    init means → per round: assign (QUALIFY row_number) → refreshed means
-    with empty-cluster COALESCE → final assign → probe top-3 cells →
-    top-20. r6 runs 2 rounds with a digest-converged early stop
-    (kmeans_iterate); a converged round is the identity, so a fixed-count
-    SQL unroll and an early-stopping engine agree bit-for-bit."""
+    (``duck_kmeans_cells``) — init means → per round: assign → refreshed
+    means with empty-cluster COALESCE → final assign → probe top-3 cells →
+    top-20. Training may stop early on a converged round; a converged
+    round is the identity, so a fixed-count SQL unroll agrees bit-for-bit."""
     emb = load(spark, sf_dir, "embeddings")
-    query = emb.filter(F.col("vec_id") == 0)
-    return SIM.ivf_topk_kmeans(
-        emb, query, k=20, n_clusters=16, n_probe=3, n_iter=_IVF_KMEANS_ITERS
-    )
+    cent, assign, _ = SIM.kmeans_index(spark, sf_dir)
+    return SIM.ivf_topk_kmeans(emb, emb.filter(F.col("vec_id") == 0), cent, assign, k=20, n_probe=3)
 
 
 @register(
@@ -253,21 +150,18 @@ def q_embedding_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_ivf_kmeans_oracle(6),
 )
 def q_embedding_topk_ivf_kmeans_probe6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3 — the RECALL-KNOB variant of ``embedding_topk_ivf_kmeans`` (r7,
-    VERDICT r6 item 5): identical k-means-IVF pipeline, 6 probed cells
-    instead of 3. The two-scale recall sweep (tests/test_recall_scales.py)
-    measured the 3-probe arm decaying toward its n_probe/k asymptote as
-    corpus-per-cell grows 10× (0.35 @ sf0.01 → 0.25 @ sf0.1 on the
-    near-uniform synthetic embeddings); doubling n_probe is the standard
-    IVF answer — recall scales ≈ linearly in probes while the scan stays
-    bounded at (n_probe/k)·corpus. Registered as its own oracle-checked
-    entry so the knob's EXACT semantics (not just its recall) are pinned:
-    the oracle is the same generated SQL with one different LIMIT."""
+    """X3 — the RECALL-KNOB variant of ``embedding_topk_ivf_kmeans``:
+    identical index, 6 probed cells instead of 3. The two-scale recall
+    sweep (tests/test_recall_scales.py) measured the 3-probe arm decaying
+    toward its n_probe/k asymptote as corpus-per-cell grows 10× (0.35 @
+    sf0.01 → 0.25 @ sf0.1 on the near-uniform synthetic embeddings);
+    doubling n_probe is the standard IVF answer — recall scales ≈ linearly
+    in probes while the scan stays bounded at (n_probe/k)·corpus.
+    Registered as its own oracle-checked entry so the knob's EXACT
+    semantics (not just its recall) are pinned."""
     emb = load(spark, sf_dir, "embeddings")
-    query = emb.filter(F.col("vec_id") == 0)
-    return SIM.ivf_topk_kmeans(
-        emb, query, k=20, n_clusters=16, n_probe=6, n_iter=_IVF_KMEANS_ITERS
-    )
+    cent, assign, _ = SIM.kmeans_index(spark, sf_dir)
+    return SIM.ivf_topk_kmeans(emb, emb.filter(F.col("vec_id") == 0), cent, assign, k=20, n_probe=6)
 
 
 @register(
@@ -610,132 +504,11 @@ def q_bm25_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# shared PQ/IVF serving index — trained once per (corpus, partitioning),
-# committed through VersionedMart, served as table reads
-
-
-def _pq_serving_tables(spark: SparkSession, sf_dir: str):
-    """``(cent, assign, cb)`` read back from :class:`VersionedMart`
-    commits — the trained ANN index artifacts shared by the PQ serving
-    entries: the 16-row Lloyd-refined coarse centroid table, the narrow
-    ``(vec_id, __cid)`` cell assignment (the "assignment is a stored
-    partition column at 100 TB" posture of ivf_topk_kmeans's docstring,
-    made literal), and the 8×64-row PQ codebook. Built by the exact
-    training functions the inline path runs (kmeans_iterate / pq_codebook
-    through kmeans_assign_and_probe — no forked arithmetic, so commits are
-    bit-identical to inline training) and served as parquet scans
-    thereafter. r15 measured the in-bench gap this closes:
-    embedding_topk_ivf_pq 4.0 s in-tier vs 2.8 s solo — FULL-tier cache
-    pressure kept re-materializing the training chain; committed tables
-    cannot be evicted. Memo, key and lock rules: :mod:`..artifacts`.
-    """
-    from ..caching import materialized_scope
-    from ..operators.similarity import (
-        kmeans_assign_and_probe,
-        kmeans_iterate,
-        pq_codebook,
-    )
-
-    def build(commit) -> None:
-        emb = load(spark, sf_dir, "embeddings")
-        # scope the training persists: the commits materialize the
-        # parquet, the scope releases the block-store entries
-        with materialized_scope():
-            cent = kmeans_iterate(emb, k=16, n_iter=2)
-            assign_full, _ = kmeans_assign_and_probe(
-                emb, emb.limit(1), n_clusters=16, n_probe=1, n_iter=2, cent=cent,
-            )
-            cb = pq_codebook(emb, kc=64, n_iter=1)
-            commit("centroids", cent.select("cid", "centroid"))
-            commit("assign", assign_full.select("vec_id", "__cid"))
-            commit("codebook", cb.select("s", "c", "cv"))
-
-    marts = artifacts.memoized_commit(spark, "pq_index", sf_dir, build=build)
-    return tuple(marts[n].read(spark) for n in ("centroids", "assign", "codebook"))
-
-
-# ---------------------------------------------------------------------------
 # embedding_topk_pq_adc
 
-@register(
-    "embedding_topk_pq_adc",
-    oracle="""
-    WITH e AS (SELECT vec_id,
-                      LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE)) AS v
-               FROM embeddings),
-    eu AS (SELECT vec_id,
-                  LIST_TRANSFORM(v, x ->
-                    x / SQRT(LIST_SUM(LIST_TRANSFORM(v, y -> y * y)))) AS u
-           FROM e),
-    dims AS (SELECT UNNEST(range(64)) AS dim),
-    pd AS (SELECT CAST(eu.vec_id % 64 AS INT) AS c,
-                  CAST(d.dim // 8 AS INT) AS s, d.dim,
-                  CAST(SUM(CAST(FLOOR(eu.u[d.dim + 1] * 10000000) AS BIGINT)) AS DOUBLE)
-                    / (COUNT(*) * 10000000.0) AS mean_val
-           FROM eu CROSS JOIN dims d GROUP BY 1, 2, 3),
-    cb0 AS (SELECT s, c, LIST(mean_val ORDER BY dim) AS cv
-            FROM pd GROUP BY s, c),
-    sub AS (SELECT CAST(UNNEST(range(8)) AS INT) AS s),
-    vs AS (SELECT eu.vec_id, sub.s,
-                  list_slice(eu.u, sub.s * 8 + 1, sub.s * 8 + 8) AS vsub
-           FROM eu CROSS JOIN sub),
-    a0 AS (
-      SELECT vs.vec_id, vs.s, cb0.c,
-             CAST(FLOOR(10000000.0 * LIST_SUM(LIST_TRANSFORM(range(1, 9),
-               i -> (vs.vsub[i] - cb0.cv[i]) * (vs.vsub[i] - cb0.cv[i]))))
-             AS BIGINT) AS dfx
-      FROM vs JOIN cb0 ON vs.s = cb0.s
-    ),
-    asg AS (SELECT vec_id, s, c FROM (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                                           ORDER BY dfx, c) AS rn
-              FROM a0) WHERE rn = 1),
-    pd1 AS (
-      SELECT a.s, a.c, d.i,
-             CAST(SUM(CAST(FLOOR(v.vsub[d.i + 1] * 10000000) AS BIGINT)) AS DOUBLE)
-               / (COUNT(*) * 10000000.0) AS mean_val
-      FROM asg a JOIN vs v ON a.vec_id = v.vec_id AND a.s = v.s
-      CROSS JOIN (SELECT CAST(UNNEST(range(8)) AS INT) AS i) d
-      GROUP BY 1, 2, 3
-    ),
-    cb1n AS (SELECT s, c, LIST(mean_val ORDER BY i) AS cv1 FROM pd1 GROUP BY s, c),
-    cb AS (SELECT cb0.s, cb0.c, COALESCE(cb1n.cv1, cb0.cv) AS cv
-           FROM cb0 LEFT JOIN cb1n ON cb0.s = cb1n.s AND cb0.c = cb1n.c),
-    enc0 AS (
-      SELECT vs.vec_id, vs.s, cb.c,
-             CAST(FLOOR(10000000.0 * LIST_SUM(LIST_TRANSFORM(range(1, 9),
-               i -> (vs.vsub[i] - cb.cv[i]) * (vs.vsub[i] - cb.cv[i]))))
-             AS BIGINT) AS dfx
-      FROM vs JOIN cb ON vs.s = cb.s
-    ),
-    enc AS (SELECT vec_id, s, c FROM (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                                           ORDER BY dfx, c) AS rn
-              FROM enc0) WHERE rn = 1),
-    qv AS (SELECT s, vsub FROM vs WHERE vec_id = 0),
-    qtab AS (
-      SELECT cb.s, cb.c,
-             CAST(FLOOR(10000000.0 * LIST_SUM(LIST_TRANSFORM(range(1, 9),
-               i -> q.vsub[i] * cb.cv[i]))) AS BIGINT) AS pfx
-      FROM cb JOIN qv q ON cb.s = q.s
-    ),
-    sc AS (SELECT enc.vec_id, SUM(pfx) AS adc
-           FROM enc JOIN qtab ON enc.s = qtab.s AND enc.c = qtab.c
-           GROUP BY 1),
-    short AS (SELECT vec_id FROM sc ORDER BY adc DESC, vec_id LIMIT 50),
-    qf AS (SELECT v AS qvec, SQRT(LIST_SUM(LIST_TRANSFORM(v, x -> x * x))) AS qn
-           FROM e WHERE vec_id = 0)
-    SELECT vec_id, cos_sim FROM (
-      SELECT e.vec_id,
-             ROUND(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> e.v[i] * qf.qvec[i]))
-               / (SQRT(LIST_SUM(LIST_TRANSFORM(e.v, x -> x * x))) * qf.qn),
-             4) AS cos_sim
-      FROM e JOIN short USING (vec_id) CROSS JOIN qf
-    ) ORDER BY cos_sim DESC, vec_id LIMIT 10
-    """,
-)
+@register("embedding_topk_pq_adc", oracle=f"WITH {EN},{duck_pq_topk(None, 50)}")
 def q_embedding_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3 (r7) — product-quantization ADC retrieval with exact re-rank
+    """X3 — product-quantization ADC retrieval with exact re-rank
     (Jégou et al. 2011): 8 subspaces × 64 codes (48 bits/vector — an
     honest ~8-vectors-per-code regime on the 500-vector fixture;
     production uses 256 codes = the FAISS byte-per-subspace default),
@@ -749,158 +522,41 @@ def q_embedding_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage (zero corpus-scale shuffles), then TakeOrdered(50) and a
     broadcast re-rank. Every comparison is fixed-point BIGINT (floor-scaled
     distances and partial dots), so the oracle replays the identical
-    algorithm — recall vs the brute-force twin is additionally floor-pinned
-    in tests/test_model_filters.py.
+    algorithm. The codebook is the committed index's
+    (:func:`operators.similarity.kmeans_index`), trained once per process.
     """
-    from ..operators.similarity import pq_adc_topk
-
     emb = load(spark, sf_dir, "embeddings")
-    query = emb.filter(F.col("vec_id") == 0)
-    # serve from the committed codebook (r16-opt): training runs once per
-    # (corpus, partitioning) in _pq_serving_tables, not once per query call
-    _, _, cb = _pq_serving_tables(spark, sf_dir)
-    return pq_adc_topk(emb, query, k=10, shortlist=50, kc=64, cb=cb)
+    _, _, cb = SIM.kmeans_index(spark, sf_dir)
+    return SIM.pq_adc_topk(emb, emb.filter(F.col("vec_id") == 0), cb, k=10, shortlist=50)
 
 
 # ---------------------------------------------------------------------------
 # embedding_topk_ivf_pq (the composed index)
 
-# The coarse stage replays the embedding_topk_ivf_kmeans oracle verbatim
-# (same generated Lloyd rounds — imported so the two cannot drift); the
-# PQ stage replays embedding_topk_pq_adc with p_-prefixed CTEs (the Lloyd
-# generator also emits pd{i}/c{i} names) restricted to probed cells.
-
-_IVF_PQ_ORACLE = f"""
-    WITH e AS (SELECT vec_id, LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE)) AS v
-               FROM embeddings),
-    en AS (SELECT vec_id, v, SQRT(LIST_SUM(LIST_TRANSFORM(v, x -> x * x))) AS n FROM e),
-    q AS (SELECT v AS qv, SQRT(LIST_SUM(LIST_TRANSFORM(v, x -> x * x))) AS qn
-          FROM e WHERE vec_id = 0),
-    dims AS (SELECT UNNEST(range(64)) AS dim),
-    pd0 AS (
-      SELECT vec_id % 16 AS cid, d.dim,
-             CAST(SUM(CAST(FLOOR(v[d.dim + 1] * 10000000) AS BIGINT)) AS DOUBLE)
-               / (COUNT(*) * 10000000.0) AS mean_val
-      FROM e CROSS JOIN dims d GROUP BY 1, 2
-    ),
-    c0 AS (SELECT cid, LIST(mean_val ORDER BY dim) AS centroid FROM pd0 GROUP BY cid),
-    {_lloyd_rounds_sql(_IVF_KMEANS_ITERS)},
-    af AS (
-      SELECT vec_id, cid FROM (
-        SELECT en.vec_id, c.cid,
-               ROUND(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> en.v[i] * c.centroid[i]))
-                 / (en.n * SQRT(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> c.centroid[i] * c.centroid[i])))),
-               4) AS cc
-        FROM en CROSS JOIN c{_IVF_KMEANS_ITERS} c
-      ) QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cc DESC, cid ASC) = 1
-    ),
-    probed AS (
-      SELECT cid FROM (
-        SELECT c.cid,
-               LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> c.centroid[i] * q.qv[i]))
-                 / (SQRT(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> c.centroid[i] * c.centroid[i])))
-                    * q.qn) AS cs
-        FROM c{_IVF_KMEANS_ITERS} c CROSS JOIN q
-      ) ORDER BY cs DESC, cid LIMIT 6
-    ),
-    sel AS (SELECT af.vec_id FROM af JOIN probed p ON af.cid = p.cid),
-    eu AS (SELECT vec_id,
-                  LIST_TRANSFORM(v, x ->
-                    x / SQRT(LIST_SUM(LIST_TRANSFORM(v, y -> y * y)))) AS u
-           FROM e),
-    p_pd AS (SELECT CAST(eu.vec_id % 64 AS INT) AS c,
-                    CAST(d.dim // 8 AS INT) AS s, d.dim,
-                    CAST(SUM(CAST(FLOOR(eu.u[d.dim + 1] * 10000000) AS BIGINT)) AS DOUBLE)
-                      / (COUNT(*) * 10000000.0) AS mean_val
-             FROM eu CROSS JOIN dims d GROUP BY 1, 2, 3),
-    p_cb0 AS (SELECT s, c, LIST(mean_val ORDER BY dim) AS cv
-              FROM p_pd GROUP BY s, c),
-    p_sub AS (SELECT CAST(UNNEST(range(8)) AS INT) AS s),
-    p_vs AS (SELECT eu.vec_id, p_sub.s,
-                    list_slice(eu.u, p_sub.s * 8 + 1, p_sub.s * 8 + 8) AS vsub
-             FROM eu CROSS JOIN p_sub),
-    p_a0 AS (
-      SELECT p_vs.vec_id, p_vs.s, p_cb0.c,
-             CAST(FLOOR(10000000.0 * LIST_SUM(LIST_TRANSFORM(range(1, 9),
-               i -> (p_vs.vsub[i] - p_cb0.cv[i]) * (p_vs.vsub[i] - p_cb0.cv[i]))))
-             AS BIGINT) AS dfx
-      FROM p_vs JOIN p_cb0 ON p_vs.s = p_cb0.s
-    ),
-    p_asg AS (SELECT vec_id, s, c FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                                             ORDER BY dfx, c) AS rn
-                FROM p_a0) WHERE rn = 1),
-    p_pd1 AS (
-      SELECT a.s, a.c, d.i,
-             CAST(SUM(CAST(FLOOR(v.vsub[d.i + 1] * 10000000) AS BIGINT)) AS DOUBLE)
-               / (COUNT(*) * 10000000.0) AS mean_val
-      FROM p_asg a JOIN p_vs v ON a.vec_id = v.vec_id AND a.s = v.s
-      CROSS JOIN (SELECT CAST(UNNEST(range(8)) AS INT) AS i) d
-      GROUP BY 1, 2, 3
-    ),
-    p_cb1n AS (SELECT s, c, LIST(mean_val ORDER BY i) AS cv1 FROM p_pd1 GROUP BY s, c),
-    p_cb AS (SELECT p_cb0.s, p_cb0.c, COALESCE(p_cb1n.cv1, p_cb0.cv) AS cv
-             FROM p_cb0 LEFT JOIN p_cb1n ON p_cb0.s = p_cb1n.s AND p_cb0.c = p_cb1n.c),
-    p_enc0 AS (
-      SELECT p_vs.vec_id, p_vs.s, p_cb.c,
-             CAST(FLOOR(10000000.0 * LIST_SUM(LIST_TRANSFORM(range(1, 9),
-               i -> (p_vs.vsub[i] - p_cb.cv[i]) * (p_vs.vsub[i] - p_cb.cv[i]))))
-             AS BIGINT) AS dfx
-      FROM p_vs JOIN sel USING (vec_id) JOIN p_cb ON p_vs.s = p_cb.s
-    ),
-    p_enc AS (SELECT vec_id, s, c FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, s
-                                             ORDER BY dfx, c) AS rn
-                FROM p_enc0) WHERE rn = 1),
-    p_qv AS (SELECT s, vsub FROM p_vs WHERE vec_id = 0),
-    p_qtab AS (
-      SELECT p_cb.s, p_cb.c,
-             CAST(FLOOR(10000000.0 * LIST_SUM(LIST_TRANSFORM(range(1, 9),
-               i -> pq.vsub[i] * p_cb.cv[i]))) AS BIGINT) AS pfx
-      FROM p_cb JOIN p_qv pq ON p_cb.s = pq.s
-    ),
-    p_sc AS (SELECT p_enc.vec_id, SUM(pfx) AS adc
-             FROM p_enc JOIN p_qtab ON p_enc.s = p_qtab.s AND p_enc.c = p_qtab.c
-             GROUP BY 1),
-    p_short AS (SELECT vec_id FROM p_sc ORDER BY adc DESC, vec_id LIMIT 30)
-    SELECT vec_id, cos_sim FROM (
-      SELECT e.vec_id,
-             ROUND(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> e.v[i] * q.qv[i]))
-               / (SQRT(LIST_SUM(LIST_TRANSFORM(e.v, x -> x * x))) * q.qn),
-             4) AS cos_sim
-      FROM e JOIN p_short USING (vec_id) CROSS JOIN q
-    ) ORDER BY cos_sim DESC, vec_id LIMIT 10
-    """
-
 
 @register(
     "embedding_topk_ivf_pq",
-    oracle=_IVF_PQ_ORACLE,
+    oracle=f"""WITH {EN},{duck_kmeans_cells(SIM.INDEX_CELLS, SIM.INDEX_ROUNDS)},
+    {duck_probe("kcells", "kassign", "vec_id = 0", 6)},{duck_pq_topk("cand", 30)}""",
 )
 def q_embedding_topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3 (r7) — the composed FAISS-style index: 6-of-16-cell IVF probe
+    """X3 — the composed FAISS-style index: 6-of-16-cell IVF probe
     over the family's Lloyd-refined k-means centroids × PQ-ADC (8×64
     codes, codebook trained on the FULL corpus so codes are
     query-independent) × exact-cosine re-rank of a 30-deep shortlist.
     Scan ≈ 6/16 of the corpus, each scanned vector costs 8 table lookups,
     memory is 8 codes/vector — multiplicative savings, the reason
-    billion-vector indexes exist. The coarse stage is the SAME
-    assignment+probe as ``embedding_topk_ivf_kmeans`` (factored helper +
-    imported oracle CTEs, so the twins cannot drift); probe-6 is the
-    family's recall knob — hash-init 3-probe cells measured 0.42 mean
-    recall@10 on the near-isotropic fixture, Lloyd + 6 probes ≈ 0.6+.
-    Deterministic end-to-end; recall floor vs brute force pinned in
-    tests/test_model_filters.py.
+    billion-vector indexes exist. The coarse stage is the SAME committed
+    index and probe as ``embedding_topk_ivf_kmeans``, and its oracle the
+    same generated CTEs; probe-6 is the family's recall knob — hash-init
+    3-probe cells measured 0.42 mean recall@10 on the near-isotropic
+    fixture, Lloyd + 6 probes ≈ 0.6+. Serving runs ZERO training passes:
+    probe + semi-join + ADC map + re-rank over the committed tables.
+    Recall floor vs brute force pinned in tests/test_model_filters.py.
     """
-    from ..operators.similarity import ivf_pq_topk
-
     emb = load(spark, sf_dir, "embeddings")
-    query = emb.filter(F.col("vec_id") == 0)
-    # serve from the committed index (r16-opt): coarse centroids, cell
-    # assignment, and PQ codebook are mart-committed tables; this call
-    # runs ZERO training passes — probe + semi-join + ADC map + re-rank
-    cent, assign, cb = _pq_serving_tables(spark, sf_dir)
-    return ivf_pq_topk(emb, query, k=10, shortlist=30, cent=cent, assign=assign, cb=cb)
+    cent, assign, cb = SIM.kmeans_index(spark, sf_dir)
+    return SIM.ivf_pq_topk(emb, emb.filter(F.col("vec_id") == 0), cent, assign, cb, k=10, shortlist=30)
 
 
 # ---------------------------------------------------------------------------
@@ -1331,50 +987,16 @@ _IVB_K = 10  # results per query
 _IVB_PROBE = 3  # probed cells per query (matches embedding_topk_ivf)
 
 #: shared oracle prefix through ``cand`` (the batch panel's probed
-#: candidate scores) — consumed by the serving entry below AND the r14
-#: ``ivf_recall_report``, so the recall audit measures
-#: definitionally the SAME index/probe/scoring pipeline it reports on.
-IVF_BATCH_CTES = f"""e AS (SELECT vec_id, label,
-                      LIST_TRANSFORM(embedding, x -> CAST(x AS DOUBLE)) AS v
-               FROM embeddings),
-    qs AS (SELECT vec_id AS query_id, v AS qv,
-                  SQRT(LIST_SUM(LIST_TRANSFORM(v, x -> x * x))) AS qn
-           FROM e WHERE vec_id % 100 = 0),
-    dims AS (SELECT UNNEST(range(64)) AS dim),
-    per_dim AS (
-      SELECT e.label, d.dim,
-             CAST(SUM(CAST(FLOOR(e.v[d.dim + 1] * 10000000) AS BIGINT)) AS DOUBLE)
-               / (COUNT(*) * 10000000.0) AS mean_val
-      FROM e CROSS JOIN dims d
-      GROUP BY e.label, d.dim
-    ),
-    cent AS (SELECT label, LIST(mean_val ORDER BY dim) AS centroid
-             FROM per_dim GROUP BY label),
-    probe AS (
-      SELECT query_id, label FROM (
-        SELECT q.query_id, c.label,
-               LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> c.centroid[i] * q.qv[i]))
-                 / (SQRT(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> c.centroid[i] * c.centroid[i])))
-                    * q.qn) AS c_sim
-        FROM cent c CROSS JOIN qs q
-      ) QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY c_sim DESC, label) <= {_IVB_PROBE}
-    ),
-    cand AS (
-      SELECT q.query_id, e.vec_id,
-             ROUND(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> e.v[i] * q.qv[i]))
-               / (SQRT(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> e.v[i] * e.v[i]))) * q.qn),
-             4) AS cos_sim
-      FROM probe p
-      JOIN e ON e.label = p.label
-      JOIN qs q ON q.query_id = p.query_id
-    )"""
+#: candidate scores) — consumed by the serving entry below AND
+#: ``ivf_recall_report``/``ann_ranking_report``, so the audits measure
+#: definitionally the SAME index/probe/scoring pipeline they report on.
+_IVB_CTES = duck_label_ivf("vec_id % 100 = 0", _IVB_PROBE)
 
 
 @register(
     "embedding_topk_ivf_batch",
     oracle=f"""
-    WITH {IVF_BATCH_CTES}
+    {_IVB_CTES}
     SELECT query_id, CAST(rn AS INT) AS rank, vec_id, cos_sim FROM (
       SELECT query_id, vec_id, cos_sim,
              ROW_NUMBER() OVER (PARTITION BY query_id
@@ -1384,7 +1006,7 @@ IVF_BATCH_CTES = f"""e AS (SELECT vec_id, label,
     """,
 )
 def q_embedding_topk_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3+ (r9) — the SERVING shape of IVF retrieval: every query with
+    """X3+ — the SERVING shape of IVF retrieval: every query with
     vec_id % 100 == 0 (a size-tracking batch: 5 at sf0.01, 20 at sf0.1)
     through the label-cell IVF index in ONE job, top-{_IVB_K} per query.
     Same index and probe count as `embedding_topk_ivf`; what changes is
@@ -1419,19 +1041,6 @@ _MAT_PREFIX = 32  # leading dims kept by the truncation under audit
 
 _MAT_QMOD, _MAT_QREM = 100, 7  # deterministic query panel: vec_id % 100 = 7
 
-
-def _cos_sql_d(qa: str, sa: str, qb: str, sb: str, d: int) -> str:
-    """Dimension-parameterized twin of graph._int_cos_sql (that one is
-    pinned to the 64-dim full vectors); same guarded pure-integer form."""
-    dot = (
-        f"CAST(LIST_SUM(LIST_TRANSFORM(range(1, {d + 1}), "
-        f"i -> {qa}[i] * {qb}[i])) AS BIGINT)"
-    )
-    return (
-        f"CAST(CASE WHEN {sa} < 2 OR {sb} < 2 THEN 0 ELSE "
-        f"(({dot} + 2 * {sa} * {sb}) * 10000) // ({sa} * {sb}) - 20000 END "
-        "AS BIGINT)"
-    )
 
 #: quantize full + prefix vectors with EXACT integer norms (the isqrt
 #: correction step — operators.similarity.int_isqrt's SQL twin, extended to
@@ -1468,8 +1077,8 @@ _MAT_QV_CTE = f"""
     qq AS (SELECT * FROM qv WHERE vec_id % {_MAT_QMOD} = {_MAT_QREM}),
     pairs AS (
       SELECT qq.vec_id AS query_id, c.vec_id AS cand_id,
-             {_cos_sql_d("qq.q", "qq.s", "c.q", "c.s", _MAT_DIM)} AS fs,
-             {_cos_sql_d("qq.qp", "qq.sp", "c.qp", "c.sp", _MAT_PREFIX)} AS ps
+             {duck_int_cos("qq.q", "qq.s", "c.q", "c.s", _MAT_DIM)} AS fs,
+             {duck_int_cos("qq.qp", "qq.sp", "c.qp", "c.sp", _MAT_PREFIX)} AS ps
       FROM qq JOIN qv c ON c.vec_id <> qq.vec_id
     ),
     f10 AS (
@@ -1607,15 +1216,15 @@ def q_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_cell_size_report",
     oracle=f"""
-    {_semdedup_assign_cte(1, AUTO_K_SQL)}
-    SELECT CAST(cluster AS BIGINT) AS cluster,
+    {duck_hash_assign(1, AUTO_K_SQL)}
+    SELECT CAST(cid AS BIGINT) AS cluster,
            CAST(COUNT(*) AS BIGINT) AS cell_size,
            CAST(COUNT(*) * (COUNT(*) - 1) AS BIGINT) AS pair_work
-    FROM assign GROUP BY cluster ORDER BY cluster
+    FROM assign GROUP BY cid ORDER BY cluster
     """,
 )
 def q_ann_cell_size_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3+ (r12) — the CELL-BALANCE audit for the shared auto-k
+    """X3+ — the CELL-BALANCE audit for the shared auto-k
     nearest-centroid assignment (the machinery under SemDeDup, the kNN
     graph, and semantic decontamination): per cell, its population and
     its exact pair-join work ``|cell|·(|cell|−1)`` — the quantity the
@@ -1656,13 +1265,13 @@ _IVR_K = 10  # panel depth on both arms (matches embedding_topk_ivf_batch)
 
 
 def _ivr_oracle() -> str:
-    """Both arms off the SHARED IVF_BATCH_CTES prefix: the probed candidates
+    """Both arms off the SHARED ``_IVB_CTES`` prefix: the probed candidates
     (``cand``) ARE the serving entry's, and the exact arm scores the same
     double-precision 4dp cosine over the full corpus — so the report
     measures exactly the pipeline it audits."""
 
     return f"""
-    WITH {IVF_BATCH_CTES},
+    {_IVB_CTES},
     iv10 AS (
       SELECT query_id, vec_id FROM (
         SELECT query_id, vec_id,
@@ -1673,9 +1282,8 @@ def _ivr_oracle() -> str:
     ex AS (
       SELECT q.query_id, e.vec_id,
              ROUND(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> e.v[i] * q.qv[i]))
-               / (SQRT(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> e.v[i] * e.v[i]))) * q.qn),
-             4) AS cos_sim
-      FROM e CROSS JOIN qs q
+               / (e.n * q.qn), 4) AS cos_sim
+      FROM en e CROSS JOIN qs q
     ),
     ex10 AS (
       SELECT query_id, vec_id FROM (
@@ -1698,11 +1306,11 @@ def _ivr_oracle() -> str:
 
 @register("ivf_recall_report", oracle=_ivr_oracle())
 def q_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3+ (r14) — the serving index's RECALL as a driver-checkable row:
+    """X3+ — the serving index's RECALL as an oracle-checked row:
     per batch-panel query (vec_id % 100 == 0, the embedding_topk_ivf_batch
     panel), exact top-{_IVR_K} by the family's 4dp double cosine vs the
     IVF probe-3 top-{_IVR_K}, reporting (n_common, recall_x1e4). Recall
-    floors have lived in tests since r7; this makes the production
+    floors live in tests; this makes the production
     quality number a REGISTRY readout the driver value-hashes every
     window it's seated — the ann_cell_size_report pattern applied to
     retrieval quality (an index regression shows up as a changed row,
@@ -1714,7 +1322,7 @@ def q_ivf_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one broadcast panel × corpus map pass + a per-query top-k window
     — the measurement instrument, run over a sampled panel in
     production exactly like matryoshka_prefix_recall. Shared oracle
-    prefix (IVF_BATCH_CTES) pins the audit to the audited
+    prefix (``_IVB_CTES``) pins the audit to the audited
     pipeline's text.
     """
     from ..operators.similarity import cosine, ensure_min_partitions, ivf_topk_batch
@@ -1777,7 +1385,7 @@ _HN_DUP_T = 4000  # near-dup cut in integer-cosine x1e4 units (0.4)
 def _hard_negative_oracle() -> str:
     """Panel×corpus integer-cosine scoring (the matryoshka instrument
     shape) split at the SAME integer near-dup boundary on both engines;
-    ``_int_cos_sql`` is graph.py's shared guarded pure-integer score, so
+    ``duck_int_cos`` is the family's shared guarded pure-integer score, so
     the whole mining decision value-hash-replays in SQL."""
     return f"""
     WITH qv AS MATERIALIZED (
@@ -1798,7 +1406,7 @@ def _hard_negative_oracle() -> str:
     ),
     scored AS MATERIALIZED (
       SELECT p.vec_id AS query_id, c.vec_id AS cand_id,
-             {_int_cos_sql("p.q", "p.s", "c.q", "c.s")} AS cos_x1e4
+             {duck_int_cos("p.q", "p.s", "c.q", "c.s")} AS cos_x1e4
       FROM qv p JOIN qv c ON c.vec_id <> p.vec_id
       WHERE p.vec_id % {_HN_QMOD} = {_HN_QREM}
     ),
@@ -1823,7 +1431,7 @@ def _hard_negative_oracle() -> str:
 
 @register("hard_negative_pairs", oracle=_hard_negative_oracle())
 def q_hard_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3+ (r15) — HARD-NEGATIVE mining for contrastive training
+    """X3+ — HARD-NEGATIVE mining for contrastive training
     (ANCE, Xiong et al. 2021; DPR, Karpukhin et al. 2020): per
     deterministic panel query (vec_id % {_HN_QMOD} = {_HN_QREM}), the
     top-{_HN_K} cosine-NEAREST candidates BELOW the near-duplicate cut —
@@ -1917,25 +1525,15 @@ def _lsh_recall_oracle() -> str:
     """Replays the ENTIRE report in SQL: md5-permutation minhash
     signatures (the portable-simhash precedent — production uses
     xxhash64, the audit twin pays ~2x hash cost for replayability),
-    tuple-banding candidates, the exact inverted-index pair table, and
-    the per-band + union coverage rollup."""
+    tuple-banding candidates, the exact pair table (``duck_jaccard_pairs``,
+    the near-dup family's one pair CTE), and the per-band + union coverage
+    rollup."""
 
     n_bands = _LSH_PERMS // _LSH_BAND_ROWS
     md5_32 = duck_md5_32("g || '#' || CAST(i AS VARCHAR)")
     return f"""
-    WITH {DUCK_SHINGLES},
-    sizes AS (SELECT doc_id, LEN(s) AS n FROM sh),
-    ex AS (SELECT doc_id, UNNEST(s) AS shingle FROM sh),
-    inter AS (
-      SELECT a.doc_id AS ida, b.doc_id AS idb, CAST(COUNT(*) AS BIGINT) AS c
-      FROM ex a JOIN ex b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    exact AS (
-      SELECT ida, idb FROM inter
-      JOIN sizes sa ON sa.doc_id = ida JOIN sizes sb ON sb.doc_id = idb
-      WHERE ({_LSH_RPT_DEN} + {_LSH_RPT_NUM}) * c >= {_LSH_RPT_NUM} * (sa.n + sb.n)
-    ),
+    WITH {duck_jaccard_pairs(_LSH_RPT_NUM / _LSH_RPT_DEN)},
+    exact AS (SELECT id_a AS ida, id_b AS idb FROM jp),
     tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS t FROM exact),
     mh AS (
       SELECT doc_id,
@@ -1990,7 +1588,7 @@ def _lsh_recall_oracle() -> str:
 
 @register("lsh_recall_report", oracle=_lsh_recall_oracle())
 def q_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2+ (r15) — the MEASURED recall of MinHash LSH banding against
+    """X2+ — the MEASURED recall of MinHash LSH banding against
     the exact qualifying pair set (J >= {_LSH_RPT_NUM}/{_LSH_RPT_DEN},
     the registered near-dup threshold): per band, candidate pairs
     produced and how many are truly qualifying; the band_idx = -1 row is
@@ -2010,49 +1608,25 @@ def q_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan at 100 TB: signatures are one map-only pass (minhash is
     array_min per permutation, no explode); banding self-joins on
     (band_idx, v1, v2) equi-keys — bucket collisions only, never
-    all-pairs; the exact pair table is the inverted-index equi-join. In
-    production the exact arm runs on a SAMPLED slice (the instrument
-    pattern); the banding arm is the production shape itself.
+    all-pairs; the exact pair table is ``near_dup_pairs`` (prefix filter +
+    exact verify). In production the exact arm runs on a SAMPLED slice
+    (the instrument pattern); the banding arm is the production shape
+    itself.
     """
     from ..functions.text import shingles
+    from ..operators.dedup import near_dup_pairs
     from ..operators.scaling import ensure_min_partitions
 
     n_bands = _LSH_PERMS // _LSH_BAND_ROWS
     docs = ensure_min_partitions(load(spark, sf_dir, "documents"))
-    sh = tracked_persist(
-        docs.select("doc_id", shingles(F.col("text")).alias("sh"))
-    )
-    # exact qualifying pairs via the inverted-index equi-join
-    tok = sh.select("doc_id", F.explode("sh").alias("t"))
-    sizes = sh.select("doc_id", F.size("sh").alias("n"))
-    inter = (
-        tok.alias("a")
-        .join(
-            tok.alias("b"),
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("ida"), F.col("b.doc_id").alias("idb")
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
+    sh = docs.select("doc_id", shingles(F.col("text")).alias("sh"))
+    # exact qualifying pairs: the near-dup family's one pair function
     exact = tracked_persist(
-        inter.join(sizes.withColumnRenamed("doc_id", "ida"), "ida")
-        .withColumnRenamed("n", "na")
-        .join(
-            sizes.withColumnRenamed("doc_id", "idb").withColumnRenamed(
-                "n", "nb"
-            ),
-            "idb",
+        near_dup_pairs(docs, _LSH_RPT_NUM / _LSH_RPT_DEN).select(
+            F.col("id_a").alias("ida"), F.col("id_b").alias("idb"), F.lit(True).alias("__q")
         )
-        .filter(
-            (_LSH_RPT_DEN + _LSH_RPT_NUM) * F.col("c")
-            >= _LSH_RPT_NUM * (F.col("na") + F.col("nb"))
-        )
-        .select("ida", "idb", F.lit(True).alias("__q"))
     )
-    tot = exact.agg(F.count(F.lit(1)).cast("long").alias("t"))
+    tot = exact.count()  # one scalar, inlined as a literal below
     # portable md5 minhash signatures (project the array COLUMN first —
     # the sibling-projection lesson)
     sig = F.transform(
@@ -2081,7 +1655,7 @@ def q_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("band_idx", "bv"),
     ).select("doc_id", F.col("band_idx").cast("int"), "bv.v1", "bv.v2")
-    cand = tracked_persist(
+    cand = (
         bands.alias("a")
         .join(
             bands.alias("b"),
@@ -2096,22 +1670,21 @@ def q_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.doc_id").alias("idb"),
         )
     )
+    # one aggregate for every band and their union (the rollup's total,
+    # band -1): a pair occurs once per band, so its distinct count is the
+    # band's candidate count and, over all bands, the union's
+    pair = F.struct("ida", "idb")
     per_band = (
         cand.join(exact, ["ida", "idb"], "left")
-        .groupBy("band_idx")
+        .rollup("band_idx")
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_candidate_pairs"),
-            F.count("__q").cast("long").alias("n_qualifying_hit"),
+            F.countDistinct(pair).cast("long").alias("n_candidate_pairs"),
+            F.countDistinct(F.when(F.col("__q"), pair)).cast("long").alias("n_qualifying_hit"),
         )
-    )
-    uni = (
-        cand.select("ida", "idb")
-        .distinct()
-        .join(exact, ["ida", "idb"], "left")
-        .agg(
-            F.lit(-1).cast("int").alias("band_idx"),
-            F.count(F.lit(1)).cast("long").alias("n_candidate_pairs"),
-            F.count("__q").cast("long").alias("n_qualifying_hit"),
+        .select(
+            F.coalesce("band_idx", F.lit(-1)).cast("int").alias("band_idx"),
+            "n_candidate_pairs",
+            "n_qualifying_hit",
         )
     )
     grid = spark.range(n_bands).select(
@@ -2120,22 +1693,16 @@ def q_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.range(1).select(F.lit(-1).cast("int").alias("band_idx"))
     )
     return (
-        grid.join(per_band.unionByName(uni), "band_idx", "left")
-        .crossJoin(F.broadcast(tot))
+        grid.join(per_band, "band_idx", "left")
         .select(
             "band_idx",
-            F.coalesce("n_candidate_pairs", F.lit(0)).cast("long").alias(
-                "n_candidate_pairs"
-            ),
-            F.coalesce("n_qualifying_hit", F.lit(0)).cast("long").alias(
-                "n_qualifying_hit"
-            ),
-            F.col("t").alias("n_qualifying_total"),
-            F.when(
-                F.col("t") > 0,
-                F.expr(
-                    "CAST(COALESCE(n_qualifying_hit, 0) * 10000 DIV t AS BIGINT)"
-                ),
+            F.coalesce("n_candidate_pairs", F.lit(0)).cast("long").alias("n_candidate_pairs"),
+            F.coalesce("n_qualifying_hit", F.lit(0)).cast("long").alias("n_qualifying_hit"),
+            F.lit(tot).cast("long").alias("n_qualifying_total"),
+            (
+                F.expr(f"CAST(COALESCE(n_qualifying_hit, 0) * 10000 DIV {tot} AS BIGINT)")
+                if tot
+                else F.lit(None).cast("long")
             ).alias("recall_bp"),
         )
         .orderBy("band_idx")
@@ -2160,12 +1727,12 @@ _ARR_DISC = tuple(
 
 def _ann_ranking_oracle() -> str:
     """Shares the serving pipeline's own CTE prefix
-    (``IVF_BATCH_CTES`` — the ivf_recall_report discipline) and replays
+    (``_IVB_CTES`` — the ivf_recall_report discipline) and replays
     rank-join → gain×discount sums in SQL off the literal grid."""
 
     disc_rows = ", ".join(f"({r + 1}, {d})" for r, d in enumerate(_ARR_DISC))
     return f"""
-    WITH {IVF_BATCH_CTES},
+    {_IVB_CTES},
     iv AS (
       SELECT query_id, vec_id, rn AS rs FROM (
         SELECT query_id, vec_id,
@@ -2176,9 +1743,8 @@ def _ann_ranking_oracle() -> str:
     exs AS (
       SELECT q.query_id, e.vec_id,
              ROUND(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> e.v[i] * q.qv[i]))
-               / (SQRT(LIST_SUM(LIST_TRANSFORM(range(1, 65), i -> e.v[i] * e.v[i]))) * q.qn),
-             4) AS cos_sim
-      FROM e CROSS JOIN qs q
+               / (e.n * q.qn), 4) AS cos_sim
+      FROM en e CROSS JOIN qs q
     ),
     ex AS (
       SELECT query_id, vec_id, rn AS re FROM (
@@ -2212,7 +1778,7 @@ def _ann_ranking_oracle() -> str:
 
 @register("ann_ranking_report", oracle=_ann_ranking_oracle())
 def q_ann_ranking_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3+ (r15) — RANKING quality of the IVF serving arm, completing
+    """X3+ — RANKING quality of the IVF serving arm, completing
     `ivf_recall_report` (set overlap is blind to ORDER — an index that
     returns the right ten neighbors ranked backwards reads recall 1.0):
     per panel query, MRR (reciprocal rank of the first truly-relevant

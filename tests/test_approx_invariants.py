@@ -146,8 +146,8 @@ def test_centroid_means_partitioning_invariant(spark, sf_dir):
     )
 
     emb = load(spark, sf_dir, "embeddings")
-    a = build_ivf_centroids(emb.repartition(1), "label", "embedding").collect()
-    b = build_ivf_centroids(emb.repartition(13, "vec_id"), "label", "embedding").collect()
+    a = build_ivf_centroids(emb.repartition(1)).collect()
+    b = build_ivf_centroids(emb.repartition(13, "vec_id")).collect()
     assert {r.label: r.centroid for r in a} == {r.label: r.centroid for r in b}
 
     ha = build_hash_centroids(emb.repartition(1)).collect()

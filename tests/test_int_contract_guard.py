@@ -21,7 +21,7 @@ from my_favorite_etl_pipeline_spark.operators.similarity import (
     int_cos_x1e4,
     quantize_vectors,
 )
-from my_favorite_etl_pipeline_spark.plans.graph import _int_cos_sql
+from my_favorite_etl_pipeline_spark.functions.vectors import duck_int_cos
 
 DIM = 64
 
@@ -102,7 +102,7 @@ def scores(spark):
             FROM s)
     )
     SELECT pair_id, {score} AS score FROM n ORDER BY pair_id
-    """.format(score=_int_cos_sql("qa", "sa", "qb", "sb"))
+    """.format(score=duck_int_cos("qa", "sa", "qb", "sb"))
     duck_rows = dict(con.execute(q).fetchall())
     return spark_rows, duck_rows
 

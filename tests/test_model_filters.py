@@ -147,11 +147,13 @@ def test_leakage_safe_split_components_stay_together(spark, sf_dir):
 def test_pq_adc_recall_vs_brute_force(spark, sf_dir):
     from my_favorite_etl_pipeline_spark.operators.similarity import (
         brute_force_topk,
+        kmeans_index,
         pq_adc_topk,
     )
     from my_favorite_etl_pipeline_spark.sources.tables import load
 
     emb = load(spark, sf_dir, "embeddings").cache()
+    _, _, cb = kmeans_index(spark, sf_dir)
     # mean recall@10 over 5 spread queries; kc=64 measured 0.82 at sf0.01
     # (0.64 at kc=16, 0.96 at kc=256) — floor with margin for fixture drift
     total, qids = 0, (0, 20, 40, 60, 80)
@@ -159,7 +161,7 @@ def test_pq_adc_recall_vs_brute_force(spark, sf_dir):
         q = emb.filter(F.col("vec_id") == qid)
         exact_rows = brute_force_topk(emb, q, k=10).collect()
         exact = {r.vec_id for r in exact_rows}
-        approx_rows = pq_adc_topk(emb, q, k=10, shortlist=50, kc=64).collect()
+        approx_rows = pq_adc_topk(emb, q, cb, k=10, shortlist=50).collect()
         total += len(exact & {r.vec_id for r in approx_rows}) / 10
         # re-ranked scores of common ids must equal the exact scores
         exact_scores = {r.vec_id: r.cos_sim for r in exact_rows}
@@ -264,15 +266,17 @@ def test_ivf_pq_recall_and_subset_of_probed_cells(spark, sf_dir):
     from my_favorite_etl_pipeline_spark.operators.similarity import (
         brute_force_topk,
         ivf_pq_topk,
+        kmeans_index,
     )
     from my_favorite_etl_pipeline_spark.sources.tables import load
 
     emb = load(spark, sf_dir, "embeddings").cache()
+    cent, assign, cb = kmeans_index(spark, sf_dir)
     total, qids = 0, (0, 20, 40, 60, 80)
     for qid in qids:
         q = emb.filter(F.col("vec_id") == qid)
         exact_rows = brute_force_topk(emb, q, k=10).collect()
-        approx_rows = ivf_pq_topk(emb, q, k=10, shortlist=30).collect()
+        approx_rows = ivf_pq_topk(emb, q, cent, assign, cb, k=10, shortlist=30).collect()
         total += len(
             {r.vec_id for r in exact_rows} & {r.vec_id for r in approx_rows}
         ) / 10

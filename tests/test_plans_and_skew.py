@@ -383,12 +383,13 @@ def test_pq_adc_scoring_stage_has_no_corpus_shuffle(spark, sf_dir):
     # nested-array rows; the corpus-side encode+score stage is pure map and
     # the shortlist is TakeOrdered — the only hashpartitioning exchanges
     # belong to the O(m·kc) codebook aggregation, never to corpus rows.
-    from my_favorite_etl_pipeline_spark.operators.similarity import pq_adc_topk
+    from my_favorite_etl_pipeline_spark.operators.similarity import kmeans_index, pq_adc_topk
     from my_favorite_etl_pipeline_spark.sources.tables import load
 
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0)
-    plan = _physical_plan(pq_adc_topk(emb, q, k=10, shortlist=50, kc=64))
+    _, _, cb = kmeans_index(spark, sf_dir)
+    plan = _physical_plan(pq_adc_topk(emb, q, cb, k=10, shortlist=50))
     assert "TakeOrderedAndProject" in plan  # shortlist + final top-k
     assert "BroadcastExchange" in plan  # codebook/ADC/query ride broadcasts
     assert "SortMergeJoin" not in plan  # corpus never shuffle-joins

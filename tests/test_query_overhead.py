@@ -1,5 +1,6 @@
-"""Fixed per-query overhead of the text-curation queries: Spark job budgets,
-the DSIR weight-table plan, and the parquet schema memo behind ``load``."""
+"""Fixed per-query overhead: Spark job budgets of the text-curation, graph
+search, near-dup and centroid-cell queries, the DSIR weight-table plan, and
+the parquet schema memo behind ``load``."""
 
 from __future__ import annotations
 
@@ -55,12 +56,14 @@ def test_text_query_job_budget(spark, sf_dir, set_conf, name, budget):
 # collected the query vectors again. Then topk 24, durable 26, batch 24,
 # two-layer 40, three-layer 54, routed 40: each committed-artifact read
 # inferred its parquet schema (one job per table), and each layer entered
-# at rank strides counted its nodes before collecting them.
+# at rank strides counted its nodes before collecting them. The durable
+# search kept that inference (26) until it read its two marts with the
+# committed schemas.
 @pytest.mark.parametrize(
     "name, budget",
     [
         ("graph_ann_search_topk", 22),
-        ("graph_ann_search_durable", 26),
+        ("graph_ann_search_durable", 24),
         ("graph_ann_search_batch", 22),
         ("hnsw_two_layer_search", 36),
         ("hnsw_three_layer_search", 50),
@@ -93,6 +96,39 @@ def test_graph_search_job_budget(spark, sf_dir, set_conf, name, budget):
     ],
 )
 def test_near_dup_family_job_budget(spark, sf_dir, set_conf, name, budget):
+    set_conf(spark, CACHED_PLAN_AQE, "true")
+    assert _jobs_to_build_and_run(spark, sf_dir, name) <= budget
+
+
+# The centroid-cell family shares one assignment, one probe and one
+# committed k-means/PQ index. Measured before them on this fixture (three
+# runs): ivf 6, ivf_kmeans 26, ivf_kmeans_probe6 26, ivf_batch 16, pq_adc
+# 10, ivf_pq 16, semdedup 11-12, top2 11, auto_k 13, prototype 13, topic
+# cards 40, semantic decontamination 11-12, ivf recall 22, cell size 11,
+# ranking 23-24 jobs. The k-means IVF pair and the topic cards retrained
+# the index inline on every call. Each budget is a ceiling, the highest
+# count seen (AQE's asynchronous stage jobs vary between identical runs).
+@pytest.mark.parametrize(
+    "name, budget",
+    [
+        ("embedding_topk_ivf", 6),
+        ("embedding_topk_ivf_kmeans", 5),
+        ("embedding_topk_ivf_kmeans_probe6", 5),
+        ("embedding_topk_ivf_batch", 16),
+        ("embedding_topk_pq_adc", 10),
+        ("embedding_topk_ivf_pq", 16),
+        ("semdedup_cluster_pairs", 12),
+        ("semdedup_cluster_pairs_top2", 13),
+        ("semdedup_cluster_pairs_auto_k", 13),
+        ("prototype_prune_d4", 13),
+        ("topic_cluster_cards", 12),
+        ("semantic_decontaminate_topk", 12),
+        ("ivf_recall_report", 22),
+        ("ann_cell_size_report", 11),
+        ("ann_ranking_report", 23),
+    ],
+)
+def test_centroid_cell_family_job_budget(spark, sf_dir, set_conf, name, budget):
     set_conf(spark, CACHED_PLAN_AQE, "true")
     assert _jobs_to_build_and_run(spark, sf_dir, name) <= budget
 

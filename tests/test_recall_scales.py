@@ -131,11 +131,12 @@ def _mean_recall10(spark, scale_dir, approx_fn) -> float:
 @pytest.mark.parametrize("scale_dir", SCALES)
 def test_pq_adc_recall_floor_across_scales(spark, scale_dir):
     _need(scale_dir)
-    from my_favorite_etl_pipeline_spark.operators.similarity import pq_adc_topk
+    from my_favorite_etl_pipeline_spark.operators.similarity import kmeans_index, pq_adc_topk
 
+    _, _, cb = kmeans_index(spark, scale_dir)
     r = _mean_recall10(
         spark, scale_dir,
-        lambda emb, q: pq_adc_topk(emb, q, k=10, shortlist=50, kc=64),
+        lambda emb, q: pq_adc_topk(emb, q, cb, k=10, shortlist=50),
     )
     print(f"\npq_adc mean recall@10 @ {os.path.basename(scale_dir)}: {r:.3f}")
     assert r >= _PQ_FLOORS[os.path.basename(scale_dir)], f"{scale_dir}: {r:.3f}"
@@ -144,11 +145,12 @@ def test_pq_adc_recall_floor_across_scales(spark, scale_dir):
 @pytest.mark.parametrize("scale_dir", SCALES)
 def test_ivf_pq_recall_floor_across_scales(spark, scale_dir):
     _need(scale_dir)
-    from my_favorite_etl_pipeline_spark.operators.similarity import ivf_pq_topk
+    from my_favorite_etl_pipeline_spark.operators.similarity import ivf_pq_topk, kmeans_index
 
+    cent, assign, cb = kmeans_index(spark, scale_dir)
     r = _mean_recall10(
         spark, scale_dir,
-        lambda emb, q: ivf_pq_topk(emb, q, k=10, shortlist=30),
+        lambda emb, q: ivf_pq_topk(emb, q, cent, assign, cb, k=10, shortlist=30),
     )
     print(f"\nivf_pq mean recall@10 @ {os.path.basename(scale_dir)}: {r:.3f}")
     assert r >= _IVF_PQ_FLOORS[os.path.basename(scale_dir)], f"{scale_dir}: {r:.3f}"
