@@ -9,7 +9,7 @@ training-data pipeline.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Tiny per-language marker lexicons for the n-gram/stopword language-ID
@@ -75,6 +75,58 @@ def ngrams(col: Column | str, n: int = 2) -> Column:
 def shingles(col: Column | str, n: int = 3) -> Column:
     """Distinct word n-gram shingles — the MinHash/Jaccard unit."""
     return F.array_distinct(ngrams(col, n))
+
+
+#: Gram width of benchmark decontamination (the GPT-3 / Llama 13-gram rule).
+DECON_N = 13
+
+
+def positional_grams(docs: DataFrame, n: int = DECON_N) -> DataFrame:
+    """``(doc_id, pos, g)``: every word n-gram of ``docs(doc_id, text)`` at
+    its 0-based start position, with multiplicity; documents shorter than
+    ``n`` tokens emit no row. Map-only, so it serves batch and streaming
+    frames alike. Consumers that need each document's distinct grams take
+    ``distinct()`` of it or aggregate with set semantics."""
+    return docs.select("doc_id", F.posexplode(ngrams("text", n)).alias("pos", "g"))
+
+
+def held_out_grams(docs: DataFrame) -> DataFrame:
+    """The held-out benchmark's grams: :func:`positional_grams` over the
+    :func:`spark_held_out` slice of ``docs``."""
+    return positional_grams(docs.filter(spark_held_out()))
+
+
+def duck_grams(n: int = DECON_N) -> str:
+    """DuckDB twin of :func:`positional_grams`: CTE text defining
+    ``grams{n}(doc_id, pos, g)`` over ``documents``. Callers select the
+    held-out side with :func:`duck_held_out` on ``doc_id``."""
+    return f"""grams{n} AS (
+      SELECT doc_id, pos, array_to_string(t[pos + 1:pos + {n}], ' ') AS g
+      FROM (SELECT doc_id, t, UNNEST(range(len(t) - {n - 1})) AS pos
+            FROM (SELECT doc_id, string_split(text, ' ') AS t FROM documents)
+            WHERE len(t) >= {n})
+    )"""
+
+
+def word_features(col: Column | str) -> Column:
+    """The hashed classifiers' feature bag: the tokens, then every adjacent
+    bigram joined by ``_`` (multiplicity kept). Shared by the linear and
+    gradient-descent quality classifiers, DSIR and the curation funnel."""
+    toks = tokens(col)
+    bigrams = F.when(
+        F.size(toks) >= 2,
+        F.transform(
+            F.sequence(F.lit(0), F.size(toks) - 2),
+            lambda i: F.concat(F.get(toks, i), F.lit("_"), F.get(toks, i + 1)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    return F.concat(toks, bigrams)
+
+
+# DuckDB twin of ``word_features`` over a token list ``t``.
+DUCK_WORD_FEATURES = """list_concat(t, CASE WHEN len(t) >= 2
+               THEN list_transform(range(len(t) - 1), i -> t[i+1] || '_' || t[i+2])
+               ELSE [] END)"""
 
 
 # DuckDB twin of ``shingles(text, 3)``: the CTE pair ``toks``/``sh`` with
@@ -186,3 +238,9 @@ def spark_held_out(id_col: str = "doc_id") -> Column:
 def duck_held_out(id_col: str = "doc_id") -> str:
     """DuckDB twin of :func:`spark_held_out` as a SQL predicate."""
     return f"substr(md5(CAST({id_col} AS VARCHAR)), 1, 1) = '0'"
+
+
+# DuckDB twin of ``held_out_grams`` as the distinct gram set: CTE text
+# defining ``grams13`` and ``bench(g)``.
+DUCK_HELD_OUT_GRAMS = f"""{duck_grams()},
+    bench AS (SELECT DISTINCT g FROM grams{DECON_N} WHERE {duck_held_out()})"""

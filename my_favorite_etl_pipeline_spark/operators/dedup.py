@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from ..caching import tracked_persist
 from ..functions.exprs import let
 from .scaling import ensure_min_partitions
-from ..functions.text import shingles
+from ..functions.text import DECON_N, positional_grams, shingles
 
 MINHASH_PERMS = 32  # 16 bands x 2 rows: P(miss | j>=0.9) ~ (1-0.81)^16 ≈ 3e-12
 MINHASH_BAND_ROWS = 2
@@ -457,10 +457,8 @@ def simhash_near_dups(
     )
 
 
-def _span_tokens(
-    docs: DataFrame, min_tokens: int, id_col: str, text_col: str
-) -> DataFrame:
-    """(id, __t token array) for docs long enough to hold one gram.
+def _span_tokens(docs: DataFrame, min_tokens: int) -> DataFrame:
+    """(doc_id, __t token array) for docs long enough to hold one gram.
 
     Fanned out to core count (the per-position hashing below is CPU-bound
     and a single-row-group scan would serialize it on one task) and
@@ -469,20 +467,20 @@ def _span_tokens(
     branch re-splits the corpus."""
     return tracked_persist(
         ensure_min_partitions(
-            docs.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__t")).filter(
+            docs.select("doc_id", F.split("text", " ").alias("__t")).filter(
                 F.size("__t") >= min_tokens
             )
         )
     )
 
 
-def _span_gram_hashes(toks: DataFrame, min_tokens: int, id_col: str) -> DataFrame:
-    """(id, pos, gh) — xxhash64 of the ``min_tokens``-gram at each start
+def _span_gram_hashes(toks: DataFrame, min_tokens: int) -> DataFrame:
+    """(doc_id, pos, gh) — xxhash64 of the ``min_tokens``-gram at each start
     position. The gram STRING is built only transiently inside the lambda
     and never materialized as a column, so downstream shuffles move an
     8-byte key instead of a ~min_tokens-word string (~10× narrower)."""
     return toks.select(
-        F.col(id_col),
+        "doc_id",
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.size("__t") - min_tokens),
@@ -495,13 +493,9 @@ def _span_gram_hashes(toks: DataFrame, min_tokens: int, id_col: str) -> DataFram
 
 
 def exact_span_matches(
-    docs: DataFrame,
-    min_tokens: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_gram_df: int | None = None,
+    docs: DataFrame, min_tokens: int = 20, max_gram_df: int | None = None
 ) -> DataFrame:
-    """X1/X2 — maximal exact token spans shared across documents.
+    """X1/X2 — maximal exact token spans shared across ``docs(doc_id, text)``.
 
     The substring-dedup primitive of Lee et al. 2021 ("Deduplicating
     Training Data Makes Language Models Better", which removes exact
@@ -533,7 +527,7 @@ def exact_span_matches(
     a maximal span between one below-cap doc pair gets split (or shortened)
     wherever an interior gram happens to be viral corpus-wide — the cap
     trades span completeness for bounded output on ALL pairs, not just
-    hot-gram pairs (ADVICE r6). Corpus-wide EXCISION never needs the pair
+    hot-gram pairs. Corpus-wide EXCISION never needs the pair
     set at all:
     :func:`span_removal_positions` is the O(df)-per-gram path — use it, not
     a huge ``max_gram_df``, when the goal is removal rather than reporting.
@@ -548,8 +542,8 @@ def exact_span_matches(
     """
     from pyspark.sql import Window
 
-    toks = _span_tokens(docs, min_tokens, id_col, text_col)
-    grams = _span_gram_hashes(toks, min_tokens, id_col)
+    toks = _span_tokens(docs, min_tokens)
+    grams = _span_gram_hashes(toks, min_tokens)
     if max_gram_df is not None:
         dfw = Window.partitionBy("gh")
         grams = grams.withColumn("__df", F.count(F.lit(1)).over(dfw)).filter(
@@ -558,16 +552,15 @@ def exact_span_matches(
     a, b = grams.alias("ga"), grams.alias("gb")
     cand = a.join(
         b,
-        (F.col("ga.gh") == F.col("gb.gh"))
-        & (F.col(f"ga.{id_col}") < F.col(f"gb.{id_col}")),
+        (F.col("ga.gh") == F.col("gb.gh")) & (F.col("ga.doc_id") < F.col("gb.doc_id")),
     ).select(
-        F.col(f"ga.{id_col}").alias("doc_a"),
-        F.col(f"gb.{id_col}").alias("doc_b"),
+        F.col("ga.doc_id").alias("doc_a"),
+        F.col("gb.doc_id").alias("doc_b"),
         F.col("ga.pos").alias("pa"),
         F.col("gb.pos").alias("pb"),
     )
-    ta = toks.select(F.col(id_col).alias("doc_a"), F.col("__t").alias("__ta"))
-    tb = toks.select(F.col(id_col).alias("doc_b"), F.col("__t").alias("__tb"))
+    ta = toks.select(F.col("doc_id").alias("doc_a"), F.col("__t").alias("__ta"))
+    tb = toks.select(F.col("doc_id").alias("doc_b"), F.col("__t").alias("__tb"))
     matches = (
         cand.join(ta, "doc_a")
         .join(tb, "doc_b")
@@ -591,12 +584,7 @@ def exact_span_matches(
     )
 
 
-def span_removal_positions(
-    docs: DataFrame,
-    min_tokens: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def span_removal_positions(docs: DataFrame, min_tokens: int = 20) -> DataFrame:
     """X1/X2 — the (doc, pos) token-removal set for corpus-wide span
     excision, WITHOUT materializing doc pairs: per distinct gram the
     minimum doc id is the keeper, and every other occurrence contributes
@@ -613,7 +601,7 @@ def span_removal_positions(
     nothing in either formulation (pairs require doc_a < doc_b; the keeper
     keeps every one of its occurrences).
 
-    One exchange: the window groups by (gh, gram) — the 64-bit hash spreads
+    One exchange: the window groups by (gh, g) — the 64-bit hash spreads
     the partitioning, the gram string disambiguates collisions exactly, and
     each gram occurrence is shuffled once (the unavoidable width of any
     exact grouping; contrast the pairwise variant, which avoids shipping
@@ -621,26 +609,19 @@ def span_removal_positions(
     against the docs). The position explode is map-side and bounded by
     k = ``min_tokens`` per occurrence.
 
-    Returns distinct (``id_col``, pos) rows.
+    Returns distinct (doc_id, pos) rows.
     """
     from pyspark.sql import Window
 
-    toks = _span_tokens(docs, min_tokens, id_col, text_col)
-    grams = toks.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__t") - min_tokens),
-                lambda i: F.array_join(F.slice("__t", i + 1, min_tokens), " "),
-            )
-        ).alias("pos", "gram"),
-    ).withColumn("gh", F.xxhash64("gram"))
-    keepw = Window.partitionBy("gh", "gram")
+    grams = positional_grams(ensure_min_partitions(docs), min_tokens).withColumn(
+        "gh", F.xxhash64("g")
+    )
+    keepw = Window.partitionBy("gh", "g")
     return (
-        grams.withColumn("__keep", F.min(id_col).over(keepw))
-        .filter(F.col(id_col) > F.col("__keep"))
+        grams.withColumn("__keep", F.min("doc_id").over(keepw))
+        .filter(F.col("doc_id") > F.col("__keep"))
         .select(
-            F.col(id_col),
+            "doc_id",
             F.explode(
                 F.sequence(F.col("pos"), F.col("pos") + min_tokens - 1)
             ).alias("pos"),
@@ -649,12 +630,7 @@ def span_removal_positions(
     )
 
 
-def excise_span_duplicates(
-    docs: DataFrame,
-    min_tokens: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def excise_span_duplicates(docs: DataFrame, min_tokens: int = 20) -> DataFrame:
     """X1/X2 — cut duplicated spans out of the corpus (Lee et al. 2021,
     the excision step of exact-substring dedup).
 
@@ -677,25 +653,20 @@ def excise_span_duplicates(
     Returns (doc_id, clean_text, n_removed_tokens) for EVERY input
     document (untouched docs come through with 0 removed).
     """
-    removed = span_removal_positions(
-        docs, min_tokens=min_tokens, id_col=id_col, text_col=text_col
-    ).withColumn("__cut", F.lit(True))
-    return _reassemble_without(docs, removed, id_col=id_col, text_col=text_col)
+    removed = span_removal_positions(docs, min_tokens).withColumn("__cut", F.lit(True))
+    return _reassemble_without(docs, removed)
 
 
-def _reassemble_without(
-    docs: DataFrame, removed: DataFrame, id_col: str, text_col: str
-) -> DataFrame:
-    """Cut a distinct (id, pos, __cut) removal set out of every document and
-    re-join the surviving tokens in position order. Equi-join on (id, pos);
-    the aggregate is per-document, so no group exceeds one doc's tokens.
-    Every input doc comes back (untouched docs with 0 removed)."""
-    tokens = docs.select(
-        F.col(id_col), F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "tok")
-    )
+def _reassemble_without(docs: DataFrame, removed: DataFrame) -> DataFrame:
+    """Cut a distinct (doc_id, pos, __cut) removal set out of every document
+    of ``docs(doc_id, text)`` and re-join the surviving tokens in position
+    order. Equi-join on (doc_id, pos); the aggregate is per-document, so no
+    group exceeds one doc's tokens. Every input doc comes back (untouched
+    docs with 0 removed)."""
+    tokens = docs.select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok"))
     return (
-        tokens.join(removed, [id_col, "pos"], "left")
-        .groupBy(id_col)
+        tokens.join(removed, ["doc_id", "pos"], "left")
+        .groupBy("doc_id")
         .agg(
             F.array_join(
                 F.transform(
@@ -716,11 +687,7 @@ def _reassemble_without(
 
 
 def excise_against_reference(
-    docs: DataFrame,
-    ref: DataFrame,
-    min_tokens: int = 13,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    docs: DataFrame, ref: DataFrame, min_tokens: int = DECON_N
 ) -> DataFrame:
     """X4+ — decontamination by EXCISION: every ``min_tokens``-gram of
     ``docs`` that appears ANYWHERE in the reference corpus ``ref`` (the
@@ -744,31 +711,12 @@ def excise_against_reference(
     operator to a fixpoint if a hard zero-overlap guarantee is required —
     each pass only shrinks documents, so it terminates.
     """
-    grams = _span_tokens(docs, min_tokens, id_col, text_col).select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("__t") - min_tokens),
-                lambda i: F.array_join(F.slice("__t", i + 1, min_tokens), " "),
-            )
-        ).alias("pos", "g"),
-    )
-    ref_grams = (
-        _span_tokens(ref, min_tokens, id_col, text_col)
-        .select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("__t") - min_tokens),
-                    lambda i: F.array_join(F.slice("__t", i + 1, min_tokens), " "),
-                )
-            ).alias("g")
-        )
-        .distinct()
-    )
+    ref_grams = positional_grams(ref, min_tokens).select("g").distinct()
     removed = (
-        grams.join(ref_grams, "g", "left_semi")
+        positional_grams(docs, min_tokens)
+        .join(ref_grams, "g", "left_semi")
         .select(
-            F.col(id_col),
+            "doc_id",
             F.explode(
                 F.sequence(F.col("pos"), F.col("pos") + min_tokens - 1)
             ).alias("pos"),
@@ -776,7 +724,7 @@ def excise_against_reference(
         .distinct()
         .withColumn("__cut", F.lit(True))
     )
-    return _reassemble_without(docs, removed, id_col=id_col, text_col=text_col)
+    return _reassemble_without(docs, removed)
 
 
 # ---------------------------------------------------------------------------

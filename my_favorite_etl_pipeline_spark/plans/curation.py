@@ -16,6 +16,9 @@
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -23,7 +26,15 @@ from .. import artifacts
 from ..caching import tracked_persist
 from ..functions import text as TX
 from ..functions.exprs import duck_md5_32, spark_md5_32
-from ..functions.text import DUCK_SHINGLES, duck_held_out, spark_held_out
+from ..functions.text import (
+    DECON_N,
+    DUCK_HELD_OUT_GRAMS,
+    DUCK_SHINGLES,
+    DUCK_WORD_FEATURES,
+    duck_grams,
+    duck_held_out,
+    spark_held_out,
+)
 from ..functions.vectors import (
     DUCK_QASSIGN,
     EN,
@@ -251,36 +262,48 @@ def quality_filter_above_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id")
     )
 
-# DuckDB-side word n-gram CTE fragments (mirror functions.text.ngrams /
-# .shingles). {n} is the gram size; grams keep multiplicity, shingles dedup.
-_DUCK_NGRAMS = """
-    toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    grams AS (
-      SELECT doc_id,
-             CASE WHEN len(t) >= {n}
-               THEN list_transform(range(len(t) - {n} + 1),
-                                   i -> array_to_string(t[i+1:i+{n}], ' '))
-               ELSE [] END AS g
-      FROM toks
-    )
-"""
-
-
-@register(
-    "contamination_13gram",
-    oracle=f"""
-    WITH {_DUCK_NGRAMS.format(n=13)},
-    sh AS (SELECT doc_id, list_distinct(g) AS s FROM grams),
-    u AS (SELECT doc_id, unnest(s) AS g FROM sh),
-    b AS (SELECT doc_id AS bench_id, g FROM u WHERE {duck_held_out()}),
-    t AS (SELECT doc_id, g FROM u WHERE NOT ({duck_held_out()}))
+# The 13-gram flag list. The Bloom entry shares this oracle: its filter is
+# a lossless prefilter, so both entries must return the same flags.
+_FLAG_ORACLE = f"""
+    WITH {duck_grams()},
+    b AS (SELECT DISTINCT doc_id AS bench_id, g FROM grams{DECON_N}
+          WHERE {duck_held_out()}),
+    t AS (SELECT DISTINCT doc_id, g FROM grams{DECON_N}
+          WHERE NOT ({duck_held_out()}))
     SELECT t.doc_id,
            CAST(COUNT(DISTINCT t.g) AS BIGINT) AS n_grams_hit,
            CAST(COUNT(DISTINCT b.bench_id) AS BIGINT) AS n_bench_docs
     FROM t JOIN b ON t.g = b.g
     GROUP BY t.doc_id ORDER BY t.doc_id
-    """,
-)
+    """
+
+
+def _flag_counts(train: DataFrame, bench: DataFrame) -> DataFrame:
+    """``(doc_id, n_grams_hit, n_bench_docs)`` for the training grams that
+    occur in the held-out grams ``bench(doc_id, pos, g)``.
+
+    One hash aggregate: ``size(collect_set(...))`` computes both exact
+    distinct counts in a single pass, where two ``countDistinct``s plan an
+    ``Expand`` that doubles the joined rows. It also makes repeated grams
+    within a document harmless. A group's set is bounded by one document's
+    gram count."""
+    return (
+        train.select("doc_id", "g")
+        .join(bench.select(F.col("doc_id").alias("bench_id"), "g"), "g")
+        .groupBy("doc_id")
+        .agg(
+            F.size(F.collect_set("g")).cast("long").alias("n_grams_hit"),
+            F.size(F.collect_set("bench_id")).cast("long").alias("n_bench_docs"),
+        )
+    )
+
+
+def _train_grams(docs: DataFrame) -> DataFrame:
+    """Positional 13-grams of the documents outside the held-out slice."""
+    return TX.positional_grams(docs.filter(~spark_held_out()))
+
+
+@register("contamination_13gram", oracle=_FLAG_ORACLE)
 def q_contamination_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X4+ — benchmark decontamination: flag every training document that
     shares at least one 13-token gram with the held-out benchmark set
@@ -293,33 +316,15 @@ def q_contamination_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     The benchmark side is eval-suite-sized (MMLU+friends ≪ corpus), so AQE
     broadcasts it and the big side never shuffles; no hint needed or wanted.
     """
-    docs = load(spark, sf_dir, "documents")
-    sh = docs.select("doc_id", TX.shingles(F.col("text"), n=13).alias("sh"))
-    g = sh.select("doc_id", F.explode("sh").alias("g"))
-    bench = g.filter(spark_held_out()).select(F.col("doc_id").alias("bench_id"), "g")
-    train = g.filter(~spark_held_out())
     from ..caching import presentation_sort
 
-    # ONE hash aggregate instead of two countDistincts (r16-opt, VERDICT
-    # r15 item 8): multi-column countDistinct plans an Expand that DOUBLES
-    # the joined rows before aggregating; size(collect_set(...)) computes
-    # both exact distinct counts in a single pass with no row expansion
-    # (measured 1.97 → 1.69 s scoped at sf0.1, identical rows). Per-group
-    # set size is bounded by the doc's gram count — document-length
-    # bounded, never corpus-scale.
+    docs = load(spark, sf_dir, "documents")
     return presentation_sort(
-        train.join(bench, "g")
-        .groupBy("doc_id")
-        .agg(
-            F.size(F.collect_set("g")).cast("long").alias("n_grams_hit"),
-            F.size(F.collect_set("bench_id")).cast("long").alias("n_bench_docs"),
-        ),
-        "doc_id",
+        _flag_counts(_train_grams(docs), TX.held_out_grams(docs)), "doc_id"
     )
 
-#: The Gopher metric frame ``m`` — factored (late r14) so the
-#: filter-ablation matrix replays the IDENTICAL metric and
-#: threshold definitions (one rule set, two consumers).
+#: The Gopher metric frame ``m`` over every document: the flags entry, the
+#: filter-ablation matrix and the curation funnel read this one definition.
 _GOPHER_M_CTES = """toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
     m AS (
       SELECT doc_id,
@@ -342,16 +347,15 @@ _GOPHER_RULES_SQL = {
     "alpha": "alpha_word_frac >= 0.8",
 }
 
+#: The combined Gopher gate over ``m``: every rule passes.
+_GOPHER_PASS_SQL = " AND ".join(f"({p})" for p in _GOPHER_RULES_SQL.values())
+
 
 @register(
     "gopher_quality_flags",
     oracle=f"""
     WITH {_GOPHER_M_CTES}
-    SELECT *,
-           ({_GOPHER_RULES_SQL["words"]})
-           AND ({_GOPHER_RULES_SQL["wordlen"]})
-           AND ({_GOPHER_RULES_SQL["stopwords"]})
-           AND ({_GOPHER_RULES_SQL["alpha"]}) AS pass
+    SELECT *, {_GOPHER_PASS_SQL} AS pass
     FROM m ORDER BY doc_id
     """,
 )
@@ -366,22 +370,15 @@ def q_gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan at 100 TB. Both engines round the fractional metrics to 4 decimals
     BEFORE the threshold compare so the flags can't diverge on float dust.
     """
-    m = gopher_metric_frame(spark, sf_dir)
-    rules = gopher_rule_cols()
-    return m.select(
-        "*",
-        (
-            rules["words"] & rules["wordlen"] & rules["stopwords"] & rules["alpha"]
-        ).alias("pass"),
-    ).orderBy("doc_id")
+    m = gopher_metric_frame(load(spark, sf_dir, "documents").select("doc_id", "text"))
+    return m.select("*", gopher_pass().alias("pass")).orderBy("doc_id")
 
 
-def gopher_metric_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNORDERED shared metric frame ``(doc_id, n_words, mean_word_len,
-    n_stopwords, alpha_word_frac)`` — the Spark twin of
-    ``_GOPHER_M_CTES``, consumed by the flags entry and the
-    filter-ablation matrix."""
-    docs = load(spark, sf_dir, "documents")
+def gopher_metric_frame(docs: DataFrame) -> DataFrame:
+    """UNORDERED metric frame: ``docs`` with its ``text`` column replaced by
+    ``n_words, mean_word_len, n_stopwords, alpha_word_frac`` — the Spark
+    twin of ``_GOPHER_M_CTES``, read by the flags entry, the
+    filter-ablation matrix and the curation funnel."""
     toks = TX.tokens("text")
     n_words = F.size(toks).cast("long")
     mean_len = F.round(
@@ -398,7 +395,7 @@ def gopher_metric_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         4,
     )
     return docs.select(
-        "doc_id",
+        *[c for c in docs.columns if c != "text"],
         n_words.alias("n_words"),
         mean_len.alias("mean_word_len"),
         n_stop.alias("n_stopwords"),
@@ -417,25 +414,20 @@ def gopher_rule_cols() -> dict:
     }
 
 
+def gopher_pass() -> F.Column:
+    """The combined Gopher gate: every rule of :func:`gopher_rule_cols`."""
+    return reduce(operator.and_, gopher_rule_cols().values())
+
+
 @register(
     "repetition_filter",
     oracle=f"""
-    WITH {_DUCK_NGRAMS.format(n=2)},
-    g2 AS (SELECT doc_id, unnest(g) AS g FROM grams),
-    c2 AS (SELECT doc_id, g, COUNT(*) AS c FROM g2 GROUP BY doc_id, g),
+    WITH {duck_grams(2)}, {duck_grams(5)},
+    c2 AS (SELECT doc_id, g, COUNT(*) AS c FROM grams2 GROUP BY doc_id, g),
     t2 AS (SELECT doc_id, CAST(MAX(c) AS BIGINT) AS top2_count,
                   CAST(SUM(c) AS BIGINT) AS n_2grams
            FROM c2 GROUP BY doc_id),
-    g5s AS (
-      SELECT doc_id,
-             CASE WHEN len(t) >= 5
-               THEN list_transform(range(len(t) - 4),
-                                   i -> array_to_string(t[i+1:i+5], ' '))
-               ELSE [] END AS g
-      FROM toks
-    ),
-    g5 AS (SELECT doc_id, unnest(g) AS g FROM g5s),
-    c5 AS (SELECT doc_id, g, COUNT(*) AS c FROM g5 GROUP BY doc_id, g),
+    c5 AS (SELECT doc_id, g, COUNT(*) AS c FROM grams5 GROUP BY doc_id, g),
     t5 AS (SELECT doc_id,
                   CAST(COALESCE(SUM(c) FILTER (WHERE c >= 2), 0) AS BIGINT)
                     AS dup5_count,
@@ -470,7 +462,7 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def gram_counts(n: int) -> DataFrame:
         return (
-            docs.select("doc_id", F.explode(TX.ngrams("text", n=n)).alias("g"))
+            TX.positional_grams(docs, n)
             .groupBy("doc_id", "g")
             .agg(F.count(F.lit(1)).alias("c"))
         )
@@ -571,7 +563,7 @@ def q_unigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 (new r6) — bigram-LM perplexity proxy: average -ln of the
+    """X4 — bigram-LM perplexity proxy: average -ln of the
     Laplace-smoothed corpus bigram probability p(w2|w1) = (c(w1,w2)+1) /
     (c(w1)+V) per document (docs of ≥ 2 tokens). The next rung above
     ``unigram_logprob_scores`` on the CCNet ladder — a unigram model can't
@@ -624,20 +616,12 @@ def q_bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     "decontaminate_excise_13gram",
     oracle=f"""
     WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    bgr AS (
-      SELECT DISTINCT array_to_string(t[pos + 1:pos + 13], ' ') AS g
-      FROM (SELECT t, UNNEST(range(len(t) - 12)) AS pos
-            FROM toks WHERE len(t) >= 13 AND {duck_held_out()})
-    ),
-    tg AS (
-      SELECT doc_id, pos, array_to_string(t[pos + 1:pos + 13], ' ') AS g
-      FROM (SELECT doc_id, t, UNNEST(range(len(t) - 12)) AS pos
-            FROM toks WHERE len(t) >= 13 AND NOT ({duck_held_out()}))
-    ),
+    {DUCK_HELD_OUT_GRAMS},
     removed AS (
       SELECT DISTINCT doc_id, p FROM (
-        SELECT doc_id, UNNEST(generate_series(pos, pos + 12)) AS p
-        FROM tg WHERE g IN (SELECT g FROM bgr))
+        SELECT doc_id, UNNEST(generate_series(pos, pos + {DECON_N - 1})) AS p
+        FROM grams{DECON_N}
+        WHERE NOT ({duck_held_out()}) AND g IN (SELECT g FROM bench))
     ),
     tp AS (SELECT doc_id, UNNEST(range(len(t))) AS pos, t
            FROM toks WHERE NOT ({duck_held_out()})),
@@ -656,7 +640,7 @@ def q_bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_decontaminate_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (new r6) — decontamination by EXCISION: cut every 13-token span
+    """X4+ — decontamination by EXCISION: cut every 13-token span
     that overlaps the benchmark stand-in (the same md5-designated ~1/16 of
     the corpus ``contamination_13gram`` flags) out of the training docs and
     reassemble them. The surgical alternative to dropping whole documents:
@@ -674,30 +658,35 @@ def q_decontaminate_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     return excise_against_reference(
-        docs.filter(~spark_held_out()), docs.filter(spark_held_out()), min_tokens=13
+        docs.filter(~spark_held_out()), docs.filter(spark_held_out())
     )
 
 
 # ---------------------------------------------------------------------------
 # quality_classifier_linear
 
+# The linear classifier's integer weight sum over a ``feats`` list: each
+# feature's weight derives from its own md5. Keep iff the sum is >= 0.
+_DUCK_LINEAR_WSUM = f"""CAST(LIST_SUM(LIST_TRANSFORM(feats, x ->
+               ({duck_md5_32('x')}) % 20001 - 10000)) AS BIGINT)"""
+
+
+def _linear_wsum(feats: F.Column) -> F.Column:
+    """Spark twin of ``_DUCK_LINEAR_WSUM``: weights uniform in [-1e4, 1e4]
+    ∩ Z, summed in exact integer arithmetic on both engines."""
+    return F.aggregate(
+        F.transform(feats, lambda c: spark_md5_32(c) % 20001 - 10000),
+        F.lit(0).cast("long"),
+        lambda s, x: s + x,
+    )
+
+
 @register(
     "quality_classifier_linear",
     oracle=f"""
     WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    f AS (
-      SELECT doc_id,
-             list_concat(t, CASE WHEN len(t) >= 2
-               THEN list_transform(range(len(t) - 1), i -> t[i+1] || '_' || t[i+2])
-               ELSE [] END) AS feats
-      FROM toks
-    ),
-    hw AS (
-      SELECT doc_id, len(feats) AS n,
-             CAST(LIST_SUM(LIST_TRANSFORM(feats, x ->
-               ({duck_md5_32('x')}) % 20001 - 10000)) AS BIGINT) AS wsum
-      FROM f
-    )
+    f AS (SELECT doc_id, {DUCK_WORD_FEATURES} AS feats FROM toks),
+    hw AS (SELECT doc_id, len(feats) AS n, {_DUCK_LINEAR_WSUM} AS wsum FROM f)
     SELECT doc_id,
            CAST(n AS BIGINT) AS n_feats,
            ROUND(1.0 / (1.0 + exp(-(CAST(wsum AS DOUBLE) / (n * 10000.0)))), 4)
@@ -707,7 +696,7 @@ def q_decontaminate_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_quality_classifier_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 (r7) — fastText-shaped model-based quality filter: hashed
+    """X4 — fastText-shaped model-based quality filter: hashed
     unigram+bigram bag-of-features, one weight per feature, mean weight
     through a sigmoid, keep iff score >= 0.5. This is the dataflow of the
     DCLM / FineWeb-Edu classifier rung — the step that upgraded every 2024+
@@ -733,27 +722,13 @@ def q_quality_classifier_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.scaling import ensure_min_partitions
 
-    w_of = (
-        lambda c: spark_md5_32(c) % 20001 - 10000
-    )  # uniform [-1e4, 1e4] ∩ Z, exact integer arithmetic on both engines
     docs = ensure_min_partitions(load(spark, sf_dir, "documents"))
-    t = TX.tokens("text")
-    bigrams = F.when(
-        F.size(t) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - 2),
-            lambda i: F.concat(F.get(t, i), F.lit("_"), F.get(t, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    feats = F.concat(t, bigrams)
-    wsum = F.aggregate(
-        F.transform(feats, w_of), F.lit(0).cast("long"), lambda s, x: s + x
-    )
+    feats = TX.word_features("text")
     return (
         docs.select(
             "doc_id",
             F.size(feats).cast("long").alias("n_feats"),
-            wsum.alias("__wsum"),
+            _linear_wsum(feats).alias("__wsum"),
         )
         .select(
             "doc_id",
@@ -781,7 +756,7 @@ def q_quality_classifier_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 # perplexity_buckets_ccnet
 
 # Shared CTE chain: per-doc unigram-NLP scores + per-lang tercile
-# thresholds. Factored (late r12) so epoch_repeat_plan (assembly.py) replays
+# thresholds, shared so epoch_repeat_plan (assembly.py) replays
 # the IDENTICAL bucket assignment — one text, two consumers, no drift.
 _CCNET_CTES = """
     toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w
@@ -860,7 +835,7 @@ def ccnet_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_perplexity_buckets_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 (r7) — CCNet's head/middle/tail split (Wenzek et al. 2020): rank
+    """X4 — CCNet's head/middle/tail split (Wenzek et al. 2020): rank
     each document's LM-perplexity proxy WITHIN its language and cut the
     distribution into terciles; "head" (lowest perplexity) is the
     pretraining keep set, "tail" the discard set. Composes the
@@ -913,7 +888,7 @@ def q_perplexity_buckets_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_documents_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r7) — the dataset-card table: total/per-language/per-source
+    """X4+ — the dataset-card table: total/per-language/per-source
     document and token counts with shares, plus the exact-duplicate count —
     the summary block every corpus release (HF dataset card, corpus paper
     §data) publishes. One GROUPING SETS pass over the corpus (Spark
@@ -1056,12 +1031,11 @@ def _bloom_probes(g: F.Column) -> list[F.Column]:
     ]
 
 
-def bench_gram_bloom(bench_grams: DataFrame, gram_col: str = "g") -> DataFrame:
-    """Build the (word, bits) Bloom bit table over ``bench_grams`` with ONE
-    bit_or hash aggregate — at most m/64 rows regardless of input size."""
-    pos = bench_grams.select(
-        F.explode(F.array(*_bloom_probes(F.col(gram_col)))).alias("p")
-    )
+def bench_gram_bloom(bench_grams: DataFrame) -> DataFrame:
+    """Build the (word, bits) Bloom bit table over the ``g`` column of
+    ``bench_grams`` with ONE bit_or hash aggregate — at most m/64 rows
+    regardless of input size."""
+    pos = bench_grams.select(F.explode(F.array(*_bloom_probes(F.col("g")))).alias("p"))
     return (
         pos.select(
             F.shiftright(F.col("p"), 6).alias("word"),
@@ -1072,19 +1046,19 @@ def bench_gram_bloom(bench_grams: DataFrame, gram_col: str = "g") -> DataFrame:
     )
 
 
-def bloom_probe_candidates(
-    grams: DataFrame, bloom: DataFrame, gram_col: str = "g"
-) -> DataFrame:
-    """Rows of ``grams`` whose gram passes ALL K probes against ``bloom``
-    (word-indexed broadcast join; an absent word row fails the probe via
-    the inner join). Superset of the true member rows — never a subset."""
+def bloom_probe_candidates(grams: DataFrame, bloom: DataFrame) -> DataFrame:
+    """Rows of ``grams`` whose gram ``g`` passes ALL K probes against
+    ``bloom`` (word-indexed broadcast join; an absent word row fails the
+    probe via the inner join). Superset of the true member rows — never a
+    subset. Rows must be distinct: a repeated row would count its probes
+    twice."""
     probes = F.array(
         *[
             F.struct(
                 F.shiftright(p, 6).alias("word"),
                 (p % 64).cast("int").alias("bit"),
             )
-            for p in _bloom_probes(F.col(gram_col))
+            for p in _bloom_probes(F.col("g"))
         ]
     )
     keys = [c for c in grams.columns]
@@ -1103,28 +1077,13 @@ def bloom_probe_candidates(
     )
 
 
-@register(
-    "decontaminate_bloom_13gram",
-    # Same oracle as contamination_13gram — deliberately: the bloom is a
-    # lossless prefilter (no false negatives; false positives die in the
-    # exact verify join), so the two independent algorithms must produce
-    # the identical flag list, and the shared oracle IS that guarantee
-    # under test (the ssjoin_prefix_filter / minhash precedent).
-    oracle=f"""
-    WITH {_DUCK_NGRAMS.format(n=13)},
-    sh AS (SELECT doc_id, list_distinct(g) AS s FROM grams),
-    u AS (SELECT doc_id, unnest(s) AS g FROM sh),
-    b AS (SELECT doc_id AS bench_id, g FROM u WHERE {duck_held_out()}),
-    t AS (SELECT doc_id, g FROM u WHERE NOT ({duck_held_out()}))
-    SELECT t.doc_id,
-           CAST(COUNT(DISTINCT t.g) AS BIGINT) AS n_grams_hit,
-           CAST(COUNT(DISTINCT b.bench_id) AS BIGINT) AS n_bench_docs
-    FROM t JOIN b ON t.g = b.g
-    GROUP BY t.doc_id ORDER BY t.doc_id
-    """,
-)
+# The flag oracle is shared on purpose: the bloom is a lossless prefilter
+# (no false negatives; false positives die in the exact verify join), so
+# the two algorithms must produce the identical flag list, and the shared
+# oracle is that guarantee under test.
+@register("decontaminate_bloom_13gram", oracle=_FLAG_ORACLE)
 def q_decontaminate_bloom_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r8) — benchmark decontamination through a Bloom prefilter:
+    """X4+ — benchmark decontamination through a Bloom prefilter:
     build the bit table over the benchmark's distinct 13-grams, probe every
     training gram against the broadcast table (5 seeded-xxhash64 bits,
     all-must-pass), then exact-verify only the survivors with the plain
@@ -1136,26 +1095,16 @@ def q_decontaminate_bloom_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows (16 K here, ~128 KiB) NO MATTER how many grams feed it, so the
     broadcast never grows; the training side is filtered down to the
     true-hit rate + the tuned false-positive rate before anything heavier
-    runs, and the exact verify join's left side is survivor-sized. Both
-    aggregates (bit_or build, all-probes-pass count) are map-side-combined
-    hash aggs on bounded keyspaces.
+    runs, and the exact verify join's left side is survivor-sized. The
+    aggregates (bit_or build, all-probes-pass count, the shared flag
+    counts) are map-side-combined hash aggs on bounded keyspaces.
     """
     docs = load(spark, sf_dir, "documents")
-    sh = docs.select("doc_id", TX.shingles(F.col("text"), n=13).alias("sh"))
-    g = sh.select("doc_id", F.explode("sh").alias("g"))
-    bench = g.filter(spark_held_out()).select(F.col("doc_id").alias("bench_id"), "g")
-    train = g.filter(~spark_held_out())
+    bench = TX.held_out_grams(docs)
     bloom = bench_gram_bloom(bench.select("g").distinct())
-    cand = bloom_probe_candidates(train, bloom)
-    return (
-        cand.join(bench, "g")
-        .groupBy("doc_id")
-        .agg(
-            F.countDistinct("g").alias("n_grams_hit"),
-            F.countDistinct("bench_id").alias("n_bench_docs"),
-        )
-        .orderBy("doc_id")
-    )
+    # (doc_id, pos, g) rows are distinct, as the probe count requires
+    cand = bloom_probe_candidates(_train_grams(docs), bloom)
+    return _flag_counts(cand, bench).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1167,13 +1116,7 @@ _DSIR_TOP = 100  # resample size
 
 _DSIR_DOCW_CTE = f"""
     WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    f AS (
-      SELECT doc_id,
-             list_concat(t, CASE WHEN len(t) >= 2
-               THEN list_transform(range(len(t) - 1), i -> t[i+1] || '_' || t[i+2])
-               ELSE [] END) AS fs
-      FROM toks
-    ),
+    f AS (SELECT doc_id, {DUCK_WORD_FEATURES} AS fs FROM toks),
     fb AS (
       SELECT doc_id, ({duck_held_out()}) AS is_t,
              ({duck_md5_32('x')}) % {_DSIR_B} AS b
@@ -1212,7 +1155,7 @@ _DSIR_DOCW_CTE = f"""
     """,
 )
 def q_dsir_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r8) — DSIR data selection (Xie et al. 2023): hashed
+    """X4+ — DSIR data selection (Xie et al. 2023): hashed
     unigram+bigram bag-of-ngrams multinomials fit on the target slice (the
     benchmark-designated ~1/16, standing in for the Wikipedia/books-style
     target distribution) and the raw remainder; each raw document scores
@@ -1248,26 +1191,17 @@ def _dsir_doc_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram+bigram importance log-ratio per raw document (the deterministic
     core both the top-N selector and the Gumbel sampler rank on)."""
     docs = load(spark, sf_dir, "documents")
-    toks = TX.tokens("text")
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 2),
-            lambda i: F.concat(F.get(toks, i), F.lit("_"), F.get(toks, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     fb = docs.select(
         "doc_id",
         spark_held_out().alias("is_t"),
-        F.explode(F.concat(toks, bigrams)).alias("x"),
+        F.explode(TX.word_features("text")).alias("x"),
     ).select(
         "doc_id", "is_t", (spark_md5_32(F.col("x")) % _DSIR_B).alias("b")
     )
-    # r15-opt (guide §2.3 "aggregate before you shuffle" + §5 persist): the
-    # tokenize+md5 explode fed TWO consumers (bucket multinomials and the
-    # per-doc scoring agg) and ran twice. Collapse it map-side to per-
-    # (doc, side, bucket) counts — exploded volume shrinks to ≤ features-
-    # per-doc rows — and persist THAT; both consumers aggregate from it
+    # The tokenize+md5 explode feeds TWO consumers (bucket multinomials and
+    # the per-doc scoring agg). Collapse it map-side to per-(doc, side,
+    # bucket) counts — exploded volume shrinks to ≤ features-per-doc rows —
+    # and persist THAT, so it runs once; both consumers aggregate from it
     # with identical integer counts.
     g = tracked_persist(
         fb.groupBy("doc_id", "is_t", "b").agg(F.count(F.lit(1)).alias("c"))
@@ -1316,7 +1250,7 @@ _DSIR_SEED = 7  # sampling seed; part of the query definition, echoed in SQL
     """,
 )
 def q_dsir_gumbel_topk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r9) — DSIR's ACTUAL sampler (Xie et al. 2023 §2): sample
+    """X4+ — DSIR's ACTUAL sampler (Xie et al. 2023 §2): sample
     top-{_DSIR_TOP} documents with probability ∝ importance weight via the
     Gumbel-top-k trick — rank on ``log w_i + g_i`` where ``g_i =
     -ln(-ln(u_i))`` is standard Gumbel noise and ``u_i ∈ (0,1)`` derives
@@ -1393,7 +1327,7 @@ _JS_B = 4096  # hashed-unigram buckets (the DSIR precedent)
     """,
 )
 def q_corpus_js_divergence_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r9) — per-source Jensen-Shannon divergence vs the corpus
+    """X4+ — per-source Jensen-Shannon divergence vs the corpus
     mixture over hashed-unigram multinomials: the statistic a data-mixing
     stage (GPT-3-style manual mixture weights, DoReMi-style reweighting)
     reads to rank how "off-mixture" each source is. Each source's token
@@ -1483,7 +1417,7 @@ _KN_D = 0.75  # absolute discount; 3/4 is exactly representable in binary
     """,
 )
 def q_bigram_kn_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 (r9) — interpolated Kneser-Ney bigram scoring: per document the
+    """X4 — interpolated Kneser-Ney bigram scoring: per document the
     average -ln of p_KN(w2|w1) = (c(w1,w2) - D)/c(w1) + D·N1+(w1,·)/c(w1)
     · p_cont(w2), with continuation probability p_cont(w2) = N1+(·,w2) /
     N1+(·,·) and absolute discount D = 0.75 (Kneser & Ney 1995; Chen &
@@ -1596,7 +1530,7 @@ PSI_ORACLE_SQL = f"""
 
 @register("psi_drift_by_window", oracle=PSI_ORACLE_SQL)
 def q_psi_drift_by_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+/DQ (r9) — Population Stability Index per event type between a
+    """X4+/DQ — Population Stability Index per event type between a
     fixed reference window (ts < {split}) and the current window: PSI =
     Σ_buckets (p_cur - p_ref)·ln(p_cur/p_ref) over a fixed 10-bucket value
     histogram, Laplace-smoothed so empty buckets stay finite. The
@@ -1641,7 +1575,7 @@ def psi_value_bucket() -> "F.Column":
     batch query and its streaming twin so both arms bucket identically.
     Cents clamp at 0 first: Spark DIV truncates toward zero while DuckDB
     ``//`` floors, so a negative value would bucket as 0 vs −1 across
-    engines (ADVICE r9); clamping makes any negative value bucket 0 on
+    engines; clamping makes any negative value bucket 0 on
     both arms instead of silently relying on the fixture's value ≥ 0."""
     return F.least(
         F.expr("GREATEST(CAST(ROUND(value * 100) AS BIGINT), 0) DIV 5000"),
@@ -1711,12 +1645,7 @@ def _qc_prefix_sql() -> str:
     labels lab(doc_id, y), corpus size nn(n), zero-init weights w0."""
     return f"""
     WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    f AS (
-      SELECT doc_id, list_concat(t, CASE WHEN len(t) >= 2
-               THEN list_transform(range(len(t) - 1), i -> t[i+1] || '_' || t[i+2])
-               ELSE [] END) AS feats
-      FROM toks
-    ),
+    f AS (SELECT doc_id, {DUCK_WORD_FEATURES} AS feats FROM toks),
     fx AS MATERIALIZED (
       SELECT DISTINCT doc_id, ({duck_md5_32('x')}) % {_QC_BUCKETS} AS b
       FROM (SELECT doc_id, UNNEST(feats) AS x FROM f)
@@ -1790,17 +1719,8 @@ def _qc_features(spark: SparkSession, sf_dir: str):
     from ..operators.scaling import ensure_min_partitions
 
     docs = ensure_min_partitions(load(spark, sf_dir, "documents"))
-    t = TX.tokens("text")
-    bigrams = F.when(
-        F.size(t) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - 2),
-            lambda i: F.concat(F.get(t, i), F.lit("_"), F.get(t, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    feats = F.concat(t, bigrams)
     fx = (
-        docs.select("doc_id", F.explode(feats).alias("x"))
+        docs.select("doc_id", F.explode(TX.word_features("text")).alias("x"))
         .select("doc_id", (spark_md5_32(F.col("x")) % _QC_BUCKETS).alias("b"))
         .distinct()
     )
@@ -1876,7 +1796,7 @@ def _qc_train(spark: SparkSession, sf_dir: str, epochs: int) -> list[int]:
 
 @register("quality_classifier_train_gd", oracle=_qc_train_oracle())
 def q_quality_classifier_train_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r10) — TRAIN the model-based quality filter: {_QC_EPOCHS}
+    """X4+ — TRAIN the model-based quality filter: {_QC_EPOCHS}
     epochs of full-batch logistic-regression GD (hard-sigmoid, integer
     micro-unit fixed point, class-balanced error) over hashed
     unigram+bigram binary features, weak labels from source provenance
@@ -1902,7 +1822,7 @@ def q_quality_classifier_train_gd(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register("quality_classifier_gd_scores", oracle=_qc_scores_oracle())
 def q_quality_classifier_gd_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r10) — serve the TRAINED quality filter: per-document integer
+    """X4+ — serve the TRAINED quality filter: per-document integer
     margin Σ w[bucket] and keep = margin ≥ 0 (hard-sigmoid ≥ ½ ⟺ z ≥ 0,
     exactly as quality_classifier_linear's gate rides the integer sum,
     never float rounding). Shares the full training trajectory with
@@ -2053,13 +1973,13 @@ _SD_TAU = 3000  # flag threshold, integer ten-thousandths. 0.30 flags 36
     """,
 )
 def q_semantic_decontaminate_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r11) — SEMANTIC decontamination: for every train document,
+    """X4+ — SEMANTIC decontamination: for every train document,
     its nearest held-out (benchmark-designated) document by cosine within
     its centroid cell; emitted when similarity ≥ {_SD_TAU}/10⁴. The
     embedding-level sibling of ``contamination_13gram`` /
     ``decontaminate_bloom_13gram`` over the SAME eval slice (shared md5
     id predicate): exact n-gram checks miss paraphrased or re-templated
-    eval leakage, which lands exactly here. Scores are the r11
+    eval leakage, which lands exactly here. Scores are the
     pure-integer quantized cosine (int_cos_x1e4) — the first NEW operator
     born onto the graph family's float-free hash contract.
 
@@ -2121,18 +2041,9 @@ def q_semantic_decontaminate_topk(spark: SparkSession, sf_dir: str) -> DataFrame
 @register(
     "contamination_span_profile",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    bg AS (
-      SELECT DISTINCT array_to_string(t[pos + 1:pos + 13], ' ') AS g
-      FROM (SELECT doc_id, t, unnest(range(len(t) - 12)) AS pos
-            FROM toks WHERE len(t) >= 13 AND {duck_held_out()})
-    ),
-    tp AS (
-      SELECT doc_id, pos, array_to_string(t[pos + 1:pos + 13], ' ') AS g
-      FROM (SELECT doc_id, t, unnest(range(len(t) - 12)) AS pos
-            FROM toks WHERE len(t) >= 13 AND NOT ({duck_held_out()}))
-    ),
-    hit AS (SELECT DISTINCT tp.doc_id, tp.pos FROM tp JOIN bg ON tp.g = bg.g),
+    WITH {DUCK_HELD_OUT_GRAMS},
+    hit AS (SELECT DISTINCT doc_id, pos FROM grams{DECON_N}
+            WHERE NOT ({duck_held_out()}) AND g IN (SELECT g FROM bench)),
     isl AS (
       SELECT doc_id, pos,
              pos - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
@@ -2143,12 +2054,12 @@ def q_semantic_decontaminate_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_spans,
            CAST(SUM(run_len) AS BIGINT) AS n_hit_positions,
-           CAST(MAX(run_len) + 12 AS BIGINT) AS longest_span_tokens
+           CAST(MAX(run_len) + {DECON_N - 1} AS BIGINT) AS longest_span_tokens
     FROM runs GROUP BY doc_id ORDER BY doc_id
     """,
 )
 def q_contamination_span_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r12) — contamination SEVERITY, not just the boolean flag: for
+    """X4+ — contamination SEVERITY, not just the boolean flag: for
     every training document that contamination_13gram would flag, the
     number of maximal CONTIGUOUS contaminated spans, the total count of
     contaminated 13-gram positions, and the LONGEST shared span in tokens
@@ -2175,12 +2086,9 @@ def q_contamination_span_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     already pays.
     """
     docs = load(spark, sf_dir, "documents")
-    grams = docs.select(
-        "doc_id", F.posexplode(TX.ngrams(F.col("text"), n=13)).alias("pos", "g")
-    )
-    bench = grams.filter(spark_held_out()).select("g").distinct()
+    bench = TX.held_out_grams(docs).select("g").distinct()
     hit = (
-        grams.filter(~spark_held_out())
+        _train_grams(docs)
         .join(bench, "g")
         .select("doc_id", "pos")
         .distinct()
@@ -2196,14 +2104,12 @@ def q_contamination_span_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_spans"),
             F.sum("run_len").cast("long").alias("n_hit_positions"),
-            (F.max("run_len") + 12).cast("long").alias("longest_span_tokens"),
+            (F.max("run_len") + DECON_N - 1).cast("long").alias("longest_span_tokens"),
         )
         .orderBy("doc_id")
     )
 
 _COV_ROUNDS = 5  # documents selected (greedy rounds)
-
-_COV_N = 13  # gram width — the decontamination family's unit, reused
 
 
 def _cov_round_cte(r: int, b: int = 1) -> str:
@@ -2240,14 +2146,10 @@ def _cov_round_cte(r: int, b: int = 1) -> str:
       SELECT dg.g FROM dg JOIN pick{r} p ON dg.doc_id = p.doc_id
     )"""
 
-# The distinct (doc_id, gram) table — factored (r15) so the coverage
-# trainer and the novelty readout share ONE gram definition.
-_DG_CTES = f"""toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    dg AS MATERIALIZED (
-      SELECT DISTINCT doc_id, array_to_string(t[pos + 1:pos + {_COV_N}], ' ') AS g
-      FROM (SELECT doc_id, t, UNNEST(range(len(t) - {_COV_N - 1})) AS pos
-            FROM toks WHERE len(t) >= {_COV_N})
-    )"""
+# The distinct (doc_id, gram) table the coverage trainer and the novelty
+# readout share.
+_DG_CTES = f"""{duck_grams()},
+    dg AS MATERIALIZED (SELECT DISTINCT doc_id, g FROM grams{DECON_N})"""
 
 _COV_PREFIX = f"""
     WITH {_DG_CTES},
@@ -2274,8 +2176,8 @@ def _cov_oracle() -> str:
 
 @register("greedy_gram_coverage_select", oracle=_cov_oracle())
 def q_greedy_gram_coverage_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r14) — greedy max-coverage SELECTION: pick {_COV_ROUNDS}
-    documents, each round taking the document whose distinct {_COV_N}-token
+    """X4+ — greedy max-coverage SELECTION: pick {_COV_ROUNDS}
+    documents, each round taking the document whose distinct 13-token
     grams add the most grams not yet covered by the picks so far (ties →
     lowest doc_id; zero-gain documents stay eligible so the output is
     always exactly {_COV_ROUNDS} rows). Emits (rank, doc_id, gain,
@@ -2289,7 +2191,7 @@ def q_greedy_gram_coverage_select(spark: SparkSession, sf_dir: str) -> DataFrame
     submodular functions, applied to n-gram coverage the way
     facility-location selection applies it to embedding similarity.
 
-    Plan at 100 TB: the gram table builds once ({_COV_N}-token shingles,
+    Plan at 100 TB: the gram table builds once (13-token shingles,
     the decontamination family's unit) and persists; each round is ONE
     hash anti-join on the gram key (new grams vs the covered set) + one
     hash aggregate + a 1-row TakeOrdered — all equi-key, nothing
@@ -2313,12 +2215,9 @@ def q_greedy_gram_coverage_select(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def _dg_frame(docs: DataFrame) -> DataFrame:
-    """The distinct ``(doc_id, g)`` {_COV_N}-token gram table — the Spark
-    twin of ``_DG_CTES``, factored (r15) so the coverage trainer and the
-    novelty readout share ONE gram definition per engine."""
-    return docs.select(
-        "doc_id", F.explode(TX.shingles(F.col("text"), n=_COV_N)).alias("g")
-    ).distinct()
+    """The distinct ``(doc_id, g)`` 13-gram table — the Spark twin of
+    ``_DG_CTES``, shared by the coverage trainer and the novelty readout."""
+    return TX.positional_grams(docs).select("doc_id", "g").distinct()
 
 
 def _greedy_select(
@@ -2337,7 +2236,7 @@ def _greedy_select(
     # input an undeduped candidate list would let the engines diverge
     # (the oracle's LEFT JOIN would multiply a gain by the id's
     # multiplicity while Spark kept per-row gains — the edit-distance
-    # adjacent-band class, r14 review) and batch > 1 could pick the same
+    # adjacent-band class) and batch > 1 could pick the same
     # id twice in one round. With both sides deduped, a duplicated id is
     # one candidate with the union of its grams on both engines.
     ids = docs.select("doc_id").distinct()
@@ -2405,7 +2304,7 @@ def _covb_oracle() -> str:
 
 @register("greedy_coverage_select_batched", oracle=_covb_oracle())
 def q_greedy_coverage_select_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r14) — BATCH greedy max-coverage, the M ≫ rounds scale path
+    """X4+ — BATCH greedy max-coverage, the M ≫ rounds scale path
     of greedy_gram_coverage_select: {_COVB_ROUNDS} rounds each picking
     the top-{_COVB_B} documents by marginal gain against the covered set
     as of the round START (within-batch overlap deliberately not
@@ -2447,13 +2346,13 @@ def _fuzz_pair_ctes() -> str:
     slice (functions.text.duck_held_out — the same eval set every
     contamination entry uses). The threshold compares the UNROUNDED
     ratio (the ssjoin precedent; rounding only for display — a pair with
-    exact Jaccard in [T−5e-5, T) must NOT qualify via round-up, r14
-    review) and lives HERE so every consumer inherits the same boundary
+    exact Jaccard in [T−5e-5, T) must NOT qualify via round-up) and
+    lives HERE so every consumer inherits the same boundary
     rule. One text, two consumers (the batch per-doc rollup and the
     streaming pair emitter) — the _CCNET_CTES discipline, so the two
     fuzzy-decontamination oracles cannot drift.
 
-    Duplicate-id contract (ADVICE r14): a duplicated ``doc_id`` is a DATA
+    Duplicate-id contract: a duplicated ``doc_id`` is a DATA
     ERROR here, asserted loudly on BOTH engines rather than collapsed —
     the ``uq`` guard below errors the oracle, and the Spark arms run the
     matching construction-time probe (``assert_unique_doc_ids``).
@@ -2516,7 +2415,7 @@ def _fuzzy_decon_oracle() -> str:
 
 @register("fuzzy_decontaminate_minhash", oracle=_fuzzy_decon_oracle())
 def q_fuzzy_decontaminate_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r14) — FUZZY decontamination, the GPT-3 appendix-C method the
+    """X4+ — FUZZY decontamination, the GPT-3 appendix-C method the
     contamination family lacked: a training document is contaminated if
     it is a NEAR-duplicate (3-gram shingle Jaccard ≥ {_FUZZ_T}) of any
     benchmark document — catching paraphrase-level leakage the exact
@@ -2615,7 +2514,7 @@ def _cap_oracle() -> str:
 
 @register("community_capped_select", oracle=_cap_oracle())
 def q_community_capped_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3 × X4 (late r14) — community-CAPPED selection: keep the
+    """X3 × X4 — community-CAPPED selection: keep the
     {_CAP_K} highest-quality documents per LPA community (lowest shared
     CCNet unigram-NLP score = CCNet's "head"; ties → lowest doc_id) —
     cluster-balanced curation, the DataComp/SemDeDup-style move that
@@ -2625,8 +2524,8 @@ def q_community_capped_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pure composition of two audited shared definitions: the LPA label
     frame (`lpa_labels_durable` / `_lpa_cte_chain` — the clustering the
-    community entry hash-checks, served from its VersionedMart commit
-    since r15) and the CCNet scorer (`ccnet_bucketed` — the score four
+    community entry hash-checks, served from its VersionedMart commit)
+    and the CCNet scorer (`ccnet_bucketed` — the score four
     other entries share). doc_id ≡ vec_id by the fixture contract (the
     SemDeDup/semantic-decontamination precedent).
 
@@ -2693,7 +2592,7 @@ def _ablation_oracle() -> str:
 
 @register("filter_ablation_matrix", oracle=_ablation_oracle())
 def q_filter_ablation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 (late r14) — the quality-filter ABLATION matrix: for every
+    """X4 — the quality-filter ABLATION matrix: for every
     unordered pair of Gopher rules, how many documents BOTH reject
     (diagonal = each rule's total rejections) — the redundancy audit a
     filter designer reads before adding or dropping a rule (the
@@ -2714,13 +2613,13 @@ def q_filter_ablation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     |rules|²-sized regardless of corpus.
     """
 
-    m = gopher_metric_frame(spark, sf_dir)
+    m = gopher_metric_frame(load(spark, sf_dir, "documents"))
     rules = gopher_rule_cols()
     names = sorted(rules)
     # per-doc failed-rule array (in sorted-name order), pairs emitted
     # IN-ROW (each rule with every later-or-equal rule) — one corpus
-    # scan, no self-join (r14 review: the join shape evaluated the
-    # metric pass twice)
+    # scan, no self-join (a join shape would evaluate the metric pass
+    # twice)
     arr = F.filter(
         F.array(
             *[F.when(~rules[n], F.lit(n)).otherwise(F.lit(None)) for n in names]
@@ -2759,7 +2658,7 @@ def q_filter_ablation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: funnel stage names, in survival-level order — ONE list consumed by both
 #: the oracle generator and the Spark arm so a rename/insertion cannot
-#: drift between engines (mid-r15 review)
+#: drift between engines
 _FUNNEL_STAGES = [
     "raw",
     "gopher",
@@ -2773,10 +2672,13 @@ _FUNNEL_STAGES = [
 
 
 def _funnel_oracle() -> str:
-    """The r7 five-stage funnel oracle extended with the three r14
-    stages, each embedded as the REGISTERED oracle text (REGISTRY
-    lookup — one definition, two consumers; the three entries are
-    registered earlier in this module, so the lookups resolve)."""
+    """The funnel oracle: the Gopher metric and rule texts, the feature bag,
+    the linear weight sum and the held-out gram set are the shared
+    fragments, and the last three stages embed the REGISTERED oracle texts
+    (REGISTRY lookup; the three entries are registered earlier in this
+    module, so the lookups resolve). Those three are MATERIALIZED: inlined,
+    DuckDB planned them into the level join, and the oracle took about 4x
+    as long at sf0.1."""
     fz = REGISTRY["fuzzy_decontaminate_minhash"].oracle
     ck = REGISTRY["community_capped_select"].oracle
     cr = REGISTRY["greedy_gram_coverage_select"].oracle
@@ -2788,55 +2690,23 @@ def _funnel_oracle() -> str:
         for i, n in enumerate(stages[1:], start=1)
     )
     return f"""
-    WITH d AS (SELECT doc_id, text FROM documents WHERE NOT ({duck_held_out()})),
-    toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM d),
-    m AS (
-      SELECT doc_id, t, CAST(len(t) AS BIGINT) AS ntok,
-             ROUND(list_sum(list_transform(t, w -> CAST(len(w) AS DOUBLE)))
-                   / len(t), 4) AS mwl,
-             len(list_filter(t,
-               w -> w IN ('a','the','and','of','to','in'))) AS nstop,
-             ROUND(CAST(len(list_filter(t, w -> regexp_matches(w, '[A-Za-z]')))
-                   AS DOUBLE) / len(t), 4) AS af
-      FROM toks
-    ),
-    g AS (SELECT doc_id, t, ntok,
-                 (ntok BETWEEN 50 AND 100000) AND (mwl BETWEEN 3 AND 10)
-                 AND (nstop >= 2) AND (af >= 0.8) AS gp
-          FROM m),
-    feats AS (
-      SELECT doc_id,
-             list_concat(t, CASE WHEN len(t) >= 2
-               THEN list_transform(range(len(t) - 1), i -> t[i+1] || '_' || t[i+2])
-               ELSE [] END) AS fs
-      FROM toks
-    ),
-    clf AS (SELECT doc_id,
-                   CAST(LIST_SUM(LIST_TRANSFORM(fs, x ->
-                     ({duck_md5_32('x')}) % 20001 - 10000)) AS BIGINT) >= 0 AS cp
-            FROM feats),
-    fp AS (SELECT doc_id, md5(text) AS fp FROM d),
+    WITH {_GOPHER_M_CTES},
+    g AS (SELECT doc_id, n_words AS ntok, {_GOPHER_PASS_SQL} AS gp
+          FROM m WHERE NOT ({duck_held_out()})),
+    clf AS (SELECT doc_id, {_DUCK_LINEAR_WSUM} >= 0 AS cp
+            FROM (SELECT doc_id, {DUCK_WORD_FEATURES} AS feats FROM toks
+                  WHERE NOT ({duck_held_out()}))),
+    fp AS (SELECT doc_id, md5(text) AS fp FROM documents),
     surv2 AS (SELECT g.doc_id, fp.fp
               FROM g JOIN clf USING (doc_id) JOIN fp USING (doc_id)
               WHERE g.gp AND clf.cp),
     first AS (SELECT MIN(doc_id) AS doc_id FROM surv2 GROUP BY fp),
-    bgr AS (
-      SELECT DISTINCT array_to_string(t[pos + 1:pos + 13], ' ') AS gram
-      FROM (SELECT t, UNNEST(range(len(t) - 12)) AS pos
-            FROM (SELECT string_split(text, ' ') AS t FROM documents
-                  WHERE {duck_held_out()})
-            WHERE len(t) >= 13)
-    ),
-    cont AS (
-      SELECT DISTINCT doc_id FROM (
-        SELECT doc_id, array_to_string(t[pos + 1:pos + 13], ' ') AS gram
-        FROM (SELECT doc_id, t, UNNEST(range(len(t) - 12)) AS pos
-              FROM toks WHERE len(t) >= 13)
-      ) WHERE gram IN (SELECT gram FROM bgr)
-    ),
-    fz AS (SELECT DISTINCT doc_id FROM ({fz})),
-    ck AS (SELECT DISTINCT doc_id FROM ({ck})),
-    cr AS (SELECT DISTINCT doc_id FROM ({cr})),
+    {DUCK_HELD_OUT_GRAMS},
+    cont AS (SELECT DISTINCT doc_id FROM grams{DECON_N}
+             WHERE g IN (SELECT g FROM bench)),
+    fz AS MATERIALIZED (SELECT DISTINCT doc_id FROM ({fz})),
+    ck AS MATERIALIZED (SELECT DISTINCT doc_id FROM ({ck})),
+    cr AS MATERIALIZED (SELECT DISTINCT doc_id FROM ({cr})),
     lvl AS (
       SELECT g.doc_id, g.ntok,
              CASE WHEN NOT g.gp THEN 0
@@ -2866,7 +2736,7 @@ def _funnel_oracle() -> str:
 
 @register("curation_funnel_report", oracle=_funnel_oracle())
 def q_curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r7, extended r15) — the curation-funnel audit table:
+    """X4+ — the curation-funnel audit table:
     per-stage surviving document and token counts through raw → Gopher
     rules → model-based classifier → exact dedup (keep-first among
     survivors) → benchmark decontamination → FUZZY decontamination →
@@ -2875,7 +2745,7 @@ def q_curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     caught); here it is ONE query composing seven already-oracled
     operator families over the non-benchmark corpus side.
 
-    The three r15 stages intersect the funnel survivors with the
+    The last three stages intersect the funnel survivors with the
     REGISTERED frames (REGISTRY callables — no restatement): documents
     fuzzy-matched to the benchmark drop out at stage 5; stage 6 keeps
     survivors inside ``community_capped_select``'s per-community top-K;
@@ -2888,7 +2758,7 @@ def q_curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan at 100 TB: the Gopher/classifier gates are map-only
     expressions; dedup adds one fingerprint hash agg over stage-2
     survivors; decontamination adds the distinct-ref-gram semi-join
-    (benchmark side broadcasts); the three new stages join against a
+    (benchmark side broadcasts); the last three stages join against a
     drop list bounded by the eval suite, a keeper set bounded by
     |communities|·K, and a pick set of 5 — all broadcast-sized. The
     funnel itself is ONE aggregate over the per-doc survival level —
@@ -2897,61 +2767,24 @@ def q_curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 
     docs_all = load(spark, sf_dir, "documents")
-    docs = docs_all.filter(~spark_held_out())
-    toks = TX.tokens("text")
-    ntok = F.size(toks).cast("long")
-    mwl = F.round(
-        F.aggregate(toks, F.lit(0.0), lambda a, w: a + F.length(w).cast("double"))
-        / F.size(toks),
-        4,
+    docs = docs_all.filter(~spark_held_out()).select(
+        "doc_id",
+        "text",
+        (_linear_wsum(TX.word_features("text")) >= 0).alias("cp"),
+        F.md5("text").alias("fp"),
     )
-    nstop = F.size(
-        F.filter(toks, lambda w: w.isin("a", "the", "and", "of", "to", "in"))
-    )
-    af = F.round(
-        F.size(F.filter(toks, lambda w: w.rlike("[A-Za-z]"))).cast("double")
-        / F.size(toks),
-        4,
-    )
-    gp = (
-        ntok.between(50, 100000)
-        & mwl.between(3, 10)
-        & (nstop >= 2)
-        & (af >= 0.8)
-    )
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 2),
-            lambda i: F.concat(F.get(toks, i), F.lit("_"), F.get(toks, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    wsum = F.aggregate(
-        F.transform(
-            F.concat(toks, bigrams), lambda c: spark_md5_32(c) % 20001 - 10000
-        ),
-        F.lit(0).cast("long"),
-        lambda s, x: s + x,
-    )
-    grams13 = F.when(
-        F.size(toks) >= 13,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 13),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 13)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     # Two consumers read `base` (the dedup groupBy and the final level
     # join); without a materialization point Spark re-runs the whole
     # Gopher + classifier expression tree — the funnel's dominant cost —
-    # once per consumer (VERDICT r7 item 4). tracked_persist keeps it one
-    # scan; the harness's materialized_scope releases it after the action.
+    # once per consumer. tracked_persist keeps it one scan; the harness's
+    # materialized_scope releases it after the action.
     base = tracked_persist(
-        docs.select(
+        gopher_metric_frame(docs).select(
             "doc_id",
-            ntok.alias("ntok"),
-            gp.alias("gp"),
-            (wsum >= 0).alias("cp"),
-            F.md5("text").alias("fp"),
+            F.col("n_words").alias("ntok"),
+            gopher_pass().alias("gp"),
+            "cp",
+            "fp",
         )
     )
     first = (
@@ -2960,19 +2793,15 @@ def q_curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id", F.lit(True).alias("isfirst"))
     )
-    bench_grams = (
-        docs_all.filter(spark_held_out())
-        .select(F.explode(grams13).alias("gram"))
-        .distinct()
-    )
+    bench = TX.held_out_grams(docs_all).select("g").distinct()
     cont = (
-        docs.select("doc_id", F.explode(grams13).alias("gram"))
-        .join(bench_grams, "gram", "left_semi")
+        _train_grams(docs_all)
+        .join(bench, "g", "left_semi")
         .select("doc_id")
         .distinct()
         .select("doc_id", F.lit(True).alias("contam"))
     )
-    # the three REGISTERED r14 frames — one definition per rule on each
+    # the three REGISTERED frames — one definition per rule on each
     # engine (the oracle embeds the same entries' SQL); all three are
     # broadcast-sized (eval-suite drop list / |communities|·K keepers /
     # 5 picks)
@@ -3077,7 +2906,7 @@ def _novelty_oracle() -> str:
 
 @register("gram_novelty_scores", oracle=_novelty_oracle())
 def q_gram_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4+ (r15) — per-document GRAM NOVELTY: of a document's distinct
+    """X4+ — per-document GRAM NOVELTY: of a document's distinct
     13-token grams, the share that appear NOWHERE else in the corpus
     (document frequency 1), as exact basis points. The per-document
     inverse of the coverage/dedup families: coverage selection maximizes

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import DUCK_SHINGLES, duck_held_out
+from ..functions.text import DECON_N, DUCK_HELD_OUT_GRAMS, DUCK_SHINGLES, duck_held_out
 from ..registry import register
 from ..sources.tables import load
 from ..streaming.stateful import (
@@ -226,28 +226,15 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stream_decontaminate_flags",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    bgr AS (
-      SELECT DISTINCT array_to_string(t[pos + 1:pos + 13], ' ') AS gram
-      FROM (SELECT t, UNNEST(range(len(t) - 12)) AS pos
-            FROM toks
-            WHERE len(t) >= 13
-              AND {duck_held_out()})
-    ),
-    tg AS (
-      SELECT doc_id, array_to_string(t[pos + 1:pos + 13], ' ') AS gram
-      FROM (SELECT doc_id, t, UNNEST(range(len(t) - 12)) AS pos
-            FROM toks
-            WHERE len(t) >= 13
-              AND NOT ({duck_held_out()}))
-    )
+    WITH {DUCK_HELD_OUT_GRAMS}
     SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_flagged_grams
-    FROM tg WHERE gram IN (SELECT gram FROM bgr)
+    FROM grams{DECON_N}
+    WHERE NOT ({duck_held_out()}) AND g IN (SELECT g FROM bench)
     GROUP BY doc_id ORDER BY doc_id
     """,
 )
 def q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X6 × X4 (r7) — streaming benchmark decontamination: the documents
+    """X6 × X4 — streaming benchmark decontamination: the documents
     table arrives through the streaming engine (file source), its 13-grams
     stream-static join a fixed benchmark gram set (stateless join — the
     static side is eval-suite-sized and broadcasts), and a stateful

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import artifacts
-from ..functions.text import spark_held_out
+from ..functions.text import held_out_grams, positional_grams, spark_held_out
 from ..operators.dq import assert_unique_doc_ids
 from ..sources.tables import normalize_event_time, parquet_schema
 
@@ -219,25 +219,11 @@ def stream_contamination_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..sources.tables import load
 
-    bench = spark_held_out()
-    toks = F.split(F.col("text"), " ")
-    grams13 = F.when(
-        F.size(toks) >= 13,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 13),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 13)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    bench_grams = (
-        load(spark, sf_dir, "documents")
-        .filter(bench)
-        .select(F.explode(grams13).alias("gram"))
-        .distinct()
-    )
-    stream = read_documents_stream(spark, sf_dir).filter(~bench)
+    bench_grams = held_out_grams(load(spark, sf_dir, "documents")).select("g").distinct()
+    stream = read_documents_stream(spark, sf_dir).filter(~spark_held_out())
     flagged = (
-        stream.select("doc_id", F.explode(grams13).alias("gram"))
-        .join(bench_grams, "gram")  # stream-static inner, stateless
+        positional_grams(stream)
+        .join(bench_grams, "g")  # stream-static inner, stateless
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_flagged_grams"))
     )

@@ -57,7 +57,7 @@ def _pairwise_excision(sdf, min_tokens: int):
         .distinct()
         .withColumn("__cut", F.lit(True))
     )
-    return _reassemble_without(sdf, removed, id_col="doc_id", text_col="text")
+    return _reassemble_without(sdf, removed)
 
 
 def test_span_canonical_equals_pairwise(spark):

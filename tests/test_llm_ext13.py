@@ -11,7 +11,8 @@ import pyarrow.parquet as pq
 import pytest
 
 import my_favorite_etl_pipeline_spark as engine
-from my_favorite_etl_pipeline_spark.plans.curation import _COV_N, _COV_ROUNDS
+from my_favorite_etl_pipeline_spark.functions.text import DECON_N
+from my_favorite_etl_pipeline_spark.plans.curation import _COV_ROUNDS
 from tests.conftest import SF_DIR
 
 
@@ -22,7 +23,7 @@ def _greedy_python(texts: dict[int, str], rounds: int):
     for doc_id, text in texts.items():
         t = text.split(" ")
         grams[doc_id] = {
-            " ".join(t[i : i + _COV_N]) for i in range(len(t) - _COV_N + 1)
+            " ".join(t[i : i + DECON_N]) for i in range(len(t) - DECON_N + 1)
         }
     covered: set[str] = set()
     selected: set[int] = set()
@@ -114,7 +115,7 @@ def test_greedy_coverage_plan_has_no_cartesian(spark):
 
     docs = load(spark, SF_DIR, "documents")
     dg = docs.select(
-        "doc_id", F.explode(TX.shingles(F.col("text"), n=_COV_N)).alias("g")
+        "doc_id", F.explode(TX.shingles(F.col("text"), n=DECON_N)).alias("g")
     ).distinct()
     covered = dg.limit(50).select("g")
     new = dg.join(covered, "g", "left_anti")
@@ -137,7 +138,7 @@ def _batched_python(texts: dict[int, str], rounds: int, b: int):
     for doc_id, text in texts.items():
         t = text.split(" ")
         grams[doc_id] = {
-            " ".join(t[i : i + _COV_N]) for i in range(len(t) - _COV_N + 1)
+            " ".join(t[i : i + DECON_N]) for i in range(len(t) - DECON_N + 1)
         }
     covered: set[str] = set()
     selected: set[int] = set()

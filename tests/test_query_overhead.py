@@ -1,6 +1,7 @@
 """Fixed per-query overhead: Spark job budgets of the text-curation, graph
-search, near-dup and centroid-cell queries, the DSIR weight-table plan, and
-the parquet schema memo behind ``load``."""
+search, near-dup, centroid-cell and curation-rule queries, the DSIR
+weight-table and bloom-verify plans, and the parquet schema memo behind
+``load``."""
 
 from __future__ import annotations
 
@@ -133,6 +134,41 @@ def test_centroid_cell_family_job_budget(spark, sf_dir, set_conf, name, budget):
     assert _jobs_to_build_and_run(spark, sf_dir, name) <= budget
 
 
+# The 13-gram decontamination and curation-rule family shares one
+# positional gram frame, one held-out gram set, one flag aggregate, one
+# feature bag and one Gopher gate per engine. Measured before that on this
+# fixture (two fresh processes agreed): flag 6, bloom 10, excise 10, span
+# profile 7, funnel 104, greedy coverage 62, batched coverage 26, novelty
+# 9, Gopher flags 3, ablation 5, linear classifier 4, GD scores 13, DSIR
+# Gumbel 8, repetition 8 jobs. The bloom verify then ran two
+# countDistincts (an Expand), and excision persisted a re-split copy of
+# each side before building its grams. The streaming entry is left out:
+# its jobs run on the stream thread. Each budget is a ceiling (AQE's
+# asynchronous stage jobs vary between identical runs).
+@pytest.mark.parametrize(
+    "name, budget",
+    [
+        ("contamination_13gram", 6),
+        ("decontaminate_bloom_13gram", 9),
+        ("decontaminate_excise_13gram", 6),
+        ("contamination_span_profile", 7),
+        ("curation_funnel_report", 104),
+        ("greedy_gram_coverage_select", 62),
+        ("greedy_coverage_select_batched", 26),
+        ("gram_novelty_scores", 9),
+        ("gopher_quality_flags", 3),
+        ("filter_ablation_matrix", 5),
+        ("quality_classifier_linear", 4),
+        ("quality_classifier_gd_scores", 13),
+        ("dsir_gumbel_topk_sample", 8),
+        ("repetition_filter", 8),
+    ],
+)
+def test_curation_family_job_budget(spark, sf_dir, set_conf, name, budget):
+    set_conf(spark, CACHED_PLAN_AQE, "true")
+    assert _jobs_to_build_and_run(spark, sf_dir, name) <= budget
+
+
 def test_dsir_weights_aggregate_counts_once_without_a_cross_join(spark, sf_dir):
     with materialized_scope():
         qe = REGISTRY["dsir_importance_resample"].fn(spark, sf_dir)._jdf.queryExecution()
@@ -141,6 +177,17 @@ def test_dsir_weights_aggregate_counts_once_without_a_cross_join(spark, sf_dir):
     assert len(re.findall(r"Aggregate \[b#\d+L?\]", optimized)) == 1
     assert "BroadcastNestedLoopJoin" not in physical
     assert "CartesianProduct" not in physical
+
+
+def test_bloom_verify_plans_no_expand(spark, sf_dir):
+    """The bloom entry's verify shares the flag entry's one-pass
+    ``size(collect_set)`` aggregate; two ``countDistinct``s would plan an
+    ``Expand`` that doubles the joined rows."""
+    with materialized_scope():
+        qe = REGISTRY["decontaminate_bloom_13gram"].fn(spark, sf_dir)._jdf.queryExecution()
+        optimized, physical = qe.optimizedPlan().toString(), qe.executedPlan().toString()
+    assert "Expand" not in optimized
+    assert "Expand" not in physical
 
 
 def _write_documents(path, **extra):

@@ -12,10 +12,14 @@ from pyspark.sql import functions as F
 from my_favorite_etl_pipeline_spark.functions.exprs import duck_md5_32, spark_md5_32
 from my_favorite_etl_pipeline_spark.functions.text import (
     DUCK_SHINGLES,
+    DUCK_WORD_FEATURES,
+    duck_grams,
     duck_held_out,
     duck_jaccard_pairs,
+    positional_grams,
     shingles,
     spark_held_out,
+    word_features,
 )
 from my_favorite_etl_pipeline_spark.operators.dedup import near_dup_pairs
 from my_favorite_etl_pipeline_spark.sources.tables import load
@@ -97,6 +101,49 @@ def test_shingle_cte_matches_spark_shingles(spark, sf_dir):
     }
     assert got_spark == got_duck
     assert got_spark[-4] == ["x y x", "y x y"] and got_spark[-2] == []
+
+
+TEXTS = [
+    (1, ""),
+    (2, "one"),
+    (3, "a b"),
+    (4, "a  b c"),  # an empty token between the two spaces
+    (5, "x y x y x y x y x y x y x y x y"),
+    (6, " ".join(f"w{i}" for i in range(14))),
+]
+
+
+@pytest.mark.parametrize("n", [2, 5, 13])
+def test_positional_gram_twins_match(spark, n):
+    docs = spark.createDataFrame(TEXTS, "doc_id long, text string")
+    got_spark = sorted(tuple(r) for r in positional_grams(docs, n).collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", TEXTS)
+    got_duck = sorted(
+        con.execute(f"WITH {duck_grams(n)} SELECT doc_id, pos, g FROM grams{n}").fetchall()
+    )
+    want = sorted(
+        (d, p, " ".join(t.split(" ")[p : p + n]))
+        for d, t in TEXTS
+        for p in range(len(t.split(" ")) - n + 1)
+    )
+    assert got_spark == got_duck == want
+
+
+def test_word_feature_twins_match(spark):
+    docs = spark.createDataFrame(TEXTS, "doc_id long, text string")
+    got_spark = {r.doc_id: r.f for r in docs.select("doc_id", word_features("text").alias("f")).collect()}
+    got_duck = dict(
+        duckdb.sql(
+            f"SELECT doc_id, {DUCK_WORD_FEATURES} FROM "
+            "(SELECT doc_id, string_split(text, ' ') AS t FROM (VALUES "
+            + ", ".join(f"({d}, '{t}')" for d, t in TEXTS)
+            + ") v(doc_id, text))"
+        ).fetchall()
+    )
+    assert got_spark == got_duck
+    assert got_spark[3] == ["a", "b", "a_b"] and got_spark[1] == [""]
 
 
 def _two_docs(shared: int, tail: int) -> list[tuple[int, str]]:
