@@ -9,6 +9,17 @@ hashes re-inlines the whole signature 32×). Implemented as
 ``transform(array(value), x -> body(x))[0]``: the array wraps the value,
 the lambda binds it, element 1 unwraps the result.
 
+The second re-evaluation trap is a pre-filter Catalyst infers: exploding a
+projected ATTRIBUTE with ``explode``/``posexplode`` makes
+``InferFiltersFromGenerate`` add ``size(attr) > 0 AND isnotnull(attr)``,
+and filter pushdown then replaces ``attr`` with its definition below the
+projection — so a per-row text kernel (a SimHash fold, a shingle array)
+runs twice per row, once in that filter (below any fan-out, on the scan's
+tasks) and once in the projection. The ``_outer`` generators infer no
+filter: use them where the array is never empty, or where the extra
+NULL-element row is dropped downstream (an equi-join on it).
+:func:`lambda_prefilters` finds the trap in an executed plan.
+
 ``spark_md5_32`` / ``duck_md5_32`` — one portable 32-bit hash as a Spark
 column and as the DuckDB SQL fragment that computes the same value (md5
 halves are bit-identical in every engine; xxhash/murmur are not).
@@ -18,13 +29,47 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
 def let(value: Column, body: Callable[[Column], Column]) -> Column:
     """Evaluate ``value`` once; make it available to ``body`` as a variable."""
     return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def lambda_prefilters(df: DataFrame) -> list[str]:
+    """The conditions of every ``Filter`` and scan ``DataFilters`` entry in
+    ``df``'s executed plan, cached plans included, that hold a lambda
+    function: each is a higher-order-function kernel inlined into a filter,
+    evaluated there on top of its projection."""
+    found: list[str] = []
+
+    def seq(s) -> list:
+        return [s.apply(i) for i in range(s.size())]
+
+    def walk(node) -> None:
+        name = node.getClass().getSimpleName()
+        if name == "FilterExec":
+            conds = [node.condition().toString()]
+        elif name == "FileSourceScanExec":
+            conds = [c.toString() for c in seq(node.dataFilters())]
+        else:
+            conds = []
+        found.extend(c for c in conds if "lambdafunction" in c)
+        if name == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        elif name.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        elif name == "InMemoryTableScanExec":
+            kids = [node.relation().cachedPlan()]
+        else:  # a ReusedExchangeExec is a leaf: its plan is walked where it is defined
+            kids = seq(node.children())
+        for kid in kids:
+            walk(kid)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
 
 
 def surrogate_key(*cols: Column | str, sep: str = "\x1f") -> Column:

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .exprs import let
+
 # Tiny per-language marker lexicons for the n-gram/stopword language-ID
 # heuristic. Real pipelines plug in fastText/CLD3 via a Pandas UDF; the
 # heuristic keeps the operator UDF-free and oracle-checkable.
@@ -56,8 +58,6 @@ def ngrams(col: Column | str, n: int = 2) -> Column:
     let-bound (see functions.exprs) so the per-gram element_at lookups share
     one split() evaluation.
     """
-    from .exprs import let
-
     return let(
         tokens(col),
         lambda toks: F.when(
@@ -111,16 +111,23 @@ def duck_grams(n: int = DECON_N) -> str:
 def word_features(col: Column | str) -> Column:
     """The hashed classifiers' feature bag: the tokens, then every adjacent
     bigram joined by ``_`` (multiplicity kept). Shared by the linear and
-    gradient-descent quality classifiers, DSIR and the curation funnel."""
-    toks = tokens(col)
-    bigrams = F.when(
-        F.size(toks) >= 2,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 2),
-            lambda i: F.concat(F.get(toks, i), F.lit("_"), F.get(toks, i + 1)),
+    gradient-descent quality classifiers, DSIR and the curation funnel.
+    The token array is let-bound (see functions.exprs): the bigram lambda
+    reads it twice per position, and an unbound ``split`` there would be
+    evaluated again for every lookup — O(n²) per document."""
+    return let(
+        tokens(col),
+        lambda toks: F.concat(
+            toks,
+            F.when(
+                F.size(toks) >= 2,
+                F.transform(
+                    F.sequence(F.lit(0), F.size(toks) - 2),
+                    lambda i: F.concat(F.get(toks, i), F.lit("_"), F.get(toks, i + 1)),
+                ),
+            ).otherwise(F.array().cast("array<string>")),
         ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.concat(toks, bigrams)
+    )
 
 
 # DuckDB twin of ``word_features`` over a token list ``t``.

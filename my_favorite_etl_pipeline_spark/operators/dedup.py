@@ -423,11 +423,13 @@ def simhash_near_dups(
     )
     # blocked feeds BOTH sides of the chunk-bucket self-join — persist so
     # the signature fold (64-bit accumulator over every token hash; the
-    # portable variant pays two md5s per token) runs once, not twice
-    # (r15-opt, guide §5)
+    # portable variant pays an md5 per token) runs once, not twice.
+    # posexplode_outer: sig always holds 4 chunks, so the rows are
+    # posexplode's, but no non-empty pre-filter is inferred that would
+    # re-run the fold below the fan-out (see functions.exprs)
     blocked = tracked_persist(
         sigs.select(
-            id_col, "sig", F.posexplode("sig").alias("chunk_idx", "chunk_val")
+            id_col, "sig", F.posexplode_outer("sig").alias("chunk_idx", "chunk_val")
         )
     )
     a, b = blocked.alias("a"), blocked.alias("b")

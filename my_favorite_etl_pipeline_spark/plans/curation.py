@@ -1191,12 +1191,12 @@ def _dsir_doc_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     unigram+bigram importance log-ratio per raw document (the deterministic
     core both the top-N selector and the Gumbel sampler rank on)."""
     docs = load(spark, sf_dir, "documents")
-    fb = docs.select(
-        "doc_id",
-        spark_held_out().alias("is_t"),
-        F.explode(TX.word_features("text")).alias("x"),
-    ).select(
-        "doc_id", "is_t", (spark_md5_32(F.col("x")) % _DSIR_B).alias("b")
+    # is_t is projected before the explode: a column selected beside a
+    # generator is evaluated above it, once per feature instead of per doc
+    fb = (
+        docs.select("doc_id", spark_held_out().alias("is_t"), "text")
+        .select("doc_id", "is_t", F.explode(TX.word_features("text")).alias("x"))
+        .select("doc_id", "is_t", (spark_md5_32(F.col("x")) % _DSIR_B).alias("b"))
     )
     # The tokenize+md5 explode feeds TWO consumers (bucket multinomials and
     # the per-doc scoring agg). Collapse it map-side to per-(doc, side,

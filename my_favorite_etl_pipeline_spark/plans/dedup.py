@@ -181,10 +181,14 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.scaling import ensure_min_partitions
 
     docs = load(spark, sf_dir, "documents")
+    # explode_outer: a document too short for a shingle keeps one g = NULL
+    # row, which the equi-join drops, so the pairs are explode's; plain
+    # explode would have a non-empty pre-filter inferred that re-runs the
+    # shingle kernel below the fan-out (see functions.exprs)
     sh = tracked_persist(
         ensure_min_partitions(docs)
         .select("doc_id", shingles(F.col("text")).alias("sh"))
-        .select("doc_id", F.size("sh").alias("n"), F.explode("sh").alias("g"))
+        .select("doc_id", F.size("sh").alias("n"), F.explode_outer("sh").alias("g"))
     )
     a, b = sh.alias("a"), sh.alias("b")
     inter = (

@@ -1,7 +1,7 @@
 """Fixed per-query overhead: Spark job budgets of the text-curation, graph
 search, near-dup, centroid-cell and curation-rule queries, the DSIR
-weight-table and bloom-verify plans, and the parquet schema memo behind
-``load``."""
+weight-table and bloom-verify plans, text kernels evaluated once per row,
+and the parquet schema memo behind ``load``."""
 
 from __future__ import annotations
 
@@ -12,6 +12,8 @@ import pyarrow.parquet as pq
 import pytest
 
 from my_favorite_etl_pipeline_spark.caching import materialized_scope
+from my_favorite_etl_pipeline_spark.functions.exprs import lambda_prefilters
+from my_favorite_etl_pipeline_spark.functions.text import word_features
 from my_favorite_etl_pipeline_spark.registry import REGISTRY
 from my_favorite_etl_pipeline_spark.session import CACHED_PLAN_AQE
 from my_favorite_etl_pipeline_spark.sources.tables import load, parquet_schema
@@ -82,13 +84,14 @@ def test_graph_search_job_budget(spark, sf_dir, set_conf, name, budget):
 # leakage split 38, MinHash 11 jobs. Entries that iterate connected
 # components or broadcast vary by a job or two between identical runs, at
 # the parent too (AQE submits query stages as asynchronous jobs), so each
-# budget is a ceiling: the highest count seen over five runs.
+# budget is a ceiling: the highest count seen over five runs (keep-best:
+# over twelve, where it ran 35-37 jobs).
 @pytest.mark.parametrize(
     "name, budget",
     [
         ("dedup_cluster_components", 35),
         ("dedup_cluster_components_star", 49),
-        ("dedup_keep_best", 36),
+        ("dedup_keep_best", 37),
         ("ssjoin_prefix_filter", 12),
         ("source_overlap_matrix", 26),
         ("dedup_canonical_pagerank", 66),
@@ -188,6 +191,27 @@ def test_bloom_verify_plans_no_expand(spark, sf_dir):
         optimized, physical = qe.optimizedPlan().toString(), qe.executedPlan().toString()
     assert "Expand" not in optimized
     assert "Expand" not in physical
+
+
+# Each of these explodes a projected text-kernel array. With plain
+# explode/posexplode Catalyst inferred a non-empty pre-filter from the
+# generator and pushed it, kernel inlined, below the round-robin fan-out:
+# the SimHash fold or the shingle array ran a second time on the scan's
+# single task.
+@pytest.mark.parametrize(
+    "name", ["simhash_near_dups", "simhash_near_dups_portable", "ngram_jaccard_pairs"]
+)
+def test_no_text_kernel_in_an_inferred_prefilter(spark, sf_dir, name):
+    with materialized_scope():
+        assert lambda_prefilters(REGISTRY[name].fn(spark, sf_dir)) == []
+
+
+def test_word_features_splits_the_text_once(spark):
+    """The bigram lambda reads the let-bound token array; an unbound
+    ``split`` there is evaluated again for every bigram."""
+    df = spark.createDataFrame([("a b c",)], "text string")
+    plan = df.select(word_features("text").alias("f"))._jdf.queryExecution().analyzed()
+    assert plan.toString().count("split(") == 1
 
 
 def _write_documents(path, **extra):

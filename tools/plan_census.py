@@ -16,6 +16,14 @@ Prints one JSON line per query and a summary block for SCALE.md.
 ``--assert`` (the release-gate mode) exits 1 if any plan fails to build or
 contains a CartesianProduct — making "no cartesian anywhere" an enforced
 invariant, not a one-time audit.
+
+``kernel_prefilter`` counts the filters (``Filter`` conditions and scan
+``DataFilters``, cached plans included) that hold a lambda function: a
+higher-order-function kernel Catalyst inlined into a pre-filter, where it
+runs on top of its projection (``functions.exprs.lambda_prefilters``).
+``--assert`` also fails when such an inlined kernel tokenizes or hashes
+text (``split(``, ``md5(``, ``xxhash64(``); cheaper inlined kernels (an
+element cast) are reported, not asserted.
 """
 
 from __future__ import annotations
@@ -37,6 +45,10 @@ SF_DIR = _args[0] if _args else "/root/testdata/sf0.001"
 SKIP_PREFIXES = ("stream_",)
 SKIP_NAMES: set[str] = set()
 
+#: functions that make an inlined kernel a text kernel: tokenizing or
+#: hashing every row again is the cost the prefilter audit guards against
+TEXT_KERNEL_CALLS = ("split(", "md5(", "xxhash64(")
+
 
 def _plan_only_substitutes():
     """Entries whose registered fn runs jobs at construction but whose
@@ -53,6 +65,7 @@ def _plan_only_substitutes():
 def main() -> int:
     import __spark_entry__ as entrymod
     from my_favorite_etl_pipeline_spark.caching import materialized_scope
+    from my_favorite_etl_pipeline_spark.functions.exprs import lambda_prefilters
     from my_favorite_etl_pipeline_spark.session import get_spark
 
     spark = get_spark("plan-census")
@@ -68,6 +81,7 @@ def main() -> int:
             with materialized_scope():
                 df = fn(spark, SF_DIR)
                 plan = df._jdf.queryExecution().executedPlan().toString()
+                prefilters = lambda_prefilters(df)
         except Exception as exc:  # noqa: BLE001 — census must finish
             rows.append({"query": name, "error": str(exc).splitlines()[0][:120]})
             continue
@@ -82,6 +96,10 @@ def main() -> int:
             "bnlj": len(re.findall(r"BroadcastNestedLoopJoin", plan)),
             "cartesian": len(re.findall(r"CartesianProduct", plan)),
             "codegen_spans": len(re.findall(r"WholeStageCodegen", plan)),
+            "kernel_prefilter": len(prefilters),
+            "text_kernel_prefilter": sum(
+                any(call in c for call in TEXT_KERNEL_CALLS) for c in prefilters
+            ),
         }
         rows.append(stats)
         print(json.dumps(stats), flush=True)
@@ -102,6 +120,10 @@ def main() -> int:
         print(f"  ERROR {e['query']}: {e['error']}")
     print(f"cartesian products: {len(cart)} {cart if cart else ''}")
     print(f"single-partition exchanges (presentation sorts excepted): {singles}")
+    kernels = [r["query"] for r in ok if r["kernel_prefilter"]]
+    text_kernels = [r["query"] for r in ok if r["text_kernel_prefilter"]]
+    print(f"kernel pre-filters: {len(kernels)} queries {kernels if kernels else ''}")
+    print(f"text-kernel pre-filters: {len(text_kernels)} {text_kernels if text_kernels else ''}")
     total_shuf = sum(r["shuffle_hash"] + r["shuffle_range"] for r in ok)
     total_bc = sum(r["broadcast"] for r in ok)
     print(f"total shuffle exchanges: {total_shuf} | broadcasts: {total_bc}")
@@ -111,8 +133,11 @@ def main() -> int:
             f"  {r['query']}: hash={r['shuffle_hash']} range={r['shuffle_range']} "
             f"bc={r['broadcast']} smj={r['smj']} bhj={r['bhj']}"
         )
-    if ASSERT and (cart or errs):
-        print(f"census ASSERT failed: {len(cart)} cartesians, {len(errs)} errors")
+    if ASSERT and (cart or errs or text_kernels):
+        print(
+            f"census ASSERT failed: {len(cart)} cartesians, {len(errs)} errors,"
+            f" {len(text_kernels)} text-kernel pre-filters"
+        )
         return 1
     print("0 cartesians" if not cart else f"{len(cart)} cartesians")
     return 0
