@@ -38,6 +38,17 @@ def let(value: Column, body: Callable[[Column], Column]) -> Column:
     return F.element_at(F.transform(F.array(value), body), 1)
 
 
+def quote_ident(name: str) -> str:
+    """Backtick-quote a column name for SQL text (dots, keywords, backticks)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(value: str) -> str:
+    """A SQL string literal for ``value`` under the default parser
+    (``spark.sql.parser.escapedStringLiterals=false``: backslash escapes)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def lambda_prefilters(df: DataFrame) -> list[str]:
     """The conditions of every ``Filter`` and scan ``DataFilters`` entry in
     ``df``'s executed plan, cached plans included, that hold a lambda

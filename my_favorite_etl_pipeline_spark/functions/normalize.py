@@ -1,9 +1,13 @@
 """Reference-parity transform chain (SURVEY.md §2.3/§2.4).
 
-Each function is one operator from the reference's transform task, re-expressed
-as a pure DataFrame→DataFrame combinator. None of them uses a Python row UDF —
-everything stays inside Catalyst/codegen. Each adds ONE projection (a single
-``withColumns``), so a chain is re-analyzed once per step, not once per column.
+Each rule of the reference's transform task is written ONCE, as SQL text
+over a Python-side column model (:class:`Col`: name, SQL over the input
+frame, type). A rule maps one model to the next without touching the JVM,
+so a chain of rules reads the schema once and sends ONE ``selectExpr``:
+one projection, analyzed once, however many rules and columns it holds.
+The DataFrame→DataFrame combinators below are each one rule applied to
+the frame's own model. None of them uses a Python row UDF — everything
+stays inside Catalyst/codegen.
 
 Reference citations are into /root/reference/dag_mgo_pg_schedule_etl_qc.py
 (abbreviated ``dag:NNN``).
@@ -11,9 +15,53 @@ Reference citations are into /root/reference/dag_mgo_pg_schedule_etl_qc.py
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from typing import NamedTuple
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .exprs import quote_ident, sql_string
+
+_NESTED = (T.StructType, T.ArrayType, T.MapType)
+_TIMESTAMPS = (T.TimestampType, T.TimestampNTZType)
+
+
+class Col(NamedTuple):
+    """One output column of a projection being composed: its name, its SQL
+    text over the INPUT frame's columns, and its type."""
+
+    name: str
+    sql: str
+    dtype: T.DataType
+
+
+def columns_of(df: DataFrame) -> list[Col]:
+    """The identity model of ``df`` — its one schema read."""
+    return [Col(f.name, quote_ident(f.name), f.dataType) for f in df.schema.fields]
+
+
+def project(df: DataFrame, cols: list[Col]) -> DataFrame:
+    """Send a composed model to the JVM as one ``selectExpr``."""
+    return df.selectExpr(*[
+        c.sql if c.sql == quote_ident(c.name) else f"{c.sql} AS {quote_ident(c.name)}"
+        for c in cols
+    ])
+
+
+def _find(cols: list[Col], name: str) -> Col | None:
+    return next((c for c in cols if c.name == name), None)
+
+
+def _with(cols: list[Col], new: dict[str, tuple[str, T.DataType]]) -> list[Col]:
+    """``withColumns`` over the model: a column whose name matches (case
+    -insensitively, as Spark resolves it) is replaced in place, the rest
+    are appended in order."""
+    by_key = {n.lower(): Col(n, *v) for n, v in new.items()}
+    present = {c.name.lower() for c in cols}
+    return [by_key.get(c.name.lower(), c) for c in cols] + [
+        c for k, c in by_key.items() if k not in present
+    ]
 
 
 def normalize_name(name: str) -> str:
@@ -21,77 +69,110 @@ def normalize_name(name: str) -> str:
     return name.strip().lower().replace(" ", "_")
 
 
-def normalize_columns(df: DataFrame) -> DataFrame:
-    """P2 — rename every column via :func:`normalize_name` (dag:62-69, 166).
-
-    Pure metadata rewrite: no shuffle, no job; Catalyst sees it as Project.
-    """
-    return df.toDF(*[normalize_name(c) for c in df.columns])
+def rename_rule(cols: list[Col]) -> list[Col]:
+    """P2 — every column renamed via :func:`normalize_name` (dag:62-69, 166)."""
+    return [c._replace(name=normalize_name(c.name)) for c in cols]
 
 
-def with_lineage(df: DataFrame, run_id: str, col_name: str = "batch_run_id") -> DataFrame:
+def lineage_rule(cols: list[Col], run_id: str, col_name: str = "batch_run_id") -> list[Col]:
     """P3 — literal lineage column, the ``airflow_run_id`` analogue (dag:184)."""
-    return df.withColumn(col_name, F.lit(run_id))
+    return _with(cols, {col_name: (sql_string(run_id), T.StringType())})
 
 
-def stringify_id(df: DataFrame, col: str = "_id") -> DataFrame:
+def id_rule(cols: list[Col], col: str = "_id") -> list[Col]:
     """P4 — ObjectId→string cast (dag:165)."""
-    return df.withColumn(col, F.col(col).cast("string"))
+    src = _find(cols, col)
+    ref = src.sql if src is not None else quote_ident(col)  # absent: Spark names it
+    return _with(cols, {col: (f"CAST({ref} AS STRING)", T.StringType())})
 
 
-def structs_to_json(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """J1 — serialize struct/array/map columns to JSON strings (dag:71-74).
-
-    The reference's ``clean_value`` (``json.dumps(x, default=str)``) becomes
-    native ``to_json`` — null-safe, codegen'd, and it serializes nested
-    timestamps the way ``default=str`` does.
-    """
-    targets = cols or [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (T.StructType, T.ArrayType, T.MapType))
-    ]
-    present = [c for c in targets if c in df.columns]  # F3 presence guard (dag:171-172)
-    return df.withColumns({c: F.to_json(F.col(c)) for c in present})
-
-
-def flatten_struct(df: DataFrame, col: str, keys: list[str], prefix: str | None = None) -> DataFrame:
-    """J2 — flatten one struct/JSON column into ``{prefix}_{key}`` scalars.
-
-    The reference does this *inside PostgreSQL* with 12 ``->> 'key'``
-    extractions (dag:296-307); here it's part of the same Catalyst plan.
-    Works on either a typed struct column (preferred — stays columnar) or a
-    JSON string column (falls back to ``get_json_object``).
-    """
-    prefix = prefix if prefix is not None else col
-    if col not in df.columns:
-        # absent at source: emit typed NULLs, preserving the sink contract (F3)
-        return df.withColumns({f"{prefix}_{k}": F.lit(None).cast("string") for k in keys})
-    dtype = df.schema[col].dataType
-    exprs: dict[str, Column] = {}
-    for k in keys:
-        if isinstance(dtype, T.StructType):
-            src = F.col(f"{col}.{k}") if k in dtype.names else F.lit(None)
-            exprs[f"{prefix}_{k}"] = src.cast("string")
-        else:
-            exprs[f"{prefix}_{k}"] = F.get_json_object(F.col(col), f"$.{k}")
-    return df.withColumns(exprs)
-
-
-def coerce_timestamps(df: DataFrame, cols: list[str]) -> DataFrame:
+def timestamp_rule(cols: list[Col], names: list[str]) -> list[Col]:
     """J3 — lossy-tolerant datetime coercion (dag:176-180).
 
     ``pd.to_datetime(errors="coerce")`` parity: unparseable → NULL, never an
-    error. ``try_to_timestamp`` keeps this true even under ANSI mode; already
-    -typed timestamp columns pass through untouched.
+    error. ``try_to_timestamp`` keeps this true even under ANSI mode; absent
+    columns (F3 presence guard, dag:178-179) and already-typed timestamp
+    columns pass through untouched.
     """
-    dtypes = {f.name: f.dataType for f in df.schema.fields}
-    return df.withColumns({
-        c: F.try_to_timestamp(F.col(c).cast("string"))
-        for c in cols
-        if c in dtypes  # F3 presence guard (dag:178-179)
-        and not isinstance(dtypes[c], (T.TimestampType, T.TimestampNTZType))
+    found = [_find(cols, n) for n in names]
+    return _with(cols, {
+        c.name: (f"try_to_timestamp(CAST({c.sql} AS STRING))", T.TimestampType())
+        for c in found
+        if c is not None and not isinstance(c.dtype, _TIMESTAMPS)
     })
+
+
+def flatten_rule(
+    cols: list[Col], col: str, keys: list[str], prefix: str | None = None
+) -> list[Col]:
+    """J2 — one struct/JSON column flattened into ``{prefix}_{key}`` scalars.
+
+    The reference does this *inside PostgreSQL* with 12 ``->> 'key'``
+    extractions (dag:296-307); here it's part of the same Catalyst plan.
+    A typed struct column stays columnar (a missing field reads NULL); a
+    JSON string column falls back to ``get_json_object``; an absent column
+    emits typed NULLs, preserving the sink contract (F3).
+    """
+    prefix = prefix if prefix is not None else col
+    src = _find(cols, col)
+    exprs: dict[str, tuple[str, T.DataType]] = {}
+    for k in keys:
+        if src is None:
+            expr = "CAST(NULL AS STRING)"
+        elif isinstance(src.dtype, T.StructType):
+            field = f"({src.sql}).{quote_ident(k)}" if k in src.dtype.names else "NULL"
+            expr = f"CAST({field} AS STRING)"
+        else:
+            expr = f"get_json_object({src.sql}, {sql_string(f'$.{k}')})"
+        exprs[f"{prefix}_{k}"] = (expr, T.StringType())
+    return _with(cols, exprs)
+
+
+def json_rule(cols: list[Col], names: list[str] | None = None) -> list[Col]:
+    """J1 — struct/array/map columns (or ``names``) serialized to JSON text
+    (dag:71-74).
+
+    The reference's ``clean_value`` (``json.dumps(x, default=str)``) becomes
+    native ``to_json`` — null-safe, codegen'd, and it serializes nested
+    timestamps the way ``default=str`` does. Absent names are skipped (F3
+    presence guard, dag:171-172).
+    """
+    targets = names or [c.name for c in cols if isinstance(c.dtype, _NESTED)]
+    found = [_find(cols, n) for n in targets]
+    return _with(cols, {
+        c.name: (f"to_json({c.sql})", T.StringType()) for c in found if c is not None
+    })
+
+
+def normalize_columns(df: DataFrame) -> DataFrame:
+    """P2 over ``df`` (:func:`rename_rule`). Pure metadata rewrite: no
+    shuffle, no job; Catalyst sees it as Project."""
+    return project(df, rename_rule(columns_of(df)))
+
+
+def with_lineage(df: DataFrame, run_id: str, col_name: str = "batch_run_id") -> DataFrame:
+    """P3 over ``df`` (:func:`lineage_rule`)."""
+    return project(df, lineage_rule(columns_of(df), run_id, col_name))
+
+
+def stringify_id(df: DataFrame, col: str = "_id") -> DataFrame:
+    """P4 over ``df`` (:func:`id_rule`)."""
+    return project(df, id_rule(columns_of(df), col))
+
+
+def structs_to_json(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
+    """J1 over ``df`` (:func:`json_rule`)."""
+    return project(df, json_rule(columns_of(df), cols))
+
+
+def flatten_struct(df: DataFrame, col: str, keys: list[str], prefix: str | None = None) -> DataFrame:
+    """J2 over ``df`` (:func:`flatten_rule`)."""
+    return project(df, flatten_rule(columns_of(df), col, keys, prefix))
+
+
+def coerce_timestamps(df: DataFrame, cols: list[str]) -> DataFrame:
+    """J3 over ``df`` (:func:`timestamp_rule`)."""
+    return project(df, timestamp_rule(columns_of(df), cols))
 
 
 def align_to_schema(df: DataFrame, target: T.StructType) -> DataFrame:
@@ -102,9 +183,10 @@ def align_to_schema(df: DataFrame, target: T.StructType) -> DataFrame:
     the reference's defensive ``if col in df.columns`` (dag:171-179) plus the
     column-order-sensitive INSERT (dag:275). One Project node — no shuffle.
     """
+    present = set(df.columns)
     cols = []
     for field in target.fields:
-        if field.name in df.columns:
+        if field.name in present:
             cols.append(F.col(field.name).cast(field.dataType).alias(field.name))
         else:
             cols.append(F.lit(None).cast(field.dataType).alias(field.name))

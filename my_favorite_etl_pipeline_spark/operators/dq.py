@@ -16,6 +16,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exprs import quote_ident, sql_string
+
 
 class DQViolation(Exception):
     """Raised when any declared check fails — the AirflowException analogue
@@ -28,18 +30,19 @@ class DQSuite:
 
     Each ``add_*`` returns self for chaining. ``violations(df)`` returns the
     per-check violation counts; ``enforce(df)`` raises :class:`DQViolation`
-    if any is nonzero.
+    if any is nonzero. A check is SQL text (one aggregate per check), so a
+    suite costs one parse per action, not a Column tree per check.
     """
 
-    checks: list[tuple[str, Column]] = field(default_factory=list)
+    checks: list[tuple[str, str]] = field(default_factory=list)
 
-    def _add(self, name: str, violation_count: Column) -> "DQSuite":
-        self.checks.append((name, violation_count.cast("long").alias(name)))
+    def _add(self, name: str, violation_count: str) -> "DQSuite":
+        self.checks.append((name, f"CAST({violation_count} AS BIGINT) AS {quote_ident(name)}"))
         return self
 
     def add_not_null(self, col: str) -> "DQSuite":
         """Completeness: missing-value count (dag:369 'not missing fields')."""
-        return self._add(f"null_{col}", F.sum(F.col(col).isNull().cast("int")))
+        return self._add(f"null_{col}", f"sum(CAST({quote_ident(col)} IS NULL AS INT))")
 
     def add_unique(self, col: str) -> "DQSuite":
         """Uniqueness: ``count(col) - count(distinct col)`` (dag:369, M5).
@@ -48,12 +51,14 @@ class DQSuite:
         runs on the classic :meth:`violations` pass (see :meth:`attach`).
         """
         self._has_distinct = True
-        return self._add(f"dup_{col}", F.count(F.col(col)) - F.count_distinct(F.col(col)))
+        q = quote_ident(col)
+        return self._add(f"dup_{col}", f"count({q}) - count(DISTINCT {q})")
 
     def add_regex(self, col: str, pattern: str) -> "DQSuite":
         """Regex conformity on non-null values (dag:369 'regex check')."""
-        bad = (~F.col(col).rlike(pattern)) & F.col(col).isNotNull()
-        return self._add(f"regex_{col}", F.sum(bad.cast("int")))
+        q = quote_ident(col)
+        bad = f"(NOT ({q} RLIKE {sql_string(pattern)})) AND ({q} IS NOT NULL)"
+        return self._add(f"regex_{col}", f"sum(CAST({bad} AS INT))")
 
     def add_type_valid(self, col: str, to_type: str) -> "DQSuite":
         """Type validity: values that fail a ``try_cast`` (dag:369).
@@ -61,29 +66,30 @@ class DQSuite:
         ``try_cast`` NULL on a non-NULL input == unparseable value — the
         Spark-native version of Soda's 'valid data type' check.
         """
-        bad = F.col(col).try_cast(to_type).isNull() & F.col(col).isNotNull()
-        return self._add(f"badtype_{col}", F.sum(bad.cast("int")))
+        q = quote_ident(col)
+        bad = f"(try_cast({q} AS {to_type}) IS NULL) AND ({q} IS NOT NULL)"
+        return self._add(f"badtype_{col}", f"sum(CAST({bad} AS INT))")
 
     def add_freshness(self, ts_col: str, not_before: str) -> "DQSuite":
         """Freshness: ``max(ts) >= not_before`` else 1 violation (dag:369)."""
-        stale = (F.max(F.col(ts_col)) < F.lit(not_before).cast("timestamp")).cast("int")
-        return self._add(f"stale_{ts_col}", F.coalesce(stale, F.lit(1)))
+        stale = f"max({quote_ident(ts_col)}) < CAST({sql_string(not_before)} AS TIMESTAMP)"
+        return self._add(f"stale_{ts_col}", f"coalesce(CAST({stale} AS INT), 1)")
 
     def violation_columns(self) -> list[Column]:
-        return [c for _, c in self.checks]
+        return [F.expr(sql) for _, sql in self.checks]
 
-    def violations(self, df: DataFrame, *extra: Column) -> dict[str, int]:
+    def violations(self, df: DataFrame, *extra: str) -> dict[str, int]:
         """One aggregation job over all checks.
 
-        ``extra`` aliased aggregates (row counts, say) ride the same pass
-        and come back under their aliases; they never gate."""
-        cols = [*self.violation_columns(), *extra]
-        if not cols:
+        ``extra`` aliased SQL aggregates (row counts, say) ride the same
+        pass and come back under their aliases; they never gate."""
+        exprs = [*(sql for _, sql in self.checks), *extra]
+        if not exprs:
             return {}
-        row = df.agg(*cols).collect()[0]
+        row = df.selectExpr(*exprs).collect()[0]
         return {name: int(value) for name, value in row.asDict().items()}
 
-    def enforce(self, df: DataFrame, *extra: Column) -> dict[str, int]:
+    def enforce(self, df: DataFrame, *extra: str) -> dict[str, int]:
         counts = self.violations(df, *extra)
         failed = {name: counts[name] for name, _ in self.checks if counts[name]}
         if failed:

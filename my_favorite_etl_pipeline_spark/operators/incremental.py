@@ -14,18 +14,34 @@ import datetime as dt
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..functions.exprs import quote_ident, sql_string
 
 TimestampLike = str | dt.datetime
 
 
-def in_window(col: Column | str, start: TimestampLike, end: TimestampLike) -> Column:
+def _timestamp_sql(value: TimestampLike) -> str:
+    """A window bound as SQL text: a string casts like ``lit(s).cast(
+    "timestamp")``; a datetime is its exact instant (``lit(d)``'s micros)."""
+    if isinstance(value, dt.datetime):
+        return f"timestamp_micros({T.TimestampType().toInternal(value)})"
+    return f"CAST({sql_string(value)} AS TIMESTAMP)"
+
+
+def window_sql(col: str, start: TimestampLike, end: TimestampLike) -> str:
+    """F1 as SQL text: ``col >= start AND col < end``."""
+    q = quote_ident(col)
+    return f"({q} >= {_timestamp_sql(start)} AND {q} < {_timestamp_sql(end)})"
+
+
+def in_window(col: str, start: TimestampLike, end: TimestampLike) -> Column:
     """F1 — half-open window predicate: ``col >= start AND col < end``.
 
     Boundary semantics match the reference exactly: start inclusive
     (``$gte``), end exclusive (``$lt``) — dag:126-127.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return (c >= F.lit(start).cast("timestamp")) & (c < F.lit(end).cast("timestamp"))
+    return F.expr(window_sql(col, start, end))
 
 
 def incremental_extract(
@@ -38,14 +54,12 @@ def incremental_extract(
 
     ``incremental_extract(df, ["createdat", "updatedat"], s, e)`` reproduces
     the reference's ``$or`` predicate (dag:124-129, 394-399). The OR of
-    range predicates still pushes down to parquet row-group pruning.
+    range predicates still pushes down to parquet row-group pruning. It is
+    sent as one SQL text.
     """
     if not ts_cols:
         raise ValueError("ts_cols must be non-empty")
-    pred = in_window(ts_cols[0], start, end)
-    for c in ts_cols[1:]:
-        pred = pred | in_window(c, start, end)
-    return df.filter(pred)
+    return df.filter(" OR ".join(window_sql(c, start, end) for c in ts_cols))
 
 
 def write_partitioned_by_day(

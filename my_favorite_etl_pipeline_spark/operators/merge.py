@@ -20,8 +20,12 @@ Spark-first re-expression:
   reference's retries (dag:430) safe.
 
 Scale notes: the merge is one shuffle on the key (sort-merge join; AQE demotes
-to broadcast when the batch is small — the common incremental case). A
-dedup-by-key (latest-wins) pass on the batch keeps the join 1:1.
+to broadcast when the batch is small — the common incremental case). The
+join is 1:1 only for a batch with unique keys: ``merge_upsert`` does no
+dedup pass, so a duplicate-keyed batch fans out, and the runner's DQ gate
+(its uniqueness check on the written merge) rejects it before publishing.
+``latest_per_key`` is the dedup for a caller that wants last-writer-wins
+within a batch instead.
 """
 
 from __future__ import annotations
@@ -32,6 +36,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from ..functions.exprs import quote_ident, sql_string
 
 
 def latest_per_key(df: DataFrame, key: str, order_cols: list[str]) -> DataFrame:
@@ -108,11 +114,6 @@ def merge_upsert(
     return joined.selectExpr(*out_cols)
 
 
-def quote_ident(name: str) -> str:
-    """Backtick-quote a column name for SQL text (dots, keywords, backticks)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def write_staging(df: DataFrame, path: str, run_id: str, run_col: str = "batch_run_id") -> None:
     """M1 — land the batch in staging, partitioned by run id (dag:246-276).
 
@@ -145,7 +146,7 @@ def read_staging_run(
     The writer knows the batch's ``schema``; passing it skips the parquet
     schema-inference job."""
     reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path).filter(F.col(run_col) == run_id)
+    return reader.parquet(path).filter(f"{quote_ident(run_col)} = {sql_string(run_id)}")
 
 
 def delete_staging_run(path: str, run_id: str, run_col: str = "batch_run_id") -> bool:

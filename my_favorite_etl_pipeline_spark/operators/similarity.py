@@ -421,8 +421,13 @@ def fixed_point_means(
     (count·CENTROID_SCALE)`` per dimension — exact BIGINT sums, so the
     mean is bit-identical on Spark and DuckDB and across partitionings —
     re-assembled into a dimension-ordered array."""
+    # posexplode_outer + a NULL-__dim filter keeps posexplode's rows (an
+    # empty or NULL vector adds nothing) without the size(...) > 0
+    # pre-filter plain posexplode infers, which would re-run a projected
+    # vector's kernel below its projection (see functions.exprs)
     per_dim = (
-        rows.select(*keys, F.posexplode(F.col(vec_col)).alias("__dim", "__x"))
+        rows.select(*keys, F.posexplode_outer(F.col(vec_col)).alias("__dim", "__x"))
+        .where(F.col("__dim").isNotNull())
         .groupBy(*keys, "__dim")
         .agg(
             F.sum(F.floor(F.col("__x") * CENTROID_SCALE).cast("long")).alias("__sum"),

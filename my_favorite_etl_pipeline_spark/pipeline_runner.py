@@ -5,15 +5,19 @@ The reference's six Airflow tasks (check_connections >> extract >> transform
 dag_mgo_pg_schedule_etl_qc.py:482) collapse into a single lazy Catalyst plan
 plus its write/verify actions:
 
-    empty-window probe → [extract+transform: one fused plan] → staging
-    write → merge, written once and unpublished → DQ gate + reconcile (one
-    aggregate over the written merge) → publish → staging cleanup
+    [extract+transform: one fused plan] → staging write (its row count
+    decides an empty window) → merge, written once and unpublished → DQ
+    gate + reconcile (one aggregate over the written merge) → publish →
+    staging cleanup
 
-Laziness fuses extract and transform into one scan. The only process
-boundaries left are the 4 actions (probe, staging write, merge write, gate
-aggregate); with AQE's shuffle-stage jobs a batch that merges into a
-parquet mart costs at most 8 Spark jobs, and one into an empty mart 6
-(SURVEY §3.1). Both gates raise before the merge becomes visible.
+Laziness fuses extract and transform into one scan, and the transform is
+one projection. The only process boundaries left are the 3 actions
+(staging write, merge write, gate aggregate); with AQE's shuffle-stage
+jobs a batch that merges into a parquet mart costs at most 7 Spark jobs,
+one into an empty mart 5, and an empty window 1 (SURVEY §3.1). Both gates
+raise before the merge becomes visible. The window predicate, the
+transform projection and the gate aggregates are sent as SQL text, so the
+driver builds no Column tree per column between jobs.
 
 Backfill = map this function over historical windows; safe because the
 window predicate scopes the read, the merge is idempotent per key, and
@@ -29,16 +33,24 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .caching import materialized_scope
+from .functions.exprs import sql_string
 from .functions.normalize import (
-    coerce_timestamps,
-    flatten_struct,
+    columns_of,
+    flatten_rule,
+    id_rule,
+    json_rule,
+    lineage_rule,
     normalize_columns,
-    stringify_id,
-    structs_to_json,
-    with_lineage,
+    project,
+    rename_rule,
+    timestamp_rule,
 )
 from .operators.dq import DQSuite, reconcile_counts
-from .operators.incremental import incremental_extract, is_empty
+
+# ``is_empty`` is no longer called here (the staging write's row count
+# decides an empty window) but stays a module attribute: perfbench's tracer
+# wraps it by name.
+from .operators.incremental import incremental_extract, is_empty  # noqa: F401
 from .operators.merge import (
     delete_staging_run,
     merge_upsert,
@@ -75,19 +87,21 @@ def transform(
     ts_cols: list[str] = ("createdat", "updatedat", "statechangedat", "statuschangedat"),
     flatten: dict[str, list[str]] | None = None,
 ) -> DataFrame:
-    """The reference's transform task (dag:154-192) as one projection chain:
-    P2 name-normalize → P4 id cast → J3 timestamp coercion → J2 struct
-    flattening → J1 JSON serialization → P3 lineage column. All column-level
-    — Catalyst fuses it into the extract scan."""
-    out = normalize_columns(df)
-    if "_id" in out.columns:
-        out = stringify_id(out)
-    out = coerce_timestamps(out, [c for c in ts_cols if c in out.columns])
+    """The reference's transform task (dag:154-192) as ONE projection: P2
+    name-normalize → P4 id cast → J3 timestamp coercion → J2 struct
+    flattening → J1 JSON serialization → P3 lineage column, composed as
+    rules over one schema read (``functions.normalize``) and sent as one
+    ``selectExpr``. All column-level — Catalyst fuses it into the extract
+    scan."""
+    cols = rename_rule(columns_of(df))
+    if "_id" in {c.name for c in cols}:
+        cols = id_rule(cols)
+    cols = timestamp_rule(cols, list(ts_cols))
     for col, keys in (flatten if flatten is not None else DEFAULT_FLATTEN).items():
-        if col in out.columns:
-            out = flatten_struct(out, col, keys)
-    out = structs_to_json(out)
-    return with_lineage(out, run_id)
+        if col in {c.name for c in cols}:
+            cols = flatten_rule(cols, col, keys)
+    cols = json_rule(cols)
+    return project(df, lineage_rule(cols, run_id))
 
 
 def run_incremental_batch(
@@ -117,12 +131,13 @@ def run_incremental_batch(
     version. Without it the caller owns persistence (Delta MERGE in
     production) and the merge is pinned via localCheckpoint only.
 
-    Job budget: at most 8 Spark jobs for a batch that merges into a
-    parquet mart — the empty-window probe, the staging write (which also
-    counts the extracted rows), the version write (the merge), and the
-    gate's single aggregate. An empty window costs the probe alone; a mart
-    without a ``batch_run_id`` lineage column adds one count of the staged
-    rows (its reconciliation falls back to them).
+    Job budget: at most 7 Spark jobs for a batch that merges into a
+    parquet mart — the staging write (which also counts the extracted
+    rows), the version write (the merge), and the gate's single aggregate.
+    An empty window costs the staging write alone: it lands zero rows,
+    which creates no run partition, and the batch returns before reading
+    staging. A mart without a ``batch_run_id`` lineage column adds one
+    count of the staged rows (its reconciliation falls back to them).
     """
     with materialized_scope():
         return _run_incremental_batch(
@@ -149,39 +164,41 @@ def _run_incremental_batch(
     ts = ts_cols or ["createdat", "updatedat"]
 
     extracted = incremental_extract(normalize_columns(source), ts, start, end)
-    if is_empty(extracted):  # F4 short-circuit (dag:136-159)
-        report.skipped_empty = True
-        return mart, report
-
     batch = transform(extracted, run_id, ts_cols=tuple(ts))
     # A1: the source-window count rides the staging write, no second scan
     landed = Observation()
-    observed = batch.observe(landed, F.count(F.lit(1)).alias("rows"))
+    observed = batch.observe(landed, F.expr("count(1) AS rows"))
     write_staging(observed, staging_path, run_id)  # M1: partition-per-run landing
     report.extracted = landed.get["rows"]
+    if report.extracted == 0:
+        # F4 short-circuit (dag:136-159): a zero-row dynamic-overwrite write
+        # creates no run partition, so there is nothing to merge or clean
+        report.skipped_empty = True
+        return mart, report
     staged = read_staging_run(spark, staging_path, run_id, schema=batch.schema)
-    batch_aligned = staged.select(*mart.columns)
 
+    mart_cols = mart.columns
     if update_cols is None:
         # reference parity (dag:311-315) where the mart has those columns;
         # any other schema gets a full-column update arm
-        update_cols = [c for c in DEFAULT_UPDATE_COLS if c in mart.columns] or [
-            c for c in mart.columns if c != key
+        update_cols = [c for c in DEFAULT_UPDATE_COLS if c in mart_cols] or [
+            c for c in mart_cols if c != key
         ]
     # Lineage must ALWAYS move to the incoming run on match — otherwise rows
     # whose keys already exist keep the old run id, the per-run reconciliation
     # below undercounts, and a healthy overlapping backfill / fresh-run-id
     # retry false-fails. (The reference DAG shares this flaw with
     # airflow_run_id; parity is not worth spurious DQViolations.)
-    lineage = "batch_run_id" in mart.columns
+    lineage = "batch_run_id" in mart_cols
     if lineage and "batch_run_id" not in update_cols:
         update_cols = [*update_cols, "batch_run_id"]
-    merged = merge_upsert(mart, batch_aligned, key, update_cols)
+    merged = merge_upsert(mart, staged, key, update_cols)
 
     suite = dq or DQSuite().add_unique(key).add_not_null(key)
-    stats = [F.count(F.lit(1)).alias("__merged_total")]
+    stats = ["count(1) AS __merged_total"]
     if lineage:
-        stats.append(F.count(F.when(F.col("batch_run_id") == run_id, 1)).alias("__sink_rows"))
+        run = sql_string(run_id)
+        stats.append(f"count(CASE WHEN batch_run_id = {run} THEN 1 END) AS __sink_rows")
 
     def gate(written: DataFrame) -> None:
         """Q1 + A1-A3 over the written merge, in one aggregate: raises
@@ -190,7 +207,7 @@ def _run_incremental_batch(
         counts = suite.enforce(written, *stats)
         report.merged_total = counts.pop("__merged_total")
         # without lineage the sink count falls back to the staged rows
-        sink = counts.pop("__sink_rows") if lineage else batch_aligned.count()
+        sink = counts.pop("__sink_rows") if lineage else staged.count()
         report.dq_violations = counts
         reconcile_counts(report.extracted, sink)
 
@@ -240,7 +257,8 @@ def run_backfill(
     from the window BOUNDS (not the loop index), so re-running any window —
     after a crash, or because two backfill invocations overlap — hits the
     same staging partition and the same merge fixpoint as the tested retry
-    path. Empty windows short-circuit (F4) without touching staging.
+    path. Empty windows short-circuit (F4) without leaving a staging
+    partition.
 
     Returns the final mart plus one :class:`BatchReport` per window, in
     order. Windows may overlap: later windows win per key, matching the

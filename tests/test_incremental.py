@@ -39,6 +39,23 @@ def test_window_boundaries_half_open(spark):
     assert got == [1, 2]
 
 
+def test_window_bounds_as_datetimes(spark):
+    """A datetime bound is the instant ``lit(datetime)`` denotes."""
+    from pyspark.sql import functions as F
+
+    df = _df(
+        spark,
+        (TS(2024, 1, 9, 23, 59, 59), None),
+        (TS(2024, 1, 10, 0, 0, 0), None),
+        (TS(2024, 1, 10, 12, 0, 0, 500), None),
+        (TS(2024, 1, 11, 0, 0, 0), None),
+    )
+    start, end = TS(2024, 1, 10), TS(2024, 1, 10, 12, 0, 0, 501)
+    want = (F.col("createdat") >= F.lit(start)) & (F.col("createdat") < F.lit(end))
+    got = sorted(r.i for r in df.filter(in_window("createdat", start, end)).collect())
+    assert got == sorted(r.i for r in df.filter(want).collect()) == [1, 2]
+
+
 def test_disjunctive_change_capture(spark):
     start, end = "2024-01-10 00:00:00", "2024-01-11 00:00:00"
     df = _df(

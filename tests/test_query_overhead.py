@@ -10,6 +10,7 @@ import re
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from my_favorite_etl_pipeline_spark.caching import materialized_scope
 from my_favorite_etl_pipeline_spark.functions.exprs import lambda_prefilters
@@ -204,6 +205,24 @@ def test_bloom_verify_plans_no_expand(spark, sf_dir):
 def test_no_text_kernel_in_an_inferred_prefilter(spark, sf_dir, name):
     with materialized_scope():
         assert lambda_prefilters(REGISTRY[name].fn(spark, sf_dir)) == []
+
+
+def test_fixed_point_means_infers_no_prefilter(spark, tmp_path):
+    """The mean's generator infers no ``size(...) > 0`` pre-filter (which
+    would re-run the projected element cast below its projection), and
+    an empty or NULL vector adds nothing to its group's mean."""
+    from my_favorite_etl_pipeline_spark.operators.similarity import _dbl, fixed_point_means
+
+    path = str(tmp_path / "vecs.parquet")
+    spark.createDataFrame(
+        [(1, [1, 3]), (1, []), (1, None), (2, [2, 4]), (3, [])], "k int, e array<int>"
+    ).write.parquet(path)
+    rows = spark.read.parquet(path).select("k", _dbl(F.col("e")).alias("v"))
+    means = fixed_point_means(rows, ["k"], "v")
+    assert lambda_prefilters(means) == []
+    assert sorted((r.k, r.centroid) for r in means.collect()) == [
+        (1, [1.0, 3.0]), (2, [2.0, 4.0])
+    ]
 
 
 def test_word_features_splits_the_text_once(spark):

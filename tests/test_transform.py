@@ -171,3 +171,21 @@ def test_transform_matches_per_column_reference(spark):
         assert got.schema == want.schema
         assert sorted(got.collect()) == sorted(want.collect())
     assert "statuschangedby_id" not in got.columns  # absent column stays absent
+
+
+def test_transform_is_one_projection(spark):
+    """The whole transform chain is ONE Project above the input's plan; a
+    chain of per-rule projections (8 here) analyzes one plan per step."""
+    from my_favorite_etl_pipeline_spark.pipeline_runner import transform
+
+    by = "struct<id:string,name:string,role:string,client:string>"
+    df = spark.createDataFrame(
+        [], f"`_id` long, `createdAt` string, `createdBy` {by}, "
+        f"`statusChangedBy` {by}, `updatedBy` {by}, tags array<string>",
+    )
+
+    def projects(d):
+        plan = d._jdf.queryExecution().analyzed().toString()
+        return sum(line.lstrip(" :+-").startswith("Project ") for line in plan.splitlines())
+
+    assert projects(transform(df, "run-1")) - projects(df) == 1
