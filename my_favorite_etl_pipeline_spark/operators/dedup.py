@@ -433,15 +433,10 @@ def simhash_near_dups(
         )
     )
     a, b = blocked.alias("a"), blocked.alias("b")
-    hamming = F.aggregate(
-        F.zip_with(
-            F.col("a.sig"),
-            F.col("b.sig"),
-            lambda x, y: F.bit_count(x.bitwiseXOR(y)),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
+    # four scalar bit_counts, not a lambda fold over zip_with: the filter
+    # is pushed into the join condition and the projection computes the
+    # distance again, so both evaluations should be codegen'd
+    hamming = F.expr(" + ".join(f"bit_count(a.sig[{i}] ^ b.sig[{i}])" for i in range(4)))
     return (
         a.join(
             b,

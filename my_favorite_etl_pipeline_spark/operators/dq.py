@@ -24,6 +24,12 @@ class DQViolation(Exception):
     (dag:361-362, 417-420): a failing gate fails the pipeline run."""
 
 
+def _count_true(cond: str) -> str:
+    """Rows where ``cond`` holds. ``sum`` over no rows is NULL, so an empty
+    frame reports 0 (observed metrics need a number as well)."""
+    return f"coalesce(sum(CAST({cond} AS INT)), 0)"
+
+
 @dataclass
 class DQSuite:
     """Declarative check suite compiled to a single aggregation.
@@ -32,9 +38,12 @@ class DQSuite:
     per-check violation counts; ``enforce(df)`` raises :class:`DQViolation`
     if any is nonzero. A check is SQL text (one aggregate per check), so a
     suite costs one parse per action, not a Column tree per check.
+    ``unique`` maps each :meth:`add_unique` check's name to its column:
+    those are the DISTINCT checks ``observe`` cannot evaluate.
     """
 
     checks: list[tuple[str, str]] = field(default_factory=list)
+    unique: dict[str, str] = field(default_factory=dict)
 
     def _add(self, name: str, violation_count: str) -> "DQSuite":
         self.checks.append((name, f"CAST({violation_count} AS BIGINT) AS {quote_ident(name)}"))
@@ -42,23 +51,25 @@ class DQSuite:
 
     def add_not_null(self, col: str) -> "DQSuite":
         """Completeness: missing-value count (dag:369 'not missing fields')."""
-        return self._add(f"null_{col}", f"sum(CAST({quote_ident(col)} IS NULL AS INT))")
+        return self._add(f"null_{col}", _count_true(f"{quote_ident(col)} IS NULL"))
 
     def add_unique(self, col: str) -> "DQSuite":
         """Uniqueness: ``count(col) - count(distinct col)`` (dag:369, M5).
 
-        DISTINCT aggregates are rejected by ``observe`` — this check always
-        runs on the classic :meth:`violations` pass (see :meth:`attach`).
+        DISTINCT aggregates are rejected by ``observe``, so this check is
+        left out of :meth:`observable` and :meth:`attach`.
         """
-        self._has_distinct = True
+        self.unique[f"dup_{col}"] = col
         q = quote_ident(col)
         return self._add(f"dup_{col}", f"count({q}) - count(DISTINCT {q})")
 
     def add_regex(self, col: str, pattern: str) -> "DQSuite":
         """Regex conformity on non-null values (dag:369 'regex check')."""
         q = quote_ident(col)
-        bad = f"(NOT ({q} RLIKE {sql_string(pattern)})) AND ({q} IS NOT NULL)"
-        return self._add(f"regex_{col}", f"sum(CAST({bad} AS INT))")
+        return self._add(
+            f"regex_{col}",
+            _count_true(f"(NOT ({q} RLIKE {sql_string(pattern)})) AND ({q} IS NOT NULL)"),
+        )
 
     def add_type_valid(self, col: str, to_type: str) -> "DQSuite":
         """Type validity: values that fail a ``try_cast`` (dag:369).
@@ -67,13 +78,19 @@ class DQSuite:
         Spark-native version of Soda's 'valid data type' check.
         """
         q = quote_ident(col)
-        bad = f"(try_cast({q} AS {to_type}) IS NULL) AND ({q} IS NOT NULL)"
-        return self._add(f"badtype_{col}", f"sum(CAST({bad} AS INT))")
+        return self._add(
+            f"badtype_{col}",
+            _count_true(f"(try_cast({q} AS {to_type}) IS NULL) AND ({q} IS NOT NULL)"),
+        )
 
     def add_freshness(self, ts_col: str, not_before: str) -> "DQSuite":
         """Freshness: ``max(ts) >= not_before`` else 1 violation (dag:369)."""
         stale = f"max({quote_ident(ts_col)}) < CAST({sql_string(not_before)} AS TIMESTAMP)"
         return self._add(f"stale_{ts_col}", f"coalesce(CAST({stale} AS INT), 1)")
+
+    def observable(self) -> "DQSuite":
+        """The suite without its DISTINCT checks: what :meth:`attach` takes."""
+        return DQSuite([c for c in self.checks if c[0] not in self.unique])
 
     def violation_columns(self) -> list[Column]:
         return [F.expr(sql) for _, sql in self.checks]
@@ -89,43 +106,54 @@ class DQSuite:
         row = df.selectExpr(*exprs).collect()[0]
         return {name: int(value) for name, value in row.asDict().items()}
 
-    def enforce(self, df: DataFrame, *extra: str) -> dict[str, int]:
-        counts = self.violations(df, *extra)
-        failed = {name: counts[name] for name, _ in self.checks if counts[name]}
+    def gate(self, counts: dict[str, int]) -> dict[str, int]:
+        """The suite's checks in declared order, read from ``counts``;
+        raises :class:`DQViolation` naming every nonzero one."""
+        checked = {name: counts[name] for name, _ in self.checks}
+        failed = {name: n for name, n in checked.items() if n}
         if failed:
             raise DQViolation(f"DQ gate failed: {failed}")
+        return checked
+
+    def enforce(self, df: DataFrame, *extra: str) -> dict[str, int]:
+        counts = self.violations(df, *extra)
+        self.gate(counts)
         return counts
 
-    def attach(self, df: DataFrame, name: str = "dq"):
+    def attach(self, df: DataFrame, *extra: str, name: str = "dq"):
         """Zero-extra-pass flavor: ride the checks on the NEXT action.
 
         Returns ``(observed_df, observation)``. The caller runs its normal
         action (the mart write, typically) on ``observed_df``, then calls
         :meth:`enforce_observed` — the metrics were aggregated during that
-        action, so the DQ gate costs no second scan. At 100 TB this is the
-        difference between one pass and two.
+        action, so the DQ gate costs no second scan. ``extra`` aliased SQL
+        aggregates ride the same observation and never gate, as in
+        :meth:`violations`. At 100 TB this is the difference between one
+        pass and two.
 
         Spark rejects DISTINCT aggregates inside ``observe``, so a suite
-        containing :meth:`add_unique` cannot attach — split uniqueness into
-        a classic :meth:`enforce` pass (or assert it via the merge key,
-        which M2 deduplicates anyway) and attach the rest.
+        containing :meth:`add_unique` cannot attach: attach its
+        :meth:`observable` part and prove uniqueness another way. The
+        pipeline runner proves the merge key unique on the two merge
+        inputs while the version is written (``merge.upsert_key_repeats``)
+        and falls back to :meth:`enforce` on the written version only for
+        a DISTINCT check on another column.
         """
         from pyspark.sql import Observation
 
-        if getattr(self, "_has_distinct", False):
+        if self.unique:
             raise ValueError(
                 "observe() cannot evaluate DISTINCT aggregates; run add_unique "
                 "checks via enforce() and attach() the remaining checks"
             )
         obs = Observation(name)
-        return df.observe(obs, *self.violation_columns()), obs
+        return df.observe(obs, *self.violation_columns(), *map(F.expr, extra)), obs
 
     def enforce_observed(self, obs) -> dict[str, int]:
-        """Gate on an Observation populated by a completed action."""
+        """Gate on an Observation populated by a completed action; returns
+        every observed value, the ``extra`` aggregates included."""
         counts = {k: int(v) for k, v in obs.get.items()}
-        failed = {k: v for k, v in counts.items() if v}
-        if failed:
-            raise DQViolation(f"DQ gate failed: {failed}")
+        self.gate(counts)
         return counts
 
 

@@ -23,7 +23,9 @@ Scale notes: the merge is one shuffle on the key (sort-merge join; AQE demotes
 to broadcast when the batch is small — the common incremental case). The
 join is 1:1 only for a batch with unique keys: ``merge_upsert`` does no
 dedup pass, so a duplicate-keyed batch fans out, and the runner's DQ gate
-(its uniqueness check on the written merge) rejects it before publishing.
+rejects it before publishing. That uniqueness check reads the two merge
+inputs' key columns (:func:`upsert_key_repeats`) while the merge is
+written, not the written merge.
 ``latest_per_key`` is the dedup for a caller that wants last-writer-wins
 within a batch instead.
 """
@@ -33,7 +35,7 @@ from __future__ import annotations
 import shutil
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -112,6 +114,39 @@ def merge_upsert(
         out_cols.append(f"{expr} AS {q}")
     joined = mart.alias("m").join(b.alias("b"), F.expr(f"{mk} = {bk}"), "full_outer")
     return joined.selectExpr(*out_cols)
+
+
+def upsert_key_repeats(mart: DataFrame, batch: DataFrame, key: str) -> int:
+    """M5 on the merge inputs: how often a non-NULL ``key`` repeats within
+    ``mart`` or within ``batch`` — ``count(k) - count(DISTINCT s, k)`` over
+    both key columns, each tagged with its side ``s``.
+
+    :func:`merge_upsert`'s full outer join emits a non-NULL key once per
+    matching (mart, batch) pair, so the key repeats in the merge exactly
+    when one side repeats it: this count is 0 exactly when the merge's
+    ``count(k) - count(DISTINCT k)`` is. The two numbers differ only when
+    both sides repeat the same key. Reads the key columns alone, so it can
+    run while the merge itself is written.
+
+    Evaluated as the sum of ``count - 1`` over the (side, key) groups: the
+    group counts take one shuffle, and an Observation on a noop write of
+    them sums the excess without a second, single-partition shuffle.
+    """
+    k = quote_ident(key)
+    sides = mart.selectExpr(f"{k} AS k", "0 AS s").unionAll(
+        batch.selectExpr(f"{k} AS k", "1 AS s")
+    )
+    repeats = Observation()
+    (
+        sides.where("k IS NOT NULL")
+        .groupBy("s", "k")
+        .count()
+        .observe(repeats, F.expr("coalesce(sum(count - 1), 0) AS n"))
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    return repeats.get["n"]
 
 
 def write_staging(df: DataFrame, path: str, run_id: str, run_col: str = "batch_run_id") -> None:

@@ -6,16 +6,18 @@ dag_mgo_pg_schedule_etl_qc.py:482) collapse into a single lazy Catalyst plan
 plus its write/verify actions:
 
     [extract+transform: one fused plan] → staging write (its row count
-    decides an empty window) → merge, written once and unpublished → DQ
-    gate + reconcile (one aggregate over the written merge) → publish →
-    staging cleanup
+    decides an empty window) → merge, written once and unpublished, with
+    the DQ row checks and reconcile counts observed on that write, while
+    a second thread proves the key unique on the merge inputs → gate →
+    publish → staging cleanup
 
 Laziness fuses extract and transform into one scan, and the transform is
 one projection. The only process boundaries left are the 3 actions
-(staging write, merge write, gate aggregate); with AQE's shuffle-stage
-jobs a batch that merges into a parquet mart costs at most 7 Spark jobs,
-one into an empty mart 5, and an empty window 1 (SURVEY §3.1). Both gates
-raise before the merge becomes visible. The window predicate, the
+(staging write, merge write, key-uniqueness aggregate), and the last two
+run at once; with AQE's shuffle-stage jobs a batch that merges into a
+parquet mart costs at most 6 Spark jobs, one into an empty mart 4, and an
+empty window 1 (SURVEY §3.1). No pass reads the written merge back. Both
+gates raise before the merge becomes visible. The window predicate, the
 transform projection and the gate aggregates are sent as SQL text, so the
 driver builds no Column tree per column between jobs.
 
@@ -31,6 +33,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import InheritableThread
 
 from .caching import materialized_scope
 from .functions.exprs import sql_string
@@ -55,6 +58,7 @@ from .operators.merge import (
     delete_staging_run,
     merge_upsert,
     read_staging_run,
+    upsert_key_repeats,
     write_staging,
 )
 
@@ -79,6 +83,34 @@ class BatchReport:
     merged_total: int = 0
     dq_violations: dict[str, int] = field(default_factory=dict)
     skipped_empty: bool = False
+
+
+class _Concurrent(InheritableThread):
+    """``fn()`` on a second driver thread, started at once.
+
+    An InheritableThread copies the caller's Spark local properties when it
+    starts, so its jobs land in the caller's job group (a plain Thread's
+    would land in none); ``description`` labels them. :meth:`result` joins
+    and returns ``fn``'s value or raises its error."""
+
+    def __init__(self, spark: SparkSession, description: str, fn) -> None:
+        self._sc, self._description, self._fn = spark.sparkContext, description, fn
+        self._value = self._error = None
+        super().__init__(target=self._run, daemon=True)
+        self.start()
+
+    def _run(self) -> None:
+        self._sc.setJobDescription(self._description)
+        try:
+            self._value = self._fn()
+        except BaseException as e:  # re-raised on the caller's thread
+            self._error = e
+
+    def result(self):
+        self.join()
+        if self._error is not None:
+            raise self._error
+        return self._value
 
 
 def transform(
@@ -120,9 +152,15 @@ def run_incremental_batch(
     """One scheduled batch of the reference pipeline, Spark-first.
 
     Returns (new mart DataFrame, report). Order: extract → staging write →
-    merge written ONCE, unpublished → one aggregate over that written
-    merge gates it (DQ suite + exact reconciliation) → publish → staging
-    cleanup. A failed gate raises before anything becomes visible.
+    merge written ONCE, unpublished → gate (DQ suite + exact
+    reconciliation) → publish → staging cleanup. A failed gate raises
+    before anything becomes visible. The gate reads no written row: the
+    suite's row checks, the merged total and the per-run sink count are
+    one Observation on the version write, and the key's ``add_unique``
+    check is proven on the merge inputs (``merge.upsert_key_repeats``) by
+    an aggregate on a second thread, in the caller's job group, while the
+    version is written. Only a DISTINCT check on another column is still
+    evaluated over the written version.
 
     With ``mart_path`` set, the merge is written as an unpublished
     :class:`~.sources.mart.VersionedMart` version and published by the
@@ -131,9 +169,11 @@ def run_incremental_batch(
     version. Without it the caller owns persistence (Delta MERGE in
     production) and the merge is pinned via localCheckpoint only.
 
-    Job budget: at most 7 Spark jobs for a batch that merges into a
+    Job budget: at most 6 Spark jobs for a batch that merges into a
     parquet mart — the staging write (which also counts the extracted
-    rows), the version write (the merge), and the gate's single aggregate.
+    rows), the version write (the merge and its observed checks; a
+    shuffle-map job per side and the write), and the concurrent
+    key-uniqueness pass (a shuffle-map job and a noop write).
     An empty window costs the staging write alone: it lands zero rows,
     which creates no run partition, and the batch returns before reading
     staging. A mart without a ``batch_run_id`` lineage column adds one
@@ -177,59 +217,89 @@ def _run_incremental_batch(
         return mart, report
     staged = read_staging_run(spark, staging_path, run_id, schema=batch.schema)
 
-    mart_cols = mart.columns
-    if update_cols is None:
-        # reference parity (dag:311-315) where the mart has those columns;
-        # any other schema gets a full-column update arm
-        update_cols = [c for c in DEFAULT_UPDATE_COLS if c in mart_cols] or [
-            c for c in mart_cols if c != key
-        ]
-    # Lineage must ALWAYS move to the incoming run on match — otherwise rows
-    # whose keys already exist keep the old run id, the per-run reconciliation
-    # below undercounts, and a healthy overlapping backfill / fresh-run-id
-    # retry false-fails. (The reference DAG shares this flaw with
-    # airflow_run_id; parity is not worth spurious DQViolations.)
-    lineage = "batch_run_id" in mart_cols
-    if lineage and "batch_run_id" not in update_cols:
-        update_cols = [*update_cols, "batch_run_id"]
-    merged = merge_upsert(mart, staged, key, update_cols)
-
+    # Q1 + A1-A3 gate, written so that no pass reads the written merge: the
+    # key's uniqueness is proven on the two merge inputs by a second thread,
+    # started before the merge is even built, and every check observe() can
+    # evaluate, the merged total and the per-run sink count ride the version
+    # write as one Observation.
     suite = dq or DQSuite().add_unique(key).add_not_null(key)
-    stats = ["count(1) AS __merged_total"]
-    if lineage:
-        run = sql_string(run_id)
-        stats.append(f"count(CASE WHEN batch_run_id = {run} THEN 1 END) AS __sink_rows")
+    key_checks = [name for name, col in suite.unique.items() if col == key]
+    repeats = (
+        _Concurrent(
+            spark, f"dq: {key} repeats in the merge inputs",
+            lambda: upsert_key_repeats(mart, staged, key),
+        )
+        if key_checks
+        else None
+    )
+    # the thread is joined before this returns or raises: a failed build or
+    # write raises its own error, and no thread outlives the batch
+    try:
+        mart_cols = mart.columns
+        if update_cols is None:
+            # reference parity (dag:311-315) where the mart has those
+            # columns; any other schema gets a full-column update arm
+            update_cols = [c for c in DEFAULT_UPDATE_COLS if c in mart_cols] or [
+                c for c in mart_cols if c != key
+            ]
+        # Lineage must ALWAYS move to the incoming run on match — otherwise
+        # rows whose keys already exist keep the old run id, the per-run
+        # reconciliation below undercounts, and a healthy overlapping
+        # backfill / fresh-run-id retry false-fails. (The reference DAG
+        # shares this flaw with airflow_run_id; parity is not worth
+        # spurious DQViolations.)
+        lineage = "batch_run_id" in mart_cols
+        if lineage and "batch_run_id" not in update_cols:
+            update_cols = [*update_cols, "batch_run_id"]
+        merged = merge_upsert(mart, staged, key, update_cols)
 
-    def gate(written: DataFrame) -> None:
-        """Q1 + A1-A3 over the written merge, in one aggregate: raises
-        DQViolation on a failed check or a count mismatch (exact,
-        dag:417-420)."""
-        counts = suite.enforce(written, *stats)
-        report.merged_total = counts.pop("__merged_total")
-        # without lineage the sink count falls back to the staged rows
-        sink = counts.pop("__sink_rows") if lineage else staged.count()
-        report.dq_violations = counts
-        reconcile_counts(report.extracted, sink)
+        stats = ["count(1) AS __merged_total"]
+        if lineage:
+            run = sql_string(run_id)
+            stats.append(f"count(CASE WHEN batch_run_id = {run} THEN 1 END) AS __sink_rows")
+        observed, obs = suite.observable().attach(merged, *stats)
+        # a DISTINCT check on another column cannot be proven from the
+        # inputs: it alone still reads the written version
+        on_written = DQSuite(
+            [c for c in suite.checks if c[0] in suite.unique and c[0] not in key_checks]
+        )
 
-    # M4 ordering: the merge must be durable BEFORE staging cleanup
-    # (dag:322's commit covers insert+upsert+delete). With a mart_path the
-    # durability point is the VersionedMart manifest swap — one atomic
-    # rename, taken only after the gate passed on the written version; a
-    # crash or a failed gate before it leaves the previous version fully
-    # visible, a crash after it leaves at worst an uncleaned staging
-    # partition that the idempotent retry re-creates and re-deletes.
-    # Without a mart_path, localCheckpoint materializes the merge
-    # (truncating the lineage that still reads staging) and the caller
-    # owns real persistence.
-    if mart_path is not None:
-        from .sources.mart import VersionedMart
+        def gate(written: DataFrame) -> None:
+            """Raises DQViolation on a failed check or a count mismatch
+            (exact, dag:417-420) before anything is published; the rows it
+            passes are the rows the batch returns."""
+            nonlocal merged
+            counts = {name: int(value) for name, value in obs.get.items()}
+            report.merged_total = counts.pop("__merged_total")
+            # without lineage the sink count falls back to the staged rows
+            sink = counts.pop("__sink_rows") if lineage else staged.count()
+            if repeats is not None:
+                counts.update(dict.fromkeys(key_checks, repeats.result()))
+            if on_written.checks:
+                counts.update(on_written.violations(written))
+            report.dq_violations = suite.gate(counts)
+            reconcile_counts(report.extracted, sink)
+            merged = written
 
-        vm = VersionedMart(mart_path)
-        vm.commit(merged, version=run_id, check=gate)
-        merged = vm.read(spark, schema=merged.schema)
-    else:
-        merged = merged.localCheckpoint(eager=True)
-        gate(merged)
+        # M4 ordering: the merge must be durable BEFORE staging cleanup
+        # (dag:322's commit covers insert+upsert+delete). With a mart_path
+        # the durability point is the VersionedMart manifest swap — one
+        # atomic rename, taken only after the gate passed on the written
+        # version; a crash or a failed gate before it leaves the previous
+        # version fully visible, a crash after it leaves at worst an
+        # uncleaned staging partition that the idempotent retry re-creates
+        # and re-deletes. Without a mart_path, localCheckpoint materializes
+        # the merge (truncating the lineage that still reads staging) and
+        # the caller owns real persistence.
+        if mart_path is not None:
+            from .sources.mart import VersionedMart
+
+            VersionedMart(mart_path).commit(observed, version=run_id, check=gate)
+        else:
+            gate(observed.localCheckpoint(eager=True))
+    finally:
+        if repeats is not None:
+            repeats.join()
     delete_staging_run(staging_path, run_id)  # M3: scoped cleanup, metadata-only
     return merged, report
 

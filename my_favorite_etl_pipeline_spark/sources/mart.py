@@ -118,7 +118,9 @@ class VersionedMart:
         schema, so it costs no schema-inference job), and an exception from
         it propagates before the manifest swap. That is the crash-before-
         swap state: the previous version stays current and the orphan
-        directory is reclaimed by the next commit's vacuum.
+        directory is reclaimed by the next commit's vacuum. The read is
+        lazy, so a check that gates only on what ran with the write (an
+        ``Observation`` on ``df``, a job on another thread) costs no job.
         """
         target = self._write_version(df, version)
         if check is not None:

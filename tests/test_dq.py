@@ -55,6 +55,23 @@ def test_freshness_stale_and_empty(spark):
     assert DQSuite().add_freshness("ts", "2020-01-01").violations(empty)["stale_ts"] == 1
 
 
+def test_row_checks_report_zero_on_an_empty_frame(spark, tmp_path):
+    """``sum`` over no rows is NULL; each row check still reports 0, on the
+    classic pass and observed on a write."""
+    suite = (
+        DQSuite()
+        .add_not_null("email")
+        .add_regex("email", r"^[^@\s]+@[^@\s]+\.[^@\s]+$")
+        .add_type_valid("n", "int")
+    )
+    empty = _df(spark).filter("_id = 'zzz'")
+    zeros = {"null_email": 0, "regex_email": 0, "badtype_n": 0}
+    assert suite.enforce(empty) == zeros
+    observed, obs = suite.attach(empty, "count(1) AS rows")
+    observed.write.mode("overwrite").parquet(str(tmp_path / "out"))
+    assert suite.enforce_observed(obs) == {**zeros, "rows": 0}
+
+
 def test_observed_dq_rides_the_write_action(spark, tmp_path):
     """attach() aggregates the checks during the sink write — one pass."""
     suite = DQSuite().add_not_null("email").add_regex("email", r"^[^@\s]+@[^@\s]+\.[^@\s]+$")

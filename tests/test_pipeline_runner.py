@@ -3,6 +3,8 @@
 import datetime as dt
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 
 from my_favorite_etl_pipeline_spark.operators.dq import DQSuite, DQViolation
@@ -61,6 +63,15 @@ def test_full_batch_lifecycle_and_idempotency(spark, tmp_path):
     )
     assert rep2.merged_total == 2
     assert merged2.exceptAll(merged1).count() == 0
+
+
+UNIQUENESS_JOB = "dq: _id repeats in the merge inputs"
+
+
+def _descriptions(spark, jobs):
+    """The description of each job in ``jobs``, from the live status store."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    return [d.get() if d.isDefined() else None for d in (store.job(j).description() for j in jobs)]
 
 
 def _jobs(spark, group, fn):
@@ -275,9 +286,12 @@ def test_versioned_mart_time_travel_and_retention(spark, tmp_path):
 
 def test_merging_batch_job_budget(spark, tmp_path):
     """One batch that merges into a committed parquet mart runs in at most
-    7 Spark jobs: the staging write (which also counts the extracted rows
-    and so decides an empty window), the version write, and ONE aggregate
-    for the DQ suite, the per-run sink count and the merged total."""
+    6 Spark jobs: the staging write (which also counts the extracted rows
+    and so decides an empty window), the version write (which observes the
+    DQ suite's row checks, the per-run sink count and the merged total; a
+    map job per join side and the write), and the key-uniqueness pass over
+    the merge inputs that runs beside it on a second thread (a map job and
+    a noop write). The uniqueness jobs are counted here."""
     from my_favorite_etl_pipeline_spark.sources.mart import VersionedMart
 
     staging, mart_path = str(tmp_path / "staging"), str(tmp_path / "mart")
@@ -291,7 +305,125 @@ def test_merging_batch_job_budget(spark, tmp_path):
     ))
     assert (rep.extracted, rep.merged_total) == (2, 2)
     assert rep.dq_violations == {"dup__id": 0, "null__id": 0}
-    assert len(jobs) <= 7, jobs
+    assert UNIQUENESS_JOB in _descriptions(spark, jobs)
+    assert len(jobs) <= 6, jobs
+
+
+def test_uniqueness_job_runs_in_the_callers_job_group(spark, tmp_path):
+    """The key-uniqueness aggregate runs on a second driver thread. It must
+    inherit the caller's job group (an InheritableThread copies the local
+    properties; a plain Thread's jobs would belong to no group), so a
+    caller's group, a tracer's step or a cancel covers it."""
+    sc = spark.sparkContext
+    (_, rep), jobs = _jobs(spark, "test-uniqueness-job-group", lambda: run_incremental_batch(
+        spark, _source(spark), _empty_mart(spark), str(tmp_path / "s"), WINDOW, run_id="r1",
+    ))
+    assert rep.dq_violations == {"dup__id": 0, "null__id": 0}
+    assert UNIQUENESS_JOB in _descriptions(spark, jobs)
+    assert sc.getLocalProperty("spark.job.description") != UNIQUENESS_JOB
+
+
+def test_failed_version_write_joins_the_uniqueness_thread(spark, tmp_path):
+    """A version write that fails re-raises its own error only after the
+    uniqueness thread is joined: no thread is left running, and the
+    previous version stays current."""
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from my_favorite_etl_pipeline_spark.pipeline_runner import _Concurrent
+    from my_favorite_etl_pipeline_spark.sources.mart import VersionedMart
+
+    staging, mart_path = str(tmp_path / "staging"), str(tmp_path / "mart")
+    run_incremental_batch(
+        spark, _source(spark), _empty_mart(spark), staging, WINDOW,
+        run_id="r1", mart_path=mart_path,
+    )
+    vm = VersionedMart(mart_path)
+    good = _rows(vm.read(spark))
+    # only the write reads ``name``; the uniqueness job reads ``_id`` alone
+    broken = vm.read(spark).withColumn("name", F.expr("CAST(raise_error('boom') AS STRING)"))
+    with pytest.raises(Exception, match="boom"):
+        run_incremental_batch(
+            spark, _source(spark), broken, staging, WINDOW, run_id="r2", mart_path=mart_path,
+        )
+    assert not [t for t in threading.enumerate() if isinstance(t, _Concurrent)]
+    assert vm.current_version() == "r1" and _rows(vm.read(spark)) == good
+
+
+def test_distinct_check_on_another_column_reads_the_written_version(spark, tmp_path):
+    """Only the merge key's uniqueness can be proven on the merge inputs; a
+    DISTINCT check on any other column is counted on the written merge."""
+    staging = str(tmp_path / "staging")
+    _, rep = run_incremental_batch(
+        spark, _source(spark), _empty_mart(spark), staging, WINDOW, run_id="r1",
+        dq=DQSuite().add_unique("_id").add_unique("name"),
+    )
+    assert rep.dq_violations == {"dup__id": 0, "dup_name": 0}
+    with pytest.raises(DQViolation, match="dup_status"):  # both rows are 'open'
+        run_incremental_batch(
+            spark, _source(spark), _empty_mart(spark), staging, WINDOW, run_id="r2",
+            dq=DQSuite().add_unique("_id").add_unique("status"),
+        )
+
+
+KEYS = st.lists(st.one_of(st.none(), st.integers(0, 3)), max_size=6)
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(
+    mart_keys=KEYS,
+    batch_keys=KEYS.filter(bool),
+    not_null=st.booleans(),
+    persist=st.booleans(),
+)
+def test_gate_matches_the_classic_gate_on_the_merge(
+    spark, tmp_path, mart_keys, batch_keys, not_null, persist
+):
+    """Key uniqueness proven on the merge inputs fails a batch naming
+    ``dup__id`` exactly when the classic ``count(k) - count(DISTINCT k)``
+    over ``merge_upsert(mart, batch)`` is nonzero, with repeated and NULL
+    keys on both sides; a batch that passes reports what the classic gate
+    over the merge computes."""
+    import uuid
+
+    from my_favorite_etl_pipeline_spark.operators.merge import merge_upsert
+    from my_favorite_etl_pipeline_spark.pipeline_runner import BatchReport
+
+    def frame(keys, prefix):
+        ts = (TS(2024, 1, 10, 1), TS(2024, 1, 10, 2))
+        rows = [(k, f"{prefix}{i}", *ts) for i, k in enumerate(keys)]
+        return spark.createDataFrame(
+            rows, "`_id` long, name string, createdAt timestamp, updatedAt timestamp"
+        )
+
+    mart, source = transform(frame(mart_keys, "m"), "seed"), frame(batch_keys, "b")
+    suite = DQSuite().add_unique("_id")
+    if not_null:
+        suite.add_not_null("_id")
+
+    merged = merge_upsert(mart, transform(source, "r"), "_id", ["updatedat", "batch_run_id"])
+    classic = suite.violations(
+        merged, "count(1) AS total", "count(CASE WHEN batch_run_id = 'r' THEN 1 END) AS sink"
+    )
+    total, sink = classic.pop("total"), classic.pop("sink")
+
+    work = tmp_path / uuid.uuid4().hex
+    run = lambda: run_incremental_batch(  # noqa: E731
+        spark, source, mart, str(work / "staging"), WINDOW, run_id="r", dq=suite,
+        mart_path=str(work / "mart") if persist else None,
+    )
+    if any(classic.values()) or sink != len(batch_keys):
+        with pytest.raises(DQViolation) as failed:
+            run()
+        assert ("dup__id" in str(failed.value)) == bool(classic["dup__id"])
+    else:
+        _, rep = run()
+        assert rep == BatchReport("r", len(batch_keys), total, classic)
 
 
 def test_trace_contract_names():
